@@ -37,7 +37,7 @@ from parallel_mapreduce_spark.functions.text import tokens
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import (
     bounded_persist,
-    ensure_checkpoint_dir,
+    reliable_checkpoint,
 )
 from parallel_mapreduce_spark.sources import (
     corpus_cut,
@@ -501,20 +501,6 @@ def _minhash_of(texts: DataFrame) -> DataFrame:
     sig = sh.groupBy("doc_id").agg(*mins)
     return sig.select(
         "doc_id", F.array(*[F.col(f"h{i}") for i in range(N_PERMUTATIONS)]).alias("sig")
-    )
-
-
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Signatures for every doc — computed on distinct texts, expanded to
-    members (identical texts have identical signatures by construction)."""
-    docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, 8)
-    members = exact_dup_members(docs)
-    rep_sigs = _minhash_of(_rep_texts(docs, n))
-    return (
-        members.select("rep", "doc_id")
-        .join(rep_sigs.withColumnRenamed("doc_id", "rep"), "rep")
-        .select("doc_id", "sig")
     )
 
 
@@ -1193,17 +1179,14 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     cluster ids (a truncated result would silently keep/drop the wrong
     documents downstream in pipeline_clean_corpus).
     """
-    spark = pairs.sparkSession
-    ensure_checkpoint_dir(spark)
     edges = pairs.union(pairs.select("doc_b", "doc_a")).toDF("src", "dst")
     # Materialize the pair graph once: every propagation round reads it, and
     # it is tiny relative to the corpus (near-dup pairs only).
-    edges = edges.checkpoint(eager=True)
-    labels = (
+    edges = reliable_checkpoint(edges)
+    labels = reliable_checkpoint(
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
-        .checkpoint(eager=True)
     )
     rounds = 0
     while rounds < CC_MAX_ROUNDS:
@@ -1227,7 +1210,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
                 cols.append((new_label != F.col("label")).alias("chg"))
             labels = labels.join(neighbor_min, "doc_id", "left").select(*cols)
             rounds += 1
-        labels = labels.checkpoint(eager=True)
+        labels = reliable_checkpoint(labels)
         changed = labels.agg(F.max("chg")).first()[0]
         labels = labels.select("doc_id", "label")
         if not changed:

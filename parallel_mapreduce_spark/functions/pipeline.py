@@ -103,10 +103,7 @@ _SHINGLES = (
 )
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kept documents (doc_id, lang, n_tokens) after the full cleaning chain."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
     register_views(spark, sf_dir)
-    ensure_checkpoint_dir(spark)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
     # Stage 0: tokenize once; every later stage reuses the array column.

@@ -47,11 +47,7 @@ from parallel_mapreduce_spark.functions.similarity import (
 )
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import bounded_persist
-from parallel_mapreduce_spark.sources import load_table, register_views
-from parallel_mapreduce_spark.sources.tables import (
-    _local_cut_max_bytes,
-    table_bytes,
-)
+from parallel_mapreduce_spark.sources import fits_local_cut, load_table, register_views
 
 KC_K = 12  # selected coreset size (k centers, seed included)
 
@@ -70,7 +66,7 @@ def _md_cut(md, sf_dir: str):
     committed persist stands — corpus-scale blocks stay evictable and
     recomputable, and a durable checkpoint per pick would write the
     corpus K times."""
-    if table_bytes(sf_dir, "embeddings") <= _local_cut_max_bytes():
+    if fits_local_cut(sf_dir, "embeddings"):
         return md.localCheckpoint(eager=False)
     return bounded_persist(md)
 

@@ -28,8 +28,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import bounded_persist
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.session import bounded_persist, reliable_checkpoint
+from parallel_mapreduce_spark.sources import load_table, register_views, table_bytes
 
 N_QUERY_VECS = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -1315,8 +1315,11 @@ def kmeans_lloyd_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every vector contributes exactly one posexploded row per pos, so
     # count per (cid, pos) IS the cluster size. The previous form derived
     # `sizes` from a second consumer of a2 (a full extra assignment pass +
-    # its own shuffle) and joined it back. Equality pinned by
-    # probes/ab_kmeans_fold.py (exceptAll = 0 both ways, schema equal).
+    # its own shuffle) and joined it back. Values pinned against the
+    # DuckDB oracle by tests/test_oracle_parity.py
+    # (test_query_matches_oracle[kmeans_lloyd_2iter]); the one-row-per-pos
+    # invariant by tests/test_similarity.py
+    # (test_fixture_embeddings_share_one_length).
     return (
         a2.select("cid", F.posexplode("e").alias("pos", "val"))
         .groupBy("cid", "pos")
@@ -3640,9 +3643,6 @@ def _knn_rounds(
     (iter-1 window: 28.7 s analyzing vs 1.3 s running; a persist bounds
     recompute but not plan growth, because the optimizer still walks the
     full lineage under the cache node)."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     if vecs is None:
         vecs = _knn_vecs(spark, sf_dir)
     if buckets is None:
@@ -3665,7 +3665,7 @@ def _knn_rounds(
         .repartition(n_parts, "node", "nbr")
         .dropDuplicates(["node", "nbr"])
     )
-    rounds = [_knn_topk(_knn_score(init, vecs)).checkpoint(eager=True)]
+    rounds = [reliable_checkpoint(_knn_topk(_knn_score(init, vecs)))]
     for it in range(KNN_ITERS):
         b = rounds[-1]
         und = (
@@ -3696,7 +3696,7 @@ def _knn_rounds(
         # The LAST round is consumed once (final output / one recall leg),
         # so its plan never nests — skip the eager checkpoint job for it.
         if it < KNN_ITERS - 1:
-            nxt = nxt.checkpoint(eager=True)
+            nxt = reliable_checkpoint(nxt)
         rounds.append(nxt)
     return rounds
 
@@ -3798,7 +3798,7 @@ def _knn_snap_gc(root: str, keep_dir: str) -> None:
     builder's leftovers — live builds finish in minutes)."""
     import time
 
-    keep = int(os.environ.get("SPARK_GRAFT_INDEX_KEEP", _KNN_SNAP_KEEP))
+    keep = _KNN_SNAP_KEEP
     try:
         entries = os.listdir(root)
     except OSError:
@@ -4751,9 +4751,6 @@ def _knn_ingest_ctx(spark: SparkSession, sf_dir: str) -> dict:
     fixture's base index is a second index VERSION over the same corpus,
     built once and scanned by both ingest queries instead of rebuilt per
     query), and the symmetrized base adjacency."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     allv = _knn_vecs(spark, sf_dir)
     is_batch = F.col("vec_id") % KNN_BATCH_MOD == KNN_BATCH_RES
     d = _knn_index(spark, sf_dir, variant="ingest_base")
@@ -5512,11 +5509,10 @@ GS_ROUNDS = 3   # graph hops after the LSH entry
 # fit a broadcast is a property of the CORPUS, not the query — below the
 # gate the hop joins go broadcast-hash (zero exchanges per score call,
 # measured 8.8->5.6s alone); above it the shuffled-hash plan that
-# survived the 30x probe is kept verbatim. Both knobs are parameterised
-# for clusters (env) with local defaults derived from the data itself.
-GS_BCAST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_GS_BCAST_MAX_BYTES", str(64 << 20))
-)
+# survived the 30x probe is kept verbatim. Both decisions are derived
+# from the data (batch size, corpus bytes); the constants below only set
+# the gates.
+GS_BCAST_MAX_BYTES = 64 << 20
 GS_PARTS_ROWS = 10_000  # target visited rows per serving partition
 # Round-14 (verdict items): the QUERY-side broadcasts are gated on the
 # actual batch size, not assumed small. GS_QBCAST_MAX bounds the entry
@@ -5524,32 +5520,14 @@ GS_PARTS_ROWS = 10_000  # target visited rows per serving partition
 # default); GS_VIS_BCAST_ROWS bounds broadcasting the visited frame into
 # the per-hop anti-join (rows ~ Q x GS_BEAM x 3K thin (node, nbr) pairs).
 # A serving batch above either gate falls back to the shuffled plan.
-GS_QBCAST_MAX = int(os.environ.get("SPARK_GRAFT_GS_QBCAST_MAX", "100000"))
-GS_VIS_BCAST_ROWS = int(
-    os.environ.get("SPARK_GRAFT_GS_VIS_BCAST_ROWS", "1000000")
-)
+GS_QBCAST_MAX = 100_000
+GS_VIS_BCAST_ROWS = 1_000_000
 
 
 def _gs_vis_bcast(n_queries: int) -> bool:
     """May the per-hop visited anti-join build side broadcast? Estimated
     from the same Q-budget bound _gs_parts uses."""
     return max(1, n_queries) * GS_BEAM * 3 * KNN_K <= GS_VIS_BCAST_ROWS
-
-
-def _knn_table_bytes(sf_dir: str, table: str = "embeddings") -> int:
-    """On-disk bytes of a source table (file or directory of parts) —
-    the broadcast-vs-shuffle decision input. Unknown => huge (shuffle)."""
-    p = os.path.join(sf_dir.rstrip("/"), f"{table}.parquet")
-    try:
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(p)
-                for f in fs
-            )
-        return os.path.getsize(p)
-    except OSError:
-        return 1 << 62
 
 
 def corpus_parts(
@@ -5564,7 +5542,7 @@ def corpus_parts(
     clamped to [8, parallelism]. A 17 MB test corpus stops paying
     32-task stages to move kilobytes; a 100 TB corpus still saturates
     the cluster (the clamp ceiling is the cores)."""
-    b = _knn_table_bytes(sf_dir, table)
+    b = table_bytes(sf_dir, table)
     return max(
         8,
         min(
@@ -5581,7 +5559,7 @@ def _gs_small(sf_dir: str) -> bool:
     covers both sides comfortably inside the executor/driver budget;
     the adjacency is 2*K thin rows per vector, always smaller than the
     vectors themselves)."""
-    return _knn_table_bytes(sf_dir) <= GS_BCAST_MAX_BYTES
+    return table_bytes(sf_dir, "embeddings") <= GS_BCAST_MAX_BYTES
 
 
 def _gs_parts(spark: SparkSession, n_queries: int) -> int:
@@ -5589,9 +5567,6 @@ def _gs_parts(spark: SparkSession, n_queries: int) -> int:
     visited set tops out near Q * GS_BEAM * 3K rows, so size partitions
     to GS_PARTS_ROWS of those thin rows, clamped to [8, parallelism].
     A million-query serving batch scales back up to full parallelism."""
-    env = os.environ.get("SPARK_GRAFT_GS_PARTS")
-    if env:
-        return int(env)
     est = max(1, n_queries) * GS_BEAM * 3 * KNN_K
     return max(
         8,
@@ -5664,9 +5639,6 @@ def _gs_visited(
     MANY batches against one static index (the streaming drain) build
     the undirected adjacency and the capped entry-candidate frame once
     and reuse them across batches (the stream-static hoist)."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     if beam is None:
         beam = GS_BEAM
     if vecs is None:
@@ -6642,9 +6614,6 @@ def _gs_score_oov(
 def _gs_oov_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, nbr, cos6): the OOV beam search's scored set after
     GS_ROUNDS hops (node = held-out q_id, disjoint id space)."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     vecs = _knn_vecs(spark, sf_dir)
     graph = _knn_graph_snap(spark, sf_dir)
     small = _gs_small(sf_dir)
@@ -7697,9 +7666,6 @@ def _gs_sharded_visited(
     IS the committed unsharded serving path."""
     if s_count == 1:
         return _gs_visited(spark, sf_dir)
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     vecs = _knn_vecs(spark, sf_dir)
     d = _knn_index(spark, sf_dir, variant=f"sharded{s_count}")
     graph = spark.read.parquet(os.path.join(d, f"round{KNN_ITERS}"))
@@ -7879,9 +7845,6 @@ def _gs_routed_visited(
     in-shard, so a single per-query beam IS a home-shard beam. The cheap
     end of the sharded-serving cost spectrum: ~1/S the entry candidates
     and 1/S the beam budget of the fan-out path."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     vecs = _knn_vecs(spark, sf_dir)
     d = _knn_index(spark, sf_dir, variant=f"sharded{s_count}")
     graph = spark.read.parquet(os.path.join(d, f"round{KNN_ITERS}"))
@@ -8061,9 +8024,6 @@ def _gs_cell_routed_visited(
     cells because every edge is in-cell. ONE per-query beam regardless
     of ``p`` (the legs differ only in entry coverage, so the recall-vs-P
     table isolates the routing decision from the beam budget)."""
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     vecs = _knn_vecs(spark, sf_dir)
     d = _knn_index(spark, sf_dir, variant="cellrouted")
     graph = spark.read.parquet(os.path.join(d, f"round{KNN_ITERS}"))

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from parallel_mapreduce_spark.registry import query
+from parallel_mapreduce_spark.session import bounded_persist, reliable_checkpoint
 from parallel_mapreduce_spark.sources.tables import load_table, register_views
 
 PR_ITERS = 3
@@ -121,7 +122,7 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge aggregation. Persisted because the tiny aggregated graph feeds
     # every iteration (and the dangling check) — without it each of the
     # 3*2+1 consumers would re-run the corpus join.
-    edges = (
+    edges = bounded_persist(
         li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -130,7 +131,6 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("dst"),
         )
         .agg(F.count("*").alias("w"))
-        .persist()
     )
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     n_nodes = nation.count()  # 25-row dimension; bounded driver count
@@ -267,9 +267,6 @@ def kcore_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_mapreduce_spark.functions.dedup import (
         minhash_lsh_candidates,
     )
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     pairs = minhash_lsh_candidates(spark, sf_dir)
     und = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
@@ -278,7 +275,7 @@ def kcore_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = None
     for k in KCORE_KS:
-        e = und.checkpoint(eager=True)
+        e = reliable_checkpoint(und)
         n_prev = e.count()
         # KCORE_ROUNDS + 1: detection needs a trailing NO-OP round (the
         # loop only sees convergence when a peel leaves the edge count
@@ -294,11 +291,10 @@ def kcore_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .filter(F.col("deg") >= k)
                 .select("u")
             )
-            e = (
+            e = reliable_checkpoint(
                 e.join(keep, "u", "left_semi")
                 .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
                 .select("u", "v")
-                .checkpoint(eager=True)
             )
             n = e.count()
             if n == n_prev:

@@ -98,24 +98,25 @@ def apply_runtime_conf(spark: SparkSession) -> None:
 _CKPT_DIRS: set[str] = set()
 
 
-def ensure_checkpoint_dir(spark: SparkSession) -> None:
-    """Set a reliable checkpoint dir (once per SparkContext) for iterative
-    operators. Unlike localCheckpoint — whose blocks live on executors and
-    die with them — ``df.checkpoint()`` writes to this directory, so an
-    executor loss mid-iteration recovers by re-reading the checkpoint
-    instead of killing the query. Locally this is a temp dir; on a real
-    cluster point SPARK_GRAFT_CHECKPOINT_DIR at durable storage (HDFS/S3).
+def reliable_checkpoint(df):
+    """``df.checkpoint(eager=True)`` — the engine's one reliable lineage
+    cut. Unlike localCheckpoint — whose blocks live on executors and die
+    with them — a reliable checkpoint is written to the SparkContext's
+    checkpoint directory, so an executor loss mid-iteration recovers by
+    re-reading it instead of killing the query. The directory is set on
+    first use per SparkContext: a temp dir locally; on a real cluster
+    point SPARK_GRAFT_CHECKPOINT_DIR at durable storage (HDFS/S3).
     """
-    sc = spark.sparkContext
-    if sc.applicationId in _CKPT_DIRS:
-        return
-    path = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if not path:
-        import tempfile
+    sc = df.sparkSession.sparkContext
+    if sc.applicationId not in _CKPT_DIRS:
+        path = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+        if not path:
+            import tempfile
 
-        path = tempfile.mkdtemp(prefix="pmr_spark_ckpt_")
-    sc.setCheckpointDir(path)
-    _CKPT_DIRS.add(sc.applicationId)
+            path = tempfile.mkdtemp(prefix="pmr_spark_ckpt_")
+        sc.setCheckpointDir(path)
+        _CKPT_DIRS.add(sc.applicationId)
+    return df.checkpoint(eager=True)
 
 
 _SHIPPED: set[str] = set()

@@ -1,6 +1,7 @@
 from parallel_mapreduce_spark.sources.tables import (  # noqa: F401
     TABLES,
     corpus_cut,
+    fits_local_cut,
     load_table,
     read_csv,
     read_json,
@@ -14,6 +15,7 @@ from parallel_mapreduce_spark.sources.tables import (  # noqa: F401
 __all__ = [
     "TABLES",
     "corpus_cut",
+    "fits_local_cut",
     "table_bytes",
     "load_table",
     "read_csv",

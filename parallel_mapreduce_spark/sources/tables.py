@@ -17,7 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parallel_mapreduce_spark.session import apply_runtime_conf, session_key
+from parallel_mapreduce_spark.session import (
+    apply_runtime_conf,
+    reliable_checkpoint,
+    session_key,
+)
 
 TABLES = (
     "region",
@@ -130,15 +134,17 @@ def read_json(
 # multi-consumer frame is cheap to pin on executors; above it the frame is
 # corpus-scale, where executor-pinned blocks are storage pressure plus a
 # fault cliff (a lost executor kills the job instead of recomputing), so
-# the cut goes through the reliable checkpoint directory instead. NOTE the
+# each user of the gate takes its safe branch instead (corpus_cut: the
+# reliable checkpoint; selection._md_cut: a bounded persist). NOTE the
 # in-memory expansion multiple: decompressed row data runs ~4-8x the
 # parquet bytes, so 192 MiB on disk is of order 1 GiB pinned.
-def _local_cut_max_bytes() -> int:
-    import os
+LOCAL_CUT_MAX_BYTES = 192 << 20
 
-    return int(
-        os.environ.get("SPARK_GRAFT_LOCAL_CKPT_MAX_BYTES", str(192 << 20))
-    )
+
+def fits_local_cut(sf_dir: str, table: str) -> bool:
+    """May frames derived from ``table`` be pinned on executors
+    (localCheckpoint)? Unknown size reads as huge, so this says no."""
+    return table_bytes(sf_dir, table) <= LOCAL_CUT_MAX_BYTES
 
 
 def table_bytes(sf_dir: str, name: str) -> int:
@@ -165,25 +171,22 @@ def corpus_cut(df: DataFrame, sf_dir: str, table: str = "documents") -> DataFram
     (guide §5: cache/cut when a frame is reused and recompute is expensive)
     with the lineage-cut flavor picked by corpus size:
 
-    - below the gate: ``localCheckpoint`` — no parquet round-trip, blocks
-      pinned on executors (tiny here by the gate's definition; a lost
-      executor merely fails a re-runnable query);
-    - above it: reliable ``checkpoint`` — one write+read instead of N
+    - within the gate (``fits_local_cut``): ``localCheckpoint`` — no
+      parquet round-trip, blocks pinned on executors (tiny here by the
+      gate's definition; a lost executor merely fails a re-runnable query);
+    - above it: ``reliable_checkpoint`` — one write+read instead of N
       recomputes of a corpus-scale chain, recoverable on executor loss,
       and no corpus-scale block pinned in executor storage.
 
     Values are identical either way; only materialization strategy moves.
     """
-    if table_bytes(sf_dir, table) <= _local_cut_max_bytes():
+    if fits_local_cut(sf_dir, table):
         # Lazy: consumers share ONE RDD, so upstream shuffle stages dedup
         # by shuffle id inside the first action (no per-consumer replans)
         # and the blocks cache for everything after — without the eager
         # form's extra sequential materialization job per cut.
         return df.localCheckpoint(eager=False)
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(df.sparkSession)
-    return df.checkpoint(eager=True)
+    return reliable_checkpoint(df)
 
 
 _SINK_ROOT: str | None = None

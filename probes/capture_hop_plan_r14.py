@@ -18,12 +18,11 @@ sys.path.insert(0, tree)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from parallel_mapreduce_spark.session import get_spark, ensure_checkpoint_dir  # noqa: E402
+from parallel_mapreduce_spark.session import get_spark  # noqa: E402
 from parallel_mapreduce_spark.functions import similarity as sim  # noqa: E402
 
 SF = "/root/testdata/sf0.1"
 spark = get_spark("capture-hop-plan-r14")
-ensure_checkpoint_dir(spark)
 small = sim._gs_small(SF)
 sp = sim._gs_parts(spark, sim.KNN_EVAL_N)
 vecs = sim._knn_vecs(spark, SF)

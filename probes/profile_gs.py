@@ -10,7 +10,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from parallel_mapreduce_spark.session import (  # noqa: E402
     get_spark,
-    ensure_checkpoint_dir,
+    reliable_checkpoint,
     bounded_persist,
 )
 from parallel_mapreduce_spark.functions import similarity as sim  # noqa: E402
@@ -18,7 +18,6 @@ from parallel_mapreduce_spark.functions import similarity as sim  # noqa: E402
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 spark = get_spark("profile-gs")
 sc = spark.sparkContext
-ensure_checkpoint_dir(spark)
 
 t = time.perf_counter()
 
@@ -77,7 +76,7 @@ for rep in range(2):
         return sim._knn_score(p, vecs)
 
     sc.setJobDescription("gs: entry scored checkpoint")
-    visited = score(entry).checkpoint(eager=True)
+    visited = reliable_checkpoint(score(entry))
     lap(f"[{rep}] entry scored + checkpoint")
 
     for h in range(sim.GS_ROUNDS):
@@ -93,7 +92,7 @@ for rep in range(2):
                 visited.select("node", "nbr"), ["node", "nbr"], "left_anti"
             )
         )
-        visited = visited.unionAll(score(expand)).checkpoint(eager=True)
+        visited = reliable_checkpoint(visited.unionAll(score(expand)))
         lap(f"[{rep}] hop {h} (expand+score+checkpoint)")
 
     sc.setJobDescription("gs: final cut")

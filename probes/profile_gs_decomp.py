@@ -8,7 +8,7 @@ from pyspark.sql import functions as F, Window as W  # noqa: E402
 
 from parallel_mapreduce_spark.session import (  # noqa: E402
     get_spark,
-    ensure_checkpoint_dir,
+    reliable_checkpoint,
     bounded_persist,
 )
 from parallel_mapreduce_spark.functions import similarity as sim  # noqa: E402
@@ -16,7 +16,6 @@ from parallel_mapreduce_spark.functions import similarity as sim  # noqa: E402
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 spark = get_spark("profile-gs-decomp")
 sc = spark.sparkContext
-ensure_checkpoint_dir(spark)
 
 
 def build(local_ckpt=False, bcast_score=False, sp=None, bcast_und=False):
@@ -79,7 +78,7 @@ def build(local_ckpt=False, bcast_score=False, sp=None, bcast_und=False):
         return (
             df.localCheckpoint(eager=True)
             if local_ckpt
-            else df.checkpoint(eager=True)
+            else reliable_checkpoint(df)
         )
 
     visited = ckpt(score(entry))

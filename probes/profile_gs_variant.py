@@ -16,7 +16,6 @@ from pyspark.sql import functions as F, Window as W  # noqa: E402
 
 from parallel_mapreduce_spark.session import (  # noqa: E402
     get_spark,
-    ensure_checkpoint_dir,
     bounded_persist,
 )
 from parallel_mapreduce_spark.functions import similarity as sim  # noqa: E402
@@ -24,7 +23,6 @@ from parallel_mapreduce_spark.functions import similarity as sim  # noqa: E402
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 spark = get_spark("profile-gs-variant")
 sc = spark.sparkContext
-ensure_checkpoint_dir(spark)
 
 
 def variant_visited(beam=None):

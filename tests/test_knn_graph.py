@@ -698,7 +698,7 @@ def test_snapshot_gc_bounds_root(tmp_path, monkeypatch):
     import os
     import time
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_KEEP", "3")
+    monkeypatch.setattr(S, "_KNN_SNAP_KEEP", 3)
     now = time.time()
     dirs = []
     for i in range(6):
@@ -727,11 +727,10 @@ def test_snapshot_gc_bounds_root(tmp_path, monkeypatch):
 
 # --------------------------------------------------------------------------
 # Round-13 optimization contract: the serving traversal's physical-plan
-# knobs (size-gated broadcast scoring, query-bounded partition counts,
+# choices (size-gated broadcast scoring, query-bounded partition counts,
 # localCheckpoint lineage cuts) must NEVER change what is computed — the
 # broadcast and shuffled-hash score paths are alternative plans for the
-# same expression, and the partition derivation is clamped and
-# env-overridable for clusters.
+# same expression, and the partition derivation is clamped.
 # --------------------------------------------------------------------------
 def test_score_broadcast_path_equals_shuffle_path(spark, sf_dir):
     from pyspark.sql import functions as F
@@ -754,23 +753,23 @@ def test_score_broadcast_path_equals_shuffle_path(spark, sf_dir):
     assert a.equals(b), "broadcast scoring diverged from shuffled-hash"
 
 
-def test_gs_parts_is_clamped_and_env_overridable(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_GS_PARTS", raising=False)
+def test_gs_parts_has_floor_and_ceiling(spark):
     dp = max(spark.sparkContext.defaultParallelism, 8)
     assert S._gs_parts(spark, 1) == 8, "floor"
     big = S._gs_parts(spark, 10_000_000)
     assert big == spark.sparkContext.defaultParallelism or big == dp, "ceiling"
-    monkeypatch.setenv("SPARK_GRAFT_GS_PARTS", "13")
-    assert S._gs_parts(spark, 50) == 13, "env override"
 
 
 def test_gs_small_gates_on_corpus_bytes(sf_dir, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_GS_BCAST_MAX_BYTES", raising=False)
+    from parallel_mapreduce_spark.sources import table_bytes
+
     # the test corpora are far below the 64 MiB default gate
     assert S._gs_small(sf_dir)
     # unknown table => treated as huge => shuffle path
-    assert S._knn_table_bytes("/nonexistent") == 1 << 62
+    assert table_bytes("/nonexistent", "embeddings") == 1 << 62
     assert not S._gs_small("/nonexistent")
+    monkeypatch.setattr(S, "GS_BCAST_MAX_BYTES", 0)
+    assert not S._gs_small(sf_dir)
 
 
 def test_capped_buckets_salt_skip_identical(spark, sf_dir):

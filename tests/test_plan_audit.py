@@ -346,3 +346,68 @@ def test_headline_query_gains_no_new_exchanges(spark, sf_dir, name):
         f"{name}: {n} exchanges vs pinned {ceiling} — a refactor added a "
         "shuffle; justify and re-pin, or fix the plan"
     )
+
+
+# --- Materialization / tuning idiom guard --------------------------------
+# One reliable-checkpoint path (session.reliable_checkpoint), persists
+# through the bounded ring (session.bounded_persist), and no tuning env
+# knobs: a source scan of the package so the idiom count cannot grow back.
+DEPLOYMENT_ENV = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_CHECKPOINT_DIR",
+    "SPARK_GRAFT_INDEX_DIR",
+    "SPARK_GRAFT_SF_DIR",
+}
+# Function-owned persist/unpersist pairs (the owner unpersists on exit).
+OWNED_PERSISTS = {
+    ("functions/text.py", "frequent_tokens_cms"),
+    ("functions/text.py", "approx_topk_tokens"),
+}
+
+
+def _idiom_violations(rel: str, src: str) -> list[str]:
+    import ast
+    import re
+
+    bad = []
+    for top in ast.parse(src).body:
+        func = getattr(top, "name", None)  # owner of a function-owned persist
+        for node in ast.walk(top):
+            where = f"{rel}:{getattr(node, 'lineno', '?')}"
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                if node.func.attr == "checkpoint":
+                    bad.append(f"{where} .checkpoint() outside session.py")
+                if node.func.attr == "persist" and (rel, func) not in OWNED_PERSISTS:
+                    bad.append(f"{where} .persist() outside session.py")
+            names = {getattr(node, k, None) for k in ("id", "attr", "name")}
+            if "ensure_checkpoint_dir" in names:
+                bad.append(f"{where} ensure_checkpoint_dir outside session.py")
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and re.fullmatch(r"SPARK_GRAFT_\w+", node.value)
+                and node.value not in DEPLOYMENT_ENV
+            ):
+                bad.append(f"{where} tuning env knob {node.value}")
+    return bad
+
+
+def test_one_checkpoint_path_bounded_persists_no_env_knobs():
+    import os
+
+    import parallel_mapreduce_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    bad = []
+    for dirpath, _, files in os.walk(root):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, root)
+            if rel == "session.py":
+                continue
+            with open(path) as fh:
+                bad += _idiom_violations(rel, fh.read())
+    assert not bad, "\n".join(bad)
+

@@ -350,3 +350,16 @@ def test_filtered_search_prefilter_dominates(spark, sf_dir):
     )
     assert p1["n_results"] < pre["n_results"], "of1 starvation not visible"
     assert pre["recall"] >= p4["recall"] >= p1["recall"]
+
+
+def test_fixture_embeddings_share_one_length(spark, sf_dir):
+    """kmeans_lloyd_2iter folds the cluster size into its (cid, pos)
+    aggregation: count(*) per (cid, pos) equals the cluster's vector count
+    only if every embedding is non-null and all share one dimension."""
+    from pyspark.sql import functions as F
+
+    from parallel_mapreduce_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    dims = emb.select(F.size("embedding").alias("d")).distinct().collect()
+    assert len(dims) == 1 and dims[0].d > 0, dims

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 
 def _docs_head(spark, sf_dir):
     from parallel_mapreduce_spark.sources import load_table
@@ -389,36 +391,56 @@ def test_python_stream_source_multibatch_and_replay(spark):
     assert list(r.readBetweenOffsets({"i": 0}, off)) == paced
 
 
-def test_corpus_cut_gates_on_table_bytes(spark, sf_dir, monkeypatch):
-    """corpus_cut picks its lineage-cut flavor from on-disk corpus bytes:
-    localCheckpoint (executor-pinned RDD) below the gate, reliable
-    checkpoint above it — and an unknown table reads as huge, so the gate
-    fails toward the durable plan, never toward pinning."""
-    from parallel_mapreduce_spark.sources import corpus_cut, load_table, table_bytes
-
-    monkeypatch.delenv("SPARK_GRAFT_LOCAL_CKPT_MAX_BYTES", raising=False)
-    assert table_bytes("/nonexistent", "documents") == 1 << 62
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    # Below the gate (test corpora are KB-MB): LogicalRDD, no checkpoint file.
-    small = corpus_cut(docs, sf_dir)
-    assert "LogicalRDD" in small._jdf.queryExecution().optimizedPlan().toString()
-    assert not small.rdd.isCheckpointed()  # local, not reliable
-    assert small.collect() == docs.collect()
-    # Above the gate (forced with a 0-byte ceiling): reliable checkpoint —
-    # eager, so new files appear under the checkpoint directory.
+@pytest.mark.parametrize("user", ["corpus_cut", "md_cut"])
+def test_local_cut_gate_branches_on_table_bytes(spark, sf_dir, monkeypatch, user):
+    """Both users of the one size gate pick their lineage-cut flavor from
+    on-disk table bytes: localCheckpoint (executor-pinned RDD) at or below
+    LOCAL_CUT_MAX_BYTES, their safe branch above it (corpus_cut: reliable
+    checkpoint; selection._md_cut: bounded persist) — with equal values
+    either way. An unknown table reads as huge, so the gate fails toward
+    the safe branch, never toward pinning."""
     import os
 
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_CKPT_MAX_BYTES", "0")
-    from parallel_mapreduce_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
-    ckpt_dir = spark.sparkContext._jsc.sc().getCheckpointDir().get()
-    if ckpt_dir.startswith("file:"):
-        ckpt_dir = ckpt_dir[len("file:"):]
-    before = sum(len(fs) for _, _, fs in os.walk(ckpt_dir))
-    big = corpus_cut(docs, sf_dir)
-    after = sum(len(fs) for _, _, fs in os.walk(ckpt_dir))
-    assert after > before
-    assert sorted(r.doc_id for r in big.collect()) == sorted(
-        r.doc_id for r in docs.collect()
+    from parallel_mapreduce_spark.functions.selection import _md_cut
+    from parallel_mapreduce_spark.session import reliable_checkpoint
+    from parallel_mapreduce_spark.sources import (
+        corpus_cut,
+        load_table,
+        table_bytes,
+        tables,
     )
+
+    cut, table, key = {
+        "corpus_cut": (corpus_cut, "documents", "doc_id"),
+        "md_cut": (_md_cut, "embeddings", "vec_id"),
+    }[user]
+    frame = load_table(spark, sf_dir, table).select(key)
+    want = sorted(r[0] for r in frame.collect())
+    reliable_checkpoint(frame.limit(1))  # sets the checkpoint dir
+    ckpt_dir = spark.sparkContext._jsc.sc().getCheckpointDir().get()
+    ckpt_dir = ckpt_dir.removeprefix("file:")
+
+    def n_ckpt_files():
+        return sum(len(fs) for _, _, fs in os.walk(ckpt_dir))
+
+    def assert_safe_branch(sf):
+        before = n_ckpt_files()
+        out = cut(frame, sf)
+        if user == "corpus_cut":  # eager: new files under the checkpoint dir
+            assert n_ckpt_files() > before
+        else:  # a persist, never a durable write per pick
+            assert out.is_cached and n_ckpt_files() == before
+        assert sorted(r[0] for r in out.collect()) == want
+
+    # Below the gate (test corpora are KB-MB): LogicalRDD, no checkpoint file.
+    small = cut(frame, sf_dir)
+    assert "LogicalRDD" in small._jdf.queryExecution().optimizedPlan().toString()
+    assert not small.rdd.isCheckpointed()  # local, not reliable
+    assert not small.is_cached
+    assert sorted(r[0] for r in small.collect()) == want
+    # Unknown size at the shipped gate => huge => the safe branch.
+    assert table_bytes("/nonexistent", table) == 1 << 62
+    assert_safe_branch("/nonexistent")
+    # Above the gate (forced with a 0-byte ceiling).
+    monkeypatch.setattr(tables, "LOCAL_CUT_MAX_BYTES", 0)
+    assert_safe_branch(sf_dir)
