@@ -37,6 +37,7 @@ from parallel_mapreduce_spark.functions.text import tokens
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import (
     bounded_persist,
+    partition_count,
     reliable_checkpoint,
 )
 from parallel_mapreduce_spark.sources import (
@@ -321,7 +322,7 @@ def within_group_pairs(
 def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, 8)
+    n = partition_count(spark)
     # Collapse exact-duplicate texts BEFORE the shingle inverted index: on a
     # duplicate-heavy corpus every copy multiplies the index join fan-out
     # quadratically, while the collapsed form shingles each distinct text
@@ -388,7 +389,7 @@ SHINGLE_FREQ_CAP = 100
 def neardup_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, 8)
+    n = partition_count(spark)
     # Same round-14 corpus_cut as neardup_jaccard_pairs; the freq-cap
     # census adds a THIRD consumer of the shingle frame, so the cut pays
     # off even harder here.
@@ -580,7 +581,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse-first shape as the Jaccard path."""
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, 8)
+    n = partition_count(spark)
     # Round-14 corpus_cut (guide §5): members feeds four join legs and
     # rep_sigs feeds both band-join sides plus the eligible filter; the
     # broadcast joins at this scale leave no exchange to reuse, so without
@@ -684,7 +685,7 @@ def minhash_lsh_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard threshold: the banded index's measured S-curve."""
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, 8)
+    n = partition_count(spark)
     members = exact_dup_members(docs)
     reps = _rep_texts(docs, n)
     shingled = reps.select(
@@ -834,7 +835,7 @@ def mllib_minhash_parity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, 8)
+    n = partition_count(spark)
     members = exact_dup_members(docs)
     reps = _rep_texts(docs, n)
     shingled = reps.select(
@@ -981,7 +982,7 @@ def simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash) for every doc — computed on distinct texts, expanded
     to members."""
     docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, 8)
+    n = partition_count(spark)
     members = exact_dup_members(docs)
     rep_sigs = _simhash_of(_rep_texts(docs, n))
     return (
@@ -1041,7 +1042,7 @@ SIMHASH_MAX_HAMMING = 3  # pigeonhole-complete for 4 bands
 def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, 8)
+    n = partition_count(spark)
     members = exact_dup_members(docs)
     sig = _simhash_of(_rep_texts(docs, n))
     bands = sig.select(
@@ -1417,7 +1418,7 @@ def exact_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, 8)
+    n = partition_count(spark)
     reps = _rep_texts(docs, n)
     sigs = _minhash_of(reps)
     bands = _lsh_bands(sigs)
@@ -1533,7 +1534,7 @@ INGEST_NEARDUP_MOD = 10  # doc_id % 10 == 0 is the incoming batch
 def incremental_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, 8)
+    n = partition_count(spark)
     # No exact-dup collapse here: the batch/index split is keyed on the
     # ORIGINAL doc_id, and collapsing would merge batch docs into index
     # representatives across the split boundary.

@@ -38,7 +38,9 @@ from parallel_mapreduce_spark.functions.text import (
     quality_expr,
     tokens,
 )
+from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
+from parallel_mapreduce_spark.session import partition_count
 from parallel_mapreduce_spark.sources import (
     corpus_cut,
     load_table,
@@ -105,7 +107,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kept documents (doc_id, lang, n_tokens) after the full cleaning chain."""
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     # Stage 0: tokenize once; every later stage reuses the array column.
     t = docs.repartition(n_parts, "doc_id").select(
         "doc_id", "lang", "text", tokens("text").alias("toks")
@@ -210,7 +212,7 @@ def pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     t = docs.repartition(n_parts, "doc_id").select(
         "doc_id", "lang", tokens("text").alias("toks")
     )
@@ -380,7 +382,7 @@ def pipeline_chunk_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     assert CHUNK_STRIDE == 96 and CHUNK_TOKENS == 128  # oracle inlines these
     register_views(spark, sf_dir)
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     chunks = chunk_documents(spark, sf_dir).select(
         "doc_id", "chunk_idx", "chunk_hash"
     )
@@ -399,23 +401,14 @@ def pipeline_chunk_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Hierarchical top-k: per-(query, salt) partial cut, then the final cut
     # over Q x RAG_SALT x K survivors.
-    salted = scored.withColumn(
-        "_salt", F.pmod(F.col("doc_id") + F.col("chunk_idx"), F.lit(RAG_SALT))
-    )
-    w_local = W.partitionBy("q_id", "_salt").orderBy(
-        F.col("sim6").desc(), "doc_id", "chunk_idx"
-    )
-    partial = (
-        salted.withColumn("_rk", F.row_number().over(w_local))
-        .filter(F.col("_rk") <= RAG_TOP_K)
-        .drop("_rk", "_salt")
-    )
-    w_final = W.partitionBy("q_id").orderBy(
-        F.col("sim6").desc(), "doc_id", "chunk_idx"
-    )
     return (
-        partial.withColumn("rk", F.row_number().over(w_final))
-        .filter(F.col("rk") <= RAG_TOP_K)
+        top_k(
+            scored,
+            "q_id",
+            [F.col("sim6").desc(), "doc_id", "chunk_idx"],
+            RAG_TOP_K,
+            salt=F.pmod(F.col("doc_id") + F.col("chunk_idx"), F.lit(RAG_SALT)),
+        )
         .select(
             "q_id",
             "doc_id",
@@ -503,7 +496,7 @@ def pipeline_tokenize_pack_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     t = (
         docs.select("doc_id", "source", tokens("text").alias("toks"))
         .repartition(n_parts, "doc_id")
@@ -682,7 +675,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aligned document/embedding corpus."""
     from parallel_mapreduce_spark.functions.similarity import (
         as_double,
-        dot,
+        cosine6,
         l2_norm,
     )
     from parallel_mapreduce_spark.functions.text import _spread
@@ -690,7 +683,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     rrf_u = lambda rk: (  # noqa: E731
         F.round(F.lit(1000000.0) / (F.lit(RRF_K0) + rk)).cast("long")
     )
@@ -710,21 +703,11 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-                6,
-            ).alias("sim6"),
-        )
+        .select("q_id", "c_id", cosine6("qv", "cv", "qn", "cn").alias("sim6"))
     )
-    wv = W.partitionBy("q_id").orderBy(F.col("sim6").desc(), F.col("c_id"))
-    vr = (
-        sims.withColumn("rk", F.row_number().over(wv))
-        .filter(F.col("rk") <= HYBRID_L)
-        .select("q_id", "c_id", rrf_u(F.col("rk")).alias("u_v"))
-    )
+    vr = top_k(
+        sims, "q_id", [F.col("sim6").desc(), F.col("c_id")], HYBRID_L
+    ).select("q_id", "c_id", rrf_u(F.col("rk")).alias("u_v"))
 
     # ---- lexical leg (bm25_topk_docs's exact scoring shape; query term
     # sets are the query documents' distinct tokens)
@@ -771,10 +754,8 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "doc_id")
         .agg(F.round(F.sum(contrib), 4).alias("score"))
     )
-    wl = W.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id"))
     lr = (
-        sc.withColumn("rk", F.row_number().over(wl))
-        .filter(F.col("rk") <= HYBRID_L)
+        top_k(sc, "qid", [F.col("score").desc(), F.col("doc_id")], HYBRID_L)
         .select(
             F.col("qid").alias("q_id"),
             F.col("doc_id").alias("c_id"),
@@ -792,10 +773,8 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("u_v").isNotNull().alias("in_vector"),
         F.col("u_l").isNotNull().alias("in_lexical"),
     )
-    wf = W.partitionBy("q_id").orderBy(F.col("rrf_u").desc(), F.col("c_id"))
     return (
-        f.withColumn("rk", F.row_number().over(wf))
-        .filter(F.col("rk") <= HYBRID_K)
+        top_k(f, "q_id", [F.col("rrf_u").desc(), F.col("c_id")], HYBRID_K)
         .select(
             "q_id",
             F.col("rk").cast("long").alias("rk"),

@@ -28,7 +28,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import bounded_persist, reliable_checkpoint
+from parallel_mapreduce_spark.operators.rank import top_k
+from parallel_mapreduce_spark.session import (
+    bounded_persist,
+    partition_count,
+    reliable_checkpoint,
+)
 from parallel_mapreduce_spark.sources import load_table, register_views, table_bytes
 
 N_QUERY_VECS = 10  # vec_id < 10 are the query vectors
@@ -53,6 +58,21 @@ def l2_norm(vec: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def cosine6(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of vector columns ``a``/``b`` over their precomputed norms
+    ``na``/``nb``, rounded to the 6-dp ranking precision — the rounding
+    policy every DuckDB oracle mirrors with ``ROUND(..., 6)``."""
+    return F.round(dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 6)
+
+
+def _cosine_topk(sims: DataFrame, k: int = TOP_K) -> DataFrame:
+    """(q_id, c_id, cosine): the top-``k`` candidates per query of a
+    (q_id, c_id, sim6) frame, ranked by (sim6 desc, c_id)."""
+    return top_k(sims, "q_id", [F.col("sim6").desc(), F.col("c_id")], k).select(
+        "q_id", "c_id", (F.col("sim6") + F.lit(0.0)).alias("cosine")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -101,7 +121,7 @@ def _cosine_topk_frame(
         register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
         vecs = emb.select("vec_id", as_double("embedding").alias("e"))
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     q = vecs.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("q_id"),
         F.col("e").alias("qv"),
@@ -115,20 +135,9 @@ def _cosine_topk_frame(
     sims = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("sim6"),
-        )
+        .select("q_id", "c_id", cosine6("qv", "cv", "qn", "cn").alias("sim6"))
     )
-    w = W.partitionBy("q_id").orderBy(F.col("sim6").desc(), F.col("c_id"))
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "c_id", (F.col("sim6") + F.lit(0.0)).alias("cosine"))
-    )
+    return _cosine_topk(sims)
 
 
 # --------------------------------------------------------------------------
@@ -245,7 +254,7 @@ def _lsh_topk_frame(
     # run a Spark job at plan-construction time. tests/test_similarity.py
     # pins that the corpus dimension matches EMB_DIM at every sf.
     dim = EMB_DIM
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     vecs = emb.repartition(n_parts).select(
         "vec_id",
         as_double("embedding").alias("v"),
@@ -271,18 +280,9 @@ def _lsh_topk_frame(
         .dropDuplicates(["q_id", "c_id"])  # union of tables, score once
     )
     sims = cand.select(
-        "q_id",
-        "c_id",
-        F.round(dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6).alias(
-            "sim6"
-        ),
+        "q_id", "c_id", cosine6("qv", "v", "qn", "nrm").alias("sim6")
     )
-    w = W.partitionBy("q_id").orderBy(F.col("sim6").desc(), F.col("c_id"))
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "c_id", (F.col("sim6") + F.lit(0.0)).alias("cosine"))
-    )
+    return _cosine_topk(sims)
 
 
 # --------------------------------------------------------------------------
@@ -308,7 +308,7 @@ IVF_NPROBE = 6  # cells probed per query
 def _argmin_cell(vecs: DataFrame, cents: DataFrame, keep: list[str]) -> DataFrame:
     """Assign each vector to its nearest centroid by cosine (deterministic
     tie-break on cell id); `keep` columns ride along inside the min-struct."""
-    sim6 = F.round(dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn")), 6)
+    sim6 = cosine6("v", "cv", "nrm", "cn")
     scored = vecs.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         F.struct(
@@ -441,7 +441,7 @@ def _ivf_scored_frame(
     if emb is None:
         register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     vecs = emb.repartition(n_parts).select(
         "vec_id",
         as_double("embedding").alias("v"),
@@ -451,43 +451,30 @@ def _ivf_scored_frame(
     index = _argmin_cell(vecs, cents, keep=["v", "nrm"])  # (vec_id, cid, v, nrm)
     # Query side: rank ALL cells per query, keep the IVF_NPROBE nearest.
     q = vecs.filter(F.col("vec_id") < N_QUERY_VECS)
-    q_sim6 = F.round(dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn")), 6)
-    wq = W.partitionBy("q_id").orderBy(F.col("csim").desc(), F.col("cid"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            "cid",
-            q_sim6.alias("csim"),
-        )
-        .withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= IVF_NPROBE)
-        .select("q_id", "qv", "qn", "cid")
+    cells = q.crossJoin(F.broadcast(cents)).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
+        "cid",
+        cosine6("v", "cv", "nrm", "cn").alias("csim"),
     )
+    probes = top_k(
+        cells, "q_id", [F.col("csim").desc(), F.col("cid")], IVF_NPROBE
+    ).select("q_id", "qv", "qn", "cid")
     cand = index.join(F.broadcast(probes), "cid").filter(
         F.col("q_id") != F.col("vec_id")
     )
     return cand.select(
         "q_id",
         F.col("vec_id").alias("c_id"),
-        F.round(dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6).alias(
-            "sim6"
-        ),
+        cosine6("qv", "v", "qn", "nrm").alias("sim6"),
     )
 
 
 def _ivf_topk_frame(
     spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
 ) -> DataFrame:
-    sims = _ivf_scored_frame(spark, sf_dir, emb=emb)
-    w = W.partitionBy("q_id").orderBy(F.col("sim6").desc(), F.col("c_id"))
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "c_id", (F.col("sim6") + F.lit(0.0)).alias("cosine"))
-    )
+    return _cosine_topk(_ivf_scored_frame(spark, sf_dir, emb=emb))
 
 
 # --------------------------------------------------------------------------
@@ -542,7 +529,7 @@ def emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < EMB_DEDUP_MAX_ID
     )
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     withn = emb.select(
         "vec_id",
         as_double("embedding").alias("e"),
@@ -554,7 +541,7 @@ def emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = withn.select(
         F.col("vec_id").alias("id_b"), F.col("e").alias("eb"), F.col("nrm").alias("nb")
     )
-    sim6 = F.round(dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6)
+    sim6 = cosine6("ea", "eb", "na", "nb")
     return (
         a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", sim6.alias("sim6"))
@@ -599,7 +586,7 @@ def emb_neardup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     dim = EMB_DIM  # build-time constant; see ann_lsh_topk for why no probe
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     # Collapse identical vectors first (same shape as the text-dedup paths):
     # exact copies share every bucket, so the bucket join fans out
     # quadratically per copy group unless pairs are computed on distinct
@@ -637,9 +624,7 @@ def emb_neardup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "v", "nrm", "tb.table", "tb.bucket")
     a = buckets.alias("a")
     b = buckets.alias("b")
-    sim6 = F.round(
-        dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm")), 6
-    )
+    sim6 = cosine6("a.v", "b.v", "a.nrm", "b.nrm")
     rep_pairs = (
         a.join(
             b,
@@ -671,9 +656,7 @@ def emb_neardup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (numerically ~1.0; computed, not assumed, to stay output-identical).
     self_sim = reps.select(
         F.col("vec_id").alias("rep"),
-        F.round(dot(F.col("v"), F.col("v")) / (F.col("nrm") * F.col("nrm")), 6).alias(
-            "sim6"
-        ),
+        cosine6("v", "v", "nrm", "nrm").alias("sim6"),
     ).filter(F.col("sim6") >= EMB_DEDUP_THRESHOLD)
     g = m.join(self_sim, "rep")
     ga, gb = g.alias("ga"), g.alias("gb")
@@ -882,7 +865,7 @@ def _sq_topk_frame(
     if emb is None:
         register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     # greatest(., eps): an all-zero vector would otherwise divide by zero
     # into NaN quantized values, and NaN orders differently in Spark (sorts
     # largest) vs DuckDB — the guard keeps the candidate cut deterministic.
@@ -923,24 +906,19 @@ def _sq_topk_frame(
         .filter(F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id", "qv", "cv", approx6.alias("approx6"))
     )
-    w_ap = W.partitionBy("q_id").orderBy(F.col("approx6").desc(), F.col("c_id"))
-    cand = (
-        ap.withColumn("ark", F.row_number().over(w_ap))
-        .filter(F.col("ark") <= SQ_OVERFETCH)
-        .select("q_id", "c_id", "qv", "cv")
-    )
+    cand = top_k(
+        ap,
+        "q_id",
+        [F.col("approx6").desc(), F.col("c_id")],
+        SQ_OVERFETCH,
+        rank="ark",
+    ).select("q_id", "c_id", "qv", "cv")
     sim6 = F.round(
         dot(F.col("qv"), F.col("cv"))
         / (l2_norm(F.col("qv")) * l2_norm(F.col("cv"))),
         6,
     )
-    ex = cand.select("q_id", "c_id", sim6.alias("sim6"))
-    w_ex = W.partitionBy("q_id").orderBy(F.col("sim6").desc(), F.col("c_id"))
-    return (
-        ex.withColumn("rk", F.row_number().over(w_ex))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "c_id", (F.col("sim6") + F.lit(0.0)).alias("cosine"))
-    )
+    return _cosine_topk(cand.select("q_id", "c_id", sim6.alias("sim6")))
 
 
 # --------------------------------------------------------------------------
@@ -970,7 +948,7 @@ def _sq_topk_frame(
 def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     dims = (
         emb.select("embedding")
         .repartition(n_parts)
@@ -1026,7 +1004,7 @@ def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < KNN_MAX_ID
     )
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     v = emb.select(
         "vec_id",
         "label",
@@ -1045,17 +1023,17 @@ def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    sim6 = F.round(dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6)
-    ranked = (
-        a.join(F.broadcast(b), F.col("q_id") != F.col("c_id"))
-        .select("q_id", "true_label", "pred_label", sim6.alias("sim6"), "c_id")
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                W.partitionBy("q_id").orderBy(F.col("sim6").desc(), "c_id")
-            ),
-        )
-        .filter(F.col("rk") == 1)
+    ranked = top_k(
+        a.join(F.broadcast(b), F.col("q_id") != F.col("c_id")).select(
+            "q_id",
+            "true_label",
+            "pred_label",
+            cosine6("ea", "eb", "na", "nb").alias("sim6"),
+            "c_id",
+        ),
+        "q_id",
+        [F.col("sim6").desc(), "c_id"],
+        1,
     )
     correct = (F.col("pred_label") == F.col("true_label")).cast("long")
     return ranked.groupBy(F.col("true_label").alias("label")).agg(
@@ -1122,7 +1100,7 @@ PCA_V0 = 0.125  # 1/sqrt(64): uniform unit start vector (exact in binary)
 def embedding_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     e = as_double(F.col("embedding"))
     rows = emb.repartition(n_parts).select(
         "vec_id",
@@ -1286,7 +1264,7 @@ def _kmeans_cents_row(long: DataFrame) -> DataFrame:
 def kmeans_lloyd_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     vecs = emb.repartition(n_parts, "vec_id").select(
         "vec_id", as_double(F.col("embedding")).alias("e")
     )
@@ -1525,7 +1503,7 @@ def semdedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     # Corpus-derived cluster count (ONE bounded driver scalar): expected
     # cluster size ~TARGET_CLUSTER, so within-cluster pair work stays
     # linear in N. Integer ceiling division matches the oracle's nv CTE
@@ -1643,9 +1621,7 @@ def semdedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    sim6 = F.round(
-        dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6
-    )
+    sim6 = cosine6("ea", "eb", "na", "nb")
     pairs = (
         x.join(y, "cid")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -1854,7 +1830,7 @@ def _pq_adc_ranked(
         vecs = emb.select(
             "vec_id", as_double(F.col("embedding")).alias("e")
         )
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     db = vecs.filter(F.col("vec_id") >= N_QUERY_VECS).repartition(
         n_parts, "vec_id"
     )
@@ -1919,28 +1895,23 @@ def _pq_adc_ranked(
     )
     # Salted two-phase top-k (the source_cap_sample shape): no task ever
     # orders one query's full candidate list.
-    stage1 = ad.withColumn(
-        "salt", F.col("vec_id") % PQ_RANK_SALT
-    ).withColumn(
-        "rn1",
-        F.row_number().over(
-            W.partitionBy("q_id", "salt").orderBy("approx_du", "vec_id")
-        ),
-    ).filter(F.col("rn1") <= topk)
-    return (
-        stage1.withColumn(
-            "rk",
-            F.row_number().over(
-                W.partitionBy("q_id").orderBy("approx_du", "vec_id")
-            ),
-        )
-        .filter(F.col("rk") <= topk)
-        .select(
-            "q_id",
-            F.col("rk").cast("long").alias("rk"),
-            F.col("vec_id").alias("c_id"),
-            "approx_du",
-        )
+    return _adc_topk(ad, topk)
+
+
+def _adc_topk(ad: DataFrame, topk: int) -> DataFrame:
+    """(q_id, rk, c_id, approx_du): salted two-phase top-``topk`` per
+    query of an ADC (q_id, vec_id, approx_du) distance frame."""
+    return top_k(
+        ad,
+        "q_id",
+        ["approx_du", "vec_id"],
+        topk,
+        salt=F.col("vec_id") % PQ_RANK_SALT,
+    ).select(
+        "q_id",
+        F.col("rk").cast("long").alias("rk"),
+        F.col("vec_id").alias("c_id"),
+        "approx_du",
     )
 
 
@@ -2216,7 +2187,7 @@ def _ivfpq_ranked(
         vecs = emb.select(
             "vec_id", as_double(F.col("embedding")).alias("e")
         )
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     coarse_row = _ivfpq_coarse_row(vecs)
     db = vecs.filter(F.col("vec_id") >= N_QUERY_VECS).repartition(
         n_parts, "vec_id"
@@ -2244,26 +2215,13 @@ def _ivfpq_ranked(
     # Per-cell seeds: the PQ_K lowest vec_ids assigned to each coarse
     # cell (deterministic; the oracle replays it as one ROW_NUMBER).
     # Salted two-phase pick so no task orders a full cell's id list.
-    ids = assigned.select("vec_id", "ccid")
-    seed_pool = ids.withColumn(
-        "salt", F.col("vec_id") % PQ_RANK_SALT
-    ).withColumn(
-        "rn1",
-        F.row_number().over(
-            W.partitionBy("ccid", "salt").orderBy("vec_id")
-        ),
-    ).filter(F.col("rn1") <= PQ_K)
-    seeds = (
-        seed_pool.withColumn(
-            "cid",
-            (
-                F.row_number().over(W.partitionBy("ccid").orderBy("vec_id"))
-                - 1
-            ).cast("int"),
-        )
-        .filter(F.col("cid") < PQ_K)
-        .select("vec_id", "cid")
-    )
+    seeds = top_k(
+        assigned.select("vec_id", "ccid"),
+        "ccid",
+        ["vec_id"],
+        PQ_K,
+        salt=F.col("vec_id") % PQ_RANK_SALT,
+    ).select("vec_id", (F.col("rk") - 1).alias("cid"))
     init_long = dbsub.join(F.broadcast(seeds), "vec_id").select(
         "ccid", "cid", "s", F.posexplode("sub").alias("spos", "cval")
     )
@@ -2353,29 +2311,7 @@ def _ivfpq_ranked(
         .groupBy("q_id", "vec_id")
         .agg(F.sum("du").alias("approx_du"))
     )
-    stage1 = ad.withColumn(
-        "salt", F.col("vec_id") % PQ_RANK_SALT
-    ).withColumn(
-        "rn1",
-        F.row_number().over(
-            W.partitionBy("q_id", "salt").orderBy("approx_du", "vec_id")
-        ),
-    ).filter(F.col("rn1") <= topk)
-    return (
-        stage1.withColumn(
-            "rk",
-            F.row_number().over(
-                W.partitionBy("q_id").orderBy("approx_du", "vec_id")
-            ),
-        )
-        .filter(F.col("rk") <= topk)
-        .select(
-            "q_id",
-            F.col("rk").cast("long").alias("rk"),
-            F.col("vec_id").alias("c_id"),
-            "approx_du",
-        )
-    )
+    return _adc_topk(ad, topk)
 
 
 @query(
@@ -2475,13 +2411,8 @@ def _ivfpq_rerank_ranked(
         .alias("d2u")
     )
     scored = c.join(F.broadcast(sl_q), "c_id").select("q_id", "c_id", d2u)
-    w = W.partitionBy("q_id").orderBy("d2u", "c_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= PQ_TOPK)
-        .select(
-            "q_id", F.col("rk").cast("long").alias("rk"), "c_id", "d2u"
-        )
+    return top_k(scored, "q_id", ["d2u", "c_id"], PQ_TOPK).select(
+        "q_id", F.col("rk").cast("long").alias("rk"), "c_id", "d2u"
     )
 
 
@@ -2577,7 +2508,7 @@ def _exact_l2_topk(
         register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
         vecs = emb.select("vec_id", as_double("embedding").alias("e"))
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     q = vecs.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("q_id"), F.col("e").alias("qv")
     )
@@ -2597,12 +2528,7 @@ def _exact_l2_topk(
     scored = (
         c.crossJoin(F.broadcast(q)).select("q_id", "c_id", d6.alias("d6"))
     )
-    w = W.partitionBy("q_id").orderBy("d6", "c_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= PQ_TOPK)
-        .select("q_id", "c_id")
-    )
+    return top_k(scored, "q_id", ["d6", "c_id"], PQ_TOPK).select("q_id", "c_id")
 
 
 def _recall_oracle(exact_sql: str, approx_sql: str) -> str:
@@ -3453,30 +3379,13 @@ def _knn_capped_buckets(
     removes rows phase 2 would drop anyway; pinned in
     tests/test_knn_graph.py::test_capped_buckets_salt_skip_identical)."""
     mx = F.pmod(F.col("vec_id") * F.lit(KNN_CAP_MIX), F.lit(KNN_CAP_MOD))
-    p1 = buckets.withColumn("mx", mx)
-    if not skip_salt:
-        p1 = (
-            p1.withColumn("salt", F.col("vec_id") % KNN_CAP_SALT)
-            .withColumn(
-                "rn1",
-                F.row_number().over(
-                    W.partitionBy("tbl", "bucket", "salt").orderBy(
-                        "mx", "vec_id"
-                    )
-                ),
-            )
-            .filter(F.col("rn1") <= KNN_BUCKET_CAP)
-        )
-    return (
-        p1.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("tbl", "bucket").orderBy("mx", "vec_id")
-            ),
-        )
-        .filter(F.col("rn") <= KNN_BUCKET_CAP)
-        .select("vec_id", "tbl", "bucket")
-    )
+    return top_k(
+        buckets.withColumn("mx", mx),
+        ["tbl", "bucket"],
+        ["mx", "vec_id"],
+        KNN_BUCKET_CAP,
+        salt=None if skip_salt else F.col("vec_id") % KNN_CAP_SALT,
+    ).select("vec_id", "tbl", "bucket")
 
 
 def _knn_vecs(
@@ -3491,7 +3400,7 @@ def _knn_vecs(
     emb = load_table(spark, sf_dir, "embeddings")
     if where is not None:
         emb = emb.where(where)
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     e = as_double(F.col("embedding"))
     return bounded_persist(
         emb.repartition(n_parts, "vec_id").select(
@@ -3527,7 +3436,7 @@ def _knn_score(
       the pairs never sorts the fat rows — the same reasoning at 1000
       executors: a vector shard per task is corpus/parallelism and
       bounded; the candidate stream is unbounded and must not sort."""
-    n_parts = max(pairs.sparkSession.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(pairs.sparkSession)
     a = vecs.select(
         F.col("vec_id").alias("node"),
         F.col("e").alias("ea"),
@@ -3538,9 +3447,7 @@ def _knn_score(
         F.col("e").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    cos6 = F.round(
-        dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6
-    ).alias("cos6")
+    cos6 = cosine6("ea", "eb", "na", "nb").alias("cos6")
     if bcast:
         return (
             pairs.join(F.broadcast(a), "node")
@@ -3566,15 +3473,26 @@ def _knn_topk(
     window reuse the exchange (no second shuffle) and sort in
     corpus/parallelism chunks. ``parts`` overrides the partition count
     for query-bounded serving frames (see _gs_parts)."""
-    n_parts = parts or max(
-        scored.sparkSession.sparkContext.defaultParallelism, 8
+    n_parts = parts or partition_count(scored.sparkSession)
+    return _node_topk(scored.repartition(n_parts, "node"), k).select(
+        "node", "nbr", "cos6"
     )
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
-    return (
-        scored.repartition(n_parts, "node")
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("node", "nbr", "cos6")
+
+
+def _node_topk(df: DataFrame, k: int = KNN_K) -> DataFrame:
+    """Top-``k`` neighbours per node by (cos6 desc, nbr): the graph
+    family's one ranking, shared by build, truth and serving."""
+    return top_k(df, "node", [F.desc("cos6"), "nbr"], k)
+
+
+def _gs_serve(visited: DataFrame) -> DataFrame:
+    """(q_id, rk, c_id, cosine): the served top-KNN_K per query of a
+    traversal's visited (node, nbr, cos6) set."""
+    return _node_topk(visited).select(
+        F.col("node").alias("q_id"),
+        F.col("rk").cast("long").alias("rk"),
+        F.col("nbr").alias("c_id"),
+        (F.col("cos6") + F.lit(0.0)).alias("cosine"),
     )
 
 
@@ -3652,7 +3570,7 @@ def _knn_rounds(
         # interpreted dots/row) is the expensive part — computing it twice
         # doubled plan+eval cost for zero benefit.
         buckets = bounded_persist(_knn_buckets(vecs, prow))
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     a = buckets.select(F.col("vec_id").alias("node"), "tbl", "bucket")
     # probe side uncapped (every node gets seeded); CANDIDATE side capped
     c = _knn_capped_buckets(buckets).select(
@@ -3739,35 +3657,63 @@ _KNN_SNAP_VER = 2  # manual escape hatch only: since round 13 the content
                    # has to remember the bump (round-12 advisor finding).
 
 
+def _source_closure(root) -> dict:
+    """{qualified name: function} for every package function reachable
+    from ``root``: the names each code object (nested lambdas and defs
+    included) loads, resolved through the function's module globals and,
+    for a package module held in those globals (``sim.x``), through that
+    module's attributes. Over-approximates on purpose — a name that
+    resolves to a package function is kept even if the path that reads
+    it never runs — so no helper an edit could reach escapes a digest."""
+    import inspect
+    import types
+
+    pkg = __name__.split(".")[0] + "."
+    seen: dict = {}
+    todo = [root]
+    while todo:
+        fn = todo.pop()
+        key = f"{fn.__module__}.{fn.__qualname__}"
+        if key in seen:
+            continue
+        seen[key] = fn
+        codes = [fn.__code__]
+        while codes:
+            co = codes.pop()
+            codes += [c for c in co.co_consts if isinstance(c, types.CodeType)]
+            spaces = [fn.__globals__] + [
+                vars(m)
+                for n in co.co_names
+                if inspect.ismodule(m := fn.__globals__.get(n))
+                and m.__name__.startswith(pkg)
+            ]
+            for n in co.co_names:
+                for ns in spaces:
+                    obj = ns.get(n)
+                    if inspect.isfunction(obj) and obj.__module__.startswith(pkg):
+                        todo.append(obj)
+    return seen
+
+
+def _closure_digest(root) -> str:
+    """sha256 over the SOURCE of every package function reachable from
+    ``root``. A code edit anywhere in that closure changes the digest,
+    the digest changes the content key, and a warm tempdir can no longer
+    serve values built by older code — staleness is structural, not a
+    hand-kept list someone has to remember to extend."""
+    import inspect
+
+    fns = _source_closure(root)
+    src = "\n".join(inspect.getsource(fns[k]) for k in sorted(fns))
+    return hashlib.sha256(src.encode()).hexdigest()[:16]
+
+
 def _knn_build_digest() -> str:
-    """sha256 over the SOURCE of every function whose semantics shape the
-    snapshot's bytes. A code edit changes the digest, the digest changes
-    the content key, and a warm tempdir can no longer serve values built
-    by older code — staleness is structural, not convention-enforced."""
+    """Source digest of everything the snapshot build (`_knn_index`)
+    can reach."""
     global _KNN_BUILD_DIGEST
     if _KNN_BUILD_DIGEST is None:
-        import inspect
-
-        fns = (
-            as_double,
-            l2_norm,
-            dot,
-            lsh_table_buckets,
-            _knn_vecs,
-            _knn_prow,
-            _knn_buckets,
-            _knn_capped_buckets,
-            _knn_score,
-            _knn_topk,
-            _knn_rounds,
-            _knn_index,
-            # the cellrouted variant's shard map + centroid artifacts
-            _kmeans_assign,
-            _kmeans_cents_row,
-            _knn_cells,
-        )
-        src = "\n".join(inspect.getsource(f) for f in fns)
-        _KNN_BUILD_DIGEST = hashlib.sha256(src.encode()).hexdigest()[:16]
+        _KNN_BUILD_DIGEST = _closure_digest(_knn_index)
     return _KNN_BUILD_DIGEST
 
 
@@ -3876,7 +3822,7 @@ def _knn_cells(spark: SparkSession, sf_dir: str):
     vs the hash-routed collapse in `ann_graph_search_routed_recall`)."""
     register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     vecs = emb.repartition(n_parts, "vec_id").select(
         "vec_id", as_double(F.col("embedding")).alias("e")
     )
@@ -4071,18 +4017,7 @@ def _knn_truth_digest() -> str:
     (same structural-staleness contract as _knn_build_digest)."""
     global _TRUTH_DIGEST
     if _TRUTH_DIGEST is None:
-        import inspect
-
-        fns = (
-            as_double,
-            l2_norm,
-            dot,
-            _knn_vecs,
-            _gs_oov_queries,
-            _knn_truth_index,
-        )
-        src = "\n".join(inspect.getsource(f) for f in fns)
-        _TRUTH_DIGEST = hashlib.sha256(src.encode()).hexdigest()[:16]
+        _TRUTH_DIGEST = _closure_digest(_knn_truth_index)
     return _TRUTH_DIGEST
 
 
@@ -4142,18 +4077,14 @@ def _knn_truth_index(spark: SparkSession, sf_dir: str) -> str:
         .select(
             "node",
             "nbr",
-            F.round(
-                dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6
-            ).alias("cos6"),
+            cosine6("ea", "eb", "na", "nb").alias("cos6"),
         )
     )
     qv = _gs_oov_queries(spark, sf_dir)
     oov_scored = c.crossJoin(F.broadcast(qv)).select(
         "node",
         "nbr",
-        F.round(
-            dot(F.col("qe"), F.col("eb")) / (F.col("qn") * F.col("nb")), 6
-        ).alias("cos6"),
+        cosine6("qe", "eb", "qn", "nb").alias("cos6"),
     )
     tmp = f"{d}.build-{os.getpid()}"
     try:
@@ -4843,10 +4774,9 @@ def knn_graph_incremental_ingest(
         )
     )
     base_rows = (
-        merged.withColumn("rk", F.row_number().over(w).cast("long"))
+        _node_topk(merged)
         .where(
-            (F.col("rk") <= KNN_K)
-            & (F.col("nbr") % KNN_BATCH_MOD == KNN_BATCH_RES)
+            (F.col("nbr") % KNN_BATCH_MOD == KNN_BATCH_RES)
             # reversed within-batch edges put BATCH nodes into `merged`;
             # the 'base' kind reports base-list deltas only (batch lists
             # are already the 'new' rows)
@@ -4855,7 +4785,7 @@ def knn_graph_incremental_ingest(
         .select(
             F.lit("base").alias("kind"),
             "node",
-            "rk",
+            F.col("rk").cast("long").alias("rk"),
             "nbr",
             (F.col("cos6") + F.lit(0.0)).alias("cos6"),
         )
@@ -5096,7 +5026,6 @@ def knn_index_refresh_recall(
     snapshot or must pay a rebuild."""
     ctx = _knn_ingest_ctx(spark, sf_dir)
     l1 = _knn_ingest_lists(ctx, batch_leg=True)
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
     merged = ctx["bgraph"].select("node", "nbr", "cos6").unionAll(
         l1.select(
             F.col("nbr").alias("node"), F.col("node").alias("nbr"), "cos6"
@@ -5106,10 +5035,9 @@ def knn_index_refresh_recall(
         l1.where(F.col("node") < KNN_EVAL_N)
         .select("node", "nbr")
         .unionAll(
-            merged.withColumn("rk", F.row_number().over(w))
+            _node_topk(merged)
             .where(
-                (F.col("rk") <= KNN_K)
-                & (F.col("node") < KNN_EVAL_N)
+                (F.col("node") < KNN_EVAL_N)
                 & (F.col("node") % KNN_BATCH_MOD != KNN_BATCH_RES)
             )
             .select("node", "nbr")
@@ -5380,7 +5308,7 @@ def _mp_topk_oracle(src: str = "embeddings") -> str:
 def _mp_topk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     vecs = emb.repartition(n_parts).select(
         "vec_id",
         as_double("embedding").alias("v"),
@@ -5415,18 +5343,9 @@ def _mp_topk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["q_id", "c_id"])  # probe union, score once
     )
     sims = cand.select(
-        "q_id",
-        "c_id",
-        F.round(
-            dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-        ).alias("sim6"),
+        "q_id", "c_id", cosine6("qv", "v", "qn", "nrm").alias("sim6")
     )
-    w = W.partitionBy("q_id").orderBy(F.col("sim6").desc(), F.col("c_id"))
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "c_id", (F.col("sim6") + F.lit(0.0)).alias("cosine"))
-    )
+    return _cosine_topk(sims)
 
 
 @query("ann_multiprobe_lsh_topk", oracle=_mp_topk_oracle())
@@ -5546,7 +5465,7 @@ def corpus_parts(
     return max(
         8,
         min(
-            max(spark.sparkContext.defaultParallelism, 8),
+            partition_count(spark),
             -(-b // per_part),
         ),
     )
@@ -5652,7 +5571,7 @@ def _gs_visited(
     small = _gs_small(sf_dir)
     nq = KNN_EVAL_N if n_queries is None else n_queries
     sp = _gs_parts(spark, nq)
-    n_parts = sp if small else max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = sp if small else partition_count(spark)
     if und is None:
         und = _gs_und(graph, n_parts)
     # Entry: the bucket frame from the index snapshot (the same rows the
@@ -5764,21 +5683,18 @@ def _gs_traverse(
     an uncontrolled exchange at session shuffle partitions — the
     AQE-funnel hazard _knn_topk's explicit repartition exists to avoid.)"""
     spark = entry_scored.sparkSession
-    n_parts = parts or max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = parts or partition_count(spark)
     visited = entry_scored.localCheckpoint(eager=True)
     for _ in range(GS_ROUNDS):
         if beam_by is None:
             front = _knn_topk(visited, k=beam, parts=n_parts)
         else:
-            wb = W.partitionBy(F.col("node"), beam_by).orderBy(
-                F.desc("cos6"), "nbr"
-            )
-            front = (
-                visited.repartition(n_parts, "node")
-                .withColumn("rk", F.row_number().over(wb))
-                .where(F.col("rk") <= beam)
-                .select("node", "nbr", "cos6")
-            )
+            front = top_k(
+                visited.repartition(n_parts, "node"),
+                [F.col("node"), beam_by],
+                [F.desc("cos6"), "nbr"],
+                beam,
+            ).select("node", "nbr", "cos6")
         expand = front.select("node", F.col("nbr").alias("a")).join(
             F.broadcast(und) if bcast_und else und, "a"
         )
@@ -5912,17 +5828,7 @@ def ann_graph_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     + GS_ROUNDS-hop beam search over the NN-Descent graph — the
     query-time leg of the kNN-graph index."""
     visited = _gs_visited(spark, sf_dir)
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
-    return (
-        visited.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= KNN_K)
-        .select(
-            F.col("node").alias("q_id"),
-            "rk",
-            F.col("nbr").alias("c_id"),
-            (F.col("cos6") + F.lit(0.0)).alias("cosine"),
-        )
-    )
+    return _gs_serve(visited)
 
 
 @query(
@@ -5966,12 +5872,7 @@ def ann_graph_search_recall_at_k(
     quality gate value-checked like the clustered IVF-PQ floor."""
     visited = _gs_visited(spark, sf_dir)
     truth = _knn_truth(spark, sf_dir)
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
-    approx = (
-        visited.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= KNN_K)
-        .select("node", "nbr")
-    )
+    approx = _node_topk(visited).select("node", "nbr")
     n_scored = visited.agg(
         F.count("*").cast("long").alias("n_scored")
     )
@@ -6056,15 +5957,10 @@ def ann_graph_search_beam_curve(
     vecs = _knn_vecs(spark, sf_dir)
     graph = _knn_graph_snap(spark, sf_dir)
     truth = bounded_persist(_knn_truth(spark, sf_dir))
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
     legs = []
     for b in GS_BEAM_CURVE:
         visited = _gs_visited(spark, sf_dir, beam=b, vecs=vecs, graph=graph)
-        approx = (
-            visited.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= KNN_K)
-            .select("node", "nbr")
-        )
+        approx = _node_topk(visited).select("node", "nbr")
         ns = visited.agg(F.count("*").cast("long").alias("n_scored"))
         legs.append(
             _truth_recall_agg(
@@ -6243,15 +6139,10 @@ def ann_graph_search_pruned_recall(
     graph = _knn_graph_snap(spark, sf_dir)
     truth = bounded_persist(_knn_truth(spark, sf_dir))
     pruned = bounded_persist(_rng_pruned_graph(graph, vecs))
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
     legs = []
     for kind, g in (("full", graph), ("rng_pruned", pruned)):
         visited = _gs_visited(spark, sf_dir, vecs=vecs, graph=g)
-        approx = (
-            visited.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= KNN_K)
-            .select("node", "nbr")
-        )
+        approx = _node_topk(visited).select("node", "nbr")
         ne = g.agg(F.count("*").cast("long").alias("n_edges"))
         ns = visited.agg(F.count("*").cast("long").alias("n_scored"))
         legs.append(
@@ -6342,13 +6233,12 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("c_id"), "source")
     )
     flt = sims.join(F.broadcast(allowed), "c_id")
-    w = W.partitionBy("q_id").orderBy(F.col("sim6").desc(), F.col("c_id"))
+    order = [F.col("sim6").desc(), F.col("c_id")]
     return (
-        flt.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= TOP_K)
+        top_k(flt, "q_id", order, TOP_K)
         .select(
             "q_id",
-            "rk",
+            F.col("rk").cast("long").alias("rk"),
             "c_id",
             "source",
             (F.col("sim6") + F.lit(0.0)).alias("cosine"),
@@ -6426,7 +6316,7 @@ def ann_filtered_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     FLT_OVERFETCH budget (the committed post-filter price)."""
     register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     vecs = emb.repartition(n_parts).select(
         "vec_id",
         as_double("embedding").alias("v"),
@@ -6446,42 +6336,30 @@ def ann_filtered_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = vecs.join(F.broadcast(allowed.select("c_id")), vecs.vec_id == F.col("c_id")).select(
         "c_id", F.col("v").alias("cv"), F.col("nrm").alias("cn")
     )
-    wt = W.partitionBy("q_id").orderBy(F.col("sim6").desc(), F.col("c_id"))
-    truth = bounded_persist(
+    order = [F.col("sim6").desc(), F.col("c_id")]
+    scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("sim6"),
-        )
-        .withColumn("rk", F.row_number().over(wt))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "c_id")
+        .select("q_id", "c_id", cosine6("qv", "cv", "qn", "cn").alias("sim6"))
+    )
+    truth = bounded_persist(
+        top_k(scored, "q_id", order, TOP_K).select("q_id", "c_id")
     )
     sims = bounded_persist(_ivf_scored_frame(spark, sf_dir))
-    w = W.partitionBy("q_id").orderBy(F.col("sim6").desc(), F.col("c_id"))
-    pre = (
-        sims.join(F.broadcast(allowed.select("c_id")), "c_id")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "c_id")
+    ok = F.broadcast(allowed.select("c_id"))
+    pre = top_k(sims.join(ok, "c_id"), "q_id", order, TOP_K).select(
+        "q_id", "c_id"
     )
-    ranked = sims.withColumn("rk", F.row_number().over(w))
-    p1 = (
-        ranked.filter(F.col("rk") <= TOP_K)
-        .join(F.broadcast(allowed.select("c_id")), "c_id")
-        .select("q_id", "c_id")
+    p1 = top_k(sims, "q_id", order, TOP_K).join(ok, "c_id").select(
+        "q_id", "c_id"
     )
-    p4 = (
-        ranked.filter(F.col("rk") <= FLT_OVERFETCH * TOP_K)
-        .join(F.broadcast(allowed.select("c_id")), "c_id")
-        .withColumn("rk2", F.row_number().over(w))
-        .filter(F.col("rk2") <= TOP_K)
-        .select("q_id", "c_id")
-    )
+    p4 = top_k(
+        top_k(sims, "q_id", order, FLT_OVERFETCH * TOP_K).join(ok, "c_id"),
+        "q_id",
+        order,
+        TOP_K,
+        rank="rk2",
+    ).select("q_id", "c_id")
     n_true = truth.count()
     legs = []
     for name, approx in (
@@ -6588,15 +6466,13 @@ def _gs_score_oov(
     vectors broadcast (query-batch-sized), candidate side streams with
     the family's shuffled-hash discipline — or broadcasts too when the
     corpus is below GS_BCAST_MAX_BYTES (``bcast``; guide §3.1)."""
-    n_parts = max(pairs.sparkSession.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(pairs.sparkSession)
     c = vecs.select(
         F.col("vec_id").alias("nbr"),
         F.col("e").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    cos6 = F.round(
-        dot(F.col("qe"), F.col("eb")) / (F.col("qn") * F.col("nb")), 6
-    ).alias("cos6")
+    cos6 = cosine6("qe", "eb", "qn", "nb").alias("cos6")
     if bcast:
         return (
             pairs.join(F.broadcast(qvecs), "node")
@@ -6618,7 +6494,7 @@ def _gs_oov_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph = _knn_graph_snap(spark, sf_dir)
     small = _gs_small(sf_dir)
     sp = _gs_parts(spark, GS_OOV_N)
-    n_parts = sp if small else max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = sp if small else partition_count(spark)
     und = _gs_und(graph, n_parts)
     prow = _knn_prow_snap(spark, sf_dir)
     bkts = _knn_buckets_snap(spark, sf_dir)
@@ -6724,17 +6600,7 @@ def ann_graph_search_oov_topk(
     """(q_id, rk, c_id, cosine): graph serving for HELD-OUT queries —
     vectors the index never saw, entered via their own LSH buckets."""
     visited = _gs_oov_visited(spark, sf_dir)
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
-    return (
-        visited.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= KNN_K)
-        .select(
-            F.col("node").alias("q_id"),
-            "rk",
-            F.col("nbr").alias("c_id"),
-            (F.col("cos6") + F.lit(0.0)).alias("cosine"),
-        )
-    )
+    return _gs_serve(visited)
 
 
 @query(
@@ -6783,19 +6649,9 @@ def ann_graph_search_oov_recall(
     query's rank-1 result should be its (perturbed-from) source
     vector."""
     visited = _gs_oov_visited(spark, sf_dir)
-    wt = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
     # OOV truth: re-rank over the materialized oov_scored frame (round 13)
-    truth = (
-        _knn_oov_scored(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(wt))
-        .where(F.col("rk") <= KNN_K)
-        .select("node", "nbr")
-    )
-    approx = (
-        visited.withColumn("rk", F.row_number().over(wt))
-        .where(F.col("rk") <= KNN_K)
-        .select("node", "nbr", "rk")
-    )
+    truth = _node_topk(_knn_oov_scored(spark, sf_dir)).select("node", "nbr")
+    approx = _node_topk(visited).select("node", "nbr", "rk")
     approx = bounded_persist(approx)
     src_hits = approx.where(
         (F.col("rk") == 1) & (F.col("nbr") == F.col("node") + GS_OOV_BASE)
@@ -6923,7 +6779,6 @@ def ann_graph_search_filtered_recall(
         .where(F.col("source").isin(*FLT_SOURCES))
         .select(F.col("doc_id").alias("vec_id"))
     )
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
     # exact filtered truth for the eval queries: an eligibility filter +
     # re-rank over the materialized truth snapshot (round 13)
     truth = bounded_persist(_knn_truth(spark, sf_dir, nbr_semi=allowed))
@@ -6949,11 +6804,7 @@ def ann_graph_search_filtered_recall(
                 "nbr",
                 "left_semi",
             )
-        approx = (
-            cut.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= KNN_K)
-            .select("node", "nbr")
-        )
+        approx = _node_topk(cut).select("node", "nbr")
         j = approx.join(
             truth.withColumn("hit", F.lit(1)), ["node", "nbr"], "left"
         )
@@ -7036,7 +6887,7 @@ def _gs_compacted_graph(
     Every join is against the tombstone frame (the small side) or
     degree-bounded (<= K out-edges per tombstone). ``bcast`` routes the
     re-rank scoring through the broadcast path (small corpus)."""
-    n_parts = max(graph.sparkSession.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(graph.sparkSession)
     t_node = tomb.select(F.col("vec_id").alias("node"))
     t_nbr = tomb.select(F.col("vec_id").alias("nbr"))
     live_src = graph.join(F.broadcast(t_node), "node", "left_anti")
@@ -7141,17 +6992,7 @@ def ann_graph_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nbr",
         "left_anti",
     )
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
-    return (
-        cut.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= KNN_K)
-        .select(
-            F.col("node").alias("q_id"),
-            "rk",
-            F.col("nbr").alias("c_id"),
-            (F.col("cos6") + F.lit(0.0)).alias("cosine"),
-        )
-    )
+    return _gs_serve(cut)
 
 
 def _gs_del_recall_oracle() -> str:
@@ -7217,7 +7058,6 @@ def ann_graph_delete_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph = _knn_graph_snap(spark, sf_dir)
     tomb, _ = _gs_del_frames(vecs)
     tomb = bounded_persist(tomb)
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
     # exact truth over survivors for the eval queries: a survivor filter +
     # re-rank over the materialized truth snapshot (round 13)
     truth = bounded_persist(_knn_truth(spark, sf_dir, nbr_anti=tomb))
@@ -7241,11 +7081,7 @@ def ann_graph_delete_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "nbr",
                 "left_anti",
             )
-        approx = bounded_persist(
-            cut.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= KNN_K)
-            .select("node", "nbr")
-        )
+        approx = bounded_persist(_node_topk(cut).select("node", "nbr"))
         nr = approx.agg(F.count("*").cast("long").alias("n_results"))
         legs.append(
             _truth_recall_agg(
@@ -7350,7 +7186,6 @@ def ann_graph_delete_fraction_curve(
     recalls are not directly comparable row-to-row."""
     vecs = _knn_vecs(spark, sf_dir)
     visited = _gs_visited(spark, sf_dir, vecs=vecs)
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
     mix100 = (
         F.pmod(F.col("vec_id") * F.lit(KNN_CAP_MIX), F.lit(KNN_CAP_MOD))
         % 100
@@ -7374,22 +7209,15 @@ def ann_graph_delete_fraction_curve(
         tomb = bounded_persist(
             vecs.select("vec_id").where(mix100 < pct)
         )
-        truth = (
-            scored.where(F.col("m100") >= pct)
-            .withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= KNN_K)
-            .select("node", "nbr")
+        truth = _node_topk(scored.where(F.col("m100") >= pct)).select(
+            "node", "nbr"
         )
-        approx = bounded_persist(
-            visited.join(
-                F.broadcast(tomb.select(F.col("vec_id").alias("nbr"))),
-                "nbr",
-                "left_anti",
-            )
-            .withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= KNN_K)
-            .select("node", "nbr")
+        live = visited.join(
+            F.broadcast(tomb.select(F.col("vec_id").alias("nbr"))),
+            "nbr",
+            "left_anti",
         )
+        approx = bounded_persist(_node_topk(live).select("node", "nbr"))
         nt = tomb.agg(F.count("*").cast("long").alias("n_tombstones"))
         nr = approx.agg(F.count("*").cast("long").alias("n_results"))
         legs.append(
@@ -7465,7 +7293,7 @@ def _knn_vecs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     against all-zero vectors), keyed like _knn_vecs."""
     register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     scale = F.greatest(
         F.array_max(F.transform("embedding", lambda x: F.abs(x))),
         F.lit(1e-30),
@@ -7489,7 +7317,7 @@ def _gs_q_score(
     _knn_score (explicit repartition, shuffled-hash both sides; the
     quantized rows are 1/4 the float width, which is the point —
     ``bcast`` picks broadcast-hash below the corpus gate, guide §3.1)."""
-    n_parts = max(pairs.sparkSession.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(pairs.sparkSession)
     a = vq.select(
         F.col("vec_id").alias("node"),
         F.col("qq").alias("qa"),
@@ -7672,7 +7500,7 @@ def _gs_sharded_visited(
     sbkts = spark.read.parquet(os.path.join(d, "buckets"))
     small = _gs_small(sf_dir)
     sp = _gs_parts(spark, KNN_EVAL_N * s_count)
-    n_parts = sp if small else max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = sp if small else partition_count(spark)
     und = _gs_und(graph, n_parts)
     base = F.floor(F.col("bucket") / s_count).alias("base")
     # Entry fan-out: the query's BASE bucket matches every shard's capped
@@ -7793,17 +7621,7 @@ def ann_graph_search_sharded_topk(
     the driver hash (the recall table checks membership; this pins the
     merge order and scores row-by-row)."""
     visited = _gs_sharded_visited(spark, sf_dir, GS_SHARD_SERVE)
-    w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
-    return (
-        visited.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= KNN_K)
-        .select(
-            F.col("node").alias("q_id"),
-            "rk",
-            F.col("nbr").alias("c_id"),
-            (F.col("cos6") + F.lit(0.0)).alias("cosine"),
-        )
-    )
+    return _gs_serve(visited)
 
 
 @query("ann_graph_search_sharded_recall", oracle=_gs_sharded_oracle())
@@ -7851,7 +7669,7 @@ def _gs_routed_visited(
     sbkts = spark.read.parquet(os.path.join(d, "buckets"))
     small = _gs_small(sf_dir)
     sp = _gs_parts(spark, KNN_EVAL_N)
-    n_parts = sp if small else max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = sp if small else partition_count(spark)
     und = _gs_und(graph, n_parts)
     base = F.floor(F.col("bucket") / s_count).alias("base")
     shard = F.pmod(F.col("vec_id"), F.lit(s_count)).alias("shard")
@@ -8004,14 +7822,13 @@ def _gs_cell_probe(spark: SparkSession, sf_dir: str, p: int) -> DataFrame:
             s.getField("cid").alias("cid"),
         ),
     )
-    w = W.partitionBy("node").orderBy("d", "cid")
-    return (
+    dc = (
         q.crossJoin(F.broadcast(_kmeans_cents_row(cents_long)))
         .select("node", F.explode(dists).alias("dc"))
         .select("node", F.col("dc.d").alias("d"), F.col("dc.cid").alias("cid"))
-        .withColumn("pr", F.row_number().over(w))
-        .where(F.col("pr") <= p)
-        .select("node", F.col("cid").alias("cell"))
+    )
+    return top_k(dc, "node", ["d", "cid"], p, rank="pr").select(
+        "node", F.col("cid").alias("cell")
     )
 
 
@@ -8030,7 +7847,7 @@ def _gs_cell_routed_visited(
     sbkts = spark.read.parquet(os.path.join(d, "buckets"))
     small = _gs_small(sf_dir)
     sp = _gs_parts(spark, KNN_EVAL_N)
-    n_parts = sp if small else max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = sp if small else partition_count(spark)
     und = _gs_und(graph, n_parts)
     base = F.floor(F.col("bucket") / KMEANS_K).alias("base")
     cell = F.pmod(F.col("bucket"), F.lit(KMEANS_K)).alias("cell")
@@ -8460,10 +8277,7 @@ def knn_graph_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "id_a",
             "id_b",
-            F.round(
-                dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")),
-                6,
-            ).alias("cos6"),
+            cosine6("ea", "eb", "na", "nb").alias("cos6"),
         )
         .where(F.col("cos6") >= EMB_DEDUP_THRESHOLD)
         .select("id_a", "id_b")

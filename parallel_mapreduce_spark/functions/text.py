@@ -26,7 +26,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.functions.portable import phash60, phash60_sql
+from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
+from parallel_mapreduce_spark.session import partition_count
 from parallel_mapreduce_spark.sources import load_table, register_views
 
 # Shared stopword/marker vocabulary (tiny on purpose: the oracle must use the
@@ -68,7 +70,7 @@ def _spread(spark: SparkSession, docs: DataFrame, *cols: str) -> DataFrame:
     CPU-heavy per-doc expression: the testdata parquet is one row group, so
     without this the whole expression evaluates in the scan's single task
     (see the 10x-corpus probes in README)."""
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     out = docs.select(*cols)
     key = cols[0] if cols[0] == "doc_id" else None
     return out.repartition(n_parts, key) if key else out.repartition(n_parts)
@@ -430,7 +432,7 @@ def tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, 8)
+    n = partition_count(spark)
     # Collapse-first (same shape as the dedup paths): identical texts have
     # identical term vectors, so tf runs per distinct text; document
     # frequency weights each representative by its copy count; the top term
@@ -461,12 +463,9 @@ def tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tfidf6"),
         )
     )
-    w = W.partitionBy("rep").orderBy(F.col("tfidf6").desc(), F.col("term"))
-    rep_top = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("rep", "term", "tfidf6")
-    )
+    rep_top = top_k(
+        scored, "rep", [F.col("tfidf6").desc(), F.col("term")], 1
+    ).select("rep", "term", "tfidf6")
     return members.join(rep_top, "rep").select(
         "doc_id",
         F.col("term").alias("top_term"),
@@ -1430,10 +1429,12 @@ def bpe_pair_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = pairs.groupBy("pair").agg(
         F.sum("cnt").cast("long").alias("pair_count")
     )
-    w_rank = W.orderBy(F.desc("pair_count"), "pair")
-    return (
-        totals.withColumn("merge_rank", F.row_number().over(w_rank))
-        .filter(F.col("merge_rank") <= BPE_TOP_PAIRS)
+    return top_k(
+        totals,
+        [],
+        [F.desc("pair_count"), "pair"],
+        BPE_TOP_PAIRS,
+        rank="merge_rank",
     )
 
 
@@ -1853,21 +1854,14 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "doc_id")
         .agg(F.round(F.sum(idf * tf_part), 4).alias("score"))
     )
-    salted = sc.withColumn("_salt", F.pmod(F.col("doc_id"), F.lit(BM25_SALT)))
-    w_local = W.partitionBy("qid", "_salt").orderBy(
-        F.col("score").desc(), "doc_id"
-    )
-    partial = (
-        salted.withColumn("_rk", F.row_number().over(w_local))
-        .filter(F.col("_rk") <= BM25_TOP_K)
-        .drop("_rk", "_salt")
-    )
-    w_final = W.partitionBy("qid").orderBy(F.col("score").desc(), "doc_id")
-    return (
-        partial.withColumn("rnk", F.row_number().over(w_final).cast("long"))
-        .filter(F.col("rnk") <= BM25_TOP_K)
-        .select("qid", "doc_id", "score", "rnk")
-    )
+    return top_k(
+        sc,
+        "qid",
+        [F.col("score").desc(), "doc_id"],
+        BM25_TOP_K,
+        rank="rnk",
+        salt=F.pmod(F.col("doc_id"), F.lit(BM25_SALT)),
+    ).select("qid", "doc_id", "score", F.col("rnk").cast("long").alias("rnk"))
 
 
 # --------------------------------------------------------------------------

@@ -28,7 +28,9 @@ from parallel_mapreduce_spark.functions.text import (
     bigrams,
     tokens,
 )
+from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
+from parallel_mapreduce_spark.session import partition_count
 from parallel_mapreduce_spark.sources import load_table, register_views
 
 # DuckDB twin of text.bigrams(): 1-indexed range(1, len) -> len-1 bigrams.
@@ -71,7 +73,7 @@ def repetition_bigram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     bgs = bigrams(tokens("text"))
     # _rep_texts repartitions representatives across n_parts, so the heavy
     # expression also escapes the one-row-group single-task scan.
@@ -231,7 +233,7 @@ EVAL_SET_MOD = 97  # doc_id % 97 == 0 -> held-out "benchmark" docs
 def contamination_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     # Repartition ahead of the interpreted shingle expression + explode
     # (single-row-group scan would serialize it on one core).
     sh = (
@@ -282,7 +284,7 @@ _TERM_PAT = "\\b(" + "|".join(PII_TERMS) + ")\\b"
 def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     # Spread the regex-heavy projection across cores (single-row-group scan
     # would otherwise run it on one task; 10x probe: 3.1s -> ~0.5s).
     docs = docs.select("doc_id", "text").repartition(n_parts, "doc_id")
@@ -485,7 +487,7 @@ def domain_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     # Repartition ahead of the tokenize+explode (single-row-group scans would
     # run the whole token stream's partial aggregation on one task).
     tok = (
@@ -599,7 +601,7 @@ def boilerplate_coverage(
 def boilerplate_shingle_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     return boilerplate_coverage(docs, n_parts)
 
 
@@ -982,7 +984,7 @@ def tokens_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     vocab = vocab_min_count(spark, sf_dir).select("token", "token_id")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     tok = (
         docs.select("doc_id", "text")
         .repartition(n_parts, "doc_id")
@@ -1508,9 +1510,9 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    # Round-14 NEGATIVE result (probes/ab_bigram_substr_cut.py +
-    # ab_bigram_members_only.py): corpus_cut on members and/or the
+    n_parts = partition_count(spark)
+    # Round-14 NEGATIVE result (probes/ab_bigram_substr_cut.py and a
+    # members-only arm): corpus_cut on members and/or the
     # tokenized reps frame measured SLOWER at sf0.1 (old 1.71s vs
     # members-only 1.80s vs both 1.98s, interleaved min-of-6, equality
     # asserted) — unlike the near-dup family the shared chains here are
@@ -1724,19 +1726,15 @@ def weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = t.withColumn(
         "skey", F.round(F.pow(u, 1.0 / F.col("n_tokens")), 9)
     )
-    salted = keyed.withColumn("_salt", F.pmod(F.col("doc_id"), F.lit(AES_SALT)))
-    w_local = W.partitionBy("source", "_salt").orderBy(
-        F.col("skey").desc(), "doc_id"
-    )
-    partial = (
-        salted.withColumn("_rk", F.row_number().over(w_local))
-        .filter(F.col("_rk") <= AES_SAMPLE_K)
-        .drop("_rk", "_salt")
-    )
-    w_final = W.partitionBy("source").orderBy(F.col("skey").desc(), "doc_id")
     return (
-        partial.withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= AES_SAMPLE_K)
+        top_k(
+            keyed,
+            "source",
+            [F.col("skey").desc(), "doc_id"],
+            AES_SAMPLE_K,
+            rank="rank",
+            salt=F.pmod(F.col("doc_id"), F.lit(AES_SALT)),
+        )
         .select(
             "source",
             "doc_id",
@@ -1935,7 +1933,7 @@ DSIR_TARGET_SOURCE = "src0"
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     feats = (
         docs.select("doc_id", "source", "text")
         .repartition(n_parts, "doc_id")
@@ -2155,7 +2153,7 @@ def _lrq_step(feat: DataFrame, wrow: DataFrame) -> DataFrame:
 def quality_classifier_lr2(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     feat = _lrq_features(docs, n_parts)
     wb = _lrq_fit2(spark, feat)
     scored = feat.crossJoin(F.broadcast(wb)).select(
@@ -2275,7 +2273,7 @@ def pipeline_model_filtered_corpus(
 ) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     feat = _lrq_features(docs, n_parts)
     wb = _lrq_fit2(spark, feat)
     scored = feat.crossJoin(F.broadcast(wb)).select(
@@ -2331,17 +2329,11 @@ def pipeline_model_filtered_corpus(
 # Scale shape — the naive plan is ROW_NUMBER over (PARTITION BY source),
 # which serializes each source through ONE task; a megasite at 100 TB is
 # exactly the partition that will not fit. This implementation is the
-# salted TWO-PHASE top-k:
-#   stage 1: rank within (source, salt) — NSALT buckets per source, each
-#            a separate window partition — keep the per-bucket top-CAP;
-#   stage 2: rank within source over the survivors (at most NSALT*CAP
-#            rows per source, a bounded frame) — keep the top-CAP.
-# Semantics-preserving: any row in a source's global top-CAP under the
-# total order (priority, doc_id) has at most CAP-1 rows ahead of it
-# globally, hence at most CAP-1 ahead of it inside its own salt bucket,
-# so it survives stage 1 — stage 2 therefore ranks a superset of the
-# answer and returns exactly it. The oracle is the single-window form,
-# which pins the equivalence as a value check at every SF.
+# salted TWO-PHASE top-k (rank.top_k with a salt: per-(source, salt) top-CAP
+# first, then the top-CAP of at most NSALT*CAP survivors per source — the
+# same answer, see top_k for the argument). The oracle is the
+# single-window form, which pins the equivalence as a value check at
+# every SF.
 # --------------------------------------------------------------------------
 SOURCE_CAP = 15  # max docs kept per source (25/source shipped at sf0.001)
 SOURCE_CAP_NSALT = 4
@@ -2360,20 +2352,14 @@ def cap_per_source(
     unit test in tests/test_trainprep_cleaning.py — the shipped fixtures'
     salt buckets hold ~25/nsalt < CAP rows, so only a synthetic skewed
     source exercises the stage-1 filter."""
-    pri = docs.withColumn("pri", _cap_priority()).withColumn(
-        "salt",
-        phash60(F.concat_ws(":", F.lit("salt"), F.col("doc_id"))) % nsalt,
+    return top_k(
+        docs.withColumn("pri", _cap_priority()),
+        "source",
+        ["pri", "doc_id"],
+        cap,
+        rank="rn",
+        salt=phash60(F.concat_ws(":", F.lit("salt"), F.col("doc_id"))) % nsalt,
     )
-    stage1 = pri.withColumn(
-        "rn1",
-        F.row_number().over(
-            W.partitionBy("source", "salt").orderBy("pri", "doc_id")
-        ),
-    ).filter(F.col("rn1") <= cap)
-    return stage1.withColumn(
-        "rn2",
-        F.row_number().over(W.partitionBy("source").orderBy("pri", "doc_id")),
-    ).filter(F.col("rn2") <= cap)
 
 
 @query(

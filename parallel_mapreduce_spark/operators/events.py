@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.sources import load_table, register_views
 
@@ -831,13 +832,9 @@ def events_topk_types_per_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("hour_epoch", "event_type")
         .agg(F.count("*").alias("cnt"))
     )
-    rk = F.row_number().over(
-        W.partitionBy("hour_epoch").orderBy(F.col("cnt").desc(), "event_type")
-    )
-    return (
-        h.withColumn("rk", rk.cast("long"))
-        .filter(F.col("rk") <= TOPK_TYPES_PER_HOUR)
-        .select("hour_epoch", "event_type", "cnt", "rk")
+    order = [F.col("cnt").desc(), "event_type"]
+    return top_k(h, "hour_epoch", order, TOPK_TYPES_PER_HOUR).select(
+        "hour_epoch", "event_type", "cnt", F.col("rk").cast("long").alias("rk")
     )
 
 

@@ -26,6 +26,11 @@ The result equals ``ROW_NUMBER() OVER (ORDER BY order)`` exactly when the
 order is total (no duplicate sort keys) — ties would be broken by
 partition-internal order, so callers must pass a tie-breaking final column.
 Oracles are unchanged: same value, different physical plan.
+
+``top_k`` is the per-key reduce of the same family: keep the best k rows
+of every group under a total order (the window-then-cut every ranked
+answer in the engine ends with), optionally in the salted two-phase form
+so no task ever sorts a whole skewed group.
 """
 
 from __future__ import annotations
@@ -33,6 +38,44 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+
+from parallel_mapreduce_spark.session import partition_count
+
+
+def top_k(
+    df: DataFrame,
+    by: str | Column | list[str | Column],
+    order: list[str | Column],
+    k: int,
+    *,
+    rank: str = "rk",
+    salt: Column | None = None,
+) -> DataFrame:
+    """The rows of ``df`` ranked 1..k within each ``by`` group: ``df``'s
+    columns plus ``rank`` = ROW_NUMBER() OVER (PARTITION BY by ORDER BY
+    order), cut at ``rank <= k``. ``order`` must be TOTAL (end it with a
+    unique tie-breaker), or ranks within a tied run depend on task order.
+    An empty ``by`` ranks the whole frame in one window partition — only
+    for provably-bounded frames (see global_row_number otherwise).
+
+    The cut is a plain ``rank <= k`` filter directly over the window, the
+    shape Spark's InferWindowGroupLimit rewrites into a per-partition
+    WindowGroupLimit ahead of the sort's full materialization.
+
+    ``salt`` selects the two-phase form: keep the top k per ``(by, salt)``
+    first, then the top k per ``by`` over those survivors. Any member of a
+    group's global top k has at most k-1 rows ahead of it globally, hence
+    at most k-1 ahead of it inside its own salt bucket, so phase 1 only
+    drops rows phase 2 would drop anyway — the result is identical, and no
+    task sorts more than ``#salts * k`` rows of one group in phase 2.
+    """
+    by = list(by) if isinstance(by, (list, tuple)) else [by]
+    if salt is not None:
+        df = top_k(
+            df.withColumn("_salt", salt), [*by, "_salt"], order, k, rank="_rk"
+        ).drop("_rk", "_salt")
+    w = W.partitionBy(*by).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
 
 
 def global_row_number(
@@ -58,7 +101,7 @@ def global_row_number(
     evaluation and silently wrong ranks. Callers with a nondeterministic
     upstream must materialize first (``df.localCheckpoint()``).
     """
-    n = num_shards or max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    n = num_shards or partition_count(df.sparkSession)
     ranged = df.repartitionByRange(n, *order).withColumn(
         "_pid", F.spark_partition_id()
     )
@@ -104,7 +147,7 @@ def global_prefix_sum(
     independently, so a nondeterministic upstream must be materialized
     (``localCheckpoint()``) by the caller first.
     """
-    n = num_shards or max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    n = num_shards or partition_count(df.sparkSession)
     ranged = df.repartitionByRange(n, *order).withColumn(
         "_pid", F.spark_partition_id()
     )

@@ -29,6 +29,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.sources import load_table, register_views
 
@@ -405,10 +406,9 @@ def range_join_quantity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
+    order = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
     return (
-        orders.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
+        top_k(orders, "o_custkey", order, 3)
         .select(
             "o_custkey",
             "o_orderkey",

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
+from parallel_mapreduce_spark.session import partition_count
 from parallel_mapreduce_spark.sources import load_table, register_views
 
 DEFAULT_SALT = 8
@@ -218,7 +219,7 @@ def aqe_skew_join_user_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value"
     )
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = partition_count(spark)
     working = (
         ev.repartition(n_parts)  # multiple mappers: see the block comment
         .withColumn(

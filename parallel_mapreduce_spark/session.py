@@ -26,6 +26,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 8)
 
 
+def partition_count(spark: SparkSession) -> int:
+    """Partition count for explicit repartitions and range shards: the
+    context's parallelism with a floor of 8, so a small local session
+    still splits CPU-heavy projections. The one place the engine's
+    partition policy lives."""
+    return max(spark.sparkContext.defaultParallelism, 8)
+
+
 def get_spark(
     app_name: str = "parallel-mapreduce-spark",
     cpus: int | None = None,

@@ -29,12 +29,12 @@ import itertools
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.functions import similarity as sim
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import apply_runtime_conf
+from parallel_mapreduce_spark.session import apply_runtime_conf, partition_count
 
 _RUN_SEQ = itertools.count(1)
 
@@ -62,7 +62,7 @@ def ann_serve_stream_run(
     n_parts = (
         sim._gs_parts(spark, sim.KNN_EVAL_N)
         if small
-        else max(spark.sparkContext.defaultParallelism, 8)
+        else partition_count(spark)
     )
     und = sim._gs_und(graph, n_parts)
     entry_cands = sim._knn_capped_buckets(
@@ -101,17 +101,7 @@ def ann_serve_stream_run(
             und=und,
             entry_cands=entry_cands,
         )
-        w = W.partitionBy("node").orderBy(F.desc("cos6"), "nbr")
-        out = (
-            visited.withColumn("rk", F.row_number().over(w).cast("long"))
-            .where(F.col("rk") <= sim.KNN_K)
-            .select(
-                F.col("node").alias("q_id"),
-                "rk",
-                F.col("nbr").alias("c_id"),
-                (F.col("cos6") + F.lit(0.0)).alias("cosine"),
-            )
-        )
+        out = sim._gs_serve(visited)
         # One file per micro-batch (guide §6 — output sizing): the batch
         # answer is Q x KNN_K thin rows; writing it through the window's
         # 8-partition layout produced 8 tiny files per batch, paying file

@@ -19,8 +19,8 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql import Window as W
 
+from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import apply_runtime_conf
 
@@ -518,10 +518,8 @@ def stream_resume_from_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
 
     resumed = rows_run1 == n1 and rows_run2 == n2
     back = spark.read.parquet(outp)
-    w_latest = W.partitionBy("user_id").orderBy(F.col("batch_id").desc())
     return (
-        back.withColumn("_rk", F.row_number().over(w_latest))
-        .filter(F.col("_rk") == 1)
+        top_k(back, "user_id", [F.col("batch_id").desc()], 1, rank="_rk")
         .select(
             "user_id",
             "n_events",

@@ -685,6 +685,28 @@ def test_cell_routed_stays_in_probed_cells(spark, sf_dir):
     assert leaked == 0
 
 
+def test_snapshot_digests_cover_reachable_helpers():
+    """The snapshot content keys hash every package function the build
+    and truth paths can reach, not a hand-kept list: the LSH plane
+    formula (`_plane`, called by lsh_table_buckets) and the shared top-k
+    kernel (called by _knn_topk / _knn_capped_buckets) are in the build
+    closure, and an edit to any of them rotates the key."""
+    build = S._source_closure(S._knn_index)
+    for name in (
+        "parallel_mapreduce_spark.functions.similarity._plane",
+        "parallel_mapreduce_spark.operators.rank.top_k",
+        "parallel_mapreduce_spark.functions.similarity._knn_capped_buckets",
+        "parallel_mapreduce_spark.functions.similarity._kmeans_assign",
+    ):
+        assert name in build, name
+    truth = S._source_closure(S._knn_truth_index)
+    for name in (
+        "parallel_mapreduce_spark.functions.similarity._gs_oov_queries",
+        "parallel_mapreduce_spark.functions.similarity.cosine6",
+    ):
+        assert name in truth, name
+
+
 def test_snapshot_root_is_user_scoped(monkeypatch):
     import os
 

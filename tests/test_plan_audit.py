@@ -350,8 +350,10 @@ def test_headline_query_gains_no_new_exchanges(spark, sf_dir, name):
 
 # --- Materialization / tuning idiom guard --------------------------------
 # One reliable-checkpoint path (session.reliable_checkpoint), persists
-# through the bounded ring (session.bounded_persist), and no tuning env
-# knobs: a source scan of the package so the idiom count cannot grow back.
+# through the bounded ring (session.bounded_persist), no tuning env knobs,
+# one per-group top-k kernel (operators/rank.top_k) and one partition-count
+# policy (session.partition_count): a source scan of the package so the
+# idiom count cannot grow back.
 DEPLOYMENT_ENV = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_CHECKPOINT_DIR",
@@ -365,11 +367,33 @@ OWNED_PERSISTS = {
 }
 
 
+# row_number() used as a VALUE, not as a window-then-cut (those go through
+# rank.top_k): cid numbering, the zipf rank, the island key, a rank written
+# into a dimension table, ranks shipped with a whole neighbour list, and
+# the epoch shuffle's per-shard local rank. One call per listed function.
+RANK_AS_VALUE = {
+    ("functions/dedup.py", "_substr_run_rows"),
+    ("functions/text.py", "zipf_slope_by_source"),
+    ("functions/trainprep.py", "epoch_shuffle_order"),
+    ("sources/roundtrip.py", "dpp_join_parts"),
+    ("functions/similarity.py", "kmeans_lloyd_2iter"),
+    ("functions/similarity.py", "semdedup_cluster_report"),
+    ("functions/similarity.py", "_knn_cells"),
+    ("functions/similarity.py", "knn_graph_nn_descent"),
+    ("functions/similarity.py", "knn_graph_incremental_ingest"),
+    ("functions/similarity.py", "_rng_pruned_graph"),
+    ("functions/similarity.py", "knn_graph_rng_prune"),
+}
+# The traversal's query-bounded partition count keeps its own clamp.
+OWN_PARALLELISM = {("functions/similarity.py", "_gs_parts")}
+
+
 def _idiom_violations(rel: str, src: str) -> list[str]:
     import ast
     import re
 
     bad = []
+    ranked = set()
     for top in ast.parse(src).body:
         func = getattr(top, "name", None)  # owner of a function-owned persist
         for node in ast.walk(top):
@@ -379,6 +403,16 @@ def _idiom_violations(rel: str, src: str) -> list[str]:
                     bad.append(f"{where} .checkpoint() outside session.py")
                 if node.func.attr == "persist" and (rel, func) not in OWNED_PERSISTS:
                     bad.append(f"{where} .persist() outside session.py")
+                if node.func.attr == "row_number" and rel != "operators/rank.py":
+                    if (rel, func) not in RANK_AS_VALUE or (rel, func) in ranked:
+                        bad.append(f"{where} row_number() cut: use rank.top_k")
+                    ranked.add((rel, func))
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "defaultParallelism"
+                and (rel, func) not in OWN_PARALLELISM
+            ):
+                bad.append(f"{where} defaultParallelism: use partition_count")
             names = {getattr(node, k, None) for k in ("id", "attr", "name")}
             if "ensure_checkpoint_dir" in names:
                 bad.append(f"{where} ensure_checkpoint_dir outside session.py")

@@ -1,4 +1,5 @@
-"""operators/rank.global_row_number: exact global ROW_NUMBER, hierarchically.
+"""operators/rank: global_row_number (exact global ROW_NUMBER,
+hierarchically) and top_k (the per-group window-then-cut).
 
 Pins the contract the vocab/zipf rank queries (and any future global-rank
 caller) rely on: the hierarchical value is IDENTICAL to the naive
@@ -9,10 +10,14 @@ a single-partition exchange.
 
 from __future__ import annotations
 
+import random
+from collections import defaultdict
+
+import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from parallel_mapreduce_spark.operators.rank import global_row_number
+from parallel_mapreduce_spark.operators.rank import global_row_number, top_k
 
 
 def _naive(df, order):
@@ -107,3 +112,43 @@ def test_prefix_sum_matches_naive_window(spark):
     assert got == want
     # Inclusive running sum: the global maximum equals the total weight.
     assert max(got.values()) == df.agg(F.sum("w")).collect()[0][0]
+
+
+@pytest.mark.parametrize("salted", [False, True], ids=["one_phase", "salted"])
+@pytest.mark.parametrize("seed", [3, 11])
+def test_top_k_matches_naive_window_cut(spark, seed, salted):
+    """top_k == ROW_NUMBER() OVER (PARTITION BY g ORDER BY ...) <= k, in
+    both forms, on a frame where 90% of rows share one group and the
+    leading sort keys tie heavily (the unique k breaks the ties)."""
+    rng = random.Random(seed)
+    rows = [
+        (
+            i,
+            0 if rng.random() < 0.9 else rng.randint(1, 6),
+            rng.randint(0, 4),
+            rng.choice("ab"),
+        )
+        for i in range(600)
+    ]
+    df = spark.createDataFrame(rows, "k long, g long, v long, s string")
+    order = [F.desc("v"), F.asc("s"), F.asc("k")]
+    k = rng.randint(2, 9)
+    got_df = top_k(
+        df, "g", order, k, rank="rk", salt=(F.col("k") % 4) if salted else None
+    )
+    assert got_df.columns == [*df.columns, "rk"]
+    got = sorted(tuple(r) for r in got_df.collect())
+    naive = df.withColumn(
+        "rk", F.row_number().over(W.partitionBy("g").orderBy(*order))
+    ).filter(F.col("rk") <= k)
+    assert got == sorted(tuple(r) for r in naive.collect())
+    ranks = defaultdict(list)
+    for r in got:
+        ranks[r[1]].append(r[-1])
+    for g, rk in ranks.items():
+        assert sorted(rk) == list(range(1, len(rk) + 1)), g
+    assert len(ranks[0]) == k  # the skewed group is cut, not truncated early
+    # the cut stays the shape Spark pushes down as a per-partition limit:
+    # a partial + final WindowGroupLimit per window (two windows if salted)
+    plan = got_df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("WindowGroupLimit") >= (4 if salted else 2), plan
