@@ -23,6 +23,7 @@ import hashlib
 import os
 import shutil
 import tempfile
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -5516,120 +5517,157 @@ def _gs_und(graph: DataFrame, n_parts: int) -> DataFrame:
     )
 
 
-def _gs_visited(
+class _GsIndex(NamedTuple):
+    """Graph-serving index state, built once per (snapshot, graph) by
+    _gs_index and read by every _gs_search over it: the vectors, the
+    persisted undirected adjacency, the uncapped bucket frame, and the
+    serving gates derived from the corpus bytes (``small``) and the
+    nominal query batch (``n_queries`` / ``parts``)."""
+
+    vecs: DataFrame
+    bkts: DataFrame
+    und: DataFrame
+    small: bool
+    n_queries: int
+    parts: int
+
+
+def _gs_index(
     spark: SparkSession,
     sf_dir: str,
-    beam: int | None = None,
+    variant: str = "full",
     vecs: DataFrame | None = None,
     graph: DataFrame | None = None,
-    cand_allowed: DataFrame | None = None,
-    cand_blocked: DataFrame | None = None,
-    score=None,
-    q_ids: DataFrame | None = None,
-    n_queries: int | None = None,
-    und: DataFrame | None = None,
-    entry_cands: DataFrame | None = None,
-) -> DataFrame:
-    """(node, nbr, cos6): every (query, candidate) pair the beam search
-    scored, after GS_ROUNDS hops — the frame both outputs cut from.
-    ``beam``/``vecs``/``graph`` default to the committed serving config
-    over the MATERIALIZED index snapshot (round 12: serving reads the
-    build's parquet state, it does not rebuild); the beam-curve and
-    pruned-graph exhibits pass alternative adjacencies. ``cand_allowed``
-    (a one-column ``vec_id`` frame) restricts ENTRY candidates BEFORE
-    the per-bucket cap (filter-then-cap, the within-batch ingest leg's
-    discipline — capping first and filtering after starves buckets
-    whose cap survivors happen to be ineligible and would handicap the
-    subgraph-only baseline); expansion reach is governed by the passed
-    adjacency. ``cand_blocked`` is the anti twin (drop these ids from
-    entry before the cap) — the tombstone-serving shape, where the
-    EXCLUDED set is the small side a cluster would broadcast or
-    bloom-prune. ``score`` overrides the pair-scoring callable
-    ((node, nbr) -> (node, nbr, cos6); default exact cosine via
-    _knn_score) — the quantized-serving leg scores hops with the int8
-    dot instead. ``q_ids`` (a one-column ``vec_id`` frame) REPLACES the
-    default eval-node query predicate — the streaming-serving shape,
-    where each micro-batch of arriving queries traverses independently
-    (beams are per query, so a per-batch run unions to the full-set
-    run). ``n_queries`` is the ACTUAL batch size bound the query-side
-    gates and partition sizing derive from (default: the eval batch;
-    the streaming path passes its per-micro-batch count — round-14
-    verdict item). ``und`` / ``entry_cands`` let a caller that serves
-    MANY batches against one static index (the streaming drain) build
-    the undirected adjacency and the capped entry-candidate frame once
-    and reuse them across batches (the stream-static hoist)."""
-    if beam is None:
-        beam = GS_BEAM
+    n_queries: int = KNN_EVAL_N,
+) -> _GsIndex:
+    """Index state over the MATERIALIZED snapshot ``variant`` (round 12:
+    serving reads the build's parquet state, it does not rebuild).
+    ``graph`` overrides the snapshot's final round (the pruned, compacted
+    and eligible-subgraph exhibits serve alternative adjacencies);
+    ``n_queries`` is the batch size the query-bounded frames are sized
+    for. Round-13 optimization (guide §2/§3.1): the traversal frames are
+    query-bounded, so they partition by the Q-derived count, and the hop
+    joins pick their strategy from the corpus size — broadcast-hash below
+    GS_BCAST_MAX_BYTES, the 30x-probe shuffled-hash plan above it."""
     if vecs is None:
         vecs = _knn_vecs(spark, sf_dir)
+    d = _knn_index(spark, sf_dir, variant=variant)
     if graph is None:
-        graph = _knn_graph_snap(spark, sf_dir)
-    # Round-13 optimization (guide §2/§3.1): the traversal frames are
-    # query-bounded, so partition them by the Q-derived count, and pick
-    # the hop joins' strategy from the corpus size — broadcast-hash below
-    # GS_BCAST_MAX_BYTES, the 30x-probe shuffled-hash plan above it.
+        graph = spark.read.parquet(os.path.join(d, f"round{KNN_ITERS}"))
     small = _gs_small(sf_dir)
-    nq = KNN_EVAL_N if n_queries is None else n_queries
+    parts = _gs_parts(spark, n_queries)
+    und = _gs_und(graph, parts if small else partition_count(spark))
+    bkts = spark.read.parquet(os.path.join(d, "buckets"))
+    return _GsIndex(vecs, bkts, und, small, n_queries, parts)
+
+
+def _gs_search(
+    ix: _GsIndex,
+    queries: DataFrame | None = None,
+    n_queries: int | None = None,
+    on: tuple = ("tbl", "bucket"),
+    probe: tuple[DataFrame, Column] | None = None,
+    cand_filter: tuple[DataFrame, str] | None = None,
+    score=None,
+    beam: int = GS_BEAM,
+    beam_by: Column | None = None,
+    exclude_self: bool = True,
+) -> DataFrame:
+    """(node, nbr, cos6): every (query, candidate) pair the beam search
+    over ``ix`` scored after GS_ROUNDS hops — the one graph-serving
+    search, and the only place the serving gates pick partition counts
+    and broadcasts.
+
+    ``queries`` is the query side: (vec_id, tbl, bucket) bucket rows
+    (held-out queries bucketed with the index's planes), or a one-column
+    ``vec_id`` frame of corpus ids whose rows are looked up in the index
+    (the streaming micro-batch); default the eval nodes. ``n_queries`` is
+    the ACTUAL batch size the query-side gates derive from (default: the
+    index's nominal batch). Entry joins the query's bucket rows to the
+    capped candidates on the ``on`` key expressions (evaluated on both
+    sides: the bucket, or a sharded index's base bucket plus shard);
+    ``probe`` = (a (node, key) frame, the candidate-side key expression)
+    keeps only candidates in the query's probed cells. ``cand_filter`` =
+    (a ``vec_id`` frame, "left_semi" | "left_anti") restricts entry
+    candidates BEFORE the per-bucket cap (filter-then-cap, the
+    within-batch ingest leg's discipline — capping first and filtering
+    after starves buckets whose cap survivors happen to be ineligible).
+    ``score`` ((pairs, bcast) -> (node, nbr, cos6); default exact cosine
+    via _knn_score) swaps the pair scorer (held-out queries, int8);
+    ``beam``/``beam_by``/``exclude_self`` go to _gs_traverse.
+
+    Gates: the query-bounded sides (query bucket rows, the id lookup,
+    the cell probe) broadcast at n_queries <= GS_QBCAST_MAX; the
+    corpus-bounded sides (vectors, adjacency, the candidate filter) only
+    below the corpus gate. A batch above either gate falls back to the
+    shuffled plan."""
+    spark = ix.bkts.sparkSession
+    nq = ix.n_queries if n_queries is None else n_queries
     sp = _gs_parts(spark, nq)
-    n_parts = sp if small else partition_count(spark)
-    if und is None:
-        und = _gs_und(graph, n_parts)
-    # Entry: the bucket frame from the index snapshot (the same rows the
-    # build seeded from — entry reuses index state, no new structure);
-    # query side = eval nodes, candidate side capped exactly like the
-    # build's seed join. The query side is batch-bounded, so below
-    # GS_QBCAST_MAX it broadcasts and the corpus-scale bucket frame never
-    # shuffles for this join (above the gate the planner decides).
-    bkts = _knn_buckets_snap(spark, sf_dir)
-    if entry_cands is None or cand_allowed is not None or cand_blocked is not None:
-        cand_src = bkts
-        if cand_allowed is not None:
-            cand_src = cand_src.join(
-                F.broadcast(cand_allowed.select("vec_id")), "vec_id", "left_semi"
-            )
-        if cand_blocked is not None:
-            cand_src = cand_src.join(
-                F.broadcast(cand_blocked.select("vec_id")), "vec_id", "left_anti"
-            )
-        entry_cands = _knn_capped_buckets(cand_src, skip_salt=small)
-    q_src = (
-        bkts.where(F.col("vec_id") < KNN_EVAL_N)
-        if q_ids is None
-        else bkts.join(
-            F.broadcast(q_ids.select("vec_id")), "vec_id", "left_semi"
+
+    def q_bcast(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if nq <= GS_QBCAST_MAX else df
+
+    cands = ix.bkts
+    if cand_filter is not None:
+        ids, how = cand_filter
+        ids = ids.select("vec_id")
+        cands = cands.join(F.broadcast(ids) if ix.small else ids, "vec_id", how)
+    cands = _knn_capped_buckets(cands, skip_salt=ix.small)
+    if queries is None:
+        queries = ix.bkts.where(F.col("vec_id") < KNN_EVAL_N)
+    elif "tbl" not in queries.columns:
+        queries = ix.bkts.join(
+            q_bcast(queries.select("vec_id")), "vec_id", "left_semi"
         )
-    )
-    q_side = q_src.select(F.col("vec_id").alias("node"), "tbl", "bucket")
-    if nq <= GS_QBCAST_MAX:
-        q_side = F.broadcast(q_side)
+    q_side = queries.select(F.col("vec_id").alias("node"), *on)
+    extra = () if probe is None else (probe[1],)
     # Entry dedup keyed by node only: hash(node) clusters (node, nbr), so
     # the aggregate shares this one exchange AND everything downstream on
     # the broadcast path (scoring, the hop-1 frontier window) inherits the
     # partitioning the traversal wants (see _gs_traverse).
+    entry = q_bcast(q_side).join(
+        cands.select(F.col("vec_id").alias("nbr"), *on, *extra),
+        q_side.columns[1:],
+    )
+    if probe is not None:
+        entry = entry.join(q_bcast(probe[0]), probe[0].columns, "left_semi")
+    if exclude_self:
+        entry = entry.where(F.col("node") != F.col("nbr"))
     entry = (
-        q_side.join(
-            entry_cands.select(
-                F.col("vec_id").alias("nbr"), "tbl", "bucket"
-            ),
-            ["tbl", "bucket"],
-        )
-        .where(F.col("node") != F.col("nbr"))
-        .select("node", "nbr")
+        entry.select("node", "nbr")
         .repartition(sp, "node")
         .dropDuplicates(["node", "nbr"])
     )
     if score is None:
-        def score(p):
-            return _knn_score(p, vecs, bcast=small)
+        def score(p, bcast):
+            return _knn_score(p, ix.vecs, bcast=bcast)
     return _gs_traverse(
-        score(entry),
-        und,
-        score,
+        score(entry, ix.small),
+        ix.und,
+        lambda p: score(p, ix.small),
         beam,
+        exclude_self=exclude_self,
+        beam_by=beam_by,
         parts=sp,
-        bcast_und=small,
-        bcast_visited=small and _gs_vis_bcast(nq),
+        bcast_und=ix.small,
+        bcast_visited=ix.small and _gs_vis_bcast(nq),
     )
+
+
+def _gs_visited(
+    spark: SparkSession,
+    sf_dir: str,
+    beam: int = GS_BEAM,
+    vecs: DataFrame | None = None,
+    graph: DataFrame | None = None,
+    cand_filter: tuple[DataFrame, str] | None = None,
+) -> DataFrame:
+    """The plain serving shape: eval-node queries over the full snapshot
+    (or an alternative ``graph``), the frame every cut of the committed
+    serving config reads."""
+    ix = _gs_index(spark, sf_dir, vecs=vecs, graph=graph)
+    return _gs_search(ix, cand_filter=cand_filter, beam=beam)
 
 
 def _gs_traverse(
@@ -6490,40 +6528,18 @@ def _gs_score_oov(
 def _gs_oov_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, nbr, cos6): the OOV beam search's scored set after
     GS_ROUNDS hops (node = held-out q_id, disjoint id space)."""
-    vecs = _knn_vecs(spark, sf_dir)
-    graph = _knn_graph_snap(spark, sf_dir)
-    small = _gs_small(sf_dir)
-    sp = _gs_parts(spark, GS_OOV_N)
-    n_parts = sp if small else partition_count(spark)
-    und = _gs_und(graph, n_parts)
+    ix = _gs_index(spark, sf_dir, n_queries=GS_OOV_N)
     prow = _knn_prow_snap(spark, sf_dir)
-    bkts = _knn_buckets_snap(spark, sf_dir)
     qvecs = bounded_persist(_gs_oov_queries(spark, sf_dir))
     qb = _knn_buckets(
         qvecs.select(F.col("node").alias("vec_id"), F.col("qe").alias("e")),
         prow,
     )
-    entry = (
-        F.broadcast(qb.select(F.col("vec_id").alias("node"), "tbl", "bucket"))
-        .join(
-            _knn_capped_buckets(bkts, skip_salt=small).select(
-                F.col("vec_id").alias("nbr"), "tbl", "bucket"
-            ),
-            ["tbl", "bucket"],
-        )
-        .select("node", "nbr")
-        .repartition(sp, "node")
-        .dropDuplicates(["node", "nbr"])
-    )
-    return _gs_traverse(
-        _gs_score_oov(entry, qvecs, vecs, bcast=small),
-        und,
-        lambda p: _gs_score_oov(p, qvecs, vecs, bcast=small),
-        GS_BEAM,
+    return _gs_search(
+        ix,
+        qb,
+        score=lambda p, bcast: _gs_score_oov(p, qvecs, ix.vecs, bcast=bcast),
         exclude_self=False,
-        parts=sp,
-        bcast_und=small,
-        bcast_visited=small and _gs_vis_bcast(GS_OOV_N),
     )
 
 
@@ -6792,7 +6808,11 @@ def ann_graph_search_filtered_recall(
         (
             "subgraph_only",
             _gs_visited(
-                spark, sf_dir, vecs=vecs, graph=g_f, cand_allowed=allowed
+                spark,
+                sf_dir,
+                vecs=vecs,
+                graph=g_f,
+                cand_filter=(allowed, "left_semi"),
             ),
             False,
         ),
@@ -7062,14 +7082,19 @@ def ann_graph_delete_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-rank over the materialized truth snapshot (round 13)
     truth = bounded_persist(_knn_truth(spark, sf_dir, nbr_anti=tomb))
     nt = tomb.agg(F.count("*").cast("long").alias("n_tombstones"))
-    compacted = _gs_compacted_graph(graph, vecs, tomb, bcast=_gs_small(sf_dir))
+    ix = _gs_index(spark, sf_dir, vecs=vecs)
+    compacted = _gs_compacted_graph(graph, vecs, tomb, bcast=ix.small)
     legs = []
     for kind, visited, cut_tomb in (
-        ("tombstone_waypoints", _gs_visited(spark, sf_dir, vecs=vecs), True),
+        ("tombstone_waypoints", _gs_search(ix), True),
         (
             "compacted",
             _gs_visited(
-                spark, sf_dir, vecs=vecs, graph=compacted, cand_blocked=tomb
+                spark,
+                sf_dir,
+                vecs=vecs,
+                graph=compacted,
+                cand_filter=(tomb, "left_anti"),
             ),
             False,
         ),
@@ -7424,19 +7449,15 @@ def ann_graph_search_quantized_recall(
     graph = _knn_graph_snap(spark, sf_dir)
     truth = bounded_persist(_knn_truth(spark, sf_dir))
     vis_f = _gs_visited(spark, sf_dir, vecs=vecs, graph=graph)
-    vis_q = _gs_visited(
-        spark,
-        sf_dir,
-        vecs=vecs,
-        graph=graph,
-        score=lambda p: _gs_q_score(p, vq, bcast=_gs_small(sf_dir)),
+    ix = _gs_index(spark, sf_dir, vecs=vecs, graph=graph)
+    vis_q = _gs_search(
+        ix, score=lambda p, bcast: _gs_q_score(p, vq, bcast=bcast)
     )
-    sp = _gs_parts(spark, KNN_EVAL_N)
-    short = _knn_topk(vis_q, k=GS_RERANK, parts=sp).select("node", "nbr")
+    short = _knn_topk(vis_q, k=GS_RERANK, parts=ix.parts).select("node", "nbr")
     approx_q = _knn_topk(
-        _knn_score(short, vecs, bcast=_gs_small(sf_dir)), parts=sp
+        _knn_score(short, vecs, bcast=ix.small), parts=ix.parts
     ).select("node", "nbr")
-    approx_f = _knn_topk(vis_f, parts=sp).select("node", "nbr")
+    approx_f = _knn_topk(vis_f, parts=ix.parts).select("node", "nbr")
     legs = []
     for kind, approx, vis in (
         ("float_exact", approx_f, vis_f),
@@ -7491,52 +7512,23 @@ def _gs_sharded_visited(
 ) -> DataFrame:
     """(node, nbr, cos6): every pair any shard's beam scored, after
     GS_ROUNDS hops with a per-(query, shard) frontier. ``s_count == 1``
-    IS the committed unsharded serving path."""
+    IS the committed unsharded serving path. Entry fan-out: the query's
+    BASE bucket matches every shard's capped members of that bucket (the
+    composite id carries the shard, so the cap is per-shard by
+    construction — each shard admits its own KNN_BUCKET_CAP members per
+    bucket)."""
     if s_count == 1:
         return _gs_visited(spark, sf_dir)
-    vecs = _knn_vecs(spark, sf_dir)
-    d = _knn_index(spark, sf_dir, variant=f"sharded{s_count}")
-    graph = spark.read.parquet(os.path.join(d, f"round{KNN_ITERS}"))
-    sbkts = spark.read.parquet(os.path.join(d, "buckets"))
-    small = _gs_small(sf_dir)
-    sp = _gs_parts(spark, KNN_EVAL_N * s_count)
-    n_parts = sp if small else partition_count(spark)
-    und = _gs_und(graph, n_parts)
-    base = F.floor(F.col("bucket") / s_count).alias("base")
-    # Entry fan-out: the query's BASE bucket matches every shard's capped
-    # members of that bucket (the composite id carries the shard, so the
-    # cap is per-shard by construction — each shard admits its own
-    # KNN_BUCKET_CAP members per bucket). Query side is batch-bounded —
-    # broadcast it (guide §3.1), the corpus-scale bucket frame stays put.
-    entry = (
-        F.broadcast(
-            sbkts.where(F.col("vec_id") < KNN_EVAL_N)
-            .select(F.col("vec_id").alias("node"), "tbl", base)
-        )
-        .join(
-            _knn_capped_buckets(sbkts, skip_salt=small).select(
-                F.col("vec_id").alias("nbr"), "tbl", base
-            ),
-            ["tbl", "base"],
-        )
-        .where(F.col("node") != F.col("nbr"))
-        .select("node", "nbr")
-        .repartition(sp, "node")
-        .dropDuplicates(["node", "nbr"])
+    ix = _gs_index(
+        spark,
+        sf_dir,
+        variant=f"sharded{s_count}",
+        n_queries=KNN_EVAL_N * s_count,
     )
-
-    def score(p):
-        return _knn_score(p, vecs, bcast=small)
-
-    return _gs_traverse(
-        score(entry),
-        und,
-        score,
-        GS_BEAM,
+    return _gs_search(
+        ix,
+        on=("tbl", F.floor(F.col("bucket") / s_count).alias("base")),
         beam_by=F.pmod(F.col("nbr"), F.lit(s_count)),
-        parts=sp,
-        bcast_und=small,
-        bcast_visited=small and _gs_vis_bcast(KNN_EVAL_N * s_count),
     )
 
 
@@ -7663,44 +7655,14 @@ def _gs_routed_visited(
     in-shard, so a single per-query beam IS a home-shard beam. The cheap
     end of the sharded-serving cost spectrum: ~1/S the entry candidates
     and 1/S the beam budget of the fan-out path."""
-    vecs = _knn_vecs(spark, sf_dir)
-    d = _knn_index(spark, sf_dir, variant=f"sharded{s_count}")
-    graph = spark.read.parquet(os.path.join(d, f"round{KNN_ITERS}"))
-    sbkts = spark.read.parquet(os.path.join(d, "buckets"))
-    small = _gs_small(sf_dir)
-    sp = _gs_parts(spark, KNN_EVAL_N)
-    n_parts = sp if small else partition_count(spark)
-    und = _gs_und(graph, n_parts)
-    base = F.floor(F.col("bucket") / s_count).alias("base")
-    shard = F.pmod(F.col("vec_id"), F.lit(s_count)).alias("shard")
-    entry = (
-        F.broadcast(
-            sbkts.where(F.col("vec_id") < KNN_EVAL_N)
-            .select(F.col("vec_id").alias("node"), "tbl", base, shard)
-        )
-        .join(
-            _knn_capped_buckets(sbkts, skip_salt=small).select(
-                F.col("vec_id").alias("nbr"), "tbl", base, shard
-            ),
-            ["tbl", "base", "shard"],
-        )
-        .where(F.col("node") != F.col("nbr"))
-        .select("node", "nbr")
-        .repartition(sp, "node")
-        .dropDuplicates(["node", "nbr"])
-    )
-
-    def score(p):
-        return _knn_score(p, vecs, bcast=small)
-
-    return _gs_traverse(
-        score(entry),
-        und,
-        score,
-        GS_BEAM,
-        parts=sp,
-        bcast_und=small,
-        bcast_visited=small and _gs_vis_bcast(KNN_EVAL_N),
+    ix = _gs_index(spark, sf_dir, variant=f"sharded{s_count}")
+    return _gs_search(
+        ix,
+        on=(
+            "tbl",
+            F.floor(F.col("bucket") / s_count).alias("base"),
+            F.pmod(F.col("vec_id"), F.lit(s_count)).alias("shard"),
+        ),
     )
 
 
@@ -7841,46 +7803,14 @@ def _gs_cell_routed_visited(
     cells because every edge is in-cell. ONE per-query beam regardless
     of ``p`` (the legs differ only in entry coverage, so the recall-vs-P
     table isolates the routing decision from the beam budget)."""
-    vecs = _knn_vecs(spark, sf_dir)
-    d = _knn_index(spark, sf_dir, variant="cellrouted")
-    graph = spark.read.parquet(os.path.join(d, f"round{KNN_ITERS}"))
-    sbkts = spark.read.parquet(os.path.join(d, "buckets"))
-    small = _gs_small(sf_dir)
-    sp = _gs_parts(spark, KNN_EVAL_N)
-    n_parts = sp if small else partition_count(spark)
-    und = _gs_und(graph, n_parts)
-    base = F.floor(F.col("bucket") / KMEANS_K).alias("base")
-    cell = F.pmod(F.col("bucket"), F.lit(KMEANS_K)).alias("cell")
-    probe = _gs_cell_probe(spark, sf_dir, p)
-    entry = (
-        F.broadcast(
-            sbkts.where(F.col("vec_id") < KNN_EVAL_N)
-            .select(F.col("vec_id").alias("node"), "tbl", base)
-        )
-        .join(
-            _knn_capped_buckets(sbkts, skip_salt=small).select(
-                F.col("vec_id").alias("nbr"), "tbl", base, cell
-            ),
-            ["tbl", "base"],
-        )
-        .join(F.broadcast(probe), ["node", "cell"], "left_semi")
-        .where(F.col("node") != F.col("nbr"))
-        .select("node", "nbr")
-        .repartition(sp, "node")
-        .dropDuplicates(["node", "nbr"])
-    )
-
-    def score(pr):
-        return _knn_score(pr, vecs, bcast=small)
-
-    return _gs_traverse(
-        score(entry),
-        und,
-        score,
-        GS_BEAM,
-        parts=sp,
-        bcast_und=small,
-        bcast_visited=small and _gs_vis_bcast(KNN_EVAL_N),
+    ix = _gs_index(spark, sf_dir, variant="cellrouted")
+    return _gs_search(
+        ix,
+        on=("tbl", F.floor(F.col("bucket") / KMEANS_K).alias("base")),
+        probe=(
+            _gs_cell_probe(spark, sf_dir, p),
+            F.pmod(F.col("bucket"), F.lit(KMEANS_K)).alias("cell"),
+        ),
     )
 
 

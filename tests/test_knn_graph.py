@@ -159,7 +159,7 @@ def test_graph_search_budget_is_bounded(spark, sf_dir):
     documents the tail this bound must use)."""
     import pandas as pd
 
-    visited = S._gs_visited(spark, sf_dir).toPandas()
+    visited = S._gs_search(S._gs_index(spark, sf_dir)).toPandas()
     per_q = visited.groupby("node").size()
     graph = S._knn_rounds(spark, sf_dir)[-1].toPandas()
     und = pd.concat(
@@ -194,7 +194,7 @@ def test_graph_search_beats_entry_only(spark, sf_dir):
     truth = S._knn_truth(spark, sf_dir).toPandas()
     tset = set(zip(truth["node"], truth["nbr"]))
 
-    full = S._gs_visited(spark, sf_dir)
+    full = S._gs_search(S._gs_index(spark, sf_dir))
     w_full = S.ann_graph_search_topk(spark, sf_dir).toPandas()
     got = set(zip(w_full["q_id"], w_full["c_id"]))
 
@@ -642,7 +642,7 @@ def test_sharded_serving_s1_is_unsharded_path(spark, sf_dir):
         .reset_index(drop=True)
     )
     b = (
-        S._gs_visited(spark, sf_dir)
+        S._gs_search(S._gs_index(spark, sf_dir))
         .toPandas()
         .sort_values(["node", "nbr"])
         .reset_index(drop=True)
@@ -813,28 +813,105 @@ def test_gs_query_side_gates_are_q_bounded(spark, sf_dir):
     the shuffled plans."""
     assert S._gs_vis_bcast(S.KNN_EVAL_N)
     assert not S._gs_vis_bcast(10**9)
-    a = S._gs_visited(spark, sf_dir).toPandas()
-    b = S._gs_visited(spark, sf_dir, n_queries=10**9).toPandas()
+    ix = S._gs_index(spark, sf_dir)
+    a = S._gs_search(ix).toPandas()
+    b = S._gs_search(ix, n_queries=10**9).toPandas()
     key = ["node", "nbr"]
     a = a.sort_values(key).reset_index(drop=True)
     b = b.sort_values(key).reset_index(drop=True)
     assert a.equals(b)
 
 
-def test_gs_visited_accepts_hoisted_static_frames(spark, sf_dir):
-    """The stream-static hoist (round 14): passing a prebuilt undirected
-    adjacency and capped entry-candidate frame must change nothing but
-    where those frames are constructed."""
-    graph = S._knn_graph_snap(spark, sf_dir)
-    und = S._gs_und(graph, 8)
-    cands = S._knn_capped_buckets(
-        S._knn_buckets_snap(spark, sf_dir), skip_salt=S._gs_small(sf_dir)
+def test_gs_index_built_once_equals_built_per_call(spark, sf_dir):
+    """The stream-static hoist (round 14): index state built once and
+    searched by several batches must give exactly what state built per
+    call gives — only where the state is constructed may differ."""
+    ix = S._gs_index(spark, sf_dir)
+    per_call = S._gs_search(S._gs_index(spark, sf_dir)).toPandas()
+    key = ["node", "nbr"]
+    per_call = per_call.sort_values(key).reset_index(drop=True)
+    for _ in range(2):
+        once = S._gs_search(ix).toPandas()
+        once = once.sort_values(key).reset_index(drop=True)
+        assert once.equals(per_call)
+
+
+# --------------------------------------------------------------------------
+# Serving-gate matrix (ROADMAP aim 3: the two branches of every gate must
+# return identical values). _gs_search picks every broadcast and partition
+# count from two gates — the corpus gate (GS_BCAST_MAX_BYTES) and the
+# query gates (the batch size) — so each traversal shape runs through
+# both branches of both, and the visited set must not move.
+# --------------------------------------------------------------------------
+GATE_SHAPES = ("plain", "filtered", "q_ids")
+
+
+def _gate_search(spark, sf_dir, shape, n_queries=None):
+    """(visited pandas frame, entry-scored frame) for one shape of the
+    matrix, with the entry plan captured where _gs_search hands it to
+    the traversal."""
+    from pyspark.sql import functions as F
+
+    kw = {}
+    if shape == "filtered":
+        S.register_views(spark, sf_dir)
+        allowed = (
+            S.load_table(spark, sf_dir, "documents")
+            .where(F.col("source").isin(*S.FLT_SOURCES))
+            .select(F.col("doc_id").alias("vec_id"))
+        )
+        kw["cand_filter"] = (allowed, "left_semi")
+    elif shape == "q_ids":
+        kw["queries"] = spark.range(0, 20).withColumnRenamed("id", "vec_id")
+    seen = []
+    traverse = S._gs_traverse
+
+    def spy(entry_scored, *a, **k):
+        seen.append(entry_scored)
+        return traverse(entry_scored, *a, **k)
+
+    S._gs_traverse = spy
+    try:
+        ix = S._gs_index(spark, sf_dir)
+        got = S._gs_search(ix, n_queries=n_queries, **kw).toPandas()
+    finally:
+        S._gs_traverse = traverse
+    key = ["node", "nbr"]
+    return got.sort_values(key).reset_index(drop=True), seen[0]
+
+
+def _has_broadcast_hint(df) -> bool:
+    return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+
+@pytest.fixture(scope="module")
+def gate_ref(spark, sf_dir):
+    """Every shape with both gates open (the default at test scale)."""
+    ref = {}
+    for shape in GATE_SHAPES:
+        got, entry = _gate_search(spark, sf_dir, shape)
+        # non-vacuous: the open gates do put broadcast hints in the plan
+        assert _has_broadcast_hint(entry), shape
+        ref[shape] = got
+    return ref
+
+
+@pytest.mark.parametrize("shape", GATE_SHAPES)
+@pytest.mark.parametrize(
+    "corpus_gate, query_gate", [(True, False), (False, True), (False, False)]
+)
+def test_serving_gate_matrix(
+    spark, sf_dir, gate_ref, monkeypatch, shape, corpus_gate, query_gate
+):
+    if not corpus_gate:
+        monkeypatch.setattr(S, "GS_BCAST_MAX_BYTES", 0)
+    got, entry = _gate_search(
+        spark, sf_dir, shape, n_queries=None if query_gate else 10**9
     )
-    a = S._gs_visited(spark, sf_dir).toPandas()
-    b = S._gs_visited(
-        spark, sf_dir, und=und, entry_cands=cands, n_queries=S.KNN_EVAL_N
-    ).toPandas()
-    key = ["node", "nbr"]
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)
-    assert a.equals(b)
+    assert got[["node", "nbr", "cos6"]].equals(
+        gate_ref[shape][["node", "nbr", "cos6"]]
+    ), f"{shape}: visited set moved with the gates"
+    if not corpus_gate and not query_gate:
+        # every side is over its gate: no explicit broadcast may reach
+        # the entry plan (the planner alone decides)
+        assert not _has_broadcast_hint(entry), shape

@@ -351,9 +351,10 @@ def test_headline_query_gains_no_new_exchanges(spark, sf_dir, name):
 # --- Materialization / tuning idiom guard --------------------------------
 # One reliable-checkpoint path (session.reliable_checkpoint), persists
 # through the bounded ring (session.bounded_persist), no tuning env knobs,
-# one per-group top-k kernel (operators/rank.top_k) and one partition-count
-# policy (session.partition_count): a source scan of the package so the
-# idiom count cannot grow back.
+# one per-group top-k kernel (operators/rank.top_k), one partition-count
+# policy (session.partition_count) and one graph-serving search
+# (similarity._gs_search): a source scan of the package so the idiom count
+# cannot grow back.
 DEPLOYMENT_ENV = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_CHECKPOINT_DIR",
@@ -386,6 +387,15 @@ RANK_AS_VALUE = {
 }
 # The traversal's query-bounded partition count keeps its own clamp.
 OWN_PARALLELISM = {("functions/similarity.py", "_gs_parts")}
+# One graph-serving search path: the serving-gate helpers and the beam
+# loop are called only by the index-state builder and the search, so a
+# serving shape (or the stream) cannot re-derive gates or partition
+# counts of its own.
+GS_GATED = {"_gs_small", "_gs_parts", "_gs_vis_bcast", "_gs_und", "_gs_traverse"}
+GS_SERVING = {
+    ("functions/similarity.py", "_gs_index"),
+    ("functions/similarity.py", "_gs_search"),
+}
 
 
 def _idiom_violations(rel: str, src: str) -> list[str]:
@@ -413,6 +423,10 @@ def _idiom_violations(rel: str, src: str) -> list[str]:
                 and (rel, func) not in OWN_PARALLELISM
             ):
                 bad.append(f"{where} defaultParallelism: use partition_count")
+            if isinstance(node, ast.Call) and (rel, func) not in GS_SERVING:
+                callee = getattr(node.func, "id", getattr(node.func, "attr", None))
+                if callee in GS_GATED:
+                    bad.append(f"{where} {callee}(): serve through _gs_search")
             names = {getattr(node, k, None) for k in ("id", "attr", "name")}
             if "ensure_checkpoint_dir" in names:
                 bad.append(f"{where} ensure_checkpoint_dir outside session.py")
