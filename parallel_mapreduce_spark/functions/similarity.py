@@ -5991,13 +5991,13 @@ def ann_graph_search_beam_curve(
 ) -> DataFrame:
     """(beam, n_true, n_hit, recall, n_scored): the graph index's
     quality/budget frontier — what a serving tier reads to pick its ef.
-    One snapshot scan feeds all four traversals."""
-    vecs = _knn_vecs(spark, sf_dir)
-    graph = _knn_graph_snap(spark, sf_dir)
+    One index state (snapshot scan, persisted adjacency) feeds all four
+    traversals."""
+    ix = _gs_index(spark, sf_dir)
     truth = bounded_persist(_knn_truth(spark, sf_dir))
     legs = []
     for b in GS_BEAM_CURVE:
-        visited = _gs_visited(spark, sf_dir, beam=b, vecs=vecs, graph=graph)
+        visited = _gs_search(ix, beam=b)
         approx = _node_topk(visited).select("node", "nbr")
         ns = visited.agg(F.count("*").cast("long").alias("n_scored"))
         legs.append(
@@ -7444,18 +7444,16 @@ def ann_graph_search_quantized_recall(
     traversal steered by exact-float vs SQ-int8 scores (int8 leg exact-
     reranks its top-GS_RERANK before the cut) — the committed memory-
     bandwidth trade for graph serving."""
-    vecs = _knn_vecs(spark, sf_dir)
     vq = _knn_vecs_q(spark, sf_dir)
-    graph = _knn_graph_snap(spark, sf_dir)
+    ix = _gs_index(spark, sf_dir)
     truth = bounded_persist(_knn_truth(spark, sf_dir))
-    vis_f = _gs_visited(spark, sf_dir, vecs=vecs, graph=graph)
-    ix = _gs_index(spark, sf_dir, vecs=vecs, graph=graph)
+    vis_f = _gs_search(ix)
     vis_q = _gs_search(
         ix, score=lambda p, bcast: _gs_q_score(p, vq, bcast=bcast)
     )
     short = _knn_topk(vis_q, k=GS_RERANK, parts=ix.parts).select("node", "nbr")
     approx_q = _knn_topk(
-        _knn_score(short, vecs, bcast=ix.small), parts=ix.parts
+        _knn_score(short, ix.vecs, bcast=ix.small), parts=ix.parts
     ).select("node", "nbr")
     approx_f = _knn_topk(vis_f, parts=ix.parts).select("node", "nbr")
     legs = []
@@ -7757,14 +7755,15 @@ def ann_graph_search_routed_recall(
 GS_CELL_PROBES = (1, 2, 4)
 
 
-def _gs_cell_probe(spark: SparkSession, sf_dir: str, p: int) -> DataFrame:
+def _gs_cell_probe(
+    spark: SparkSession, sf_dir: str, p: int, vecs: DataFrame
+) -> DataFrame:
     """(node, cell): each eval query's ``p`` nearest cells by squared L2
     to the snapshot's stored centroids — EXACTLY the assignment
     geometry (`_knn_cells`' 6dp rounding, d-then-cid tie-break), so
-    p=1 is the query's own cell."""
+    p=1 is the query's own cell. ``vecs`` are the index state's vectors."""
     d = _knn_index(spark, sf_dir, variant="cellrouted")
     cents_long = spark.read.parquet(os.path.join(d, "cents"))
-    vecs = _knn_vecs(spark, sf_dir)
     q = vecs.where(F.col("vec_id") < KNN_EVAL_N).select(
         F.col("vec_id").alias("node"), "e"
     )
@@ -7795,20 +7794,20 @@ def _gs_cell_probe(spark: SparkSession, sf_dir: str, p: int) -> DataFrame:
 
 
 def _gs_cell_routed_visited(
-    spark: SparkSession, sf_dir: str, p: int
+    spark: SparkSession, sf_dir: str, p: int, ix: _GsIndex
 ) -> DataFrame:
     """(node, nbr, cos6): every pair scored when each query probes its
     ``p`` nearest CELLS — entry joins the query's base bucket against
     the probed cells' capped members only; hops stay inside probed
     cells because every edge is in-cell. ONE per-query beam regardless
     of ``p`` (the legs differ only in entry coverage, so the recall-vs-P
-    table isolates the routing decision from the beam budget)."""
-    ix = _gs_index(spark, sf_dir, variant="cellrouted")
+    table isolates the routing decision from the beam budget). ``ix``
+    is the `cellrouted` index state, built once per exhibit."""
     return _gs_search(
         ix,
         on=("tbl", F.floor(F.col("bucket") / KMEANS_K).alias("base")),
         probe=(
-            _gs_cell_probe(spark, sf_dir, p),
+            _gs_cell_probe(spark, sf_dir, p, ix.vecs),
             F.pmod(F.col("bucket"), F.lit(KMEANS_K)).alias("cell"),
         ),
     )
@@ -7907,10 +7906,11 @@ def ann_graph_search_cell_routed_recall(
     neighbors co-locate in cells — the pair is the committed case that
     at 100 TB a query need not touch every index shard, provided the
     shard key carries locality."""
+    ix = _gs_index(spark, sf_dir, variant="cellrouted")
     truth = bounded_persist(_knn_truth(spark, sf_dir))
     legs = []
     for p in GS_CELL_PROBES:
-        visited = _gs_cell_routed_visited(spark, sf_dir, p)
+        visited = _gs_cell_routed_visited(spark, sf_dir, p, ix)
         approx = _knn_topk(visited).select("node", "nbr")
         ns = visited.agg(F.count("*").cast("long").alias("n_scored"))
         legs.append(

@@ -19,7 +19,6 @@ row_id * 1103515245 under 2^63.
 
 from __future__ import annotations
 
-import itertools
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -506,9 +505,6 @@ class SynthStreamDataSource(DataSource):
         return SynthStreamReader(self.options)
 
 
-_STREAM_SEQ = itertools.count()
-
-
 @query(
     "stream_python_source_totals",
     oracle=f"""
@@ -528,15 +524,21 @@ def stream_python_source_totals(
     design). Complete output mode; the finite source goes dry, so
     processAllAvailable() is a deterministic drain. The multi-batch
     schedule matters: the result is only correct if every micro-batch's
-    rows arrive exactly once across the offset ranges."""
+    rows arrive exactly once across the offset ranges.
+
+    Not streaming.drain: an availableNow trigger over this source plans
+    ONE micro-batch (measured: 1 batch instead of 7, and different
+    per-bucket totals), so both Python-source drains keep the
+    processAllAvailable() loop."""
     from parallel_mapreduce_spark.session import (
         apply_runtime_conf,
         state_sized_shuffle,
     )
+    from parallel_mapreduce_spark.streaming.drain import unique_name
 
     apply_runtime_conf(spark)
     register_synth_source(spark)
-    name = f"stream_pyds_totals_{next(_STREAM_SEQ)}"
+    name = unique_name("stream_python_source_totals")
     agg = (
         spark.readStream.format("pmr_synth_stream")
         .load()
@@ -557,7 +559,9 @@ def stream_python_source_totals(
             q.processAllAvailable()
         finally:
             q.stop()
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)  # the frame keeps the sink's rows
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -688,6 +692,7 @@ def stream_python_sink_roundtrip(
         state_sized_shuffle,
     )
     from parallel_mapreduce_spark.sources.tables import sink_dir
+    from parallel_mapreduce_spark.streaming.drain import unique_name
 
     apply_runtime_conf(spark)
     register_synth_source(spark)
@@ -703,8 +708,8 @@ def stream_python_sink_roundtrip(
             .option("path", out)
             .option(
                 "checkpointLocation",
-                sink_dir("pyds_jsonl_stream_sink") + "/ckpt_"
-                + str(next(_STREAM_SEQ)),
+                sink_dir("pyds_jsonl_stream_sink") + "/"
+                + unique_name("ckpt"),
             )
             .start()
         )

@@ -25,18 +25,15 @@ via DataFrame.write is the documented idempotent-sink pattern.
 
 from __future__ import annotations
 
-import itertools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.functions import similarity as sim
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import apply_runtime_conf
-
-_RUN_SEQ = itertools.count(1)
+from parallel_mapreduce_spark.sources.tables import sink_dir
+from parallel_mapreduce_spark.streaming.drain import drain, table_stream, unique_name
 
 EMBEDDINGS_DDL = "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
 
@@ -46,7 +43,6 @@ def ann_serve_stream_run(
 ) -> None:
     """Drain the eval-query stream through foreachBatch graph serving
     into ``out_dir`` (one parquet subdir per micro-batch)."""
-    apply_runtime_conf(spark)
     # Ensure the snapshots exist BEFORE the stream starts: first-touch
     # builds belong to the build cadence, not to a request batch.
     sim._knn_index(spark, sf_dir)
@@ -57,18 +53,8 @@ def ann_serve_stream_run(
     # batch's search reads it instead of re-deriving it inside
     # foreachBatch.
     ix = sim._gs_index(spark, sf_dir)
-    # The corpus table is a single file at the testdata SFs but a
-    # DIRECTORY of part files everywhere Spark wrote it (the scale-probe
-    # replicas; any production corpus) — stream the directory itself in
-    # that case, since a pathGlobFilter on the parent only matches FILES
-    # and would silently yield an empty stream (zero batches, no sink).
-    emb = os.path.join(sf_dir.rstrip("/"), "embeddings.parquet")
-    reader = spark.readStream.schema(EMBEDDINGS_DDL)
-    if not os.path.isdir(emb):
-        reader = reader.option("pathGlobFilter", "embeddings.parquet")
-        emb = sf_dir.rstrip("/")
     src = (
-        reader.parquet(emb)
+        table_stream(spark, sf_dir, "embeddings", EMBEDDINGS_DDL)
         .where(F.col("vec_id") < sim.KNN_EVAL_N)
         .select("vec_id")
     )
@@ -92,16 +78,16 @@ def ann_serve_stream_run(
             os.path.join(out_dir, f"batch-{batch_id}")
         )
 
-    q = (
-        src.writeStream.foreachBatch(serve_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(out_dir, "_stream_checkpoint"),
-        )
-        .start()
+    # Outside state_sized_shuffle: the stream is stateless, and the batch
+    # serving joins inside serve_batch must keep the session's shuffle
+    # partitions (8 would under-partition them on a wider box).
+    drain(
+        src,
+        "append",
+        serve_batch,
+        state_shuffle=False,
+        checkpointLocation=os.path.join(out_dir, "_stream_checkpoint"),
     )
-    q.awaitTermination()
 
 
 @query(
@@ -125,9 +111,7 @@ def stream_ann_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     arriving query answered per micro-batch from the index snapshot.
     Equals the batch ann_graph_search_topk (same oracle): beams are per
     query, so batch-at-a-time serving is exact, not approximate."""
-    out_dir = tempfile.mkdtemp(
-        prefix=f"pmr_ann_serve_{next(_RUN_SEQ)}_"
-    )
+    out_dir = sink_dir(unique_name("ann_serve"))
     ann_serve_stream_run(spark, sf_dir, out_dir)
     batches = sorted(
         os.path.join(out_dir, d)
@@ -135,6 +119,6 @@ def stream_ann_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         if d.startswith("batch-")
     )
     # The scratch sink stays on disk for the session (KNN_EVAL_N * KNN_K
-    # rows of parquet — the returned plan scans it lazily, exactly like
-    # the memory-sink streaming queries read their sink table).
+    # rows of parquet — the returned plan scans it lazily) and goes with
+    # the sink root at interpreter exit.
     return spark.read.parquet(*batches)

@@ -16,13 +16,10 @@ its first occurrence could re-emit (the documented, bounded-state tradeoff).
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import apply_runtime_conf
+from parallel_mapreduce_spark.streaming.drain import drain, table_stream
 from parallel_mapreduce_spark.streaming.events_stream import EVENTS_SCHEMA, decode_ts
 
 DEDUP_KEYS = ["user_id", "event_type"]
@@ -32,24 +29,14 @@ def dedup_events_stream(
     spark: SparkSession, sf_dir: str, watermark: str = "24 hours"
 ) -> DataFrame:
     """First-seen (user_id, event_type) pairs with watermark-bounded state."""
-    apply_runtime_conf(spark)
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-        .withColumn("ts", decode_ts())
+    src = table_stream(spark, sf_dir, "events", EVENTS_SCHEMA).withColumn(
+        "ts", decode_ts()
     )
     return (
         src.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(DEDUP_KEYS)
         .select(*DEDUP_KEYS)
     )
-
-
-# itertools.count: next() is a single atomic bytecode under the GIL, so
-# threaded-pytest invocations can never draw the same sequence (a bare
-# global += is a read/add/store triple and can race).
-_RUN_SEQ = itertools.count(1)
 
 
 @query(
@@ -62,17 +49,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Append mode: dropDuplicatesWithinWatermark emits each key's first
     occurrence immediately (it does not wait for the watermark), so a drained
     one-shot run yields every distinct key exactly once."""
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-
-    name = f"stream_dedup_events_{next(_RUN_SEQ)}"
-    with state_sized_shuffle(spark):
-        q = (
-            dedup_events_stream(spark, sf_dir)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy(*DEDUP_KEYS)
+    out, _ = drain(
+        dedup_events_stream(spark, sf_dir), "append", name="stream_dedup_events"
+    )
+    return out.orderBy(*DEDUP_KEYS)

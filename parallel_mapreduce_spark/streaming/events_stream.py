@@ -14,15 +14,15 @@ by (window, event_type) and bounded by the watermark.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from parallel_mapreduce_spark.operators.events import SESSION_GAP_S
 from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import apply_runtime_conf
+from parallel_mapreduce_spark.streaming.drain import drain, table_stream, unique_name
 
 # Explicit schema: a streaming file source cannot infer. events.ts is a
 # Parquet TIMESTAMP read as raw int64 (NANOS arrives that way under the
@@ -61,14 +61,8 @@ def hourly_events_stream(
     spark: SparkSession, sf_dir: str, watermark: str = "2 hours"
 ) -> DataFrame:
     """Streaming hourly (window, event_type) counts/sums with a watermark."""
-    apply_runtime_conf(spark)
-    # The file source requires a directory; select just the events file via
-    # a glob filter over the sf_dir.
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-        .withColumn("ts", decode_ts())
+    src = table_stream(spark, sf_dir, "events", EVENTS_SCHEMA).withColumn(
+        "ts", decode_ts()
     )
     return (
         src.withWatermark("ts", watermark)
@@ -83,26 +77,15 @@ def hourly_events_stream(
     )
 
 
-def run_hourly_stream_to_memory(
-    spark: SparkSession, sf_dir: str, table_name: str = "hourly_stream"
-) -> DataFrame:
+def run_hourly_stream_to_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stream to completion (availableNow) into a memory sink and
     return the materialized result. Complete output mode: with a one-shot
     batch the watermark never advances past the data, so append mode would
     hold every window open and emit nothing."""
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-
-    with state_sized_shuffle(spark):
-        q = (
-            hourly_events_stream(spark, sf_dir)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table_name)
+    out, _ = drain(
+        hourly_events_stream(spark, sf_dir), "complete", name="stream_events_hourly"
+    )
+    return out
 
 
 def run_hourly_stream_to_parquet(
@@ -120,23 +103,11 @@ def run_hourly_stream_to_parquet(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(out_path)
 
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-
-    with state_sized_shuffle(spark):
-        q = (
-            hourly_events_stream(spark, sf_dir)
-            .writeStream.foreachBatch(_sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(hourly_events_stream(spark, sf_dir), "complete", _sink)
     return spark.read.parquet(out_path)
 
 
-def segment_share_stream(
-    spark: SparkSession, sf_dir: str, table_name: str = "segment_stream"
-) -> DataFrame:
+def segment_share_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: the events stream enriched with the (static,
     broadcast) customer dimension, aggregated per market segment.
 
@@ -150,12 +121,8 @@ def segment_share_stream(
     asserted equal to the batch twin (operators/events.events_user_segment)
     in tests/test_streaming.py.
     """
-    apply_runtime_conf(spark)
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-        .select("user_id", "event_type", "value")
+    src = table_stream(spark, sf_dir, "events", EVENTS_SCHEMA).select(
+        "user_id", "event_type", "value"
     )
     cust = (
         spark.read.parquet(f"{sf_dir.rstrip('/')}/customer.parquet")
@@ -166,27 +133,8 @@ def segment_share_stream(
         .groupBy("segment", "event_type")
         .agg(F.count("*").alias("cnt"), F.round(F.sum("value"), 4).alias("sum_value"))
     )
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-
-    with state_sized_shuffle(spark):
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table_name)
-
-
-# Atomic under the GIL (next() is one bytecode); a bare global += can race
-# under threaded pytest and hand two invocations the same scratch suffix.
-_RUN_SEQ = itertools.count(1)
-
-
-def _next_name(prefix: str) -> str:
-    return f"{prefix}_{next(_RUN_SEQ)}"
+    out, _ = drain(enriched, "complete", name="stream_segment_share")
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -210,9 +158,7 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-shot run of the watermarked hourly windowed aggregation
     (hourly_events_stream) into a memory sink; equals the batch
     events_hourly."""
-    return run_hourly_stream_to_memory(
-        spark, sf_dir, _next_name("stream_events_hourly")
-    )
+    return run_hourly_stream_to_memory(spark, sf_dir)
 
 
 @query(
@@ -229,12 +175,7 @@ def stream_segment_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-shot run of the stream-static enrichment join
     (segment_share_stream) into a memory sink; equals the batch
     events_user_segment."""
-    return segment_share_stream(
-        spark, sf_dir, _next_name("stream_segment_share")
-    )
-
-
-SESSION_GAP_S = 1800  # keep in lockstep with operators.events.SESSION_GAP_S
+    return segment_share_stream(spark, sf_dir)
 
 
 def session_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,12 +184,8 @@ def session_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is one open session per (user, gap window); the watermark closes
     and evicts sessions whose end precedes it, which bounds state on an
     unbounded stream."""
-    apply_runtime_conf(spark)
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-        .withColumn("ts", decode_ts())
+    src = table_stream(spark, sf_dir, "events", EVENTS_SCHEMA).withColumn(
+        "ts", decode_ts()
     )
     return (
         src.withWatermark("ts", "24 hours")
@@ -296,20 +233,12 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     data, so append would emit nothing; the drained complete-mode snapshot
     equals the batch session_window result (asserted against the same
     recursive-sessionization oracle events_session_window uses)."""
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-
-    name = _next_name("stream_session_windows")
-    with state_sized_shuffle(spark):
-        q = (
-            session_windows_stream(spark, sf_dir)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    out, _ = drain(
+        session_windows_stream(spark, sf_dir),
+        "complete",
+        name="stream_session_windows",
+    )
+    return out
 
 
 @query(
@@ -368,17 +297,7 @@ def stream_dual_sink_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.mode("overwrite").parquet(pa)
         batch_df.write.mode("overwrite").parquet(pb)
 
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-
-    with state_sized_shuffle(spark):
-        q = (
-            hourly_events_stream(spark, sf_dir)
-            .writeStream.foreachBatch(_sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(hourly_events_stream(spark, sf_dir), "complete", _sink)
     a = spark.read.parquet(pa)
     b = spark.read.parquet(pb).select(
         F.col("hour_epoch").alias("h2"),
@@ -420,7 +339,6 @@ def stream_dual_sink_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is the idempotent read side of an update-mode changelog sink.
 # --------------------------------------------------------------------------
 RESUME_SPLIT_DAY = "2024-01-15"
-_RESUME_SEQ = itertools.count(1)
 
 
 @query(
@@ -450,7 +368,7 @@ def stream_resume_from_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
     # resumed_incrementally=false. The sequence suffix gives every
     # invocation its own src/ckpt/out/stage quartet; the process-root
     # atexit cleanup still removes them all.
-    base = sink_dir(f"stream_resume_{next(_RESUME_SEQ)}")
+    base = sink_dir(unique_name("stream_resume"))
     src, ckpt, outp, stage = (
         base + "/src",
         base + "/ckpt",
@@ -491,20 +409,10 @@ def stream_resume_from_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
                 "append"
             ).parquet(outp)
 
-        # Same state_sized_shuffle n on BOTH runs: the shared checkpoint
-        # latches the state partition count at run 1, and run 2 must
-        # reopen it with the identical count.
-        from parallel_mapreduce_spark.session import state_sized_shuffle
-
-        with state_sized_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(_sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        # The drain's state_sized_shuffle n is the same on BOTH runs: the
+        # shared checkpoint latches the state partition count at run 1,
+        # and run 2 must reopen it with the identical count.
+        _, q = drain(stream, "update", _sink, checkpointLocation=ckpt)
         return sum(
             int(p["numInputRows"]) for p in (q.recentProgress or [])
         )
@@ -692,13 +600,11 @@ def stream_late_drop_accounting(
     the engine's numRowsDroppedByWatermark counter (= A's distinct
     closed windows, see the metric-grain note below) and the replayed
     late-row total as value-checked columns."""
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-    from parallel_mapreduce_spark.sources.tables import load_table
-
     import glob
     import os
 
     from parallel_mapreduce_spark.session import scoped_conf
+    from parallel_mapreduce_spark.sources.tables import load_table
 
     apply_runtime_conf(spark)
     src_dir, n_b = _late_replay_src(spark, sf_dir)
@@ -734,20 +640,12 @@ def stream_late_drop_accounting(
             F.sum("value").alias("sum_raw"),
         )
     )
-    name = _next_name("stream_late_drop")
-    with state_sized_shuffle(spark), scoped_conf(
+    with scoped_conf(
         spark, "spark.sql.files.maxPartitionBytes", one_split_bytes
     ), scoped_conf(
         spark, "spark.sql.files.openCostInBytes", one_split_bytes
     ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        closed, q = drain(agg, "append", name="stream_late_drop_accounting")
     progress = q.recentProgress or []
     # METRIC GRAIN, measured not assumed: numRowsDroppedByWatermark
     # counts rows reaching the STATE operator — i.e. post-map-side-
@@ -779,8 +677,7 @@ def stream_late_drop_accounting(
         ).alias("t")
     )
     return (
-        spark.table(name)
-        .crossJoin(F.broadcast(cut))
+        closed.crossJoin(F.broadcast(cut))
         .filter(F.unix_timestamp(F.col("w.end")) <= F.col("t"))
         .select(
             F.unix_timestamp(F.col("w.start")).cast("long").alias(

@@ -16,24 +16,20 @@ equals the batch join exactly.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import apply_runtime_conf
+from parallel_mapreduce_spark.streaming.drain import drain, table_stream
 from parallel_mapreduce_spark.streaming.events_stream import EVENTS_SCHEMA, decode_ts
 
 ATTRIBUTION_WINDOW_S = 1800  # purchase within 30 min of the click
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-        .withColumn("ts", decode_ts())
+    return table_stream(spark, sf_dir, "events", EVENTS_SCHEMA).withColumn(
+        "ts", decode_ts()
     )
 
 
@@ -42,7 +38,6 @@ def click_purchase_stream(
 ) -> DataFrame:
     """(user_id, click_id, purchase_id, gap_s) pairs where the purchase lands
     in [click_ts, click_ts + ATTRIBUTION_WINDOW_S]."""
-    apply_runtime_conf(spark)
     clicks = (
         _event_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -81,11 +76,6 @@ def click_purchase_stream(
     )
 
 
-# Atomic under the GIL (next() is one bytecode); a bare global += can race
-# under threaded pytest and hand two invocations the same scratch suffix.
-_RUN_SEQ = itertools.count(1)
-
-
 @query(
     "stream_click_attribution",
     oracle=f"""
@@ -106,20 +96,12 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink. Append mode: a joined pair is emitted once both inputs are
     buffered; draining the source flushes every matched pair, so the result
     equals the batch join."""
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-
-    name = f"stream_click_attribution_{next(_RUN_SEQ)}"
-    with state_sized_shuffle(spark):
-        q = (
-            click_purchase_stream(spark, sf_dir)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    out, _ = drain(
+        click_purchase_stream(spark, sf_dir),
+        "append",
+        name="stream_click_attribution",
+    )
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -262,18 +244,7 @@ def stream_click_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("gap_s"),
         "click_ts",
     )
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-
-    name = f"stream_click_no_purchase_{next(_RUN_SEQ)}"
-    with state_sized_shuffle(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    pairs, _ = drain(joined, "append", name="stream_click_no_purchase")
     cutoff = ev.agg(
         (
             F.least(
@@ -284,8 +255,7 @@ def stream_click_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cutoff")
     )
     return (
-        spark.table(name)
-        .crossJoin(F.broadcast(cutoff))
+        pairs.crossJoin(F.broadcast(cutoff))
         .filter(F.col("click_ts") <= F.col("cutoff"))
         .select("user_id", "click_id", "purchase_id", "gap_s")
     )
@@ -370,24 +340,15 @@ def chained_join_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_chained_join_hourly(spark: SparkSession, sf_dir: str):
-    """Drain the chained plan into a memory sink; returns (table_name,
-    final StreamingQuery progress dict) — progress exposes the per-batch
-    stateOperators metrics the unit test pins."""
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-
-    hourly = chained_join_hourly_stream(spark, sf_dir)
-    name = f"stream_chained_join_hourly_{next(_RUN_SEQ)}"
-    with state_sized_shuffle(spark):
-        q = (
-            hourly.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progress = q.lastProgress
-    return name, progress
+    """Drain the chained plan into a memory sink; returns (the emitted
+    windows, final StreamingQuery progress dict) — progress exposes the
+    per-batch stateOperators metrics the unit test pins."""
+    hourly, q = drain(
+        chained_join_hourly_stream(spark, sf_dir),
+        "append",
+        name="stream_chained_join_hourly",
+    )
+    return hourly, q.lastProgress
 
 
 @query(
@@ -420,7 +381,7 @@ def stream_chained_join_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     window the measured cutoff proves closed."""
     from parallel_mapreduce_spark.sources.tables import load_table
 
-    name, _ = run_chained_join_hourly(spark, sf_dir)
+    hourly, _ = run_chained_join_hourly(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     cutoff = ev.agg(
         (
@@ -432,8 +393,7 @@ def stream_chained_join_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cutoff")
     )
     return (
-        spark.table(name)
-        .crossJoin(F.broadcast(cutoff))
+        hourly.crossJoin(F.broadcast(cutoff))
         .filter(F.col("hour_end") <= F.col("cutoff"))
         .select("hour_epoch", "n_pairs", "sum_gap_s")
     )

@@ -27,19 +27,12 @@ pure driver-mandated extension surface.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import apply_runtime_conf
+from parallel_mapreduce_spark.streaming.drain import drain, table_stream, unique_name
 from parallel_mapreduce_spark.streaming.events_stream import EVENTS_SCHEMA
-
-# Atomic under the GIL; a bare global += can race under threaded pytest and
-# hand two invocations the same scratch suffix (same lesson as the other
-# streaming modules' _RUN_SEQ counters).
-_RUN_SEQ = itertools.count(1)
 
 
 def run_user_totals_to_checkpoint(spark: SparkSession, sf_dir: str) -> str:
@@ -49,34 +42,21 @@ def run_user_totals_to_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     import os
     import shutil
 
-    from parallel_mapreduce_spark.session import state_sized_shuffle
     from parallel_mapreduce_spark.sources.tables import sink_dir
 
-    apply_runtime_conf(spark)
-    ckpt = sink_dir(f"statestore_read_{next(_RUN_SEQ)}")
+    ckpt = sink_dir(unique_name("statestore_read"))
     # Fresh checkpoint per invocation: a reused one would make rerun N>1 a
     # no-op resume with an already-final state (still correct) but with
     # maxBatchId drifting upward — keep the exhibit deterministic instead.
     shutil.rmtree(ckpt, ignore_errors=True)
     os.makedirs(ckpt, exist_ok=True)
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-        .select("user_id", "value")
+    src = table_stream(spark, sf_dir, "events", EVENTS_SCHEMA).select(
+        "user_id", "value"
     )
     agg = src.groupBy("user_id").agg(
         F.count("*").alias("n_events"), F.sum("value").alias("total_value")
     )
-    with state_sized_shuffle(spark):
-        q = (
-            agg.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(agg, "update", "noop", checkpointLocation=ckpt)
     return ckpt
 
 

@@ -20,8 +20,6 @@ exposed as the rows-only query ``stream_user_totals``.
 
 from __future__ import annotations
 
-import itertools
-
 from collections.abc import Iterator
 from typing import Any
 
@@ -31,7 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import apply_runtime_conf
+from parallel_mapreduce_spark.session import scoped_conf
+from parallel_mapreduce_spark.streaming.drain import drain, table_stream
 from parallel_mapreduce_spark.streaming.events_stream import EVENTS_SCHEMA
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double, last_seen_epoch bigint"
@@ -67,12 +66,8 @@ def update_user_totals(
 
 def user_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-user running totals with explicit GroupState."""
-    apply_runtime_conf(spark)
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-        .select("user_id", "ts", "value")
+    src = table_stream(spark, sf_dir, "events", EVENTS_SCHEMA).select(
+        "user_id", "ts", "value"
     )
     return src.groupBy("user_id").applyInPandasWithState(
         update_user_totals,
@@ -83,9 +78,25 @@ def user_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Atomic under the GIL (next() is one bytecode); a bare global += can race
-# under threaded pytest and hand two invocations the same scratch suffix.
-_RUN_SEQ = itertools.count(1)
+def final_user_totals(snapshots: DataFrame) -> DataFrame:
+    """Each user's FINAL totals from the update-mode snapshots.
+
+    In update mode a user emits one snapshot per micro-batch that touched
+    them; with a multi-file source dir or maxFilesPerTrigger the sink holds
+    several snapshots per user. n_events is strictly increasing across a
+    user's snapshots, so the struct max (n_events first) is exactly the
+    final state — correct under ANY batch split, instead of assuming a
+    single batch. ROUND at emit time used Python round (banker's); re-round
+    via Spark for a stable 4-decimal contract on the oracle boundary."""
+    final = snapshots.groupBy("user_id").agg(
+        F.max(F.struct("n_events", "total_value", "last_seen_epoch")).alias("s")
+    )
+    return final.select(
+        "user_id",
+        F.col("s.n_events").alias("n_events"),
+        F.round("s.total_value", 4).alias("total_value"),
+        F.col("s.last_seen_epoch").alias("last_seen_epoch"),
+    )
 
 
 @query(
@@ -104,41 +115,12 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the returned frame is each user's FINAL totals. The SQL twin is the
     batch-equality contract: after the stream drains, every user's running
     state equals the plain batch aggregate — so the streaming state machinery
-    is value-checked, not rows-only.
-
-    In update mode a user emits one snapshot per micro-batch that touched
-    them; with a multi-file source dir or maxFilesPerTrigger the sink holds
-    several snapshots per user. n_events is strictly increasing across a
-    user's snapshots, so max_by(snapshot, n_events) is exactly the final
-    state — this reduction makes the query correct under ANY batch split,
-    instead of assuming a single batch."""
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-
-    name = f"stream_user_totals_{next(_RUN_SEQ)}"
-    with state_sized_shuffle(spark):
-        q = (
-            user_totals_stream(spark, sf_dir)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    snapshots = spark.table(name)
-    final = snapshots.groupBy("user_id").agg(
-        F.max(
-            F.struct("n_events", "total_value", "last_seen_epoch")
-        ).alias("s")
+    is value-checked, not rows-only (final_user_totals reduces the
+    per-batch snapshots)."""
+    snapshots, _ = drain(
+        user_totals_stream(spark, sf_dir), "update", name="stream_user_totals"
     )
-    # ROUND at emit time used Python round (banker's); re-round via Spark for
-    # a stable 4-decimal contract on the oracle boundary.
-    return final.select(
-        "user_id",
-        F.col("s.n_events").alias("n_events"),
-        F.round("s.total_value", 4).alias("total_value"),
-        F.col("s.last_seen_epoch").alias("last_seen_epoch"),
-    )
+    return final_user_totals(snapshots)
 
 
 # --------------------------------------------------------------------------
@@ -247,14 +229,9 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, so the typed-state path is value-checked."""
     from pyspark.sql.streaming import StatefulProcessor
 
-    from parallel_mapreduce_spark.session import scoped_conf, state_sized_shuffle
-
-    apply_runtime_conf(spark)
-
     class _Proc(_UserTotalsProcessor, StatefulProcessor):
         pass
 
-    name = f"stream_user_totals_tws_{next(_RUN_SEQ)}"
     # transformWithState requires the RocksDB state store (runtime-settable;
     # provider choice latches per query at start). scoped_conf covers the
     # WHOLE build+run — a failure during stream analysis must restore too.
@@ -263,11 +240,8 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.streaming.stateStore.providerClass",
         ROCKSDB_PROVIDER,
     ):
-        src = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir.rstrip("/"))
-            .select("user_id", "ts", "value")
+        src = table_stream(spark, sf_dir, "events", EVENTS_SCHEMA).select(
+            "user_id", "ts", "value"
         )
         out = src.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=_Proc(),
@@ -278,25 +252,8 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        with state_sized_shuffle(spark):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    snapshots = spark.table(name)
-    final = snapshots.groupBy("user_id").agg(
-        F.max(F.struct("n_events", "total_value", "last_seen_epoch")).alias("s")
-    )
-    return final.select(
-        "user_id",
-        F.col("s.n_events").alias("n_events"),
-        F.round("s.total_value", 4).alias("total_value"),
-        F.col("s.last_seen_epoch").alias("last_seen_epoch"),
-    )
+        snapshots, _ = drain(out, "update", name="stream_user_totals_tws")
+    return final_user_totals(snapshots)
 
 
 ROCKSDB_PROVIDER = (
@@ -325,32 +282,12 @@ def stream_user_totals_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     provider twin, so the value semantics are proven identical across
     providers. The conf is set for the duration of the run and restored
     (provider choice is latched per query at start)."""
-    from parallel_mapreduce_spark.session import scoped_conf, state_sized_shuffle
-
-    apply_runtime_conf(spark)
-    name = f"stream_user_totals_rocksdb_{next(_RUN_SEQ)}"
     with scoped_conf(
         spark, "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
     ):
-        with state_sized_shuffle(spark):
-            q = (
-                user_totals_stream(spark, sf_dir)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    snapshots = spark.table(name)
-    final = snapshots.groupBy("user_id").agg(
-        F.max(
-            F.struct("n_events", "total_value", "last_seen_epoch")
-        ).alias("s")
-    )
-    return final.select(
-        "user_id",
-        F.col("s.n_events").alias("n_events"),
-        F.round("s.total_value", 4).alias("total_value"),
-        F.col("s.last_seen_epoch").alias("last_seen_epoch"),
-    )
+        snapshots, _ = drain(
+            user_totals_stream(spark, sf_dir),
+            "update",
+            name="stream_user_totals_rocksdb",
+        )
+    return final_user_totals(snapshots)

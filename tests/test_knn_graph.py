@@ -675,14 +675,45 @@ def test_cell_routed_stays_in_probed_cells(spark, sf_dir):
 
     d = S._knn_index(spark, sf_dir, variant="cellrouted")
     cells = spark.read.parquet(os.path.join(d, "cells"))
-    probe = S._gs_cell_probe(spark, sf_dir, 1)
+    ix = S._gs_index(spark, sf_dir, variant="cellrouted")
+    probe = S._gs_cell_probe(spark, sf_dir, 1, ix.vecs)
     leaked = (
-        S._gs_cell_routed_visited(spark, sf_dir, 1)
+        S._gs_cell_routed_visited(spark, sf_dir, 1, ix)
         .join(cells.select(F.col("vec_id").alias("nbr"), "cell"), "nbr")
         .join(probe, ["node", "cell"], "left_anti")
         .count()
     )
     assert leaked == 0
+
+
+@pytest.mark.parametrize(
+    "exhibit",
+    [
+        "ann_graph_search_beam_curve",
+        "ann_graph_search_cell_routed_recall",
+        "ann_graph_search_quantized_recall",
+    ],
+)
+def test_multi_leg_exhibit_builds_index_state_once(spark, sf_dir, monkeypatch, exhibit):
+    """A multi-leg serving exhibit builds its index state once and searches
+    it per leg: the undirected adjacency (a, b) and the vector frame are
+    each persisted exactly once, not once per beam / probe count / scorer
+    — a duplicate would take a second slot in the persist ring for the
+    same data."""
+    # Snapshots first: a cold build persists frames of its own.
+    S._knn_index(spark, sf_dir, variant="cellrouted" if "cell" in exhibit else "full")
+    S._knn_truth_index(spark, sf_dir)
+    persisted = []
+    real = S.bounded_persist
+
+    def spy(df):
+        persisted.append(tuple(df.columns))
+        return real(df)
+
+    monkeypatch.setattr(S, "bounded_persist", spy)
+    getattr(S, exhibit)(spark, sf_dir)
+    assert persisted.count(("a", "b")) == 1, persisted
+    assert persisted.count(("vec_id", "e", "nrm")) == 1, persisted
 
 
 def test_snapshot_digests_cover_reachable_helpers():

@@ -352,9 +352,9 @@ def test_headline_query_gains_no_new_exchanges(spark, sf_dir, name):
 # One reliable-checkpoint path (session.reliable_checkpoint), persists
 # through the bounded ring (session.bounded_persist), no tuning env knobs,
 # one per-group top-k kernel (operators/rank.top_k), one partition-count
-# policy (session.partition_count) and one graph-serving search
-# (similarity._gs_search): a source scan of the package so the idiom count
-# cannot grow back.
+# policy (session.partition_count), one graph-serving search
+# (similarity._gs_search) and one streaming run path (streaming.drain): a
+# source scan of the package so the idiom count cannot grow back.
 DEPLOYMENT_ENV = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_CHECKPOINT_DIR",
@@ -396,6 +396,31 @@ GS_SERVING = {
     ("functions/similarity.py", "_gs_index"),
     ("functions/similarity.py", "_gs_search"),
 }
+# One streaming run path: tables open as streams only in
+# streaming/drain.table_stream and streams run to the end only in
+# streaming/drain.drain. Allowed elsewhere: the two Python-source drains
+# keep processAllAvailable() (an availableNow trigger plans ONE micro-batch
+# over that source and returns different totals), and the batch
+# binaryFile scan keeps its own file-name glob.
+STREAM_IDIOMS = {
+    "trigger",
+    "awaitTermination",
+    "queryName",
+    "processAllAvailable",
+    "pathGlobFilter",
+}
+STREAM_RUN = {
+    ("streaming/drain.py", "table_stream"): {"pathGlobFilter"},
+    ("streaming/drain.py", "drain"): {"trigger", "awaitTermination", "queryName"},
+    ("sources/pydatasource.py", "stream_python_source_totals"): {
+        "queryName",
+        "processAllAvailable",
+    },
+    ("sources/pydatasource.py", "stream_python_sink_roundtrip"): {
+        "processAllAvailable",
+    },
+    ("sources/roundtrip.py", "binaryfile_ingest_roundtrip"): {"pathGlobFilter"},
+}
 
 
 def _idiom_violations(rel: str, src: str) -> list[str]:
@@ -427,6 +452,13 @@ def _idiom_violations(rel: str, src: str) -> list[str]:
                 callee = getattr(node.func, "id", getattr(node.func, "attr", None))
                 if callee in GS_GATED:
                     bad.append(f"{where} {callee}(): serve through _gs_search")
+            idiom = None
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                idiom = node.func.attr
+            elif isinstance(node, ast.Constant) and node.value == "pathGlobFilter":
+                idiom = node.value
+            if idiom in STREAM_IDIOMS and idiom not in STREAM_RUN.get((rel, func), ()):
+                bad.append(f"{where} {idiom}: stream through streaming.drain")
             names = {getattr(node, k, None) for k in ("id", "attr", "name")}
             if "ensure_checkpoint_dir" in names:
                 bad.append(f"{where} ensure_checkpoint_dir outside session.py")

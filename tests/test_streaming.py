@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_streaming_hourly_matches_batch(spark, sf_dir):
     from parallel_mapreduce_spark.operators.events import events_hourly
@@ -13,7 +15,7 @@ def test_streaming_hourly_matches_batch(spark, sf_dir):
     }
     streamed = {
         (r.hour_epoch, r.event_type): (r.cnt, round(r.sum_value, 4))
-        for r in run_hourly_stream_to_memory(spark, sf_dir, "t_hourly").collect()
+        for r in run_hourly_stream_to_memory(spark, sf_dir).collect()
     }
     assert streamed == batch
 
@@ -201,7 +203,7 @@ def test_stream_static_join_matches_batch(spark, sf_dir):
     }
     streamed = {
         (r.segment, r.event_type): (r.cnt, round(r.sum_value, 4))
-        for r in segment_share_stream(spark, sf_dir, "t_segment").collect()
+        for r in segment_share_stream(spark, sf_dir).collect()
     }
     assert streamed == batch
 
@@ -432,7 +434,7 @@ def test_chained_join_window_runs_two_stateful_operators(spark, sf_dir):
         run_chained_join_hourly,
     )
 
-    name, progress = run_chained_join_hourly(spark, sf_dir)
+    hourly, progress = run_chained_join_hourly(spark, sf_dir)
     ops = progress["stateOperators"]
     names = sorted(o["operatorName"] for o in ops)
     assert len(ops) == 2, names
@@ -441,7 +443,7 @@ def test_chained_join_window_runs_two_stateful_operators(spark, sf_dir):
     # Multi-batch: the bucketed source replays one file per trigger, so
     # the last batch id must be past the first few buckets.
     assert progress["batchId"] >= 3
-    assert spark.table(name).count() >= 0
+    assert hourly.count() >= 0
 
 
 def _run_late_replay(spark, tmp_path, files):
@@ -453,8 +455,7 @@ def _run_late_replay(spark, tmp_path, files):
 
     from pyspark.sql import functions as F
 
-    from parallel_mapreduce_spark.session import state_sized_shuffle
-    from parallel_mapreduce_spark.streaming.events_stream import _next_name
+    from parallel_mapreduce_spark.streaming.drain import drain
 
     src = str(tmp_path / "src")
     os.makedirs(src, exist_ok=True)
@@ -479,16 +480,7 @@ def _run_late_replay(spark, tmp_path, files):
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    name = _next_name("late_grace")
-    with state_sized_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out, q = drain(agg, "append", name="late_grace")
     dropped = sum(
         int(op.get("numRowsDroppedByWatermark", 0))
         for p in (q.recentProgress or [])
@@ -496,7 +488,7 @@ def _run_late_replay(spark, tmp_path, files):
     )
     emitted = {
         r["w"]["start"].strftime("%Y-%m-%d %H")
-        for r in spark.table(name).collect()
+        for r in out.collect()
     }
     return emitted, dropped
 
@@ -549,3 +541,96 @@ def test_stream_ann_serve_equals_batch(spark, sf_dir):
         .reset_index(drop=True)
     )
     assert a.equals(b)
+
+
+def test_event_streams_read_directory_shaped_table(spark, sf_dir, tmp_path):
+    """A table written by Spark is a DIRECTORY of part files. The events
+    stream source must stream it (a pathGlobFilter on the parent matches
+    files only and would yield an empty stream with no error): the
+    streaming twins equal their batch twins on a world whose events table
+    is split into two part files."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from parallel_mapreduce_spark.operators.events import events_hourly
+    from parallel_mapreduce_spark.sources import load_table
+    from parallel_mapreduce_spark.streaming.events_stream import (
+        stream_events_hourly,
+    )
+    from parallel_mapreduce_spark.streaming.stateful import stream_user_totals
+
+    import os
+
+    world = tmp_path / "dir_world"
+    events_dir = world / "events.parquet"
+    events_dir.mkdir(parents=True)
+    for f in os.listdir(sf_dir):  # the batch twins register every table
+        if f.endswith(".parquet") and f != "events.parquet":
+            os.symlink(os.path.join(sf_dir, f), world / f)
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    half = ev.num_rows // 2
+    pq.write_table(ev.slice(0, half), events_dir / "part-00000.parquet")
+    pq.write_table(ev.slice(half), events_dir / "part-00001.parquet")
+    world = str(world)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    hourly = rows(stream_events_hourly(spark, world))
+    assert hourly
+    assert hourly == rows(events_hourly(spark, world))
+
+    totals = {
+        r.user_id: (r.n_events, r.total_value)
+        for r in stream_user_totals(spark, world).collect()
+    }
+    want = {
+        r.user_id: (r.n, r.total)
+        for r in load_table(spark, world, "events")
+        .groupBy("user_id")
+        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total"))
+        .collect()
+    }
+    assert totals
+    assert totals == want
+
+
+# Every registered query that drains into a memory sink. Each sink (and so
+# its temp view) is named after its query, ``stream_<...>_<n>``.
+MEMORY_SINK_QUERIES = [
+    "stream_chained_join_hourly",
+    "stream_click_attribution",
+    "stream_click_no_purchase",
+    "stream_dedup_events",
+    "stream_events_hourly",
+    "stream_late_drop_accounting",
+    "stream_python_source_totals",
+    "stream_segment_share",
+    "stream_session_windows",
+    "stream_user_totals",
+    "stream_user_totals_rocksdb",
+]
+
+
+def _temp_views(spark, prefix):
+    return [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith(prefix)
+    ]
+
+
+@pytest.mark.parametrize("name", MEMORY_SINK_QUERIES)
+def test_memory_sink_views_do_not_pile_up(spark, sf_dir, name):
+    """Each memory-sink drain registers a temp view holding the sink's rows
+    in the driver. The drain drops it once the result frame is taken: two
+    runs of the query give equal results and leave no view behind."""
+    from parallel_mapreduce_spark.registry import QUERIES, _load_all
+
+    _load_all()
+    fn = QUERIES[name].fn
+    first = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    second = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    assert first
+    assert first == second
+    assert _temp_views(spark, "stream_") == []
