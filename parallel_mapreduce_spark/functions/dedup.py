@@ -41,7 +41,7 @@ from parallel_mapreduce_spark.session import (
     reliable_checkpoint,
 )
 from parallel_mapreduce_spark.sources import (
-    corpus_cut,
+    cut,
     load_table,
     register_views,
 )
@@ -337,13 +337,12 @@ def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MANY consumers (the index self-join's two sides, the eligible filter,
     # and members' four join legs), and the joins run broadcast at this
     # scale, so no ReusedExchange ever dedups the subtrees — the committed
-    # plan re-scanned documents 12x. corpus_cut materializes each shared
+    # plan re-scanned documents 12x. A lazy cut materializes each shared
     # frame once; every consumer reads the cut.
-    members = corpus_cut(exact_dup_members(docs), sf_dir)
+    members = cut(exact_dup_members(docs), sf_dir, "documents", eager=False)
     reps = _rep_texts(docs, n)
-    shingled = corpus_cut(
-        reps.select("doc_id", shingles3(tokens("text")).alias("sh")), sf_dir
-    )
+    shingled = reps.select("doc_id", shingles3(tokens("text")).alias("sh"))
+    shingled = cut(shingled, sf_dir, "documents", eager=False)
     eligible = shingled.filter(F.size("sh") > 0).select(F.col("doc_id").alias("rep"))
     rep_pairs = jaccard_pairs(shingled)
     cross = expand_rep_pairs(rep_pairs, members, "jaccard")
@@ -390,14 +389,13 @@ def neardup_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = partition_count(spark)
-    # Same round-14 corpus_cut as neardup_jaccard_pairs; the freq-cap
+    # Same round-14 cut as neardup_jaccard_pairs; the freq-cap
     # census adds a THIRD consumer of the shingle frame, so the cut pays
     # off even harder here.
-    members = corpus_cut(exact_dup_members(docs), sf_dir)
+    members = cut(exact_dup_members(docs), sf_dir, "documents", eager=False)
     reps = _rep_texts(docs, n)
-    shingled = corpus_cut(
-        reps.select("doc_id", shingles3(tokens("text")).alias("sh")), sf_dir
-    )
+    shingled = reps.select("doc_id", shingles3(tokens("text")).alias("sh"))
+    shingled = cut(shingled, sf_dir, "documents", eager=False)
     eligible = shingled.filter(F.size("sh") > 0).select(F.col("doc_id").alias("rep"))
     rep_pairs = jaccard_pairs(shingled, freq_cap=SHINGLE_FREQ_CAP)
     cross = expand_rep_pairs(rep_pairs, members, "jaccard")
@@ -582,15 +580,16 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = partition_count(spark)
-    # Round-14 corpus_cut (guide §5): members feeds four join legs and
+    # Round-14 cut: members feeds four join legs and
     # rep_sigs feeds both band-join sides plus the eligible filter; the
     # broadcast joins at this scale leave no exchange to reuse, so without
     # the cut each consumer re-ran the scan -> digest -> minhash chain
     # (measured 1.67 -> 1.50s at sf0.1, interleaved A/B, equality pinned;
     # cross-session comparisons of this query swing +-30% and first read
-    # as a regression — probes/ab_neardup_cut.py is the methodology).
-    members = corpus_cut(exact_dup_members(docs), sf_dir)
-    rep_sigs = corpus_cut(_minhash_of(_rep_texts(docs, n)), sf_dir)
+    # as a regression — OPTIMIZATION_r14.md §1 records the A/B).
+    members = cut(exact_dup_members(docs), sf_dir, "documents", eager=False)
+    rep_sigs = _minhash_of(_rep_texts(docs, n))
+    rep_sigs = cut(rep_sigs, sf_dir, "documents", eager=False)
     bands = _lsh_bands(rep_sigs)
     a = bands.alias("a")
     b = bands.alias("b")
@@ -2255,7 +2254,7 @@ def substring_run_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence kept) and reassembling the survivors in order."""
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    # Round-14 NEGATIVE result (probes/ab_bigram_substr_cut.py): cutting
+    # Round-14 NEGATIVE result (OPTIMIZATION_r14.md §8): cutting
     # working (doc_id + raw text, three consumers) measured SLOWER at
     # sf0.1 — 2.41s lazy vs 3.70s cut, interleaved min-of-6, equality
     # asserted. The three re-derivations are cheap fused parquet scans;

@@ -42,7 +42,7 @@ from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import partition_count
 from parallel_mapreduce_spark.sources import (
-    corpus_cut,
+    cut,
     load_table,
     register_views,
 )
@@ -127,7 +127,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization serves all three (measured 4.2s -> 2.6s warm at
     # sf0.1 when this landed as a reliable checkpoint). Round-13 made it
     # a localCheckpoint (no parquet round-trip of the text column);
-    # round 14 SIZE-GATES that choice via corpus_cut (verdict item): the
+    # round 14 SIZE-GATES that choice via the cut (verdict item): the
     # survivors frame carries corpus-scale text, and pinning it to
     # executor storage at 100 TB is memory pressure plus a fault cliff,
     # so above the gate the cut goes back through the reliable
@@ -135,7 +135,8 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays the per-round checkpoints inside connected_components either
     # way (executor loss there re-derives survivors once below the gate,
     # re-reads them above it; it never kills the fixpoint's progress).
-    s = corpus_cut(q.join(keep_e.select("doc_id"), "doc_id"), sf_dir)
+    s = q.join(keep_e.select("doc_id"), "doc_id")
+    s = cut(s, sf_dir, "documents", eager=False)
     # Stage 3: near-dup clustering over survivors; keep cluster representatives.
     shingled = s.select("doc_id", shingles3(F.col("toks")).alias("sh"))
     pairs = jaccard_pairs(shingled).select("doc_a", "doc_b")

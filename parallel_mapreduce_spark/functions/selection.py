@@ -47,28 +47,9 @@ from parallel_mapreduce_spark.functions.similarity import (
 )
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import bounded_persist
-from parallel_mapreduce_spark.sources import fits_local_cut, load_table, register_views
+from parallel_mapreduce_spark.sources import cut, load_table, register_views
 
 KC_K = 12  # selected coreset size (k centers, seed included)
-
-
-def _md_cut(md, sf_dir: str):
-    """Per-pick materialization of the running min-distance frame.
-
-    Round-14 optimization (guide §5, §7.3 "planning time itself can
-    become the bottleneck"): bounded_persist alone does NOT cut the
-    LOGICAL plan — each pick's frame nested the previous one's, so by
-    pick 10 analysis+optimization and the TakeOrdered head had grown
-    from ~0.17s to ~0.8s per pick (measured; the Gonzalez loop is
-    sequential by definition, so plan growth is pure driver-side drag).
-    Below the corpus gate the frame localCheckpoints (plan resets to a
-    LogicalRDD every pick, constant per-pick cost); above it the
-    committed persist stands — corpus-scale blocks stay evictable and
-    recomputable, and a durable checkpoint per pick would write the
-    corpus K times."""
-    if fits_local_cut(sf_dir, "embeddings"):
-        return md.localCheckpoint(eager=False)
-    return bounded_persist(md)
 
 
 def _kc_oracle() -> str:
@@ -163,23 +144,22 @@ def kcenter_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         if rank == KC_K - 1:
             break
         center_id = int(top["vec_id"])
-        md = _md_cut(
-            md.select(
-                "vec_id",
-                "e",
-                F.least(F.col("md"), _dist6_to(top["e"])).alias("md"),
-            ),
-            sf_dir,
+        md = md.select(
+            "vec_id", "e", F.least(F.col("md"), _dist6_to(top["e"])).alias("md")
         )
+        # Per-pick lineage cut: each pick's frame nests the previous
+        # one's, and without the cut analysis plus the TakeOrdered head
+        # grew from ~0.17s to ~0.8s per pick by pick 10 (a persist keeps
+        # the LOGICAL plan, so it does not stop that growth).
+        md = cut(md, sf_dir, "embeddings", eager=False)
     # Everything above ran eagerly, so release the corpus frame's cache
     # before returning: its plan is byte-identical to kmeans_lloyd_2iter's
     # input subplan, and a lingering cache entry would substitute an
     # InMemoryRelation into THAT query's plan (observed: the exchange
     # census read 21 instead of 17 for kmeans whenever this query had
     # run first in the session — cross-query cache pollution changes
-    # plan shapes, not just speed). The md chain's frames stay in the
-    # bounded ring; their plans are kcenter-specific and match nothing
-    # else.
+    # plan shapes, not just speed). The md chain's cut frames are
+    # kcenter-specific and match nothing else.
     vecs.unpersist()
     return spark.createDataFrame(
         rows, "sel_rank long, center_id long, radius double"
@@ -282,14 +262,10 @@ def pipeline_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         if rank == PDS_K - 1:
             break
         center_id = int(top["vec_id"])
-        md = _md_cut(
-            md.select(
-                "vec_id",
-                "e",
-                F.least(F.col("md"), _dist6_to(top["e"])).alias("md"),
-            ),
-            sf_dir,
+        md = md.select(
+            "vec_id", "e", F.least(F.col("md"), _dist6_to(top["e"])).alias("md")
         )
+        md = cut(md, sf_dir, "embeddings", eager=False)
     vecs.unpersist()
     picks = spark.createDataFrame(
         rows, "sel_rank long, doc_id long, radius double"

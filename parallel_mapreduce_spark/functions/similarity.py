@@ -35,7 +35,7 @@ from parallel_mapreduce_spark.session import (
     partition_count,
     reliable_checkpoint,
 )
-from parallel_mapreduce_spark.sources import load_table, register_views, table_bytes
+from parallel_mapreduce_spark.sources import cut, load_table, register_views, table_bytes
 
 N_QUERY_VECS = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -5520,9 +5520,10 @@ def _gs_und(graph: DataFrame, n_parts: int) -> DataFrame:
 class _GsIndex(NamedTuple):
     """Graph-serving index state, built once per (snapshot, graph) by
     _gs_index and read by every _gs_search over it: the vectors, the
-    persisted undirected adjacency, the uncapped bucket frame, and the
+    persisted undirected adjacency, the uncapped bucket frame, the
     serving gates derived from the corpus bytes (``small``) and the
-    nominal query batch (``n_queries`` / ``parts``)."""
+    nominal query batch (``n_queries`` / ``parts``), and the source
+    directory the traversal's cuts gate on."""
 
     vecs: DataFrame
     bkts: DataFrame
@@ -5530,6 +5531,7 @@ class _GsIndex(NamedTuple):
     small: bool
     n_queries: int
     parts: int
+    sf_dir: str
 
 
 def _gs_index(
@@ -5558,7 +5560,7 @@ def _gs_index(
     parts = _gs_parts(spark, n_queries)
     und = _gs_und(graph, parts if small else partition_count(spark))
     bkts = spark.read.parquet(os.path.join(d, "buckets"))
-    return _GsIndex(vecs, bkts, und, small, n_queries, parts)
+    return _GsIndex(vecs, bkts, und, small, n_queries, parts, sf_dir)
 
 
 def _gs_search(
@@ -5647,6 +5649,7 @@ def _gs_search(
         ix.und,
         lambda p: score(p, ix.small),
         beam,
+        ix.sf_dir,
         exclude_self=exclude_self,
         beam_by=beam_by,
         parts=sp,
@@ -5675,6 +5678,7 @@ def _gs_traverse(
     und: DataFrame,
     score,
     beam: int,
+    sf_dir: str,
     exclude_self: bool = True,
     beam_by: Column | None = None,
     parts: int | None = None,
@@ -5699,12 +5703,13 @@ def _gs_traverse(
     full parallelism — callers that know their query count pass
     _gs_parts); ``bcast_und`` broadcasts the adjacency into the hop
     join (small-corpus serving; guide §3.1). Round-13 optimization: the
-    per-hop materialization is a localCheckpoint — it truncates the 3^t
-    lineage exactly like the reliable checkpoint did, without writing
-    and re-reading parquet per hop (guide §5: localCheckpoint is the
-    cheaper lineage cut when fault tolerance of the intermediate is not
-    critical — a serving request is re-runnable, unlike the build, which
-    keeps its durable checkpoints).
+    entry and per-hop materializations are eager ``sources.cut`` calls
+    gated on the bytes of the embeddings table in ``sf_dir``. Below the
+    gate the cut is a localCheckpoint: it truncates the 3^t lineage
+    exactly like a reliable checkpoint, without writing and re-reading
+    parquet per hop, and a serving request is re-runnable, so the
+    intermediate needs no fault tolerance (the build keeps its durable
+    checkpoints). Above the gate it is the durable cut.
 
     Round-14 optimization (guide §2.4 "remove shuffles outright"): on the
     broadcast path the hop now pays ONE exchange (the frontier window's
@@ -5722,7 +5727,7 @@ def _gs_traverse(
     AQE-funnel hazard _knn_topk's explicit repartition exists to avoid.)"""
     spark = entry_scored.sparkSession
     n_parts = parts or partition_count(spark)
-    visited = entry_scored.localCheckpoint(eager=True)
+    visited = cut(entry_scored, sf_dir, "embeddings", eager=True)
     for _ in range(GS_ROUNDS):
         if beam_by is None:
             front = _knn_topk(visited, k=beam, parts=n_parts)
@@ -5748,7 +5753,8 @@ def _gs_traverse(
             ["node", "nbr"],
             "left_anti",
         )
-        visited = visited.unionAll(score(expand)).localCheckpoint(eager=True)
+        visited = visited.unionAll(score(expand))
+        visited = cut(visited, sf_dir, "embeddings", eager=True)
     return visited
 
 

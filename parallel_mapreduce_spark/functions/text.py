@@ -29,7 +29,7 @@ from parallel_mapreduce_spark.functions.portable import phash60, phash60_sql
 from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import partition_count
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.sources import cut, load_table, register_views
 
 # Shared stopword/marker vocabulary (tiny on purpose: the oracle must use the
 # exact same lists, inlined into the SQL strings below).
@@ -2314,17 +2314,19 @@ def bpe_train_3merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = token_df(spark, sf_dir).groupBy("word").agg(F.count("*").alias("cnt"))
     # Vocabulary-bounded; MATERIALIZED so the corpus tokenize-and-count
     # runs once, not once per round-consumer (3 pair censuses + 3 stat
-    # rows). Round-13 optimization (guide §5): localCheckpoint here and
-    # after each merge — the per-round lineage cut keeps every round's
-    # census a one-scan job over the vocabulary-bounded frame instead of
-    # a re-derivation chain the engine must dedup via ReusedExchange
-    # (measured at sf0.1: 2.7-4.1s -> 1.6-2.2s, identical rows).
+    # rows). Round-13 optimization: a lineage cut here and after each
+    # merge keeps every round's census a one-scan job over the
+    # vocabulary-bounded frame instead of a re-derivation chain the
+    # engine must dedup via ReusedExchange (measured at sf0.1: 2.7-4.1s
+    # -> 1.6-2.2s, identical rows). The vocabulary grows with the
+    # corpus, so the cut gates on the documents table's bytes.
     syms = wc.select(
         "cnt",
         F.expr(
             "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
         ).alias("s"),
-    ).localCheckpoint(eager=True)
+    )
+    syms = cut(syms, sf_dir, "documents", eager=True)
     out = None
     for r in range(1, BPE_ROUNDS + 1):
         pairs = syms.select(
@@ -2343,11 +2345,10 @@ def bpe_train_3merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("pair_count"), "a", "b")
             .limit(1)
         )
-        syms = (
-            syms.crossJoin(F.broadcast(top))
-            .select("cnt", F.expr(_BPE_MERGE_EXPR).alias("s"))
-            .localCheckpoint(eager=True)
+        syms = syms.crossJoin(F.broadcast(top)).select(
+            "cnt", F.expr(_BPE_MERGE_EXPR).alias("s")
         )
+        syms = cut(syms, sf_dir, "documents", eager=True)
         stat = syms.agg(
             F.sum(F.col("cnt") * F.size("s")).cast("long").alias("symbols_after")
         )

@@ -1511,8 +1511,8 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
-    # Round-14 NEGATIVE result (probes/ab_bigram_substr_cut.py and a
-    # members-only arm): corpus_cut on members and/or the
+    # Round-14 NEGATIVE result (OPTIMIZATION_r14.md §8, with a
+    # members-only arm): a lazy cut on members and/or the
     # tokenized reps frame measured SLOWER at sf0.1 (old 1.71s vs
     # members-only 1.80s vs both 1.98s, interleaved min-of-6, equality
     # asserted) — unlike the near-dup family the shared chains here are

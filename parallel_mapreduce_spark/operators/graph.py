@@ -32,10 +32,10 @@ both dimension sides broadcast); the iteration itself runs on the
 aggregated |V|=25, |E|<=625 graph with the rank side broadcast — zero
 shuffles per round. For a billion-vertex graph the same plan shape
 holds with the rank side shuffled instead of broadcast and a
-`localCheckpoint` per round to truncate lineage, as neardup_clusters
-does; overflow headroom: rank*w stays under 2^63 while
-max_rank * max_edge_weight < 9.2e18 (document-level graphs should
-pre-normalize weights to per-src shares in micro-units first).
+`sources.cut` per round to truncate lineage; overflow headroom: rank*w
+stays under 2^63 while max_rank * max_edge_weight < 9.2e18
+(document-level graphs should pre-normalize weights to per-src shares in
+micro-units first).
 """
 
 from __future__ import annotations
@@ -46,7 +46,7 @@ from pyspark.sql.window import Window as W
 
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import bounded_persist, reliable_checkpoint
-from parallel_mapreduce_spark.sources.tables import load_table, register_views
+from parallel_mapreduce_spark.sources.tables import cut, load_table, register_views
 
 PR_ITERS = 3
 PR_UNIT = 1_000_000  # one rank point, in micro-units
@@ -174,9 +174,11 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cut is a one-task job; with real runtime stats AQE picks the
         # broadcast itself. Measured 2.83 -> 1.68s at sf0.1 interleaved
         # same-session A/B, bit-identical output (exact integer ranks).
-        # A billion-vertex graph keeps rank frames distributed (module
-        # docstring) — there the cut would be a reliable checkpoint.
-        base = base.localCheckpoint(eager=True)
+        # The cut is gated on the nation table's bytes, the rank frame's
+        # real bound: a billion-vertex graph keeps rank frames
+        # distributed (module docstring), and above the gate the cut is
+        # a reliable checkpoint.
+        base = cut(base, sf_dir, "nation", eager=True)
         contribs = (
             base.join(edges, base.nk == edges.src)
             .groupBy("dst")

@@ -99,7 +99,7 @@ def global_row_number(
     an upstream ``sample()``, round-robin ``repartition()``, or
     shuffle-order-dependent ``limit`` can produce DIFFERENT rows per
     evaluation and silently wrong ranks. Callers with a nondeterministic
-    upstream must materialize first (``df.localCheckpoint()``).
+    upstream must materialize first (``sources.cut``).
     """
     n = num_shards or partition_count(df.sparkSession)
     ranged = df.repartitionByRange(n, *order).withColumn(
@@ -145,7 +145,7 @@ def global_prefix_sum(
     Same deterministic-input precondition as :func:`global_row_number`:
     both branches descend from the range shuffle and may be evaluated
     independently, so a nondeterministic upstream must be materialized
-    (``localCheckpoint()``) by the caller first.
+    (``sources.cut``) by the caller first.
     """
     n = num_shards or partition_count(df.sparkSession)
     ranged = df.repartitionByRange(n, *order).withColumn(

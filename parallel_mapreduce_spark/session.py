@@ -15,9 +15,13 @@ same code is correct on a multi-executor cluster at 100 TB:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import threading
 from contextlib import contextmanager
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -112,22 +116,23 @@ def reliable_checkpoint(df):
     with them — a reliable checkpoint is written to the SparkContext's
     checkpoint directory, so an executor loss mid-iteration recovers by
     re-reading it instead of killing the query. The directory is set on
-    first use per SparkContext: a temp dir locally; on a real cluster
-    point SPARK_GRAFT_CHECKPOINT_DIR at durable storage (HDFS/S3).
+    first use per SparkContext: a temp dir locally, removed at
+    interpreter exit; on a real cluster point SPARK_GRAFT_CHECKPOINT_DIR
+    at durable storage (HDFS/S3), which is never removed here.
     """
     sc = df.sparkSession.sparkContext
     if sc.applicationId not in _CKPT_DIRS:
         path = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
         if not path:
-            import tempfile
-
             path = tempfile.mkdtemp(prefix="pmr_spark_ckpt_")
+            atexit.register(shutil.rmtree, path, ignore_errors=True)
         sc.setCheckpointDir(path)
         _CKPT_DIRS.add(sc.applicationId)
     return df.checkpoint(eager=True)
 
 
 _SHIPPED: set[str] = set()
+_PKG_ZIP: str | None = None
 
 
 def ensure_package_on_workers(sc) -> None:
@@ -136,25 +141,25 @@ def ensure_package_on_workers(sc) -> None:
     Worker processes unpickle functions defined in this package by module
     reference; unless the package is on their import path, any RDD closure or
     Pandas UDF from here fails with ModuleNotFoundError. Zipping the package
-    once per SparkContext makes the engine self-contained no matter how the
-    calling session was created (driver harness, tests, bench).
+    once per process, and shipping the zip once per SparkContext, makes the
+    engine self-contained no matter how the calling session was created
+    (driver harness, tests, bench). The zip is removed at interpreter exit.
     """
-    import shutil
-    import tempfile
-
+    global _PKG_ZIP
     app_id = sc.applicationId
     if app_id in _SHIPPED:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    stem = os.path.join(tempfile.gettempdir(), f"pmr_spark_pkg_{os.getpid()}")
-    if not os.path.exists(stem + ".zip"):
-        shutil.make_archive(
+    if _PKG_ZIP is None:
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        stem = os.path.join(tempfile.gettempdir(), f"pmr_spark_pkg_{os.getpid()}")
+        _PKG_ZIP = shutil.make_archive(
             stem,
             "zip",
             root_dir=os.path.dirname(pkg_dir),
             base_dir=os.path.basename(pkg_dir),
         )
-    sc.addPyFile(stem + ".zip")
+        atexit.register(Path(_PKG_ZIP).unlink, missing_ok=True)
+    sc.addPyFile(_PKG_ZIP)
     _SHIPPED.add(app_id)
 
 

@@ -1,7 +1,6 @@
 from parallel_mapreduce_spark.sources.tables import (  # noqa: F401
     TABLES,
-    corpus_cut,
-    fits_local_cut,
+    cut,
     load_table,
     read_csv,
     read_json,
@@ -14,8 +13,7 @@ from parallel_mapreduce_spark.sources.tables import (  # noqa: F401
 
 __all__ = [
     "TABLES",
-    "corpus_cut",
-    "fits_local_cut",
+    "cut",
     "table_bytes",
     "load_table",
     "read_csv",

@@ -129,22 +129,15 @@ def read_json(
     return reader.json(paths)
 
 
-# Gate for executor-pinned (localCheckpoint) materialization of
-# corpus-derived intermediates, in ON-DISK source-table bytes. Below it a
-# multi-consumer frame is cheap to pin on executors; above it the frame is
-# corpus-scale, where executor-pinned blocks are storage pressure plus a
-# fault cliff (a lost executor kills the job instead of recomputing), so
-# each user of the gate takes its safe branch instead (corpus_cut: the
-# reliable checkpoint; selection._md_cut: a bounded persist). NOTE the
-# in-memory expansion multiple: decompressed row data runs ~4-8x the
-# parquet bytes, so 192 MiB on disk is of order 1 GiB pinned.
+# Gate for executor-pinned (localCheckpoint) lineage cuts, in ON-DISK
+# bytes of the source table that bounds the cut frame. Below it the frame
+# is cheap to pin on executors; above it the frame is corpus-scale, where
+# executor-pinned blocks are storage pressure plus a fault cliff (a lost
+# executor kills the job instead of recomputing), so `cut` takes the
+# reliable checkpoint instead. NOTE the in-memory expansion multiple:
+# decompressed row data runs ~4-8x the parquet bytes, so 192 MiB on disk
+# is of order 1 GiB pinned.
 LOCAL_CUT_MAX_BYTES = 192 << 20
-
-
-def fits_local_cut(sf_dir: str, table: str) -> bool:
-    """May frames derived from ``table`` be pinned on executors
-    (localCheckpoint)? Unknown size reads as huge, so this says no."""
-    return table_bytes(sf_dir, table) <= LOCAL_CUT_MAX_BYTES
 
 
 def table_bytes(sf_dir: str, name: str) -> int:
@@ -166,26 +159,32 @@ def table_bytes(sf_dir: str, name: str) -> int:
         return 1 << 62
 
 
-def corpus_cut(df: DataFrame, sf_dir: str, table: str = "documents") -> DataFrame:
-    """Materialize a corpus-derived frame ONCE for its multiple consumers
-    (guide §5: cache/cut when a frame is reused and recompute is expensive)
-    with the lineage-cut flavor picked by corpus size:
+def cut(df: DataFrame, sf_dir: str, table: str, *, eager: bool) -> DataFrame:
+    """The engine's one lineage cut: materialize ``df`` and truncate its
+    plan, with the flavor picked by the on-disk bytes of ``table``, the
+    source table whose size bounds ``df``. Cut a frame that several
+    consumers read, or a loop frame whose plan would otherwise compound:
 
-    - within the gate (``fits_local_cut``): ``localCheckpoint`` — no
-      parquet round-trip, blocks pinned on executors (tiny here by the
-      gate's definition; a lost executor merely fails a re-runnable query);
-    - above it: ``reliable_checkpoint`` — one write+read instead of N
-      recomputes of a corpus-scale chain, recoverable on executor loss,
-      and no corpus-scale block pinned in executor storage.
+    - at or below ``LOCAL_CUT_MAX_BYTES``: ``localCheckpoint`` — no
+      parquet round-trip, blocks pinned on executors (small by the gate's
+      definition; a lost executor merely fails a re-runnable query);
+    - above it, or when the size is unknown: ``reliable_checkpoint`` —
+      one write+read instead of N recomputes of a corpus-scale chain,
+      recoverable on executor loss, and no corpus-scale block pinned in
+      executor storage.
+
+    ``eager`` picks the local cut's timing. Lazy suits a multi-consumer
+    frame: consumers share ONE RDD, so upstream shuffle stages dedup by
+    shuffle id inside the first action and the blocks cache for
+    everything after, without an extra sequential job per cut. Eager
+    suits a loop whose next round is planned from the cut: the round's
+    frame exists before the next plan is built, so AQE plans the tiny
+    joins from real stats. The durable branch is always eager.
 
     Values are identical either way; only materialization strategy moves.
     """
-    if fits_local_cut(sf_dir, table):
-        # Lazy: consumers share ONE RDD, so upstream shuffle stages dedup
-        # by shuffle id inside the first action (no per-consumer replans)
-        # and the blocks cache for everything after — without the eager
-        # form's extra sequential materialization job per cut.
-        return df.localCheckpoint(eager=False)
+    if table_bytes(sf_dir, table) <= LOCAL_CUT_MAX_BYTES:
+        return df.localCheckpoint(eager=eager)
     return reliable_checkpoint(df)
 
 

@@ -104,10 +104,10 @@ GLOBAL_WINDOW_WHITELIST = {
     "kmeans_lloyd_2iter",
     "monthly_revenue_growth",
     # pagerank_trade_graph's dangling-mass global window (25-row bounded,
-    # justified in operators/graph.py) still runs, but since the round-14
-    # per-iteration localCheckpoint it executes inside the eager cut during
-    # DataFrame construction, so the RETURNED plan no longer prints it —
-    # the audit sees only the post-cut LogicalRDD.
+    # justified in operators/graph.py) still runs, but inside the eager
+    # per-iteration sources.cut during DataFrame construction, so the
+    # RETURNED plan no longer prints it — the audit sees only the post-cut
+    # LogicalRDD.
     "price_weighted_median_by_flag",
     "semdedup_cluster_report",
     "sorted_neighborhood_multipass_pairs",
@@ -349,8 +349,10 @@ def test_headline_query_gains_no_new_exchanges(spark, sf_dir, name):
 
 
 # --- Materialization / tuning idiom guard --------------------------------
-# One reliable-checkpoint path (session.reliable_checkpoint), persists
-# through the bounded ring (session.bounded_persist), no tuning env knobs,
+# One lineage cut (sources.cut, the only caller of localCheckpoint and,
+# outside DURABLE_LOOPS, of session.reliable_checkpoint, the only
+# .checkpoint() call), persists through the bounded ring
+# (session.bounded_persist), no tuning env knobs,
 # one per-group top-k kernel (operators/rank.top_k), one partition-count
 # policy (session.partition_count), one graph-serving search
 # (similarity._gs_search) and one streaming run path (streaming.drain): a
@@ -361,11 +363,24 @@ DEPLOYMENT_ENV = {
     "SPARK_GRAFT_INDEX_DIR",
     "SPARK_GRAFT_SF_DIR",
 }
-# Function-owned persist/unpersist pairs (the owner unpersists on exit).
+# Function-owned persist/unpersist pairs (the owner unpersists on exit),
+# and the ring itself.
 OWNED_PERSISTS = {
     ("functions/text.py", "frequent_tokens_cms"),
     ("functions/text.py", "approx_topk_tokens"),
+    ("session.py", "bounded_persist"),
 }
+CUT = ("sources/tables.py", "cut")
+RELIABLE = ("session.py", "reliable_checkpoint")
+# Iterative builds that checkpoint durably at EVERY size: each round's
+# checkpoint is their documented recovery point from executor loss, so
+# they call reliable_checkpoint directly instead of the size-gated cut.
+DURABLE_LOOPS = {
+    ("operators/graph.py", "kcore_neardup_graph"),
+    ("functions/dedup.py", "connected_components"),
+    ("functions/similarity.py", "_knn_rounds"),
+}
+RETIRED_CUTS = {"corpus_cut", "_md_cut", "fits_local_cut", "ensure_checkpoint_dir"}
 
 
 # row_number() used as a VALUE, not as a window-then-cut (those go through
@@ -385,8 +400,12 @@ RANK_AS_VALUE = {
     ("functions/similarity.py", "_rng_pruned_graph"),
     ("functions/similarity.py", "knn_graph_rng_prune"),
 }
-# The traversal's query-bounded partition count keeps its own clamp.
-OWN_PARALLELISM = {("functions/similarity.py", "_gs_parts")}
+# The engine's partition policy and the traversal's query-bounded
+# partition count (its own clamp) read the parallelism.
+OWN_PARALLELISM = {
+    ("session.py", "partition_count"),
+    ("functions/similarity.py", "_gs_parts"),
+}
 # One graph-serving search path: the serving-gate helpers and the beam
 # loop are called only by the index-state builder and the search, so a
 # serving shape (or the stream) cannot re-derive gates or partition
@@ -434,10 +453,12 @@ def _idiom_violations(rel: str, src: str) -> list[str]:
         for node in ast.walk(top):
             where = f"{rel}:{getattr(node, 'lineno', '?')}"
             if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
-                if node.func.attr == "checkpoint":
-                    bad.append(f"{where} .checkpoint() outside session.py")
+                if node.func.attr == "checkpoint" and (rel, func) != RELIABLE:
+                    bad.append(f"{where} .checkpoint(): use sources.cut")
+                if node.func.attr == "localCheckpoint" and (rel, func) != CUT:
+                    bad.append(f"{where} .localCheckpoint(): use sources.cut")
                 if node.func.attr == "persist" and (rel, func) not in OWNED_PERSISTS:
-                    bad.append(f"{where} .persist() outside session.py")
+                    bad.append(f"{where} .persist(): use session.bounded_persist")
                 if node.func.attr == "row_number" and rel != "operators/rank.py":
                     if (rel, func) not in RANK_AS_VALUE or (rel, func) in ranked:
                         bad.append(f"{where} row_number() cut: use rank.top_k")
@@ -448,10 +469,16 @@ def _idiom_violations(rel: str, src: str) -> list[str]:
                 and (rel, func) not in OWN_PARALLELISM
             ):
                 bad.append(f"{where} defaultParallelism: use partition_count")
-            if isinstance(node, ast.Call) and (rel, func) not in GS_SERVING:
+            if isinstance(node, ast.Call):
                 callee = getattr(node.func, "id", getattr(node.func, "attr", None))
-                if callee in GS_GATED:
+                if callee in GS_GATED and (rel, func) not in GS_SERVING:
                     bad.append(f"{where} {callee}(): serve through _gs_search")
+                if (
+                    callee == "reliable_checkpoint"
+                    and (rel, func) != CUT
+                    and (rel, func) not in DURABLE_LOOPS
+                ):
+                    bad.append(f"{where} reliable_checkpoint(): use sources.cut")
             idiom = None
             if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
                 idiom = node.func.attr
@@ -460,8 +487,8 @@ def _idiom_violations(rel: str, src: str) -> list[str]:
             if idiom in STREAM_IDIOMS and idiom not in STREAM_RUN.get((rel, func), ()):
                 bad.append(f"{where} {idiom}: stream through streaming.drain")
             names = {getattr(node, k, None) for k in ("id", "attr", "name")}
-            if "ensure_checkpoint_dir" in names:
-                bad.append(f"{where} ensure_checkpoint_dir outside session.py")
+            for name in names & RETIRED_CUTS:
+                bad.append(f"{where} {name}: use sources.cut")
             if (
                 isinstance(node, ast.Constant)
                 and isinstance(node.value, str)
@@ -485,8 +512,6 @@ def test_one_checkpoint_path_bounded_persists_no_env_knobs():
                 continue
             path = os.path.join(dirpath, f)
             rel = os.path.relpath(path, root)
-            if rel == "session.py":
-                continue
             with open(path) as fh:
                 bad += _idiom_violations(rel, fh.read())
     assert not bad, "\n".join(bad)

@@ -391,56 +391,137 @@ def test_python_stream_source_multibatch_and_replay(spark):
     assert list(r.readBetweenOffsets({"i": 0}, off)) == paced
 
 
-@pytest.mark.parametrize("user", ["corpus_cut", "md_cut"])
-def test_local_cut_gate_branches_on_table_bytes(spark, sf_dir, monkeypatch, user):
-    """Both users of the one size gate pick their lineage-cut flavor from
-    on-disk table bytes: localCheckpoint (executor-pinned RDD) at or below
-    LOCAL_CUT_MAX_BYTES, their safe branch above it (corpus_cut: reliable
-    checkpoint; selection._md_cut: bounded persist) — with equal values
-    either way. An unknown table reads as huge, so the gate fails toward
-    the safe branch, never toward pinning."""
+def _ckpt_files(spark):
+    """Files under the SparkContext's checkpoint dir (set on first use)."""
     import os
 
-    from parallel_mapreduce_spark.functions.selection import _md_cut
     from parallel_mapreduce_spark.session import reliable_checkpoint
+
+    reliable_checkpoint(spark.range(1))  # sets the checkpoint dir
+    root = spark.sparkContext._jsc.sc().getCheckpointDir().get()
+    root = root.removeprefix("file:")
+    return lambda: sum(len(fs) for _, _, fs in os.walk(root))
+
+
+@pytest.mark.parametrize("eager", [False, True], ids=["lazy", "eager"])
+def test_cut_gate_branches_on_table_bytes(spark, sf_dir, monkeypatch, eager):
+    """`sources.cut` picks its lineage-cut flavor from on-disk table
+    bytes: localCheckpoint (executor-pinned RDD, eager as asked) at or
+    below LOCAL_CUT_MAX_BYTES, the reliable checkpoint (always eager)
+    above it — with equal values either way. An unknown table reads as
+    huge, so the gate fails toward the durable branch, never toward
+    pinning."""
     from parallel_mapreduce_spark.sources import (
-        corpus_cut,
+        cut,
         load_table,
         table_bytes,
         tables,
     )
 
-    cut, table, key = {
-        "corpus_cut": (corpus_cut, "documents", "doc_id"),
-        "md_cut": (_md_cut, "embeddings", "vec_id"),
-    }[user]
-    frame = load_table(spark, sf_dir, table).select(key)
+    frame = load_table(spark, sf_dir, "documents").select("doc_id")
     want = sorted(r[0] for r in frame.collect())
-    reliable_checkpoint(frame.limit(1))  # sets the checkpoint dir
-    ckpt_dir = spark.sparkContext._jsc.sc().getCheckpointDir().get()
-    ckpt_dir = ckpt_dir.removeprefix("file:")
+    n_ckpt_files = _ckpt_files(spark)
 
-    def n_ckpt_files():
-        return sum(len(fs) for _, _, fs in os.walk(ckpt_dir))
-
-    def assert_safe_branch(sf):
+    def assert_durable_branch(sf):
         before = n_ckpt_files()
-        out = cut(frame, sf)
-        if user == "corpus_cut":  # eager: new files under the checkpoint dir
-            assert n_ckpt_files() > before
-        else:  # a persist, never a durable write per pick
-            assert out.is_cached and n_ckpt_files() == before
+        out = cut(frame, sf, "documents", eager=eager)
+        assert n_ckpt_files() > before  # written before cut returns
         assert sorted(r[0] for r in out.collect()) == want
 
     # Below the gate (test corpora are KB-MB): LogicalRDD, no checkpoint file.
-    small = cut(frame, sf_dir)
-    assert "LogicalRDD" in small._jdf.queryExecution().optimizedPlan().toString()
-    assert not small.rdd.isCheckpointed()  # local, not reliable
+    before = n_ckpt_files()
+    small = cut(frame, sf_dir, "documents", eager=eager)
+    plan = small._jdf.queryExecution().analyzed()
+    assert "LogicalRDD" in plan.toString()
+    assert plan.rdd().isCheckpointed() == eager  # lazy: marked, not yet run
     assert not small.is_cached
     assert sorted(r[0] for r in small.collect()) == want
-    # Unknown size at the shipped gate => huge => the safe branch.
-    assert table_bytes("/nonexistent", table) == 1 << 62
-    assert_safe_branch("/nonexistent")
+    assert n_ckpt_files() == before
+    # Unknown size at the shipped gate => huge => the durable branch.
+    assert table_bytes("/nonexistent", "documents") == 1 << 62
+    assert_durable_branch("/nonexistent")
     # Above the gate (forced with a 0-byte ceiling).
     monkeypatch.setattr(tables, "LOCAL_CUT_MAX_BYTES", 0)
-    assert_safe_branch(sf_dir)
+    assert_durable_branch(sf_dir)
+
+
+# Every registered query whose plan is truncated through `sources.cut`:
+# the corpus-derived fan-out frames (documents gate), the k-center picks
+# (embeddings gate), the PageRank and BPE loop cuts, and the graph
+# traversal's entry and per-hop cuts.
+CUT_QUERIES = (
+    "pipeline_clean_corpus",
+    "neardup_jaccard_pairs",
+    "neardup_jaccard_pairs_capped",
+    "kcore_neardup_graph",
+    "bpe_train_3merges",
+    "pagerank_trade_graph",
+    "kcenter_coreset_select",
+    "pipeline_diverse_sample",
+    "ann_graph_search_topk",
+)
+
+
+@pytest.mark.parametrize("name", CUT_QUERIES)
+def test_cut_gate_matrix(spark, sf_dir, monkeypatch, name):
+    """Both branches of the lineage-cut gate return identical rows for
+    every query that cuts: the shipped gate (local cuts at test scale)
+    and a closed gate, under which every cut takes the durable branch
+    and writes under the checkpoint dir."""
+    from parallel_mapreduce_spark.registry import QUERIES, _load_all
+    from parallel_mapreduce_spark.sources import tables
+
+    _load_all()
+    def rows():
+        out = QUERIES[name].fn(spark, sf_dir).collect()
+        return sorted(repr(tuple(r)) for r in out)
+
+    want = rows()  # also warms any index snapshot the query reads
+    n_ckpt_files = _ckpt_files(spark)
+    before = n_ckpt_files()
+    monkeypatch.setattr(tables, "LOCAL_CUT_MAX_BYTES", 0)
+    assert rows() == want
+    assert n_ckpt_files() > before
+
+
+_LEAK_CHILD = """
+import glob, os, tempfile
+from pyspark.sql import SparkSession
+from parallel_mapreduce_spark.session import apply_runtime_conf, reliable_checkpoint
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .getOrCreate()
+)
+apply_runtime_conf(spark)  # ships the package zip
+reliable_checkpoint(spark.range(3))
+ckpt = spark.sparkContext._jsc.sc().getCheckpointDir().get()
+print(os.path.dirname(ckpt.removeprefix("file:")))
+print(*glob.glob(os.path.join(tempfile.gettempdir(), "pmr_spark_pkg_*.zip")))
+"""
+
+
+def test_engine_temp_paths_removed_at_exit(tmp_path):
+    """A process that ran a reliable checkpoint and shipped the package
+    leaves neither its checkpoint temp dir nor its package zip behind."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CHECKPOINT_DIR"}
+    env.update(TMPDIR=str(tmp_path), PYTHONPATH=repo)
+    out = subprocess.run(
+        [sys.executable, "-c", _LEAK_CHILD],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    ).stdout.split()
+    ckpt, pkg = out[-2:]
+    assert os.path.basename(ckpt).startswith("pmr_spark_ckpt_"), out
+    assert os.path.basename(pkg).startswith("pmr_spark_pkg_"), out
+    assert os.path.dirname(ckpt) == os.path.dirname(pkg) == str(tmp_path)
+    assert not os.path.exists(ckpt) and not os.path.exists(pkg)
