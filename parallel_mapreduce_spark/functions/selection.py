@@ -15,21 +15,17 @@ FARTHEST from the already-selected set (max over points of min squared-L2
 distance to any selected center), then report the covering radius after
 every pick — the k-center objective value, non-increasing in rank.
 
-Spark-first shape and why it scales:
+Spark-first shape and why it scales (one kernel, ``_gonzalez``):
 - the running state is ONE distributed frame (vec_id, e, md) holding each
-  point's min distance to the selected set — updated per pick with
-  ``least(md, dist(e, new_center))``, a NARROW map over the corpus
-  (no shuffle, no N x k distance matrix ever materializes);
-- each pick is one ``ORDER BY md DESC, vec_id LIMIT 1`` — Spark plans a
-  distributed TakeOrdered (per-partition top-1 then a k-way driver merge),
-  so the corpus never concentrates anywhere;
-- the only driver-side data is the k picked rows themselves (one 64-dim
-  vector each) — the same bounded per-iteration scalar hop the k-means /
-  PageRank loops use; the hop is inherent to the algorithm (pick i+1
-  depends on pick i — Gonzalez is sequential in k by definition);
-- the corpus frame is persisted once; per-pick lineage is rebuilt from a
-  LITERAL center array, so plans stay flat (no 5^k lineage nesting — see
-  the NN-Descent checkpoint note in similarity.py for the failure mode).
+  point's min distance to the selected set, updated per pick by a NARROW
+  ``least(md, dist(e, center))`` map (no N x k matrix ever materializes);
+- each pick is one job, a distributed ``ORDER BY md DESC, vec_id LIMIT
+  1`` (per-partition top-1, driver merge), over a corpus frame persisted
+  once and partitioned from its bytes (``session.parallelism``);
+- the driver holds only the k picked vectors; each returns to the plan as
+  ONE parsed literal (``similarity.vector_sql``), not 64 py4j calls. The
+  hop is inherent: Gonzalez is sequential in k by definition;
+- per-pick lineage is cut (``sources.cut``), so plans stay flat.
 
 Determinism (module convention, registry.py rules): squared-L2 distances
 rounded to 6 dp before min/argmax, ties broken toward the lower vec_id;
@@ -41,32 +37,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parallel_mapreduce_spark.functions.similarity import (
-    as_double,
-    corpus_parts,
-)
+from parallel_mapreduce_spark.functions.similarity import as_double, vector_sql
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import bounded_persist
-from parallel_mapreduce_spark.sources import cut, load_table, register_views
+from parallel_mapreduce_spark.session import bounded_persist, parallelism
+from parallel_mapreduce_spark.sources import (
+    cut,
+    load_table,
+    register_views,
+    table_bytes,
+)
 
 KC_K = 12  # selected coreset size (k centers, seed included)
 
 
-def _kc_oracle() -> str:
-    """Unrolled k-step replay: md{i} = running min-distance frame after
-    centers 0..i; p{i} = the argmax pick that becomes center i."""
-    sql = """
-    WITH v AS (
-      SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS pos,
-             CAST(unnest(embedding) AS DOUBLE) AS val
-      FROM embeddings
-    ), seed AS (SELECT MIN(vec_id) AS sid FROM v),
+def _gonzalez_sql(k: int, id_col: str) -> tuple[str, str]:
+    """DuckDB replay of ``_gonzalez`` over a CTE ``v`` (vec_id, pos, val):
+    the unrolled k-step CTE chain that follows ``v`` (md{i} = running
+    min-distance frame after centers 0..i; p{i} = the argmax pick that
+    becomes center i) and the picks union (sel_rank, <id_col>, radius)."""
+    sql = """, seed AS (SELECT MIN(vec_id) AS sid FROM v),
     c0 AS (SELECT v.pos, v.val AS cval FROM v JOIN seed ON v.vec_id = seed.sid),
     md0 AS MATERIALIZED (
       SELECT v.vec_id, ROUND(SUM((v.val - c0.cval) ^ 2), 6) AS md
       FROM v JOIN c0 USING (pos) GROUP BY v.vec_id
     )"""
-    for i in range(1, KC_K):
+    for i in range(1, k):
         p = i - 1
         sql += f""",
     p{i} AS (SELECT vec_id FROM md{p} ORDER BY md DESC, vec_id LIMIT 1),
@@ -78,27 +73,75 @@ def _kc_oracle() -> str:
       FROM md{p} JOIN d{i} USING (vec_id))"""
     legs = [
         "SELECT CAST(0 AS BIGINT) AS sel_rank,"
-        " CAST((SELECT sid FROM seed) AS BIGINT) AS center_id,"
+        f" CAST((SELECT sid FROM seed) AS BIGINT) AS {id_col},"
         " (SELECT MAX(md) FROM md0) + 0.0 AS radius"
     ]
-    for i in range(1, KC_K):
+    for i in range(1, k):
         legs.append(
             f"SELECT CAST({i} AS BIGINT), CAST((SELECT vec_id FROM p{i}) AS"
             f" BIGINT), (SELECT MAX(md) FROM md{i}) + 0.0"
         )
-    return sql + "\n    " + "\n    UNION ALL\n    ".join(legs)
+    return sql, "\n    UNION ALL\n    ".join(legs)
 
 
-def _dist6_to(center_vec: list[float]):
-    c = F.array(*[F.lit(float(x)) for x in center_vec])
-    return F.round(
-        F.aggregate(
-            F.zip_with(F.col("e"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        ),
-        6,
+def _kc_oracle() -> str:
+    ctes, picks = _gonzalez_sql(KC_K, "center_id")
+    return f"""
+    WITH v AS (
+      SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS pos,
+             CAST(unnest(embedding) AS DOUBLE) AS val
+      FROM embeddings
+    ){ctes}
+    {picks}"""
+
+
+def _dist6_sql(center_vec: list[float]) -> str:
+    """6dp-rounded squared-L2 distance from column ``e`` to one center."""
+    return (
+        f"round(aggregate(zip_with(e, {vector_sql(center_vec)},"
+        " (x, y) -> (x - y) * (x - y)), 0.0D, (acc, d) -> acc + d), 6)"
     )
+
+
+def _gonzalez(
+    sf_dir: str, emb: DataFrame, k: int
+) -> list[tuple[int, int, float]]:
+    """The Gonzalez trajectory over ``emb`` (vec_id, embedding):
+    [(sel_rank, center_id, radius)] for k picks, seeded at the minimum
+    vec_id. radius is the covering radius after the pick: the max over the
+    corpus of each point's min distance to the selected set."""
+    spark = emb.sparkSession
+    n_parts = parallelism(spark, table_bytes(sf_dir, "embeddings"))
+    vecs = bounded_persist(
+        emb.repartition(n_parts, "vec_id").select(
+            "vec_id", as_double(F.col("embedding")).alias("e")
+        )
+    )
+    seed = vecs.orderBy("vec_id").head()  # the MINIMUM vec_id, not id 0
+    if seed is None:
+        raise ValueError("k-center selection over an empty embedding corpus")
+    md = vecs.select("vec_id", "e", F.expr(_dist6_sql(seed["e"])).alias("md"))
+    rows: list[tuple[int, int, float]] = []
+    center_id = int(seed["vec_id"])
+    for rank in range(k):
+        # One bounded hop per pick: the argmax row carries BOTH this
+        # rank's covering radius (its md IS max(md)) and the next pick.
+        top = md.orderBy(F.desc("md"), "vec_id").head()
+        rows.append((rank, center_id, float(top["md"])))
+        if rank == k - 1:
+            break
+        center_id = int(top["vec_id"])
+        md = md.select(
+            "vec_id", "e", F.expr(f"least(md, {_dist6_sql(top['e'])})").alias("md")
+        )
+        # Per-pick cut: uncut, each frame nests the previous one's and a
+        # pick's analysis plus head grew from ~0.17s to ~0.8s by pick 10.
+        md = cut(md, sf_dir, "embeddings", eager=False)
+    # Release the corpus cache: an entry matching another query's subplan
+    # changes THAT plan's shape (kmeans_lloyd_2iter's exchange census read
+    # 21 instead of 17 after this query ran).
+    vecs.unpersist()
+    return rows
 
 
 @query("kcenter_coreset_select", headline=True, oracle=_kc_oracle())
@@ -111,56 +154,7 @@ def kcenter_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     selected set; it is non-increasing in sel_rank (pinned in
     tests/test_selection.py)."""
     register_views(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    # Scale-adaptive parts (guide §2): each of the K sequential picks is
-    # a TakeOrdered job over this frame — at the test corpus 32-task
-    # waves were pure scheduling overhead (measured ~2.9s -> ~1.6s for
-    # the 12-pick trajectory at sf0.1); a big corpus still spreads.
-    n_parts = corpus_parts(spark, sf_dir)
-    vecs = bounded_persist(
-        emb.repartition(n_parts, "vec_id").select(
-            "vec_id", as_double(F.col("embedding")).alias("e")
-        )
-    )
-    # Seed at the MINIMUM vec_id rather than assuming id 0 exists — a
-    # corpus without vec_id 0 crashed with an opaque TypeError on the
-    # unchecked head() (round-11 advice fix; pipeline_diverse_sample
-    # already seeded this way). No vec_id == 0 fast path: it would
-    # mis-seed any corpus where 0 exists but is not the minimum (the
-    # oracle seeds at MIN(vec_id) unconditionally), and the TakeOrdered
-    # over the persisted narrow frame is milliseconds at any corpus
-    # this query's sequential-k design is sane for.
-    seed = vecs.orderBy("vec_id").select("vec_id", "e").head()
-    if seed is None:
-        raise ValueError("kcenter_coreset_select: empty embedding corpus")
-    md = vecs.select("vec_id", "e", _dist6_to(seed["e"]).alias("md"))
-    rows: list[tuple[int, int, float]] = []
-    center_id = int(seed["vec_id"])
-    for rank in range(KC_K):
-        # One bounded hop per pick: the argmax row carries BOTH this
-        # rank's covering radius (its md IS max(md)) and the next pick.
-        top = md.orderBy(F.desc("md"), "vec_id").head()
-        rows.append((rank, center_id, float(top["md"])))
-        if rank == KC_K - 1:
-            break
-        center_id = int(top["vec_id"])
-        md = md.select(
-            "vec_id", "e", F.least(F.col("md"), _dist6_to(top["e"])).alias("md")
-        )
-        # Per-pick lineage cut: each pick's frame nests the previous
-        # one's, and without the cut analysis plus the TakeOrdered head
-        # grew from ~0.17s to ~0.8s per pick by pick 10 (a persist keeps
-        # the LOGICAL plan, so it does not stop that growth).
-        md = cut(md, sf_dir, "embeddings", eager=False)
-    # Everything above ran eagerly, so release the corpus frame's cache
-    # before returning: its plan is byte-identical to kmeans_lloyd_2iter's
-    # input subplan, and a lingering cache entry would substitute an
-    # InMemoryRelation into THAT query's plan (observed: the exchange
-    # census read 21 instead of 17 for kmeans whenever this query had
-    # run first in the session — cross-query cache pollution changes
-    # plan shapes, not just speed). The md chain's cut frames are
-    # kcenter-specific and match nothing else.
-    vecs.unpersist()
+    rows = _gonzalez(sf_dir, load_table(spark, sf_dir, "embeddings"), KC_K)
     return spark.createDataFrame(
         rows, "sel_rank long, center_id long, radius double"
     )
@@ -185,7 +179,8 @@ _SQL_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
 def _pds_oracle() -> str:
-    sql = f"""
+    ctes, picks = _gonzalez_sql(PDS_K, "doc_id")
+    return f"""
     WITH surv AS (
       SELECT doc_id, source,
              CAST(len({_SQL_TOKS}) AS BIGINT) AS n_toks
@@ -195,41 +190,11 @@ def _pds_oracle() -> str:
       SELECT e.vec_id, generate_subscripts(e.embedding, 1) - 1 AS pos,
              CAST(unnest(e.embedding) AS DOUBLE) AS val
       FROM embeddings e JOIN surv s ON s.doc_id = e.vec_id
-    ), seed AS (SELECT MIN(vec_id) AS sid FROM v),
-    c0 AS (SELECT v.pos, v.val AS cval FROM v JOIN seed ON v.vec_id = seed.sid),
-    md0 AS MATERIALIZED (
-      SELECT v.vec_id, ROUND(SUM((v.val - c0.cval) ^ 2), 6) AS md
-      FROM v JOIN c0 USING (pos) GROUP BY v.vec_id
-    )"""
-    for i in range(1, PDS_K):
-        p = i - 1
-        sql += f""",
-    p{i} AS (SELECT vec_id FROM md{p} ORDER BY md DESC, vec_id LIMIT 1),
-    c{i} AS (SELECT v.pos, v.val AS cval FROM v JOIN p{i} USING (vec_id)),
-    d{i} AS (SELECT v.vec_id, ROUND(SUM((v.val - c{i}.cval) ^ 2), 6) AS d
-             FROM v JOIN c{i} USING (pos) GROUP BY v.vec_id),
-    md{i} AS MATERIALIZED (
-      SELECT md{p}.vec_id, LEAST(md{p}.md, d{i}.d) AS md
-      FROM md{p} JOIN d{i} USING (vec_id))"""
-    legs = [
-        "SELECT CAST(0 AS BIGINT) AS sel_rank,"
-        " CAST((SELECT sid FROM seed) AS BIGINT) AS doc_id,"
-        " (SELECT MAX(md) FROM md0) + 0.0 AS radius"
-    ]
-    for i in range(1, PDS_K):
-        legs.append(
-            f"SELECT CAST({i} AS BIGINT), CAST((SELECT vec_id FROM p{i}) AS"
-            f" BIGINT), (SELECT MAX(md) FROM md{i}) + 0.0"
-        )
-    picks = "\n    UNION ALL\n    ".join(legs)
-    return (
-        sql
-        + f""",
+    ){ctes},
     picks AS ({picks})
     SELECT picks.sel_rank, picks.doc_id, surv.source, surv.n_toks,
            picks.radius
     FROM picks JOIN surv ON surv.doc_id = picks.doc_id"""
-    )
 
 
 @query("pipeline_diverse_sample", oracle=_pds_oracle())
@@ -243,30 +208,10 @@ def pipeline_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv = docs.select(
         "doc_id", "source", F.size(toks).cast("long").alias("n_toks")
     ).where(F.col("n_toks") >= PDS_MIN_TOKS)
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = corpus_parts(spark, sf_dir)
-    vecs = bounded_persist(
-        emb.join(
-            surv.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
-        )
-        .repartition(n_parts, "vec_id")
-        .select("vec_id", as_double(F.col("embedding")).alias("e"))
+    emb = load_table(spark, sf_dir, "embeddings").join(
+        surv.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
     )
-    seed = vecs.orderBy("vec_id").select("vec_id", "e").head()
-    md = vecs.select("vec_id", "e", _dist6_to(seed["e"]).alias("md"))
-    rows: list[tuple[int, int, float]] = []
-    center_id = int(seed["vec_id"])
-    for rank in range(PDS_K):
-        top = md.orderBy(F.desc("md"), "vec_id").head()
-        rows.append((rank, center_id, float(top["md"])))
-        if rank == PDS_K - 1:
-            break
-        center_id = int(top["vec_id"])
-        md = md.select(
-            "vec_id", "e", F.least(F.col("md"), _dist6_to(top["e"])).alias("md")
-        )
-        md = cut(md, sf_dir, "embeddings", eager=False)
-    vecs.unpersist()
+    rows = _gonzalez(sf_dir, emb, PDS_K)
     picks = spark.createDataFrame(
         rows, "sel_rank long, doc_id long, radius double"
     )

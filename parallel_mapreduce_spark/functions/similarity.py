@@ -20,6 +20,7 @@ rank (sum-order float noise is ~1e-15), ties broken by candidate id.
 from __future__ import annotations
 
 import hashlib
+import math
 import os
 import shutil
 import tempfile
@@ -45,6 +46,19 @@ N_PLANES = 4  # sign bits per table => 16 buckets/table
 
 def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
+
+
+def vector_sql(vec) -> str:
+    """Spark SQL text of an array<double> literal holding ``vec``: one
+    parsed expression instead of one py4j-built literal per coordinate.
+    Bit-exact: ``repr`` is the shortest text that round-trips the double
+    and the ``D`` suffix parses it as one. NaN and the infinities have no
+    literal syntax, so they cast from their names."""
+    def one(x) -> str:
+        x = float(x)
+        return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+    return "array(" + ", ".join(one(x) for x in vec) + ")"
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -192,7 +206,7 @@ def lsh_table_buckets(vec: Column, dim: int, n_planes: int = N_PLANES) -> Column
     for t in range(N_TABLES):
         bucket = F.lit(0)
         for p in range(n_planes):
-            plane = F.array(*[F.lit(v) for v in _plane(t * n_planes + p, dim)])
+            plane = F.expr(vector_sql(_plane(t * n_planes + p, dim)))
             bit = F.when(dot(vec, plane) > 0, F.lit(1)).otherwise(F.lit(0))
             bucket = bucket * 2 + bit
         entries.append(
@@ -5448,28 +5462,6 @@ def _gs_vis_bcast(n_queries: int) -> bool:
     """May the per-hop visited anti-join build side broadcast? Estimated
     from the same Q-budget bound _gs_parts uses."""
     return max(1, n_queries) * GS_BEAM * 3 * KNN_K <= GS_VIS_BCAST_ROWS
-
-
-def corpus_parts(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str = "embeddings",
-    per_part: int = 4 << 20,
-) -> int:
-    """Scale-adaptive partition count for frames proportional to a source
-    table (guide §2: derive partitioning from input size, not a constant
-    tuned for one box): one partition per ``per_part`` on-disk bytes,
-    clamped to [8, parallelism]. A 17 MB test corpus stops paying
-    32-task stages to move kilobytes; a 100 TB corpus still saturates
-    the cluster (the clamp ceiling is the cores)."""
-    b = table_bytes(sf_dir, table)
-    return max(
-        8,
-        min(
-            partition_count(spark),
-            -(-b // per_part),
-        ),
-    )
 
 
 def _gs_small(sf_dir: str) -> bool:

@@ -27,15 +27,16 @@ clamped_balance_recursive lesson applied from the start).
 
 Scale: the graph is the nation-to-nation trade network (customer nation
 -> supplier nation, weighted by lineitem count), so the 100 TB cost is
-the ONE corpus-scale edge aggregation (lineitem |><| orders shuffle with
-both dimension sides broadcast); the iteration itself runs on the
-aggregated |V|=25, |E|<=625 graph with the rank side broadcast — zero
-shuffles per round. For a billion-vertex graph the same plan shape
-holds with the rank side shuffled instead of broadcast and a
-`sources.cut` per round to truncate lineage; overflow headroom: rank*w
-stays under 2^63 while max_rank * max_edge_weight < 9.2e18
-(document-level graphs should pre-normalize weights to per-src shares in
-micro-units first).
+the ONE corpus-scale edge aggregation. From it a ROUTING table is built
+and cut once: each real edge with its source's out-weight, a zero-weight
+self-edge per node (a node with no in-edges still gets its row) and an
+edge from each dangling node to a null POOL key. A round then reads the
+previous ranks once: a broadcast join with the routing table, one SUM
+per destination, and one window over those |V|+1 rows for the pool's
+dangling mass; the plan grows linearly in rounds. A billion-vertex graph
+keeps the round with the routing table shuffled, the pool read by a
+one-row aggregate, and a ``sources.cut`` per round; overflow headroom:
+rank*w stays under 2^63 while max_rank * max_edge_weight < 9.2e18.
 """
 
 from __future__ import annotations
@@ -45,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import bounded_persist, reliable_checkpoint
+from parallel_mapreduce_spark.session import reliable_checkpoint
 from parallel_mapreduce_spark.sources.tables import cut, load_table, register_views
 
 PR_ITERS = 3
@@ -117,12 +118,8 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", "n_name"
     )
 
-    # The one corpus-scale pass: both dimension sides broadcast, the only
-    # shuffle is lineitem |><| orders on the order key + the 625-row-max
-    # edge aggregation. Persisted because the tiny aggregated graph feeds
-    # every iteration (and the dangling check) — without it each of the
-    # 3*2+1 consumers would re-run the corpus join.
-    edges = bounded_persist(
+    # The one corpus-scale pass: both dimension sides broadcast.
+    edges = (
         li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -132,66 +129,52 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("w"))
     )
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
+    nodes = nation.select(F.col("n_nationkey").alias("nk"))
     n_nodes = nation.count()  # 25-row dimension; bounded driver count
 
-    ranks = nation.select(
-        F.col("n_nationkey").alias("nk"),
-        F.lit(PR_UNIT).cast("long").alias("r"),
+    # The routing table (module docstring), read edges once: a node with
+    # no out-edges keeps one left-join row with a null dst, its POOL edge
+    # (w = out_w = 1: it contributes its whole rank); self-edges add 0.
+    out_edges = nodes.join(edges, nodes.nk == edges.src, "left").select(
+        F.col("nk").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
+        F.coalesce(F.col("w"), F.lit(1)).cast("long").alias("w"),
+        F.coalesce(
+            F.sum("w").over(W.partitionBy("nk")), F.lit(1)
+        ).cast("long").alias("out_w"),
     )
+    self_edges = nodes.select(
+        F.col("nk").alias("src"),
+        F.col("nk").cast("long").alias("dst"),
+        F.lit(0).cast("long").alias("w"),
+        F.lit(1).cast("long").alias("out_w"),
+    )
+    route = cut(out_edges.unionAll(self_edges), sf_dir, "nation", eager=False)
+    # The pool window moves |V|+1 rows to one task: |V| is the AGGREGATED
+    # graph's node count (25). d is the dangling mass.
+    pool = W.partitionBy()
+    ranks = nodes.select("nk", F.lit(PR_UNIT).cast("long").alias("r"))
     for _ in range(PR_ITERS):
-        with_out = ranks.join(out_w, ranks.nk == out_w.src, "left").select(
-            "nk", "r", "out_w"
-        )
-        # Dangling mass (rank held by nodes with no out-edges, teleported
-        # uniformly) FOLDED into the rank frame as an unpartitioned
-        # window SUM instead of a separate one-row aggregate: the
-        # round-7 form crossJoin(broadcast(agg)) forced one extra
-        # materialization job per iteration just to build each broadcast.
-        # The window moves the |V|-row frame to one task — fine here
-        # because |V| is the AGGREGATED graph's node count (25), already
-        # bounded before the iteration starts; a billion-vertex graph
-        # would use the agg+broadcast form instead (see the module
-        # docstring's scale paragraph). Exact integer sum either way.
-        base = with_out.withColumn(
-            "d",
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("out_w").isNull(), F.col("r"))
-                ).over(W.partitionBy()),
-                F.lit(0),
-            ),
-        )
-        # Round-14 optimization (guide §5 / §3.3 "materialising an
-        # intermediate truncates the plan"): base is referenced TWICE per
-        # iteration (contribution join + rank update), and the lazy form
-        # compounded into a 190-Exchange / 56-SortMergeJoin final plan
-        # whose tiny 25-row joins were planned from corpus-scale
-        # estimates (the round-13 broadcast-hint attempt broke
-        # ReusedExchange dedup and measured SLOWER — the fix is to
-        # materialize, not to hint). The frame is |V|-bounded by
-        # construction (the aggregated nation graph), so the per-round
-        # cut is a one-task job; with real runtime stats AQE picks the
-        # broadcast itself. Measured 2.83 -> 1.68s at sf0.1 interleaved
-        # same-session A/B, bit-identical output (exact integer ranks).
-        # The cut is gated on the nation table's bytes, the rank frame's
-        # real bound: a billion-vertex graph keeps rank frames
-        # distributed (module docstring), and above the gate the cut is
-        # a reliable checkpoint.
-        base = cut(base, sf_dir, "nation", eager=True)
-        contribs = (
-            base.join(edges, base.nk == edges.src)
+        inc = (
+            ranks.join(F.broadcast(route), ranks.nk == route.src)
             .groupBy("dst")
             .agg(F.sum(F.expr("r * w div out_w")).alias("inc"))
         )
-        ranks = base.join(contribs, base.nk == contribs.dst, "left").select(
-            "nk",
-            (
-                F.lit(PR_TELEPORT)
-                + F.expr(f"85 * (coalesce(inc, 0) + d div {n_nodes}) div 100")
+        d = F.sum(F.when(F.col("dst").isNull(), F.col("inc"))).over(pool)
+        ranks = (
+            inc.select(
+                F.col("dst").alias("nk"), "inc", F.coalesce(d, F.lit(0)).alias("d")
             )
-            .cast("long")
-            .alias("r"),
+            .where(F.col("nk").isNotNull())
+            .select(
+                "nk",
+                (
+                    F.lit(PR_TELEPORT)
+                    + F.expr(f"85 * (inc + d div {n_nodes}) div 100")
+                )
+                .cast("long")
+                .alias("r"),
+            )
         )
     return ranks.join(
         F.broadcast(nation), ranks.nk == nation.n_nationkey
@@ -230,6 +213,9 @@ KCORE_ROUNDS = 8
 
 
 def _kcore_oracle() -> str:
+    # Importing dedup registers minhash_lsh_candidates, so this module
+    # imports on its own too, not only in the registry's load order.
+    import parallel_mapreduce_spark.functions.dedup  # noqa: F401
     from parallel_mapreduce_spark.registry import QUERIES as _Q
 
     edge_sql = _Q["minhash_lsh_candidates"].oracle

@@ -23,6 +23,7 @@ import threading
 from contextlib import contextmanager
 from pathlib import Path
 
+from pyspark import StorageLevel
 from pyspark.sql import SparkSession
 
 
@@ -36,6 +37,20 @@ def partition_count(spark: SparkSession) -> int:
     still splits CPU-heavy projections. The one place the engine's
     partition policy lives."""
     return max(spark.sparkContext.defaultParallelism, 8)
+
+
+PART_BYTES = 4 << 20  # on-disk input bytes per data-sized partition
+
+
+def parallelism(spark: SparkSession, nbytes: int | None) -> int:
+    """Partition count for a frame bounded by ``nbytes`` of input: one
+    per ``PART_BYTES``, clamped to [1, partition_count(spark)], so a
+    200 KB table runs as one task and a corpus spreads over every core.
+    An unknown size (None) fails safe to the full partition count."""
+    cap = partition_count(spark)
+    if nbytes is None:
+        return cap
+    return max(1, min(cap, -(-nbytes // PART_BYTES)))
 
 
 def get_spark(
@@ -184,19 +199,20 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, key_prev)
 
 
-def state_sized_shuffle(spark: SparkSession, n: int = 8):
-    """Scope ``spark.sql.shuffle.partitions`` down for a STREAMING replay.
+def state_sized_shuffle(spark: SparkSession, nbytes: int | None):
+    """Scope ``spark.sql.shuffle.partitions`` to ``parallelism(spark,
+    nbytes)`` for a STREAMING run, ``nbytes`` being the stream's source
+    table size (None when unknown).
 
-    A stateful streaming query latches its state-store partition count to
-    the session's shuffle partitions at query start; under a plain driver
-    session (default 200) every micro-batch then pays 200 state-store
-    instances per stateful operator — measured 62s for a 5-batch
-    stream-stream left-outer replay at sf0.01, dominated entirely by that
-    constant. The test-scale replays here carry KB of state, so 8
-    partitions is generous; at production scale this knob is sized to the
-    cluster's cores, not hardcoded. Checkpoints are per-invocation here,
-    so no stored state ever sees two different partition counts."""
-    return scoped_conf(spark, "spark.sql.shuffle.partitions", str(n))
+    Stateful operators latch their state-partition count to it at query
+    start, and every micro-batch pays a state-store load and commit per
+    partition per operator: the default 200 cost a 5-batch replay 62s at
+    sf0.01, and 8 partitions spent ~0.8s of commits on one 10k-row batch
+    that one partition commits in ~40ms. A resumed checkpoint keeps the
+    count recorded in its offset log."""
+    return scoped_conf(
+        spark, "spark.sql.shuffle.partitions", str(parallelism(spark, nbytes))
+    )
 
 
 # Persisted-frame residency bound (round-9 review finding): anonymous
@@ -230,10 +246,15 @@ def persist_evictions() -> int:
 
 def bounded_persist(df):
     """persist() whose cache residency is bounded to the newest
-    _PERSIST_RING_CAP frames session-wide (oldest are unpersisted).
+    _PERSIST_RING_CAP cached plans session-wide (oldest are unpersisted);
+    a frame whose plan is already cached is returned without a slot.
     Thread-safe: streaming query listeners / foreachBatch threads may
     race the driver loop, so ring mutation holds a lock."""
     global _PERSIST_EVICTIONS
+    if df.storageLevel != StorageLevel.NONE:
+        # Already cached: its first holder owns the slot. A second slot
+        # would evict sooner and unpersist the cache both share.
+        return df
     df.persist()
     evicted = []
     with _PERSIST_RING_LOCK:

@@ -548,7 +548,7 @@ def stream_python_source_totals(
             F.sum("value").alias("sum_value"),
         )
     )
-    with state_sized_shuffle(spark):
+    with state_sized_shuffle(spark, None):  # synthetic source: size unknown
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -702,7 +702,7 @@ def stream_python_sink_roundtrip(
     # checkpoint is fresh each run — a re-run would re-deliver batch 0).
     _shutil.rmtree(out, ignore_errors=True)
     src = spark.readStream.format("pmr_synth_stream").load()
-    with state_sized_shuffle(spark):
+    with state_sized_shuffle(spark, None):  # synthetic source: size unknown
         q = (
             src.writeStream.format("pmr_jsonl_stream_sink")
             .option("path", out)

@@ -78,14 +78,13 @@ def ann_serve_stream_run(
             os.path.join(out_dir, f"batch-{batch_id}")
         )
 
-    # Outside state_sized_shuffle: the stream is stateless, and the batch
-    # serving joins inside serve_batch must keep the session's shuffle
-    # partitions (8 would under-partition them on a wider box).
+    # Source size unknown to the drain: the stream is stateless, and the
+    # batch serving joins inside serve_batch run at the full partition
+    # count.
     drain(
         src,
         "append",
         serve_batch,
-        state_shuffle=False,
         checkpointLocation=os.path.join(out_dir, "_stream_checkpoint"),
     )
 

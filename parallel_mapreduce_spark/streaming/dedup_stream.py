@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from parallel_mapreduce_spark.registry import query
+from parallel_mapreduce_spark.sources.tables import table_bytes
 from parallel_mapreduce_spark.streaming.drain import drain, table_stream
 from parallel_mapreduce_spark.streaming.events_stream import EVENTS_SCHEMA, decode_ts
 
@@ -50,6 +51,9 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence immediately (it does not wait for the watermark), so a drained
     one-shot run yields every distinct key exactly once."""
     out, _ = drain(
-        dedup_events_stream(spark, sf_dir), "append", name="stream_dedup_events"
+        dedup_events_stream(spark, sf_dir),
+        "append",
+        name="stream_dedup_events",
+        source_bytes=table_bytes(sf_dir, "events"),
     )
     return out.orderBy(*DEDUP_KEYS)

@@ -11,7 +11,6 @@ all a caller passes.
 
 from __future__ import annotations
 
-import contextlib
 import itertools
 import os
 from collections.abc import Callable
@@ -59,7 +58,7 @@ def drain(
     mode: str,
     sink: str | Callable[[DataFrame, int], None] = "memory",
     name: str = "stream",
-    state_shuffle: bool = True,
+    source_bytes: int | None = None,
     **options: str,
 ) -> tuple[DataFrame | None, StreamingQuery]:
     """Run the streaming ``df`` to completion (``availableNow``) and return
@@ -75,9 +74,10 @@ def drain(
     ``lastProgress`` for the state-operator metrics.
 
     The run is scoped under ``state_sized_shuffle``: stateful operators
-    latch their state-partition count to the shuffle partitions at start.
-    ``state_shuffle=False`` leaves the session's count in place, for a
-    foreachBatch sink whose inner batch jobs must keep full parallelism.
+    latch their state-partition count to the shuffle partitions at start,
+    sized from ``source_bytes``, the on-disk bytes of the table the stream
+    reads (None when unknown: the full ``partition_count``, which a
+    stateless stream's foreachBatch jobs also run at).
     """
     spark = df.sparkSession
     writer = df.writeStream.outputMode(mode)
@@ -89,8 +89,7 @@ def drain(
     if view is not None:
         writer = writer.queryName(view)
     writer = writer.options(**options)
-    scope = state_sized_shuffle(spark) if state_shuffle else contextlib.nullcontext()
-    with scope:
+    with state_sized_shuffle(spark, source_bytes):
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
     if view is None:

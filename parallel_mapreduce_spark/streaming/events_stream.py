@@ -22,6 +22,7 @@ from parallel_mapreduce_spark.operators.events import SESSION_GAP_S
 from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import apply_runtime_conf
+from parallel_mapreduce_spark.sources.tables import table_bytes
 from parallel_mapreduce_spark.streaming.drain import drain, table_stream, unique_name
 
 # Explicit schema: a streaming file source cannot infer. events.ts is a
@@ -83,7 +84,10 @@ def run_hourly_stream_to_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch the watermark never advances past the data, so append mode would
     hold every window open and emit nothing."""
     out, _ = drain(
-        hourly_events_stream(spark, sf_dir), "complete", name="stream_events_hourly"
+        hourly_events_stream(spark, sf_dir),
+        "complete",
+        name="stream_events_hourly",
+        source_bytes=table_bytes(sf_dir, "events"),
     )
     return out
 
@@ -103,7 +107,12 @@ def run_hourly_stream_to_parquet(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(out_path)
 
-    drain(hourly_events_stream(spark, sf_dir), "complete", _sink)
+    drain(
+        hourly_events_stream(spark, sf_dir),
+        "complete",
+        _sink,
+        source_bytes=table_bytes(sf_dir, "events"),
+    )
     return spark.read.parquet(out_path)
 
 
@@ -133,7 +142,12 @@ def segment_share_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("segment", "event_type")
         .agg(F.count("*").alias("cnt"), F.round(F.sum("value"), 4).alias("sum_value"))
     )
-    out, _ = drain(enriched, "complete", name="stream_segment_share")
+    out, _ = drain(
+        enriched,
+        "complete",
+        name="stream_segment_share",
+        source_bytes=table_bytes(sf_dir, "events"),
+    )
     return out
 
 
@@ -237,6 +251,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_windows_stream(spark, sf_dir),
         "complete",
         name="stream_session_windows",
+        source_bytes=table_bytes(sf_dir, "events"),
     )
     return out
 
@@ -297,7 +312,12 @@ def stream_dual_sink_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.mode("overwrite").parquet(pa)
         batch_df.write.mode("overwrite").parquet(pb)
 
-    drain(hourly_events_stream(spark, sf_dir), "complete", _sink)
+    drain(
+        hourly_events_stream(spark, sf_dir),
+        "complete",
+        _sink,
+        source_bytes=table_bytes(sf_dir, "events"),
+    )
     a = spark.read.parquet(pa)
     b = spark.read.parquet(pb).select(
         F.col("hour_epoch").alias("h2"),
@@ -409,10 +429,15 @@ def stream_resume_from_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
                 "append"
             ).parquet(outp)
 
-        # The drain's state_sized_shuffle n is the same on BOTH runs: the
-        # shared checkpoint latches the state partition count at run 1,
-        # and run 2 must reopen it with the identical count.
-        _, q = drain(stream, "update", _sink, checkpointLocation=ckpt)
+        # The shared checkpoint latches the state partition count at run
+        # 1; run 2 reopens it with the count recorded in the offset log.
+        _, q = drain(
+            stream,
+            "update",
+            _sink,
+            checkpointLocation=ckpt,
+            source_bytes=table_bytes(sf_dir, "events"),
+        )
         return sum(
             int(p["numInputRows"]) for p in (q.recentProgress or [])
         )
@@ -645,7 +670,12 @@ def stream_late_drop_accounting(
     ), scoped_conf(
         spark, "spark.sql.files.openCostInBytes", one_split_bytes
     ):
-        closed, q = drain(agg, "append", name="stream_late_drop_accounting")
+        closed, q = drain(
+            agg,
+            "append",
+            name="stream_late_drop_accounting",
+            source_bytes=table_bytes(sf_dir, "events"),
+        )
     progress = q.recentProgress or []
     # METRIC GRAIN, measured not assumed: numRowsDroppedByWatermark
     # counts rows reaching the STATE operator — i.e. post-map-side-

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import apply_runtime_conf
+from parallel_mapreduce_spark.sources.tables import table_bytes
 from parallel_mapreduce_spark.streaming.drain import drain, table_stream
 from parallel_mapreduce_spark.streaming.events_stream import EVENTS_SCHEMA, decode_ts
 
@@ -100,6 +101,7 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         click_purchase_stream(spark, sf_dir),
         "append",
         name="stream_click_attribution",
+        source_bytes=table_bytes(sf_dir, "events"),
     )
     return out
 
@@ -244,7 +246,12 @@ def stream_click_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("gap_s"),
         "click_ts",
     )
-    pairs, _ = drain(joined, "append", name="stream_click_no_purchase")
+    pairs, _ = drain(
+        joined,
+        "append",
+        name="stream_click_no_purchase",
+        source_bytes=table_bytes(sf_dir, "events"),
+    )
     cutoff = ev.agg(
         (
             F.least(
@@ -347,6 +354,7 @@ def run_chained_join_hourly(spark: SparkSession, sf_dir: str):
         chained_join_hourly_stream(spark, sf_dir),
         "append",
         name="stream_chained_join_hourly",
+        source_bytes=table_bytes(sf_dir, "events"),
     )
     return hourly, q.lastProgress
 

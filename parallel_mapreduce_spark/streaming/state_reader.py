@@ -42,7 +42,7 @@ def run_user_totals_to_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     import os
     import shutil
 
-    from parallel_mapreduce_spark.sources.tables import sink_dir
+    from parallel_mapreduce_spark.sources.tables import sink_dir, table_bytes
 
     ckpt = sink_dir(unique_name("statestore_read"))
     # Fresh checkpoint per invocation: a reused one would make rerun N>1 a
@@ -56,7 +56,13 @@ def run_user_totals_to_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     agg = src.groupBy("user_id").agg(
         F.count("*").alias("n_events"), F.sum("value").alias("total_value")
     )
-    drain(agg, "update", "noop", checkpointLocation=ckpt)
+    drain(
+        agg,
+        "update",
+        "noop",
+        checkpointLocation=ckpt,
+        source_bytes=table_bytes(sf_dir, "events"),
+    )
     return ckpt
 
 

@@ -30,6 +30,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import scoped_conf
+from parallel_mapreduce_spark.sources.tables import table_bytes
 from parallel_mapreduce_spark.streaming.drain import drain, table_stream
 from parallel_mapreduce_spark.streaming.events_stream import EVENTS_SCHEMA
 
@@ -118,7 +119,10 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     is value-checked, not rows-only (final_user_totals reduces the
     per-batch snapshots)."""
     snapshots, _ = drain(
-        user_totals_stream(spark, sf_dir), "update", name="stream_user_totals"
+        user_totals_stream(spark, sf_dir),
+        "update",
+        name="stream_user_totals",
+        source_bytes=table_bytes(sf_dir, "events"),
     )
     return final_user_totals(snapshots)
 
@@ -252,7 +256,12 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        snapshots, _ = drain(out, "update", name="stream_user_totals_tws")
+        snapshots, _ = drain(
+            out,
+            "update",
+            name="stream_user_totals_tws",
+            source_bytes=table_bytes(sf_dir, "events"),
+        )
     return final_user_totals(snapshots)
 
 
@@ -289,5 +298,6 @@ def stream_user_totals_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
             user_totals_stream(spark, sf_dir),
             "update",
             name="stream_user_totals_rocksdb",
+            source_bytes=table_bytes(sf_dir, "events"),
         )
     return final_user_totals(snapshots)

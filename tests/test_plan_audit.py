@@ -89,8 +89,8 @@ def _plan(df) -> str:
 #     windows of one row per shard each).
 #   - K-seed / centroid frames (row_number over the K-row seed pick):
 #     kmeans_lloyd_2iter, semdedup_cluster_report.
-#   - |V|=25 aggregated trade graph (dangling-mass fold):
-#     pagerank_trade_graph.
+#   - |V|=25 aggregated trade graph (the per-round pool window over the
+#     |V|+1 destination sums): pagerank_trade_graph.
 #   - grain bounded by a low-cardinality domain: monthly_revenue_growth
 #     (months), events_type_share (event types), bpe_pair_merge_step
 #     (alphabet^2 pair census).
@@ -103,11 +103,7 @@ GLOBAL_WINDOW_WHITELIST = {
     "events_type_share",
     "kmeans_lloyd_2iter",
     "monthly_revenue_growth",
-    # pagerank_trade_graph's dangling-mass global window (25-row bounded,
-    # justified in operators/graph.py) still runs, but inside the eager
-    # per-iteration sources.cut during DataFrame construction, so the
-    # RETURNED plan no longer prints it — the audit sees only the post-cut
-    # LogicalRDD.
+    "pagerank_trade_graph",
     "price_weighted_median_by_flag",
     "semdedup_cluster_report",
     "sorted_neighborhood_multipass_pairs",
@@ -355,7 +351,8 @@ def test_headline_query_gains_no_new_exchanges(spark, sf_dir, name):
 # (session.bounded_persist), no tuning env knobs,
 # one per-group top-k kernel (operators/rank.top_k), one partition-count
 # policy (session.partition_count), one graph-serving search
-# (similarity._gs_search) and one streaming run path (streaming.drain): a
+# (similarity._gs_search), one streaming run path (streaming.drain) and
+# no literal shuffle-partition count (session.parallelism sizes them): a
 # source scan of the package so the idiom count cannot grow back.
 DEPLOYMENT_ENV = {
     "SPARK_GRAFT_CPUS",
@@ -442,6 +439,36 @@ STREAM_RUN = {
 }
 
 
+def _shuffle_counts(node) -> list:
+    """The shuffle-partition count arguments of ``node``: the count given
+    to (or defaulted by) ``state_sized_shuffle``, and the value given to
+    ``scoped_conf(..., "spark.sql.shuffle.partitions", ...)``."""
+    import ast
+
+    if isinstance(node, ast.FunctionDef) and node.name == "state_sized_shuffle":
+        return node.args.defaults
+    if not isinstance(node, ast.Call):
+        return []
+    callee = getattr(node.func, "id", getattr(node.func, "attr", None))
+    vals = [*node.args, *(k.value for k in node.keywords)]
+    if callee == "state_sized_shuffle":
+        return vals[1:]
+    keys = {getattr(v, "value", None) for v in vals}
+    if callee == "scoped_conf" and "spark.sql.shuffle.partitions" in keys:
+        return vals[2:]
+    return []
+
+
+def _is_literal(node) -> bool:
+    """An int or string constant, bare or inside ``str(...)``; None (an
+    unknown size) is not a count."""
+    import ast
+
+    if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "str":
+        node = node.args[0] if node.args else node
+    return isinstance(node, ast.Constant) and isinstance(node.value, (int, str))
+
+
 def _idiom_violations(rel: str, src: str) -> list[str]:
     import ast
     import re
@@ -479,6 +506,8 @@ def _idiom_violations(rel: str, src: str) -> list[str]:
                     and (rel, func) not in DURABLE_LOOPS
                 ):
                     bad.append(f"{where} reliable_checkpoint(): use sources.cut")
+            if any(_is_literal(c) for c in _shuffle_counts(node)):
+                bad.append(f"{where} literal shuffle-partition count: use parallelism")
             idiom = None
             if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
                 idiom = node.func.attr
@@ -516,3 +545,26 @@ def test_one_checkpoint_path_bounded_persists_no_env_knobs():
                 bad += _idiom_violations(rel, fh.read())
     assert not bad, "\n".join(bad)
 
+
+
+def test_guard_fails_on_literal_shuffle_partition_count():
+    """The idiom guard's shuffle-count rule: a literal count passed to
+    state_sized_shuffle (or defaulted in its signature) or scoped as
+    spark.sql.shuffle.partitions fails; a sized or unknown count passes."""
+    literal = (
+        "state_sized_shuffle(spark, 8)",
+        "state_sized_shuffle(spark, nbytes=8)",
+        "def state_sized_shuffle(spark, n=8): pass",
+        'scoped_conf(spark, "spark.sql.shuffle.partitions", "8")',
+        'scoped_conf(spark, "spark.sql.shuffle.partitions", str(8))',
+    )
+    sized = (
+        'state_sized_shuffle(spark, table_bytes(sf_dir, "events"))',
+        "state_sized_shuffle(spark, None)",
+        'scoped_conf(spark, "spark.sql.shuffle.partitions", str(parallelism(spark, n)))',
+        'scoped_conf(spark, "spark.sql.session.timeZone", "UTC")',
+    )
+    for src in literal:
+        assert _idiom_violations("x.py", src), src
+    for src in sized:
+        assert not _idiom_violations("x.py", src), src

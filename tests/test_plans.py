@@ -834,17 +834,27 @@ def test_source_cap_windows_are_partitioned(spark, sf_dir):
     assert "Exchange SinglePartition" not in plan
 
 
-def test_pagerank_dimensions_broadcast_no_cartesian(spark, sf_dir):
+def test_pagerank_dimensions_broadcast_no_cartesian(spark, sf_dir, monkeypatch):
     """pagerank_trade_graph's 100 TB posture: the one corpus-scale pass
-    broadcasts both dimension sides (supplier, customer) around the
-    lineitem-orders shuffle; the iteration loop adds only bounded joins
-    (the dangling-mass cross join is a broadcast of a 1-row aggregate,
-    never a CartesianProduct)."""
-    from parallel_mapreduce_spark.operators.graph import pagerank_trade_graph
+    (the routing table, cut once before the rounds) broadcasts both
+    dimension sides (supplier, customer) around the lineitem-orders
+    shuffle; the rounds add only bounded joins (a broadcast of the cut
+    routing table per round), never a CartesianProduct."""
+    from parallel_mapreduce_spark.operators import graph
 
-    plan = _plan(pagerank_trade_graph(spark, sf_dir))
+    cut_inputs, real_cut = [], graph.cut
+
+    def spy(df, *args, **kwargs):
+        cut_inputs.append(df)
+        return real_cut(df, *args, **kwargs)
+
+    monkeypatch.setattr(graph, "cut", spy)
+    plan = _plan(graph.pagerank_trade_graph(spark, sf_dir))
     assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastHashJoin") >= 2  # supplier + customer sides
+    (route,) = cut_inputs
+    route_plan = _plan(route)
+    assert "CartesianProduct" not in route_plan
+    assert route_plan.count("BroadcastHashJoin") >= 2  # supplier + customer sides
     # Integer rank arithmetic end to end: no float cast sneaks into the
     # rank expression (the determinism contract the oracle relies on).
     assert "pr_micro" in plan
@@ -928,3 +938,24 @@ def test_bounded_persist_ring_evicts_oldest_and_keeps_results_correct(spark):
     before = S.persist_evictions()
     S.bounded_persist(spark.range(3))
     assert S.persist_evictions() == before + 1
+
+
+def test_bounded_persist_same_plan_holds_one_slot(spark):
+    """A second bounded_persist of an already-cached plan takes no ring
+    slot: two holders of one plan occupy one slot, so the ring evicts no
+    sooner than for one holder, and the cache both share survives the
+    ring filling up to its cap behind it."""
+    from pyspark.sql import functions as F
+
+    import parallel_mapreduce_spark.session as S
+
+    def cached(df) -> bool:
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+    first = S.bounded_persist(spark.range(7).withColumn("k", F.lit("shared")))
+    again = S.bounded_persist(spark.range(7).withColumn("k", F.lit("shared")))
+    assert sum(f is first or f is again for f in S._PERSIST_RING) == 1
+    for i in range(S._PERSIST_RING_CAP - 1):
+        S.bounded_persist(spark.range(3).withColumn("k", F.lit(i)))
+    assert cached(first) and cached(again)
+    assert again.count() == 7

@@ -131,3 +131,71 @@ def test_bitmap_rollup_matches_exact_everywhere(spark, sf_dir):
         # Summing finer-grain distincts can only overcount the coarser
         # grain (a part may ship under both linestatuses).
         assert r["sum_fine_distinct"] >= r["n_distinct_parts"]
+
+
+def test_pagerank_dangling_and_sourceless_nations_match_oracle(spark, sf_dir, tmp_path):
+    """PageRank on a hand-made five-nation world with both edge cases the
+    generated worlds may lack: nation 4 has customers but no orders (no
+    out-edges: its rank is dangling mass, spread over every node) and
+    nation 3 has no supplier (no in-edges: it keeps only the teleport and
+    dangling shares). Ranks equal the DuckDB oracle exactly."""
+    import shutil
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parallel_mapreduce_spark.operators.graph import (
+        _pagerank_oracle,
+        pagerank_trade_graph,
+    )
+    from parallel_mapreduce_spark.sources.tables import TABLES
+
+    # customer c (nation c - 1) buys from supplier s (nation), n lineitems
+    trades = {
+        (1, 2): 3, (1, 3): 1, (1, 4): 2,  # nation 0 -> 1, 2, 4
+        (2, 1): 2, (2, 4): 1,  # nation 1 -> 0, 4
+        (3, 1): 1, (3, 2): 1,  # nation 2 -> 0, 1
+        (4, 1): 5, (4, 3): 2,  # nation 3 -> 0, 2
+    }
+    supp_nation = {1: 0, 2: 1, 3: 2, 4: 4}
+    lines = [(c, s) for (c, s), n in trades.items() for _ in range(n)]
+    i32, i64 = pa.int32(), pa.int64()
+    world = {
+        "nation": {
+            "n_nationkey": pa.array(range(5), i32),
+            "n_name": [f"N{k}" for k in range(5)],
+        },
+        "customer": {
+            "c_custkey": pa.array(range(1, 6), i64),
+            "c_nationkey": pa.array(range(5), i32),
+        },
+        "supplier": {
+            "s_suppkey": pa.array(list(supp_nation), i64),
+            "s_nationkey": pa.array(list(supp_nation.values()), i32),
+        },
+        "orders": {
+            "o_orderkey": pa.array(range(len(lines)), i64),
+            "o_custkey": pa.array([c for c, _ in lines], i64),
+        },
+        "lineitem": {
+            "l_orderkey": pa.array(range(len(lines)), i64),
+            "l_suppkey": pa.array([s for _, s in lines], i64),
+        },
+    }
+    for name in TABLES:
+        dst = tmp_path / f"{name}.parquet"
+        if name in world:
+            pq.write_table(pa.table(world[name]), dst)
+        else:
+            shutil.copy(f"{sf_dir}/{name}.parquet", dst)
+
+    got = sorted(tuple(r) for r in pagerank_trade_graph(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    for name in world:
+        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{tmp_path}/{name}.parquet'")
+    want = sorted(con.sql(_pagerank_oracle()).fetchall())
+    con.close()
+    assert got == want
+    ranks = dict(got)
+    assert len(ranks) == 5 and ranks["N3"] < min(ranks[f"N{k}"] for k in (0, 1, 2))

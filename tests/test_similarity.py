@@ -363,3 +363,98 @@ def test_fixture_embeddings_share_one_length(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     dims = emb.select(F.size("embedding").alias("d")).distinct().collect()
     assert len(dims) == 1 and dims[0].d > 0, dims
+
+
+def _double_bits(xs) -> list[bytes]:
+    import struct
+
+    return [struct.pack("<d", x) for x in xs]
+
+
+def test_vector_sql_is_bit_equal_to_per_element_literals(spark):
+    """vector_sql's one parsed array literal holds the same doubles, bit
+    for bit, as the per-coordinate F.lit build it replaces: negatives,
+    negative zero, exponent forms, subnormals and the largest finite
+    double."""
+    from pyspark.sql import functions as F
+
+    from parallel_mapreduce_spark.functions.similarity import vector_sql
+
+    vec = [
+        -0.5, -0.0, 0.1, 1e-05, -1e-05, 2.5e-08, 1e16, 123456789.123,
+        5e-324, -5e-324, 2.2250738585072014e-308, 1.7976931348623157e308,
+    ]
+    old, new = spark.range(1).select(
+        F.array(*[F.lit(float(x)) for x in vec]).alias("old"),
+        F.expr(vector_sql(vec)).alias("new"),
+    ).head()
+    assert _double_bits(new) == _double_bits(old) == _double_bits(vec)
+
+
+def test_vector_sql_non_finite_coordinates_match_literals(spark):
+    """NaN and the infinities (including a value that overflowed to inf)
+    have no SQL literal syntax — bare repr() text ``inf`` / ``nan`` does
+    not parse — so they cast from their names; values and the squared
+    distance through them match the per-coordinate F.lit build."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from parallel_mapreduce_spark.functions.similarity import vector_sql
+
+    vec = [float("nan"), float("inf"), -float("inf"), 1e308 * 10, 1.0]
+    assert "inf" not in vector_sql([1.0]) and "nan" not in vector_sql([1.0])
+
+    def sq_dist(c):
+        return F.aggregate(
+            F.zip_with(F.array(*[F.lit(1.0)] * len(vec)), c, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, d: acc + d,
+        )
+
+    old_c = F.array(*[F.lit(float(x)) for x in vec])
+    new_c = F.expr(vector_sql(vec))
+    old, new, d_old, d_new = spark.range(1).select(
+        old_c, new_c, sq_dist(old_c), sq_dist(new_c)
+    ).head()
+    assert [math.isnan(x) for x in new] == [math.isnan(x) for x in old]
+    assert [x for x in new if not math.isnan(x)] == [
+        x for x in old if not math.isnan(x)
+    ]
+    assert math.isnan(d_old) and math.isnan(d_new)
+
+
+def test_lsh_bucket_ids_match_per_element_plane_literals(spark, sf_dir):
+    """lsh_table_buckets (planes as vector_sql literals) assigns every
+    vector the same bucket ids as the per-coordinate F.lit plane build."""
+    from pyspark.sql import functions as F
+
+    from parallel_mapreduce_spark.functions.similarity import (
+        EMB_DIM,
+        N_PLANES,
+        N_TABLES,
+        _plane,
+        as_double,
+        dot,
+        lsh_table_buckets,
+    )
+    from parallel_mapreduce_spark.sources import load_table
+
+    def per_element(vec, n_planes):
+        entries = []
+        for t in range(N_TABLES):
+            bucket = F.lit(0)
+            for p in range(n_planes):
+                plane = F.array(*[F.lit(v) for v in _plane(t * n_planes + p, EMB_DIM)])
+                bucket = bucket * 2 + F.when(dot(vec, plane) > 0, 1).otherwise(0)
+            entries.append(F.struct(F.lit(t).alias("table"), bucket.alias("bucket")))
+        return F.array(*entries)
+
+    e = as_double(F.col("embedding"))
+    for n_planes in (N_PLANES, 6):
+        df = load_table(spark, sf_dir, "embeddings").select(
+            lsh_table_buckets(e, EMB_DIM, n_planes=n_planes).alias("new"),
+            per_element(e, n_planes).alias("old"),
+        )
+        assert df.count() > 0
+        assert df.where(F.col("new") != F.col("old")).count() == 0

@@ -484,6 +484,59 @@ def test_cut_gate_matrix(spark, sf_dir, monkeypatch, name):
     assert n_ckpt_files() > before
 
 
+def test_parallelism_branches(spark):
+    """session.parallelism: one partition per PART_BYTES of input,
+    clamped to [1, partition_count]; an unknown size (None, or the
+    table_bytes sentinel for an unreadable table) takes the full count."""
+    from parallel_mapreduce_spark.session import (
+        PART_BYTES,
+        parallelism,
+        partition_count,
+    )
+    from parallel_mapreduce_spark.sources.tables import table_bytes
+
+    cap = partition_count(spark)
+    assert cap > 3
+    assert parallelism(spark, 0) == 1
+    assert parallelism(spark, PART_BYTES) == 1
+    assert parallelism(spark, 2 * PART_BYTES + 1) == 3
+    assert parallelism(spark, 1 << 40) == cap
+    assert parallelism(spark, None) == cap
+    assert parallelism(spark, table_bytes("/nonexistent", "events")) == cap
+
+
+# Queries whose partition counts come from session.parallelism, with the
+# table whose bytes size them: the stream drains' state partitions and the
+# k-center corpus frame.
+SIZED_QUERIES = (
+    ("stream_events_hourly", "events"),
+    ("stream_session_windows", "events"),
+    ("pipeline_diverse_sample", "embeddings"),
+)
+
+
+@pytest.mark.parametrize("name,table", SIZED_QUERIES)
+def test_parallelism_gate_matrix(spark, sf_dir, monkeypatch, name, table):
+    """Both ends of the sizing clamp return identical rows: forced to one
+    partition (a per-partition target above the table) and to the full
+    partition_count (a one-byte target)."""
+    import parallel_mapreduce_spark.session as S
+    from parallel_mapreduce_spark.registry import QUERIES, _load_all
+    from parallel_mapreduce_spark.sources.tables import table_bytes
+
+    _load_all()
+    nbytes = table_bytes(sf_dir, table)
+    out = {}
+    for part_bytes in (nbytes + 1, 1):
+        monkeypatch.setattr(S, "PART_BYTES", part_bytes)
+        out[S.parallelism(spark, nbytes)] = sorted(
+            repr(tuple(r)) for r in QUERIES[name].fn(spark, sf_dir).collect()
+        )
+    assert set(out) == {1, S.partition_count(spark)}
+    one, full = out.values()
+    assert one and one == full
+
+
 _LEAK_CHILD = """
 import glob, os, tempfile
 from pyspark.sql import SparkSession

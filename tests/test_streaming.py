@@ -400,24 +400,31 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert sorted(emitted) == [(base_s + 9 * 3600, 1)]  # late event dropped
 
 
-def test_statestore_metadata_layout(spark, sf_dir):
+def test_statestore_metadata_layout(spark, sf_dir, monkeypatch):
     """state-metadata companion source: the checkpoint must report exactly
     one stateful operator (the streaming agg's stateStoreSave), state
-    partitions latched to state_sized_shuffle's n=8, and a single
-    availableNow micro-batch (min==max batch id == 0). Also pins that the
-    statestore rows spread across partitions rather than collapsing onto
-    one (keyed-state hash distribution — the property that makes the
-    reader a parallel scan at production partition counts)."""
+    partitions latched to the count session.parallelism derives from the
+    events table's bytes, and a single availableNow micro-batch
+    (min==max batch id == 0). Also pins that the statestore rows spread
+    across partitions rather than collapsing onto one (keyed-state hash
+    distribution — the property that makes the reader a parallel scan at
+    production partition counts); the per-partition byte target is
+    forced down so this small table sizes to three partitions."""
+    import parallel_mapreduce_spark.session as S
+    from parallel_mapreduce_spark.sources.tables import table_bytes
     from parallel_mapreduce_spark.streaming.state_reader import (
         run_user_totals_to_checkpoint,
     )
 
+    nbytes = table_bytes(sf_dir, "events")
+    monkeypatch.setattr(S, "PART_BYTES", -(-nbytes // 3))
+    assert S.parallelism(spark, nbytes) == 3
     ckpt = run_user_totals_to_checkpoint(spark, sf_dir)
     meta = spark.read.format("state-metadata").load(ckpt).collect()
     assert len(meta) == 1
     row = meta[0]
     assert row["operatorName"] == "stateStoreSave"
-    assert row["numPartitions"] == 8
+    assert row["numPartitions"] == 3
     assert row["minBatchId"] == 0 and row["maxBatchId"] == 0
 
     state = spark.read.format("statestore").load(ckpt)
