@@ -337,8 +337,10 @@ def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MANY consumers (the index self-join's two sides, the eligible filter,
     # and members' four join legs), and the joins run broadcast at this
     # scale, so no ReusedExchange ever dedups the subtrees — the committed
-    # plan re-scanned documents 12x. A lazy cut materializes each shared
-    # frame once; every consumer reads the cut.
+    # plan re-scanned documents 12x. A cut materializes each shared frame
+    # once; every consumer reads the cut. Lazy is not free here: under
+    # AQE the cut runs the chain's shuffle stages when it is called, and
+    # only the final stage waits for the first action (see sources.cut).
     members = cut(exact_dup_members(docs), sf_dir, "documents", eager=False)
     reps = _rep_texts(docs, n)
     shingled = reps.select("doc_id", shingles3(tokens("text")).alias("sh"))

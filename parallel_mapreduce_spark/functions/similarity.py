@@ -24,6 +24,8 @@ import math
 import os
 import shutil
 import tempfile
+from functools import reduce
+from operator import and_
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
@@ -64,6 +66,69 @@ def vector_sql(vec) -> str:
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def sqdist(a: Column, b: Column) -> Column:
+    """Squared L2 distance of two equal-length vectors, folded in array
+    order and NOT rounded: each caller applies its own ranking precision
+    (6 dp in ``centroid_dists``, integer micro-units in the ADC tables)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def centroid_dists(vec: Column, book, id: str, where=None, carry=()) -> Column:
+    """array<struct<d, <id>, <carry>...>>: the distance from ``vec`` to
+    every centroid ``c`` of the codebook array ``book``, rounded to 6 dp
+    (the oracles' ``ROUND(SUM((v - c) ^ 2), 6)``). ``where`` (a predicate
+    on a book entry) drops entries first; ``carry`` names entry fields to
+    ride along with the winner.
+
+    ``d`` leads the struct, so ``F.array_min(...)[id]`` is the nearest
+    centroid with ties toward the lower id — the ``ORDER BY d, id`` every
+    oracle replays — and ``F.array_sort`` ranks the same way."""
+    if where is not None:
+        book = F.filter(book, where)
+    return F.transform(
+        book,
+        lambda x: F.struct(
+            F.round(sqdist(vec, x.getField("c")), 6).alias("d"),
+            x.getField(id).alias(id),
+            *[x.getField(c).alias(c) for c in carry],
+        ),
+    )
+
+
+def codebook_row(long: DataFrame, keys, val: str, vec: str, book) -> DataFrame:
+    """Pack ``(key..., pos, val)`` rows into ordered vectors: one ``vec``
+    array per key, positions in ``pos`` order. With ``book`` set, the
+    per-key rows collect further into ONE row whose ``book`` column is
+    array<struct<key..., vec>> sorted on the keys — the broadcast
+    codebook the assignments scan; ``book=None`` returns the per-key
+    rows, and no keys gives one row."""
+    packed = long.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col(val)))),
+            lambda x: x.getField(val),
+        ).alias(vec)
+    )
+    if book is None:
+        return packed
+    return packed.agg(F.array_sort(F.collect_list(F.struct(*keys, vec))).alias(book))
+
+
+def lloyd_update(assigned: DataFrame, keys, vec: str) -> DataFrame:
+    """One Lloyd update, the per-key reduce of k-means: each assigned
+    vector posexplodes into ``(key..., pos, val)`` and every (key, pos)
+    mean rounds to 6 dp — ``(key..., pos, cval)`` rows for
+    ``codebook_row``."""
+    return (
+        assigned.select(*keys, F.posexplode(vec).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(F.round(F.avg("val"), 6).alias("cval"))
     )
 
 
@@ -353,14 +418,8 @@ def ivf_centroids(vecs: DataFrame) -> DataFrame:
     assigned = _argmin_cell(vecs, seeds, keep=["v"])
     dims = assigned.select("cid", F.posexplode("v").alias("pos", "x"))
     means = dims.groupBy("cid", "pos").agg(F.avg("x").alias("m"))
-    return (
-        means.groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select(
-            "cid",
-            F.transform("pm", lambda s: s.getField("m")).alias("cv"),
-        )
-        .withColumn("cn", l2_norm(F.col("cv")))
+    return codebook_row(means, ["cid"], "m", "cv", None).withColumn(
+        "cn", l2_norm(F.col("cv"))
     )
 
 
@@ -1137,24 +1196,9 @@ def embedding_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Reshape the 64-row direction into ONE array row and broadcast it to
     # the corpus — the second matvec needs no corpus-keyed join.
-    v1_arr = v1.agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("pos"), F.col("v1")))
-            ),
-            lambda s: s.getField("v1"),
-        ).alias("varr")
-    )
+    v1_arr = codebook_row(v1, [], "v1", "varr", None)
     d1 = rows.crossJoin(F.broadcast(v1_arr)).select(
-        "e",
-        F.round(
-            F.aggregate(
-                F.zip_with(F.col("e"), F.col("varr"), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias("d1"),
+        "e", F.round(dot(F.col("e"), F.col("varr")), 6).alias("d1")
     )
     s2 = (
         d1.select(F.posexplode("e").alias("pos", "val"), "d1")
@@ -1194,44 +1238,48 @@ def embedding_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 KMEANS_K = 4
 
 
-def _kmeans_assign(vecs: DataFrame, cents_row: DataFrame) -> DataFrame:
-    """vecs(vec_id, e) x one-row cents(cents: array<struct<cid,c>>) ->
-    (vec_id, e, cid) via in-projection argmin (no shuffle)."""
-    dists = F.transform(
-        F.col("cents"),
-        lambda s: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("e"), s.getField("c"), lambda x, y: (x - y) * (x - y)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            ).alias("d"),
-            s.getField("cid").alias("cid"),
-        ),
-    )
-    return vecs.crossJoin(F.broadcast(cents_row)).select(
-        "vec_id", "e", F.array_min(dists).getField("cid").alias("cid")
+def _book_match(key):
+    """Predicate keeping the codebook entries whose ``key`` fields equal
+    the row's own columns (None for an unkeyed book)."""
+    if not key:
+        return None
+    return lambda x: reduce(and_, [x.getField(k) == F.col(k) for k in key])
+
+
+def _nearest(df: DataFrame, cb_row: DataFrame, vec: str, key) -> DataFrame:
+    """``df`` plus ``cid``: each row's nearest centroid in the one-row
+    codebook ``cb_row`` (``cb``: array<struct<key..., cid, c>>), only
+    entries whose ``key`` matches the row — the k-means assignment map,
+    an argmin in the projection against the broadcast row (no shuffle)."""
+    d = centroid_dists(F.col(vec), F.col("cb"), "cid", where=_book_match(key))
+    return df.crossJoin(F.broadcast(cb_row)).select(
+        *df.columns, F.array_min(d)["cid"].alias("cid")
     )
 
 
-def _kmeans_cents_row(long: DataFrame) -> DataFrame:
-    """(cid, pos, cval) -> one row with array<struct<cid, c:array<double>>>,
-    positions and cids ordered by array_sort on the struct keys."""
-    per_cid = long.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("cval")))),
-            lambda s: s.getField("cval"),
-        ).alias("c")
+def _kmeans_2iter(spark: SparkSession, sf_dir: str):
+    """(a2, c1_long): two Lloyd iterations from the K lowest-vec_id
+    embeddings — a2 is (vec_id, e, cid), the final assignment; c1_long
+    the (cid, pos, cval) centroids it used."""
+    register_views(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    n_parts = partition_count(spark)
+    vecs = emb.repartition(n_parts, "vec_id").select(
+        "vec_id", as_double(F.col("embedding")).alias("e")
     )
-    return per_cid.agg(
-        F.array_sort(F.collect_list(F.struct(F.col("cid"), F.col("c")))).alias(
-            "cents"
-        )
+    init = (
+        emb.orderBy("vec_id")
+        .limit(KMEANS_K)
+        .select("vec_id", as_double(F.col("embedding")).alias("c"))
+        .withColumn("cid", F.row_number().over(W.orderBy("vec_id")) - 1)
     )
+    cents0 = init.agg(
+        F.array_sort(F.collect_list(F.struct(F.col("cid"), F.col("c")))).alias("cb")
+    )
+    c1_long = lloyd_update(_nearest(vecs, cents0, "e", []), ["cid"], "e")
+    cb1 = codebook_row(c1_long, ["cid"], "cval", "c", "cb")
+    a2 = _nearest(vecs, cb1, "e", [])
+    return a2, c1_long
 
 
 @query(
@@ -1277,32 +1325,7 @@ def _kmeans_cents_row(long: DataFrame) -> DataFrame:
     """,
 )
 def kmeans_lloyd_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = partition_count(spark)
-    vecs = emb.repartition(n_parts, "vec_id").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
-    init = (
-        emb.orderBy("vec_id")
-        .limit(KMEANS_K)
-        .select("vec_id", as_double(F.col("embedding")).alias("c"))
-        .withColumn(
-            "cid", F.row_number().over(W.orderBy("vec_id")) - 1
-        )
-    )
-    cents0 = init.agg(
-        F.array_sort(F.collect_list(F.struct(F.col("cid"), F.col("c")))).alias(
-            "cents"
-        )
-    )
-    a1 = _kmeans_assign(vecs, cents0)
-    c1_long = (
-        a1.select("cid", F.posexplode("e").alias("pos", "val"))
-        .groupBy("cid", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("cval"))
-    )
-    a2 = _kmeans_assign(vecs, _kmeans_cents_row(c1_long))
+    a2, _ = _kmeans_2iter(spark, sf_dir)
     # Round-14 (guide §2.3 "don't compute things twice"): the cluster size
     # and the per-dimension mean come out of ONE (cid, pos) aggregation —
     # every vector contributes exactly one posexploded row per pos, so
@@ -1551,27 +1574,10 @@ def semdedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("coarse")
     )
-
-    def _d6(vec_col, cent_col):
-        return F.round(
-            F.aggregate(
-                F.zip_with(vec_col, cent_col, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        )
-
     seeds_tagged = seeds.crossJoin(F.broadcast(coarse_row)).select(
-        F.array_min(
-            F.transform(
-                F.col("coarse"),
-                lambda x: F.struct(
-                    _d6(F.col("c"), x.getField("c")).alias("d"),
-                    x.getField("ccid").alias("cid"),
-                ),
-            )
-        )["cid"].alias("gcid"),
+        F.array_min(centroid_dists(F.col("c"), F.col("coarse"), "ccid"))[
+            "ccid"
+        ].alias("gcid"),
         "cid",
         "c",
     )
@@ -1584,21 +1590,13 @@ def semdedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("seeds")
         )
     )  # one row: K tagged seeds, consumed by the corpus pass
-    coarse_of = F.filter(
-        F.col("seeds"), lambda s: s.getField("cid") < F.lit(n_coarse)
-    )
+    coarse_of = lambda s: s.getField("cid") < F.lit(n_coarse)  # noqa: E731
     with_g = vecs.crossJoin(F.broadcast(seeds_row)).select(
         "vec_id",
         "e",
         "seeds",
         F.array_min(
-            F.transform(
-                coarse_of,
-                lambda x: F.struct(
-                    _d6(F.col("e"), x.getField("c")).alias("d"),
-                    x.getField("cid").alias("cid"),
-                ),
-            )
+            centroid_dists(F.col("e"), F.col("seeds"), "cid", where=coarse_of)
         )["cid"].alias("gcid"),
     )
     # PERSISTED: the assigned frame feeds both pair-join sides and the
@@ -1606,20 +1604,12 @@ def semdedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two-level assignment (this plus the hierarchy is what moved the
     # 10x->30x slope off 1.85). At 100 TB this cache is the materialized
     # assignment/codes table a real pipeline writes once.
+    in_group = _book_match(["gcid"])  # the seeds of the vector's own group
     assigned = with_g.select(
         "vec_id",
         "e",
         F.array_min(
-            F.transform(
-                F.filter(
-                    F.col("seeds"),
-                    lambda s: s.getField("gcid") == F.col("gcid"),
-                ),
-                lambda s: F.struct(
-                    _d6(F.col("e"), s.getField("c")).alias("d"),
-                    s.getField("cid").alias("cid"),
-                ),
-            )
+            centroid_dists(F.col("e"), F.col("seeds"), "cid", where=in_group)
         )["cid"].alias("cid"),
     ).withColumn("nrm", l2_norm(F.col("e")))
     assigned = bounded_persist(assigned)
@@ -1701,67 +1691,85 @@ PQ_TOPK = 5
 PQ_RANK_SALT = 16
 
 
+def _pq_slices(vec: str) -> Column:
+    """The PQ_M per-subspace slices of the double vector column ``vec``."""
+    return F.array(
+        *[F.slice(F.col(vec), s * PQ_SUBDIM + 1, PQ_SUBDIM) for s in range(PQ_M)]
+    )
+
+
 def _pq_subvecs(df: DataFrame, idcol: str, out_id: str) -> DataFrame:
     """(id, s, sub): the PQ_M per-subspace slices of the double vector."""
-    slices = F.array(
-        *[
-            F.slice(F.col("e"), s * PQ_SUBDIM + 1, PQ_SUBDIM)
-            for s in range(PQ_M)
-        ]
-    )
     return df.select(
-        F.col(idcol).alias(out_id), F.posexplode(slices).alias("s", "sub")
+        F.col(idcol).alias(out_id), F.posexplode(_pq_slices("e")).alias("s", "sub")
     )
 
 
-def _pq_assign(subdf: DataFrame, cb_row: DataFrame, idcol: str) -> DataFrame:
-    """(id, s, cid): nearest codebook centroid per subspace, in-projection
-    argmin against the ONE broadcast codebook row (no shuffle)."""
-    dists = F.transform(
-        F.filter(F.col("cb"), lambda x: x.getField("s") == F.col("s")),
-        lambda x: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("sub"),
-                        x.getField("c"),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            ).alias("d"),
-            x.getField("cid").alias("cid"),
-        ),
-    )
-    return subdf.crossJoin(F.broadcast(cb_row)).select(
-        idcol, "s", "sub", F.array_min(dists).getField("cid").alias("cid")
-    )
+def _pq_train(dbsub: DataFrame, init_long: DataFrame, key) -> tuple:
+    """(cb, codes): the PQ codebook after one Lloyd iteration and the
+    corpus encoded against it. ``dbsub`` is (vec_id, key..., s-slice
+    ``sub``), ``init_long`` the (key..., cid, pos, cval) seeds; ``key`` is
+    the codebook key — ("s",) for PQ, ("ccid", "s") for IVF-PQ's per-cell
+    residual codebooks. codes is (vec_id, key..., cid).
+
+    Both codebook rows are PERSISTED: each has two consumers (corpus
+    encoding and the next step — the update, or the query distance
+    tables), and without the cache each consumer re-executes the
+    codebook's full training lineage — an extra corpus-scale pass per
+    consumer for one small row. Measured at sf0.1: ann_pq_adc_topk
+    3.2 s -> 1.5 s, ann_ivfpq_topk 2.9 s -> 2.2 s. The cached payload is
+    one row, so the cache cost is constant at any corpus size."""
+    ids = [*key, "cid"]
+    cb0 = bounded_persist(codebook_row(init_long, ids, "cval", "c", "cb"))
+    c1_long = lloyd_update(_nearest(dbsub, cb0, "sub", key), ids, "sub")
+    cb = bounded_persist(codebook_row(c1_long, ids, "cval", "c", "cb"))
+    codes = _nearest(dbsub, cb, "sub", key).select("vec_id", *ids)
+    return cb, codes
 
 
-def _pq_cb_row(long: DataFrame) -> DataFrame:
-    """(s, cid, spos, cval) -> one row: array<struct<s, cid, c>>.
-
-    The single-row codebook is PERSISTED: it has two consumers (corpus
-    encoding and the query distance tables), and without the cache each
-    consumer re-executes the codebook's full training lineage — an extra
-    corpus-scale pass per consumer for one M*K-entry row. Measured at
-    sf0.1: ann_pq_adc_topk 3.2 s -> 1.5 s, ann_ivfpq_topk 2.9 s -> 2.2 s.
-    The cached payload is one row (M*K centroids), so the cache cost is
-    constant at any corpus size."""
-    per_cell = long.groupBy("s", "cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("spos"), F.col("cval")))),
-            lambda x: x.getField("cval"),
-        ).alias("c")
-    )
-    return bounded_persist(
-        per_cell.agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("s"), F.col("cid"), F.col("c")))
-            ).alias("cb")
+def _adc_ranked(
+    codes: DataFrame, qsub: DataFrame, cb: DataFrame, key, topk: int
+) -> DataFrame:
+    """(q_id, rk, c_id, approx_du): ADC scoring of the encoded corpus.
+    ``qsub`` is (q_id, key..., sub); each query slice gets one distance
+    table over its matching codebook entries, in EXACT integer
+    micro-units, and a candidate's approximate distance is the integer
+    sum of its code entries — order-independent on both engines."""
+    qtab = (
+        qsub.crossJoin(F.broadcast(cb))
+        .select(
+            "q_id",
+            *key,
+            "sub",
+            F.explode(F.filter(F.col("cb"), _book_match(key))).alias("ent"),
         )
+        .select(
+            "q_id",
+            *key,
+            F.col("ent.cid").alias("cid"),
+            F.round(sqdist(F.col("sub"), F.col("ent.c")) * 1e6)
+            .cast("long")
+            .alias("du"),
+        )
+    )
+    ad = (
+        codes.join(F.broadcast(qtab), [*key, "cid"])
+        .groupBy("q_id", "vec_id")
+        .agg(F.sum("du").alias("approx_du"))
+    )
+    # Salted two-phase top-k (the source_cap_sample shape): no task ever
+    # orders one query's full candidate list.
+    return top_k(
+        ad,
+        "q_id",
+        ["approx_du", "vec_id"],
+        topk,
+        salt=F.col("vec_id") % PQ_RANK_SALT,
+    ).select(
+        "q_id",
+        F.col("rk").cast("long").alias("rk"),
+        F.col("vec_id").alias("c_id"),
+        "approx_du",
     )
 
 
@@ -1860,74 +1868,13 @@ def _pq_adc_ranked(
     ).select(
         (F.col("vec_id") - N_QUERY_VECS).cast("int").alias("cid"),
         "s",
-        F.posexplode("sub").alias("spos", "cval"),
+        F.posexplode("sub").alias("pos", "cval"),
     )
-    a0 = _pq_assign(dbsub, _pq_cb_row(init_long), "vec_id")
-    c1_long = (
-        a0.select("s", "cid", F.posexplode("sub").alias("spos", "val"))
-        .groupBy("s", "cid", "spos")
-        .agg(F.round(F.avg("val"), 6).alias("cval"))
-    )
-    cb1 = _pq_cb_row(c1_long)
-    codes = _pq_assign(dbsub, cb1, "vec_id").select("vec_id", "s", "cid")
+    cb, codes = _pq_train(dbsub, init_long, ["s"])
     qsub = _pq_subvecs(
         vecs.filter(F.col("vec_id") < N_QUERY_VECS), "vec_id", "q_id"
     )
-    qtab = (
-        qsub.crossJoin(F.broadcast(cb1))
-        .select(
-            "q_id",
-            "s",
-            "sub",
-            F.explode(
-                F.filter(F.col("cb"), lambda x: x.getField("s") == F.col("s"))
-            ).alias("ent"),
-        )
-        .select(
-            "q_id",
-            "s",
-            F.col("ent.cid").alias("cid"),
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("sub"),
-                        F.col("ent.c"),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                * 1e6
-            )
-            .cast("long")
-            .alias("du"),
-        )
-    )
-    ad = (
-        codes.join(F.broadcast(qtab), ["s", "cid"])
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("du").alias("approx_du"))
-    )
-    # Salted two-phase top-k (the source_cap_sample shape): no task ever
-    # orders one query's full candidate list.
-    return _adc_topk(ad, topk)
-
-
-def _adc_topk(ad: DataFrame, topk: int) -> DataFrame:
-    """(q_id, rk, c_id, approx_du): salted two-phase top-``topk`` per
-    query of an ADC (q_id, vec_id, approx_du) distance frame."""
-    return top_k(
-        ad,
-        "q_id",
-        ["approx_du", "vec_id"],
-        topk,
-        salt=F.col("vec_id") % PQ_RANK_SALT,
-    ).select(
-        "q_id",
-        F.col("rk").cast("long").alias("rk"),
-        F.col("vec_id").alias("c_id"),
-        "approx_du",
-    )
+    return _adc_ranked(codes, qsub, cb, ["s"], topk)
 
 
 @query("ann_pq_adc_topk", oracle=_pq_adc_oracle(PQ_TOPK))
@@ -1977,112 +1924,6 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 IVFPQ_COARSE_K = 4
 IVFPQ_NPROBE = 2
-
-
-def _ivfpq_coarse_row(vecs: DataFrame) -> DataFrame:
-    """One broadcast row: array<struct<ccid, c>> of coarse centroids.
-    Persisted for the same reason as _pq_cb_row: consumed by both the
-    corpus assignment and the query-side cell probe; one row cached
-    saves a scan of the init slice per consumer."""
-    base = N_QUERY_VECS + PQ_K
-    out = (
-        vecs.filter(
-            (F.col("vec_id") >= base)
-            & (F.col("vec_id") < base + IVFPQ_COARSE_K)
-        )
-        .select(
-            (F.col("vec_id") - base).cast("int").alias("ccid"),
-            F.col("e").alias("c"),
-        )
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("ccid"), F.col("c")))
-            ).alias("coarse")
-        )
-    )
-    return bounded_persist(out)
-
-
-def _ivfpq_cell_dists(e_col):
-    """array<struct<d, ccid, c>> of rounded L2 distances to every coarse
-    centroid (c carried so the argmin winner's centroid is in hand)."""
-    return F.transform(
-        F.col("coarse"),
-        lambda x: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(e_col, x.getField("c"), lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            ).alias("d"),
-            x.getField("ccid").alias("ccid"),
-            x.getField("c").alias("c"),
-        ),
-    )
-
-
-def _ivfpq_cb_row(long: DataFrame) -> DataFrame:
-    """(ccid, s, cid, spos, cval) -> one broadcast row:
-    array<struct<ccid, s, cid, c>> — the PER-CELL residual codebooks
-    (_pq_cb_row with the coarse cell id in the codebook key). Persisted
-    for the same two-consumer reason as _pq_cb_row (corpus encode +
-    query tables)."""
-    per_cell = long.groupBy("ccid", "s", "cid").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("spos"), F.col("cval")))
-            ),
-            lambda x: x.getField("cval"),
-        ).alias("c")
-    )
-    return bounded_persist(
-        per_cell.agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("ccid"), F.col("s"), F.col("cid"), F.col("c")
-                    )
-                )
-            ).alias("cb")
-        )
-    )
-
-
-def _ivfpq_assign(subdf: DataFrame, cb_row: DataFrame) -> DataFrame:
-    """(vec_id, ccid, s, sub, cid): nearest centroid per subspace against
-    the vector's OWN cell's codebook — in-projection argmin over the one
-    broadcast row, no shuffle (the per-cell twin of _pq_assign)."""
-    dists = F.transform(
-        F.filter(
-            F.col("cb"),
-            lambda x: (x.getField("s") == F.col("s"))
-            & (x.getField("ccid") == F.col("ccid")),
-        ),
-        lambda x: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("sub"),
-                        x.getField("c"),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            ).alias("d"),
-            x.getField("cid").alias("cid"),
-        ),
-    )
-    return subdf.crossJoin(F.broadcast(cb_row)).select(
-        "vec_id",
-        "ccid",
-        "s",
-        "sub",
-        F.array_min(dists).getField("cid").alias("cid"),
-    )
 
 
 def _ivfpq_oracle(src: str = "embeddings", topk: int = PQ_TOPK) -> str:
@@ -2203,29 +2044,37 @@ def _ivfpq_ranked(
             "vec_id", as_double(F.col("embedding")).alias("e")
         )
     n_parts = partition_count(spark)
-    coarse_row = _ivfpq_coarse_row(vecs)
+    # The one-row coarse centroid table is PERSISTED: the corpus
+    # assignment and the query-side cell probe both read it, and the
+    # cached row saves a scan of the init slice per consumer.
+    base = N_QUERY_VECS + PQ_K
+    coarse_row = bounded_persist(
+        vecs.filter(
+            (F.col("vec_id") >= base)
+            & (F.col("vec_id") < base + IVFPQ_COARSE_K)
+        )
+        .select(
+            (F.col("vec_id") - base).cast("int").alias("ccid"),
+            F.col("e").alias("c"),
+        )
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("ccid"), F.col("c")))
+            ).alias("coarse")
+        )
+    )
+    # Every cell's distance, each carrying its centroid: the winner's
+    # residual is computed in the same projection, never by a join.
+    cells = centroid_dists(F.col("e"), F.col("coarse"), "ccid", carry=["c"])
+    residual = F.zip_with("e", "w.c", lambda a, b: a - b).alias("e_res")
     db = vecs.filter(F.col("vec_id") >= N_QUERY_VECS).repartition(
         n_parts, "vec_id"
     )
-    # Coarse assignment + residual in one projection: the argmin winner
-    # carries its centroid vector, so the residual never needs a join.
     assigned = db.crossJoin(F.broadcast(coarse_row)).select(
-        "vec_id",
-        F.array_min(_ivfpq_cell_dists(F.col("e"))).alias("w"),
-        "e",
-    ).select(
-        "vec_id",
-        F.col("w.ccid").alias("ccid"),
-        F.zip_with("e", "w.c", lambda a, b: a - b).alias("e_res"),
-    )
-    res_slices = F.array(
-        *[
-            F.slice(F.col("e_res"), s * PQ_SUBDIM + 1, PQ_SUBDIM)
-            for s in range(PQ_M)
-        ]
-    )
+        "vec_id", F.array_min(cells).alias("w"), "e"
+    ).select("vec_id", F.col("w.ccid").alias("ccid"), residual)
     dbsub = assigned.select(
-        "vec_id", "ccid", F.posexplode(res_slices).alias("s", "sub")
+        "vec_id", "ccid", F.posexplode(_pq_slices("e_res")).alias("s", "sub")
     )
     # Per-cell seeds: the PQ_K lowest vec_ids assigned to each coarse
     # cell (deterministic; the oracle replays it as one ROW_NUMBER).
@@ -2238,18 +2087,9 @@ def _ivfpq_ranked(
         salt=F.col("vec_id") % PQ_RANK_SALT,
     ).select("vec_id", (F.col("rk") - 1).alias("cid"))
     init_long = dbsub.join(F.broadcast(seeds), "vec_id").select(
-        "ccid", "cid", "s", F.posexplode("sub").alias("spos", "cval")
+        "ccid", "cid", "s", F.posexplode("sub").alias("pos", "cval")
     )
-    a0 = _ivfpq_assign(dbsub, _ivfpq_cb_row(init_long))
-    c1_long = (
-        a0.select(
-            "ccid", "s", "cid", F.posexplode("sub").alias("spos", "val")
-        )
-        .groupBy("ccid", "s", "cid", "spos")
-        .agg(F.round(F.avg("val"), 6).alias("cval"))
-    )
-    cb1 = _ivfpq_cb_row(c1_long)
-    codes = _ivfpq_assign(dbsub, cb1).select("vec_id", "ccid", "s", "cid")
+    cb, codes = _pq_train(dbsub, init_long, ["ccid", "s"])
     # Query side: NPROBE nearest cells, per-cell residual, per-cell table.
     q = vecs.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("q_id"), "e"
@@ -2259,74 +2099,16 @@ def _ivfpq_ranked(
         .select(
             "q_id",
             "e",
-            F.posexplode(
-                F.slice(
-                    F.array_sort(_ivfpq_cell_dists(F.col("e"))),
-                    1,
-                    IVFPQ_NPROBE,
-                )
-            ).alias("_p", "w"),
+            F.posexplode(F.slice(F.array_sort(cells), 1, IVFPQ_NPROBE)).alias(
+                "_p", "w"
+            ),
         )
-        .select(
-            "q_id",
-            F.col("w.ccid").alias("ccid"),
-            F.zip_with("e", "w.c", lambda a, b: a - b).alias("e_res"),
-        )
+        .select("q_id", F.col("w.ccid").alias("ccid"), residual)
     )
     qsub = qcells.select(
-        "q_id",
-        "ccid",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col("e_res"), s * PQ_SUBDIM + 1, PQ_SUBDIM)
-                    for s in range(PQ_M)
-                ]
-            )
-        ).alias("s", "sub"),
+        "q_id", "ccid", F.posexplode(_pq_slices("e_res")).alias("s", "sub")
     )
-    qtab = (
-        qsub.crossJoin(F.broadcast(cb1))
-        .select(
-            "q_id",
-            "ccid",
-            "s",
-            "sub",
-            F.explode(
-                F.filter(
-                    F.col("cb"),
-                    lambda x: (x.getField("s") == F.col("s"))
-                    & (x.getField("ccid") == F.col("ccid")),
-                )
-            ).alias("ent"),
-        )
-        .select(
-            "q_id",
-            "ccid",
-            "s",
-            F.col("ent.cid").alias("cid"),
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("sub"),
-                        F.col("ent.c"),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                * 1e6
-            )
-            .cast("long")
-            .alias("du"),
-        )
-    )
-    ad = (
-        codes.join(F.broadcast(qtab), ["ccid", "s", "cid"])
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("du").alias("approx_du"))
-    )
-    return _adc_topk(ad, topk)
+    return _adc_ranked(codes, qsub, cb, ["ccid", "s"], topk)
 
 
 @query(
@@ -2407,21 +2189,7 @@ def _ivfpq_rerank_ranked(
     # stays partitioned and only shortlist members' raw vectors are read.
     sl_q = shortlist.join(F.broadcast(q), "q_id")
     d2u = (
-        F.round(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("qv"),
-                        F.col("cv"),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            )
-            * 1e6
-        )
+        F.round(F.round(sqdist(F.col("qv"), F.col("cv")), 6) * 1e6)
         .cast("long")
         .alias("d2u")
     )
@@ -2532,14 +2300,7 @@ def _exact_l2_topk(
         .repartition(n_parts)
         .select(F.col("vec_id").alias("c_id"), F.col("e").alias("cv"))
     )
-    d6 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
+    d6 = F.round(sqdist(F.col("qv"), F.col("cv")), 6)
     scored = (
         c.crossJoin(F.broadcast(q)).select("q_id", "c_id", d6.alias("d6"))
     )
@@ -3221,14 +2982,7 @@ def mllib_brp_lsh_parity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an intentional bounded cross, never a corpus-scale product).
     a = vecs.select(F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"))
     b = vecs.select(F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"))
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("ea"), F.col("eb"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
+    d2 = F.round(sqdist(F.col("ea"), F.col("eb")), 6)
     close = (
         a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b", d2.alias("d2"))
@@ -3835,30 +3589,7 @@ def _knn_cells(spark: SparkSession, sf_dir: str):
     LOCALITY: a vector's near neighbors mostly share its cell, which is
     what makes routed serving work (`ann_graph_search_cell_routed_recall`
     vs the hash-routed collapse in `ann_graph_search_routed_recall`)."""
-    register_views(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_parts = partition_count(spark)
-    vecs = emb.repartition(n_parts, "vec_id").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
-    init = (
-        emb.orderBy("vec_id")
-        .limit(KMEANS_K)
-        .select("vec_id", as_double(F.col("embedding")).alias("c"))
-        .withColumn("cid", F.row_number().over(W.orderBy("vec_id")) - 1)
-    )
-    cents0 = init.agg(
-        F.array_sort(F.collect_list(F.struct(F.col("cid"), F.col("c")))).alias(
-            "cents"
-        )
-    )
-    a1 = _kmeans_assign(vecs, cents0)
-    c1_long = (
-        a1.select("cid", F.posexplode("e").alias("pos", "val"))
-        .groupBy("cid", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("cval"))
-    )
-    a2 = _kmeans_assign(vecs, _kmeans_cents_row(c1_long))
+    a2, c1_long = _kmeans_2iter(spark, sf_dir)
     return a2.select("vec_id", F.col("cid").alias("cell")), c1_long
 
 
@@ -5190,20 +4921,7 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into the 6 dp ratio.
     projs = [
         F.round(
-            F.aggregate(
-                F.zip_with(
-                    e,
-                    F.array(
-                        *[
-                            F.lit(float(_jl_sign(i, j)))
-                            for i in range(EMB_DIM)
-                        ]
-                    ),
-                    lambda x, s: x * s,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
+            dot(e, F.array(*[F.lit(float(_jl_sign(i, j))) for i in range(EMB_DIM)])),
             6,
         ).alias(f"p{j}")
         for j in range(k_max)
@@ -5219,21 +4937,15 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("vb"), F.col("e").alias("eb"),
         F.col("p").alias("pb"),
     )
-    sq = lambda x, y: (x - y) * (x - y)  # noqa: E731
     pairs = (
         a.join(F.broadcast(b), F.col("va") < F.col("vb"))
         .select(
             "va",
             "vb",
-            F.round(
-                F.aggregate(
-                    F.zip_with(F.col("ea"), F.col("eb"), sq),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("d2"),
-            F.zip_with(F.col("pa"), F.col("pb"), sq).alias("dd"),
+            F.round(sqdist(F.col("ea"), F.col("eb")), 6).alias("d2"),
+            F.zip_with(
+                F.col("pa"), F.col("pb"), lambda x, y: (x - y) * (x - y)
+            ).alias("dd"),
         )
         .where(F.col("d2") > 0)
     )
@@ -7765,25 +7477,13 @@ def _gs_cell_probe(
     q = vecs.where(F.col("vec_id") < KNN_EVAL_N).select(
         F.col("vec_id").alias("node"), "e"
     )
-    dists = F.transform(
-        F.col("cents"),
-        lambda s: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("e"), s.getField("c"), lambda x, y: (x - y) * (x - y)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            ).alias("d"),
-            s.getField("cid").alias("cid"),
-        ),
-    )
+    cb = codebook_row(cents_long, ["cid"], "cval", "c", "cb")
     dc = (
-        q.crossJoin(F.broadcast(_kmeans_cents_row(cents_long)))
-        .select("node", F.explode(dists).alias("dc"))
+        q.crossJoin(F.broadcast(cb))
+        .select(
+            "node",
+            F.explode(centroid_dists(F.col("e"), F.col("cb"), "cid")).alias("dc"),
+        )
         .select("node", F.col("dc.d").alias("d"), F.col("dc.cid").alias("cid"))
     )
     return top_k(dc, "node", ["d", "cid"], p, rank="pr").select(

@@ -2066,7 +2066,7 @@ def _lrq_fit2(spark: SparkSession, feat: DataFrame) -> DataFrame:
     feature lineage, but caching it measured SLOWER at sf0.1 (0.87s ->
     1.16s) — materializing the cache breaks whole-stage fusion of
     features into each gradient aggregate, and the recompute is a
-    single cheap tokenize/projection (unlike _pq_cb_row's multi-pass
+    single cheap tokenize/projection (unlike the PQ codebook's multi-pass
     training lineage, where the same experiment won 2x). At corpus
     scales where tokenization dominates, persisting/writing the feature
     table is the standard move — re-measure there, don't assume."""

@@ -14,7 +14,7 @@ session timezone is pinned to UTC in sources.register_views.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.operators.rank import top_k
@@ -31,6 +31,30 @@ SESSION_GAP_S = 1800
 # the native session_window operator, which always merged at full
 # precision.
 SESSION_GAP_US = SESSION_GAP_S * 1_000_000
+
+
+def _event_us() -> Column:
+    """Event time in epoch microseconds, the grain of every gap and
+    ordering comparison in the sessionize/funnel family."""
+    return F.unix_micros(F.col("ts").cast("timestamp"))
+
+
+def sessionized(ev: DataFrame) -> DataFrame:
+    """``ev`` plus ``session_id``: each user's events in (ts, event_id)
+    order, a new session after a gap above SESSION_GAP_US; the id is the
+    running count of session starts (a lag, a split, a running sum)."""
+    w_order = W.partitionBy("user_id").orderBy("ts", "event_id")
+    usec = _event_us()
+    prev_usec = F.lag(usec).over(w_order)
+    is_new = F.when(
+        prev_usec.isNull() | ((usec - prev_usec) > SESSION_GAP_US), 1
+    ).otherwise(0)
+    return ev.withColumn(
+        "session_id",
+        F.sum(is_new)
+        .over(w_order.rowsBetween(W.unboundedPreceding, W.currentRow))
+        .cast("long"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -123,19 +147,7 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
-    w_order = W.partitionBy("user_id").orderBy("ts", "event_id")
-    usec = F.unix_micros(F.col("ts").cast("timestamp"))
-    prev_usec = F.lag(usec).over(w_order)
-    is_new = F.when(
-        prev_usec.isNull() | ((usec - prev_usec) > SESSION_GAP_US), 1
-    ).otherwise(0)
-    with_session = ev.withColumn(
-        "session_id",
-        F.sum(is_new)
-        .over(w_order.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .cast("long"),
-    )
-    return with_session.groupBy("user_id", "session_id").agg(
+    return sessionized(ev).groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
         F.unix_timestamp(F.min("ts")).alias("start_epoch"),
         (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts")))
@@ -390,23 +402,12 @@ def events_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-safe on both sides, so click-free or purchase-free sessions are 0."""
     register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
-    w_order = W.partitionBy("user_id").orderBy("ts", "event_id")
-    usec = F.unix_micros(F.col("ts").cast("timestamp"))
-    prev_usec = F.lag(usec).over(w_order)
-    is_new = F.when(
-        prev_usec.isNull() | ((usec - prev_usec) > SESSION_GAP_US), 1
-    ).otherwise(0)
-    with_session = ev.withColumn(
-        "session_id",
-        F.sum(is_new)
-        .over(w_order.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .cast("long"),
-    )
+    usec = _event_us()
     click_sec = F.when(F.col("event_type") == "click", usec)
     purchase_sec = F.when(F.col("event_type") == "purchase", usec)
     first_click = F.min(click_sec)
     last_purchase = F.max(purchase_sec)
-    return with_session.groupBy("user_id", "session_id").agg(
+    return sessionized(ev).groupBy("user_id", "session_id").agg(
         F.count(click_sec).alias("n_clicks"),
         F.count(purchase_sec).alias("n_purchases"),
         F.when(first_click <= last_purchase, F.lit(1))
@@ -713,20 +714,9 @@ def events_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing a step, so each stage is a subset of the previous."""
     register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
-    w_order = W.partitionBy("user_id").orderBy("ts", "event_id")
-    usec = F.unix_micros(F.col("ts").cast("timestamp"))
-    prev_usec = F.lag(usec).over(w_order)
-    is_new = F.when(
-        prev_usec.isNull() | ((usec - prev_usec) > SESSION_GAP_US), 1
-    ).otherwise(0)
-    with_session = ev.withColumn(
-        "session_id",
-        F.sum(is_new)
-        .over(w_order.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .cast("long"),
-    )
+    usec = _event_us()
     step = lambda t: F.min(F.when(F.col("event_type") == t, usec))  # noqa: E731
-    f = with_session.groupBy("user_id", "session_id").agg(
+    f = sessionized(ev).groupBy("user_id", "session_id").agg(
         step("view").alias("t_view"),
         step("click").alias("t_click"),
         step("purchase").alias("t_buy"),
@@ -1227,18 +1217,8 @@ CEP_PATTERN = r"(^| )click( (view|click|signup))* purchase( |$)"
 def events_cep_pattern_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
-    w_order = W.partitionBy("user_id").orderBy("ts", "event_id")
-    usec = F.unix_micros(F.col("ts").cast("timestamp"))
-    prev_usec = F.lag(usec).over(w_order)
-    is_new = F.when(
-        prev_usec.isNull() | ((usec - prev_usec) > SESSION_GAP_US), 1
-    ).otherwise(0)
-    s = ev.withColumn(
-        "session_id",
-        F.sum(is_new)
-        .over(w_order.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .cast("long"),
-    ).select(
+    usec = _event_us()
+    s = sessionized(ev).select(
         "user_id",
         "session_id",
         usec.alias("us"),

@@ -173,13 +173,19 @@ def cut(df: DataFrame, sf_dir: str, table: str, *, eager: bool) -> DataFrame:
       recoverable on executor loss, and no corpus-scale block pinned in
       executor storage.
 
-    ``eager`` picks the local cut's timing. Lazy suits a multi-consumer
-    frame: consumers share ONE RDD, so upstream shuffle stages dedup by
-    shuffle id inside the first action and the blocks cache for
-    everything after, without an extra sequential job per cut. Eager
-    suits a loop whose next round is planned from the cut: the round's
-    frame exists before the next plan is built, so AQE plans the tiny
-    joins from real stats. The durable branch is always eager.
+    ``eager`` picks when the local cut's FINAL stage runs; it does not
+    make the cut free at call time. Under AQE (the engine default) even a
+    lazy ``localCheckpoint`` builds its RDD through the adaptive plan,
+    which runs every upstream shuffle and broadcast stage of ``df`` when
+    ``cut`` is called — that work lands in the caller's build phase, as
+    jobs of their own. Lazy defers only the final stage to the first
+    action; consumers share ONE RDD and its blocks cache there for
+    everything after. It suits a multi-consumer frame whose final stage
+    is worth fusing into that first action. Eager runs the final stage
+    too, at the call: it suits a loop whose next round is planned from
+    the cut, since the round's frame exists before the next plan is
+    built, so AQE plans the tiny joins from real stats. The durable
+    branch is always eager.
 
     Values are identical either way; only materialization strategy moves.
     """

@@ -727,7 +727,8 @@ def test_snapshot_digests_cover_reachable_helpers():
         "parallel_mapreduce_spark.functions.similarity._plane",
         "parallel_mapreduce_spark.operators.rank.top_k",
         "parallel_mapreduce_spark.functions.similarity._knn_capped_buckets",
-        "parallel_mapreduce_spark.functions.similarity._kmeans_assign",
+        "parallel_mapreduce_spark.functions.similarity.centroid_dists",
+        "parallel_mapreduce_spark.functions.similarity.sqdist",
     ):
         assert name in build, name
     truth = S._source_closure(S._knn_truth_index)

@@ -204,7 +204,7 @@ HEADLINE_EXCHANGE_CEILING = {
     "kmeans_lloyd_2iter": 17,
     # round-7 session 2: segment dedup is digest-agg + reassembly +
     # id-join; IVF-PQ's count is plan-TEXT occurrences across the
-    # composed train/encode/score branches (each _pq_assign pass
+    # composed train/encode/score branches (each _nearest pass
     # re-prints the coarse-assignment and codebook broadcast subtrees —
     # the kmeans/bigram precedent for iterative/composed plans).
     "segment_dedup_reassemble": 6,
@@ -389,13 +389,21 @@ RANK_AS_VALUE = {
     ("functions/text.py", "zipf_slope_by_source"),
     ("functions/trainprep.py", "epoch_shuffle_order"),
     ("sources/roundtrip.py", "dpp_join_parts"),
-    ("functions/similarity.py", "kmeans_lloyd_2iter"),
+    ("functions/similarity.py", "_kmeans_2iter"),
     ("functions/similarity.py", "semdedup_cluster_report"),
-    ("functions/similarity.py", "_knn_cells"),
     ("functions/similarity.py", "knn_graph_nn_descent"),
     ("functions/similarity.py", "knn_graph_incremental_ingest"),
     ("functions/similarity.py", "_rng_pruned_graph"),
     ("functions/similarity.py", "knn_graph_rng_prune"),
+}
+# The vector folds (F.aggregate over an F.zip_with): the dot product, its
+# integer twin and the squared-L2 distance. Every other site calls them,
+# so the fold order and the 6-dp / micro-unit rounding the oracles replay
+# live in one place each.
+VECTOR_FOLDS = {
+    ("functions/similarity.py", "dot"),
+    ("functions/similarity.py", "_int_dot"),
+    ("functions/similarity.py", "sqdist"),
 }
 # The engine's partition policy and the traversal's query-bounded
 # partition count (its own clamp) read the parallelism.
@@ -498,6 +506,15 @@ def _idiom_violations(rel: str, src: str) -> list[str]:
                 bad.append(f"{where} defaultParallelism: use partition_count")
             if isinstance(node, ast.Call):
                 callee = getattr(node.func, "id", getattr(node.func, "attr", None))
+                first = node.args[0] if node.args else None
+                if (
+                    callee == "aggregate"
+                    and isinstance(first, ast.Call)
+                    and getattr(first.func, "attr", getattr(first.func, "id", None))
+                    == "zip_with"
+                    and (rel, func) not in VECTOR_FOLDS
+                ):
+                    bad.append(f"{where} inline vector fold: use sqdist / dot")
                 if callee in GS_GATED and (rel, func) not in GS_SERVING:
                     bad.append(f"{where} {callee}(): serve through _gs_search")
                 if (
@@ -568,3 +585,23 @@ def test_guard_fails_on_literal_shuffle_partition_count():
         assert _idiom_violations("x.py", src), src
     for src in sized:
         assert not _idiom_violations("x.py", src), src
+
+
+def test_guard_fails_on_inline_vector_fold():
+    """The idiom guard's fold rule: an F.aggregate over an F.zip_with
+    outside dot / _int_dot / sqdist fails; calling the kernels, or an
+    aggregate over a plain array, passes."""
+    fold = (
+        "def f(a, b):\n"
+        "    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),"
+        " F.lit(0.0), lambda acc, v: acc + v)"
+    )
+    assert _idiom_violations("functions/similarity.py", fold)
+    assert not _idiom_violations(
+        "functions/similarity.py", fold.replace("def f(", "def sqdist(")
+    )
+    for ok in (
+        "def f(a, b):\n    return F.round(sqdist(a, b), 6)",
+        "def f(v):\n    return F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x)",
+    ):
+        assert not _idiom_violations("functions/similarity.py", ok), ok

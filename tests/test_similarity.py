@@ -458,3 +458,74 @@ def test_lsh_bucket_ids_match_per_element_plane_literals(spark, sf_dir):
         )
         assert df.count() > 0
         assert df.where(F.col("new") != F.col("old")).count() == 0
+
+
+def test_sqdist_is_bit_equal_to_python_left_fold(spark):
+    """sqdist folds (x - y)^2 in array order from 0.0, exactly like a
+    Python left fold: bit-equal on ordinary values, an order-sensitive
+    sum (1e16 + 1 + 1 rounds away both ones; the reverse order keeps
+    them), negative zero, subnormals (whose squares underflow) and a
+    square that overflows to inf; NaN propagates."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from parallel_mapreduce_spark.functions.similarity import sqdist
+
+    cases = [
+        ([0.1, 0.2, 0.3], [0.3, -0.7, 1e-05]),
+        ([1e8, 1.0, 1.0], [0.0, 0.0, 0.0]),
+        ([-0.0, 0.0, -0.0], [0.0, -0.0, 1.5]),
+        ([5e-324, 2.2250738585072014e-308, 1e-160], [0.0, -5e-324, 0.0]),
+        ([1e200, 3.0], [-1e200, 1.0]),
+        ([1.0, float("nan"), 2.0], [0.5, 0.0, 2.0]),
+    ]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(cases)],
+        "i int, a array<double>, b array<double>",
+    )
+    d = sqdist(F.col("a"), F.col("b")).alias("d")
+    got = {r.i: r.d for r in df.select("i", d).collect()}
+    for i, (a, b) in enumerate(cases):
+        want = 0.0
+        for x, y in zip(a, b):
+            want = want + (x - y) * (x - y)
+        if math.isnan(want):
+            assert math.isnan(got[i]), (i, got[i])
+        else:
+            assert _double_bits([got[i]]) == _double_bits([want]), (i, got[i], want)
+    assert got[1] == 1e16 and got[4] == float("inf")
+
+
+def test_centroid_dists_argmin_ties_where_and_carry(spark):
+    """array_min over centroid_dists is the nearest centroid: two
+    equidistant centroids resolve to the LOWER id whatever their array
+    order, an entry dropped by ``where`` never wins even when nearest, and
+    ``carry`` hands back the winner's own centroid."""
+    from pyspark.sql import functions as F
+
+    from parallel_mapreduce_spark.functions.similarity import centroid_dists
+
+    book = [(7, [1.0, 0.0]), (3, [0.0, -1.0]), (9, [0.1, 0.0]), (5, [4.0, 4.0])]
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0], book), (1, [3.0, 3.0], book)],
+        "i int, e array<double>, cb array<struct<cid:int, c:array<double>>>",
+    )
+    e, cb = F.col("e"), F.col("cb")
+    not_9 = lambda x: x.getField("cid") != 9  # noqa: E731
+    rows = {
+        r.i: r
+        for r in df.select(
+            "i",
+            F.array_min(centroid_dists(e, cb, "cid"))["cid"].alias("nearest"),
+            F.array_min(centroid_dists(e, cb, "cid", where=not_9))["cid"].alias("tie"),
+            F.array_min(
+                centroid_dists(e, cb, "cid", where=not_9, carry=["c"])
+            ).alias("w"),
+        ).collect()
+    }
+    assert rows[0].nearest == 9  # 9 is nearest (0.01) ...
+    assert rows[0].tie == 3  # ... but excluded: 7 and 3 tie at 1.0, lower id wins
+    assert (rows[0].w.d, rows[0].w.cid, rows[0].w.c) == (1.0, 3, [0.0, -1.0])
+    assert rows[1].nearest == rows[1].tie == 5
+    assert rows[1].w.c == [4.0, 4.0]
