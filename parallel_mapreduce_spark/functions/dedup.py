@@ -40,11 +40,7 @@ from parallel_mapreduce_spark.session import (
     partition_count,
     reliable_checkpoint,
 )
-from parallel_mapreduce_spark.sources import (
-    cut,
-    load_table,
-    register_views,
-)
+from parallel_mapreduce_spark.sources import cut, load_table
 
 JACCARD_THRESHOLD = 0.5
 N_PERMUTATIONS = 16
@@ -99,7 +95,6 @@ _SQL_SHINGLES = (
     """,
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(
@@ -175,7 +170,6 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     text duplicate group (>= 2 members): norm_only marks groups byte-
     exact dedup cannot see (>= 2 distinct raw digests merged by
     normalization)."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     variants = docs.filter(
         F.col("doc_id") % NORM_VARIANT_MOD == NORM_VARIANT_RESIDUE
@@ -320,7 +314,6 @@ def within_group_pairs(
     headline=True,
 )
 def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = partition_count(spark)
     # Collapse exact-duplicate texts BEFORE the shingle inverted index: on a
@@ -388,7 +381,6 @@ SHINGLE_FREQ_CAP = 100
     headline=True,  # bench the 100 TB-safe capped plan alongside the exact one
 )
 def neardup_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = partition_count(spark)
     # Same round-14 cut as neardup_jaccard_pairs; the freq-cap
@@ -579,7 +571,6 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Band join runs on distinct-text representatives only (exact copies share
     every band by construction), then expands to member pairs — same
     collapse-first shape as the Jaccard path."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = partition_count(spark)
     # Round-14 cut: members feeds four join legs and
@@ -684,7 +675,6 @@ PR_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
 def minhash_lsh_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(threshold, n_true, n_cand_true, n_cand, recall, precision) per
     exact-Jaccard threshold: the banded index's measured S-curve."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = partition_count(spark)
     members = exact_dup_members(docs)
@@ -834,7 +824,6 @@ def mllib_minhash_parity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the portable banded index against pyspark.ml's MinHashLSH."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = partition_count(spark)
     members = exact_dup_members(docs)
@@ -998,7 +987,6 @@ def simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"WITH {_SQL_SIMHASH_SIG} SELECT doc_id, simhash FROM sig",
 )
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return simhash_df(spark, sf_dir)
 
 
@@ -1041,7 +1029,6 @@ SIMHASH_MAX_HAMMING = 3  # pigeonhole-complete for 4 bands
     """,
 )
 def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = partition_count(spark)
     members = exact_dup_members(docs)
@@ -1150,7 +1137,6 @@ _CLUSTER_PAIRS_SQL = f"""
     """,
 )
 def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     pairs = neardup_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     return connected_components(pairs)
 
@@ -1251,7 +1237,6 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     """,
 )
 def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     names = load_table(spark, sf_dir, "supplier").select("s_name").distinct()
     name = F.col("s_name")
     deletions = F.transform(
@@ -1345,7 +1330,6 @@ def name_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def exact_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     members = exact_dup_members(docs)
     joined = members.join(docs.select("doc_id", "source"), "doc_id")
@@ -1417,7 +1401,6 @@ def exact_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = partition_count(spark)
     reps = _rep_texts(docs, n)
@@ -1533,7 +1516,6 @@ INGEST_NEARDUP_MOD = 10  # doc_id % 10 == 0 is the incoming batch
     """,
 )
 def incremental_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = partition_count(spark)
     # No exact-dup collapse here: the batch/index split is keyed on the
@@ -1657,7 +1639,6 @@ def _segdedup_working(docs: DataFrame) -> DataFrame:
     """,
 )
 def segment_dedup_reassemble(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     with_segs = _segdedup_working(docs).select(
         "doc_id",
@@ -1747,7 +1728,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source_a, source_b, n_shared, n_a, n_b, containment) for every
     source pair; containment = shared distinct shingles over the smaller
     side's distinct-shingle count."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     sh = (
         docs.select(
@@ -2093,7 +2073,6 @@ def exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing at least one exact >= {SUBSTR_W}-token run: the number of
     maximal verbatim runs and the longest one's exact token length.
     Within-doc repeats surface as doc_a == doc_b rows (round 10)."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     runs = _substr_run_rows(_substr_working(docs))
     return runs.groupBy("doc_a", "doc_b").agg(
@@ -2134,7 +2113,6 @@ def longest_dup_span_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, longest_shared_tokens, has_shared_run) for EVERY working-
     set document: the per-doc longest verbatim run shared with ANOTHER
     document or repeated WITHIN the document itself (round 10)."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     working = _substr_working(docs)
     runs = _substr_run_rows(working)
@@ -2254,7 +2232,6 @@ def substring_run_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, n_kept, clean_md5) for every working-set doc
     after cutting all detected >= SUBSTR_W-token duplicated runs (first
     occurrence kept) and reassembling the survivors in order."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     # Round-14 NEGATIVE result (OPTIMIZATION_r14.md §8): cutting
     # working (doc_id + raw text, three consumers) measured SLOWER at
@@ -2350,7 +2327,6 @@ SIMF_BUCKET = 6  # Hamming bucket width: 10 buckets over 0..60 bits
 def simhash_angle_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(hamming_bucket, n_pairs, mean_exact_cos) over every pair of the
     bounded eval slice: the committed signature-vs-true-angle curve."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < SIMF_MAX_ID
     )
@@ -2465,7 +2441,6 @@ _SN_PAIRS_SQL = f"""
 def _sn_pairs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_mapreduce_spark.operators.rank import global_row_number
 
-    register_views(spark, sf_dir)
     names = load_table(spark, sf_dir, "supplier").select("s_name").distinct()
     r = global_row_number(names, [F.asc("s_name")], out="rnk")
     targets = r.select(
@@ -2618,7 +2593,6 @@ def _sn_mp_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-normalized. Each pass ranks hierarchically (no global sort)."""
     from parallel_mapreduce_spark.operators.rank import global_row_number
 
-    register_views(spark, sf_dir)
     # NOT persisted despite 3x reuse: the distinct-names plan is
     # byte-identical to fuzzy_name_pairs' subplan, and a lingering cache
     # entry substitutes an InMemoryRelation into THAT query's plan,

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.sources import load_table
 
 # Marker: the decode stage is a deterministic fake (no codec libs in env).
 FAKE_DECODE = True
@@ -112,7 +112,6 @@ def frame_sample(docs: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     """,
 )
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -140,7 +139,6 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return extract_features(load_table(spark, sf_dir, "documents"))
 
 
@@ -162,7 +160,6 @@ FRAME_STRIDE = 64
     """,
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     return frame_sample(docs, every_n_bytes=FRAME_STRIDE)
 
@@ -224,7 +221,6 @@ _SQL_H = f"(16 + {_SHA_BYTE.format(pos=3)} % 240)"
     """,
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     return with_blob(docs).select("doc_id", "blob").mapInPandas(
         resize_plan, schema=RESIZE_SCHEMA

@@ -41,11 +41,7 @@ from parallel_mapreduce_spark.functions.text import (
 from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import partition_count
-from parallel_mapreduce_spark.sources import (
-    cut,
-    load_table,
-    register_views,
-)
+from parallel_mapreduce_spark.sources import cut, load_table
 
 PIPELINE_QUALITY_MIN = 0.5
 
@@ -105,7 +101,6 @@ _SHINGLES = (
 )
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kept documents (doc_id, lang, n_tokens) after the full cleaning chain."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     # Stage 0: tokenize once; every later stage reuses the array column.
@@ -211,7 +206,6 @@ def pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from parallel_mapreduce_spark.functions.portable import phash60
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     t = docs.repartition(n_parts, "doc_id").select(
@@ -382,7 +376,6 @@ def pipeline_chunk_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     assert CHUNK_STRIDE == 96 and CHUNK_TOKENS == 128  # oracle inlines these
-    register_views(spark, sf_dir)
     n_parts = partition_count(spark)
     chunks = chunk_documents(spark, sf_dir).select(
         "doc_id", "chunk_idx", "chunk_hash"
@@ -495,7 +488,6 @@ def pipeline_tokenize_pack_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
         and PACK_CAPACITY_TOKENS == 512
         and N_TRAIN_SHARDS == 16
     )
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     t = (
@@ -681,7 +673,6 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from parallel_mapreduce_spark.functions.text import _spread
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     n_parts = partition_count(spark)

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.sources import load_table
 
 
 def _vowel_ratio_kernel(text: pd.Series) -> pd.Series:
@@ -64,7 +64,6 @@ def vowel_ratio_udf():
     """,
 )
 def pandas_udf_vowel_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", F.round(vowel_ratio_udf()(F.col("text")), 4).alias("vratio")
@@ -100,7 +99,6 @@ def pandas_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     encodes): AVG/STDDEV window over lang. The Python detour exists to pin
     the applyInPandas contract against an exact oracle.
     """
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     return docs.groupBy("lang").applyInPandas(_zscore_group, schema=ZSCORE_SCHEMA)
 
@@ -167,7 +165,6 @@ def udtf_split_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.functions import udtf
 
-    register_views(spark, sf_dir)
     # Registered per-call: the udtf wrapper parses its DDL return type
     # against the active session (same reason vowel_ratio_udf is lazy).
     spark.udtf.register("split_sentences", udtf(_SplitSentences, returnType=UDTF_RETURN))
@@ -218,7 +215,6 @@ def arrow_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared schema out, batch-for-batch — with zero pandas materialization;
     per-partition streaming, no shuffle, blob columns never widened.
     """
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return docs.mapInArrow(
         _arrow_lengths_kernel, schema="doc_id bigint, n_cp bigint, n_bytes bigint"
@@ -270,7 +266,6 @@ def count_udf():
 def pandas_grouped_agg_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interquartile range of document length per language via a
     grouped-agg pandas UDF (built-in twin: F.percentile deltas)."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     chars = F.col("n_chars").cast("double")
     return docs.groupBy("lang").agg(
@@ -302,7 +297,6 @@ def pandas_grouped_agg_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ps_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.pandas as ps  # noqa: F401  (activates the API)
 
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     )
@@ -371,7 +365,6 @@ def _cogroup_user_value_share(left: pd.DataFrame, right: pd.DataFrame) -> pd.Dat
     """,
 )
 def cogrouped_user_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").select("user_id", "value")
     # Deterministic partial dimension: users with user_id % 3 == 2 are
     # deliberately ABSENT so the kernel's missing-right-side branch runs.
@@ -471,7 +464,6 @@ def udtf_poly_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the corpus; one partition-parallel Python stage, no shuffle."""
     from pyspark.sql.functions import udtf
 
-    register_views(spark, sf_dir)
     spark.udtf.register("poly_ngrams", udtf(_PolyNgrams))
     return spark.sql(
         f"""
@@ -546,7 +538,6 @@ class _LangFold:
 def udtf_table_arg_lang_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
-    register_views(spark, sf_dir)
     spark.udtf.register(
         "pmr_lang_fold",
         udtf(
@@ -680,7 +671,6 @@ def token_weight_iter_udf():
     """,
 )
 def scalar_iter_token_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", token_weight_iter_udf()(F.col("text")).alias("score")
@@ -725,7 +715,6 @@ def barrier_allgather_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per barrier task: the global (rows, chars) aggregate that
     task reconstructed from allGather — identical in every task, equal to
     the exact corpus aggregate."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
 
     def step(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -40,12 +40,7 @@ from pyspark.sql import functions as F
 from parallel_mapreduce_spark.functions.similarity import as_double, vector_sql
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import bounded_persist, parallelism
-from parallel_mapreduce_spark.sources import (
-    cut,
-    load_table,
-    register_views,
-    table_bytes,
-)
+from parallel_mapreduce_spark.sources import cut, load_table, table_bytes
 
 KC_K = 12  # selected coreset size (k centers, seed included)
 
@@ -153,7 +148,6 @@ def kcenter_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus of each point's min 6dp-rounded squared-L2 distance to the
     selected set; it is non-increasing in sel_rank (pinned in
     tests/test_selection.py)."""
-    register_views(spark, sf_dir)
     rows = _gonzalez(sf_dir, load_table(spark, sf_dir, "embeddings"), KC_K)
     return spark.createDataFrame(
         rows, "sel_rank long, center_id long, radius double"
@@ -202,7 +196,6 @@ def pipeline_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(sel_rank, doc_id, source, n_toks, radius): Gonzalez k-center over
     the embeddings of token-count-gate survivors — the diversity-sampled
     eval/few-shot pool, with the gate replayed inside the oracle."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
     surv = docs.select(

@@ -38,7 +38,7 @@ from parallel_mapreduce_spark.session import (
     partition_count,
     reliable_checkpoint,
 )
-from parallel_mapreduce_spark.sources import cut, load_table, register_views, table_bytes
+from parallel_mapreduce_spark.sources import cut, load_table, table_bytes
 
 N_QUERY_VECS = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -198,7 +198,6 @@ def _cosine_topk_frame(
     # scans as one split, and the per-pair dot products are the CPU-heavy
     # part worth spreading across all cores.
     if vecs is None:
-        register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
         vecs = emb.select("vec_id", as_double("embedding").alias("e"))
     n_parts = partition_count(spark)
@@ -327,7 +326,6 @@ def _lsh_topk_frame(
     spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
 ) -> DataFrame:
     if emb is None:
-        register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
     # EMB_DIM is a build-time constant (the oracle SQL already embeds planes
     # of this length as literals); probing the data with .first() here would
@@ -513,7 +511,6 @@ def _ivf_scored_frame(
     IVF_NPROBE probed cells, scored — the engine twin of the oracle's
     ``s`` CTE, shared by the plain and the filtered top-k."""
     if emb is None:
-        register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
     n_parts = partition_count(spark)
     vecs = emb.repartition(n_parts).select(
@@ -565,7 +562,6 @@ def _ivf_topk_frame(
     """,
 )
 def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.groupBy("label").agg(
         F.count("*").alias("n_vecs"),
@@ -599,7 +595,6 @@ EMB_DEDUP_N_PLANES = 8  # dedup variant: more planes than search — real
     """,
 )
 def emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < EMB_DEDUP_MAX_ID
     )
@@ -657,7 +652,6 @@ def emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def emb_neardup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     dim = EMB_DIM  # build-time constant; see ann_lsh_topk for why no probe
     n_parts = partition_count(spark)
@@ -785,7 +779,6 @@ _SQL_EMB_EXPLODED = """
     """,
 )
 def source_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     emb = load_table(spark, sf_dir, "embeddings")
     return (
@@ -816,7 +809,6 @@ def source_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def source_embedding_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_dispersion(docs, emb)
@@ -937,7 +929,6 @@ def _sq_topk_frame(
     spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
 ) -> DataFrame:
     if emb is None:
-        register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
     n_parts = partition_count(spark)
     # greatest(., eps): an all-zero vector would otherwise divide by zero
@@ -1020,7 +1011,6 @@ def _sq_topk_frame(
     """,
 )
 def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     n_parts = partition_count(spark)
     dims = (
@@ -1074,7 +1064,6 @@ KNN_MAX_ID = 300  # bounded eval set for the exact leave-one-out pass
     """,
 )
 def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < KNN_MAX_ID
     )
@@ -1172,7 +1161,6 @@ PCA_V0 = 0.125  # 1/sqrt(64): uniform unit start vector (exact in binary)
     """,
 )
 def embedding_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     n_parts = partition_count(spark)
     e = as_double(F.col("embedding"))
@@ -1261,7 +1249,6 @@ def _kmeans_2iter(spark: SparkSession, sf_dir: str):
     """(a2, c1_long): two Lloyd iterations from the K lowest-vec_id
     embeddings — a2 is (vec_id, e, cid), the final assignment; c1_long
     the (cid, pos, cval) centroids it used."""
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     n_parts = partition_count(spark)
     vecs = emb.repartition(n_parts, "vec_id").select(
@@ -1539,7 +1526,6 @@ SEMDEDUP_THRESHOLD = EMB_DEDUP_THRESHOLD  # same calibrated corpus threshold
 def semdedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     n_parts = partition_count(spark)
     # Corpus-derived cluster count (ONE bounded driver scalar): expected
@@ -1848,7 +1834,6 @@ def _pq_adc_ranked(
     vecs: DataFrame | None = None,
 ) -> DataFrame:
     if vecs is None:
-        register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
         vecs = emb.select(
             "vec_id", as_double(F.col("embedding")).alias("e")
@@ -2038,7 +2023,6 @@ def _ivfpq_ranked(
     topk: int = PQ_TOPK,
 ) -> DataFrame:
     if vecs is None:
-        register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
         vecs = emb.select(
             "vec_id", as_double(F.col("embedding")).alias("e")
@@ -2173,7 +2157,6 @@ def _ivfpq_rerank_ranked(
     spark: SparkSession, sf_dir: str, vecs: DataFrame | None = None
 ) -> DataFrame:
     if vecs is None:
-        register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
         vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("e"))
     shortlist = _ivfpq_ranked(
@@ -2288,7 +2271,6 @@ def _exact_l2_topk(
     ``vecs`` (vec_id, e: array<double>) overrides the embeddings table —
     the clustered-fixture legs pass their synthesized corpus here."""
     if vecs is None:
-        register_views(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings")
         vecs = emb.select("vec_id", as_double("embedding").alias("e"))
     n_parts = partition_count(spark)
@@ -2694,7 +2676,6 @@ def _clustered_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracks the SF; every element is centers[digit] + integer-hash noise,
     identical doubles to the oracle (same integers, one divide, one
     add)."""
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
     v = F.col("vec_id")
     cl = F.when(
@@ -3165,7 +3146,6 @@ def _knn_vecs(
     array functions are interpreted (not codegen'd), so a per-pair norm
     recomputation (4 extra array passes/pair) was measured at ~3x the
     whole scoring cost."""
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     if where is not None:
         emb = emb.where(where)
@@ -3431,9 +3411,12 @@ def _source_closure(root) -> dict:
     from ``root``: the names each code object (nested lambdas and defs
     included) loads, resolved through the function's module globals and,
     for a package module held in those globals (``sim.x``), through that
-    module's attributes. Over-approximates on purpose — a name that
-    resolves to a package function is kept even if the path that reads
-    it never runs — so no helper an edit could reach escapes a digest."""
+    module's attributes. A registered query is walked through its body
+    (``__wrapped__``), not the registry's entry wrapper, so session
+    set-up never enters a digest. Over-approximates on purpose — a name
+    that resolves to a package function is kept even if the path that
+    reads it never runs — so no helper an edit could reach escapes a
+    digest."""
     import inspect
     import types
 
@@ -3441,7 +3424,7 @@ def _source_closure(root) -> dict:
     seen: dict = {}
     todo = [root]
     while todo:
-        fn = todo.pop()
+        fn = inspect.unwrap(todo.pop())
         key = f"{fn.__module__}.{fn.__qualname__}"
         if key in seen:
             continue
@@ -4908,7 +4891,6 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(k_dim, n_pairs, mean_ratio, min_ratio, max_ratio,
     frac_within_20pct): measured JL distortion of a +/-1 projection at
     each nested target dimension over the fixed pair sample."""
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").where(
         F.col("vec_id") < JL_PAIR_N
     )
@@ -5033,7 +5015,6 @@ def _mp_topk_oracle(src: str = "embeddings") -> str:
 
 
 def _mp_topk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     n_parts = partition_count(spark)
     vecs = emb.repartition(n_parts).select(
@@ -5973,7 +5954,6 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics (the committed serving default): the predicate semi-joins
     the candidate stream BEFORE ranking, so ranks are over eligible
     vectors only."""
-    register_views(spark, sf_dir)
     sims = _ivf_scored_frame(spark, sf_dir)
     allowed = (
         load_table(spark, sf_dir, "documents")
@@ -6062,7 +6042,6 @@ def ann_filtered_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed default), postfilter at overfetch 1 (the starvation case:
     n_results ~ selectivity * k per query), and postfilter at the fixed
     FLT_OVERFETCH budget (the committed post-filter price)."""
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     n_parts = partition_count(spark)
     vecs = emb.repartition(n_parts).select(
@@ -6161,7 +6140,6 @@ GS_OOV_BASE = 100  # perturb corpus vectors 100..109 (disjoint from the
 
 def _gs_oov_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, qe, qn): the held-out query vectors, engine side."""
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").where(
         (F.col("vec_id") >= GS_OOV_BASE)
         & (F.col("vec_id") < GS_OOV_BASE + GS_OOV_N)
@@ -6497,7 +6475,6 @@ def ann_graph_search_filtered_recall(
     graph serving, traverse-the-full-graph vs eligible-subgraph-only,
     against exact filtered truth — the committed case for routing
     through ineligible nodes."""
-    register_views(spark, sf_dir)
     vecs = _knn_vecs(spark, sf_dir)
     graph = _knn_graph_snap(spark, sf_dir)
     allowed = bounded_persist(
@@ -7026,7 +7003,6 @@ def _knn_vecs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, qq, qs, qn): the int8-range quantized corpus — the same
     per-vector max-abs quantization as ann_sq_topk (scale/norm guarded
     against all-zero vectors), keyed like _knn_vecs."""
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     n_parts = partition_count(spark)
     scale = F.greatest(

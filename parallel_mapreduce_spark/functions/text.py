@@ -29,7 +29,7 @@ from parallel_mapreduce_spark.functions.portable import phash60, phash60_sql
 from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import partition_count
-from parallel_mapreduce_spark.sources import cut, load_table, register_views
+from parallel_mapreduce_spark.sources import cut, load_table
 
 # Shared stopword/marker vocabulary (tiny on purpose: the oracle must use the
 # exact same lists, inlined into the SQL strings below).
@@ -106,7 +106,6 @@ def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what the reference lacks (every ("w","1") pair crosses its shuffle,
     ``src/main.c:22``).
     """
-    register_views(spark, sf_dir)
     return token_df(spark, sf_dir).groupBy("word").agg(F.count("*").alias("cnt"))
 
 
@@ -130,7 +129,6 @@ def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multi_source_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("text")
     parts = load_table(spark, sf_dir, "part").select(F.col("p_name").alias("text"))
     src = docs.unionByName(parts)
@@ -155,7 +153,6 @@ def multi_source_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def wordcount_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     wc = token_df(spark, sf_dir).groupBy("word").agg(F.count("*").alias("cnt"))
     return wc.filter(F.col("word") == LOOKUP_TERM)
 
@@ -170,7 +167,6 @@ def wordcount_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return token_df(spark, sf_dir).select("word").distinct()
 
 
@@ -190,7 +186,6 @@ def distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
 )
 def top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     wc = token_df(spark, sf_dir).groupBy("word").agg(F.count("*").alias("cnt"))
     return wc.orderBy(F.col("cnt").desc(), F.col("word")).limit(20)
 
@@ -210,7 +205,6 @@ def top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens("text")
     lens = F.transform(toks, lambda t: F.octet_length(t).cast("double"))
@@ -256,7 +250,6 @@ _BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
     """,
 )
 def regex_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = _spread(spark, load_table(spark, sf_dir, "documents"), "doc_id", "text")
     pieces = F.regexp_extract_all(F.col("text"), F.lit(_BPE_RE), F.lit(0))
     # First-char classes via code-point range comparisons — exactly
@@ -299,7 +292,6 @@ def regex_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = _spread(spark, load_table(spark, sf_dir, "documents"), "doc_id", "text")
     bg = docs.select(F.explode(bigrams(tokens("text"))).alias("bigram"))
     return (
@@ -325,7 +317,6 @@ def bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     return docs.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -353,7 +344,6 @@ def lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def source_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     return docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -385,7 +375,6 @@ HIST_N_BUCKETS = 20  # last bucket absorbs the tail
     """,
 )
 def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     bucket = F.least(
         F.floor(F.col("n_chars") / HIST_BUCKET_WIDTH),
@@ -430,7 +419,6 @@ def tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_dup_members,
     )
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = partition_count(spark)
     # Collapse-first (same shape as the dedup paths): identical texts have
@@ -509,7 +497,6 @@ def quality_expr(toks: Column) -> Column:
     """,
 )
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens("text")
     return docs.select(
@@ -547,7 +534,6 @@ _SQL_ES = "['" + "', '".join(ES_MARKERS) + "']"
     """,
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = _spread(spark, load_table(spark, sf_dir, "documents"), "lang", "text")
     toks = tokens("text")
     en_arr = F.array(*[F.lit(s) for s in EN_MARKERS])
@@ -584,7 +570,6 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = _spread(spark, load_table(spark, sf_dir, "documents"), "doc_id", "text")
     toks = tokens("text")
     lens = F.transform(toks, lambda t: F.octet_length(t).cast("long"))
@@ -632,7 +617,6 @@ _SQL_SAMPLE_CASE = "CASE lang " + " ".join(
     """,
 )
 def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     bucket = phash60(
         F.concat(F.lit("sample:"), F.col("doc_id").cast("string"))
@@ -675,7 +659,6 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_mapreduce_spark.operators.rank import global_row_number
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     counts = (
         _spread(spark, docs, "text")
@@ -725,7 +708,6 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def source_token_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     c = (
         _spread(spark, docs, "source", "text")
@@ -790,7 +772,6 @@ _PROFILE_COLS = ("text", "lang", "source", "n_chars")
     """,
 )
 def corpus_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     parts = []
     for c in _PROFILE_COLS:
@@ -843,7 +824,6 @@ IQR_K = 0.5
     """,
 )
 def doc_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     q = docs.groupBy("lang").agg(
         F.percentile("n_chars", F.lit(0.25)).alias("q1"),
@@ -896,7 +876,6 @@ def doc_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_mapreduce_spark.functions.dedup import shingles3
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     sh = (
         _spread(spark, docs, "doc_id", "text")
@@ -944,7 +923,6 @@ def shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     st = (
         _spread(spark, docs, "source", "text")
@@ -1022,7 +1000,6 @@ def source_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src_a, src_b, w_inter, w_union, weighted_jaccard) for every
     source pair sharing at least one token: multiset Jaccard over
     (token -> tf) bags."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     tf = (
         _spread(spark, docs, "source", "text")
@@ -1106,7 +1083,6 @@ def _sql_pr4(expr: str) -> str:
     """,
 )
 def doc_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     t = (
         _spread(spark, docs, "doc_id", "text")
@@ -1169,7 +1145,6 @@ def doc_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def hapax_ratio_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     c = (
         _spread(spark, docs, "source", "text")
@@ -1202,7 +1177,6 @@ def hapax_ratio_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     return (
         _spread(spark, docs, "text")
@@ -1239,7 +1213,6 @@ def token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def zipf_slope_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     counts = (
         _spread(spark, docs, "source", "text")
@@ -1314,7 +1287,6 @@ PMI_TOP_N = 30
     """,
 )
 def token_pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     t = _spread(spark, docs, "doc_id", "text").select(
         tokens("text").alias("toks")
@@ -1411,7 +1383,6 @@ BPE_TOP_PAIRS = 20
     """,
 )
 def bpe_pair_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     wc = (
         token_df(spark, sf_dir)
         .groupBy("word")
@@ -1490,7 +1461,6 @@ CMS_PROBE_K = 10
     """,
 )
 def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     # _spread BEFORE the explode: the 4x per-token md5 fan-out below is the
     # CPU-heavy stage, and the single-row-group testdata scan would
@@ -1591,7 +1561,6 @@ def _bloom_positions_sql(expr: str) -> str:
     """,
 )
 def bloom_word_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     build = (
         docs.filter(F.col("lang") == "en")
@@ -1661,7 +1630,6 @@ def bloom_word_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def source_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     c = (
         _spread(spark, docs, "source", "text")
@@ -1709,7 +1677,6 @@ def source_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "lang", "n_chars", F.size(tokens("text")).cast("long").alias("n_toks")
@@ -1799,7 +1766,6 @@ _BM25_VALUES = ", ".join(f"('{q}', '{t}')" for q, t in BM25_QUERIES)
     """,
 )
 def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     probes = spark.createDataFrame(BM25_QUERIES, "qid string, qtext string")
     qterms = probes.select(
@@ -1978,7 +1944,6 @@ def repetition_metrics(with_toks: DataFrame, *keep: str) -> DataFrame:
     """,
 )
 def repetition_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     m = repetition_metrics(
         _spread(spark, docs, "source", "text").select(
@@ -2038,7 +2003,6 @@ CMS_TOP_K = 15
     """,
 )
 def frequent_tokens_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     toks = _spread(spark, docs, "source", "text").select(
         "source", F.explode(tokens("text")).alias("word")
@@ -2150,7 +2114,6 @@ def approx_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_top_k sketch and the per-source accumulate->combine->estimate
     rollup land within the FI error bound at that rank (counts compared
     rank-aligned after sorting, so ties cannot flip the flags)."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     toks = _spread(spark, docs, "source", "text").select(
         "source", F.explode(tokens("text")).alias("word")
@@ -2310,7 +2273,6 @@ def bpe_train_3merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per training round: (round, pair, pair_count,
     symbols_after) — the learned merge, its frequency-weighted count, and
     the corpus symbol total after applying it."""
-    register_views(spark, sf_dir)
     wc = token_df(spark, sf_dir).groupBy("word").agg(F.count("*").alias("cnt"))
     # Vocabulary-bounded; MATERIALIZED so the corpus tokenize-and-count
     # runs once, not once per round-consumer (3 pair censuses + 3 stat
@@ -2424,7 +2386,6 @@ def mllib_feature_parity_report(
 
     from parallel_mapreduce_spark.functions.dedup import shingles3
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", "text"
     )

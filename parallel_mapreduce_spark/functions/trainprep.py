@@ -31,7 +31,7 @@ from parallel_mapreduce_spark.functions.text import (
 from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import partition_count
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.sources import load_table
 
 # DuckDB twin of text.bigrams(): 1-indexed range(1, len) -> len-1 bigrams.
 _SQL_BIGRAMS = (
@@ -71,7 +71,6 @@ def repetition_bigram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_dup_members,
     )
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     bgs = bigrams(tokens("text"))
@@ -186,7 +185,6 @@ def _pack_prefix(t: DataFrame, span: int) -> DataFrame:
     """,
 )
 def seq_pack_contiguous(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "source", F.size(tokens("text")).cast("long").alias("n_tokens")
@@ -231,7 +229,6 @@ EVAL_SET_MOD = 97  # doc_id % 97 == 0 -> held-out "benchmark" docs
     """,
 )
 def contamination_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     # Repartition ahead of the interpreted shingle expression + explode
@@ -282,7 +279,6 @@ _TERM_PAT = "\\b(" + "|".join(PII_TERMS) + ")\\b"
     """,
 )
 def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     # Spread the regex-heavy projection across cores (single-row-group scan
@@ -336,7 +332,6 @@ VOCAB_MIN_COUNT = 3
 def vocab_min_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_mapreduce_spark.operators.rank import global_row_number
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select(F.explode(tokens("text")).alias("token"))
@@ -381,7 +376,6 @@ def vocab_min_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     # greatest(., eps): an all-zero vector would otherwise quantize to NaN
     # (0/0) — same guard as ann_sq_topk, mirrored literally in the oracle.
@@ -432,7 +426,6 @@ MIX_DENOM = 1_000_000
     """,
 )
 def domain_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     c = docs.groupBy("lang").agg(F.count("*").alias("cnt"))
     t = c.agg(
@@ -485,7 +478,6 @@ def domain_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     # Repartition ahead of the tokenize+explode (single-row-group scans would
@@ -599,7 +591,6 @@ def boilerplate_coverage(
     headline=True,
 )
 def boilerplate_shingle_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     return boilerplate_coverage(docs, n_parts)
@@ -698,7 +689,6 @@ def ingest_decisions(batch: DataFrame, corpus: DataFrame) -> DataFrame:
     """,
 )
 def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
     batch = (
@@ -816,7 +806,6 @@ def bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row report: the bloom gate's accounting over the recrawl batch
     for BOTH filters (n_batch, n_true_dup, n_pos_small, n_fp_small,
     n_pos_sized, n_fp_sized, no_false_negatives)."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
     corpus = (
@@ -938,7 +927,6 @@ def shard_manifest(docs: DataFrame, n_shards: int = N_TRAIN_SHARDS) -> DataFrame
     """,
 )
 def train_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     return shard_manifest(docs)
 
@@ -981,7 +969,6 @@ def train_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tokens_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     vocab = vocab_min_count(spark, sf_dir).select("token", "token_id")
     n_parts = partition_count(spark)
@@ -1044,7 +1031,6 @@ def decontam_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_probe_hits) for training docs containing any eval-prefix
     probe verbatim. Probes are distinct, so a doc's hit count is the number
     of distinct leaked benchmark prefixes it carries."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     t = _spread(spark, docs, "doc_id", "text").withColumn(
         "toks", tokens("text")
@@ -1103,7 +1089,6 @@ CHUNK_STRIDE = 96  # 32-token overlap between consecutive chunks
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, chunk_idx, start_tok, chunk_len, chunk_hash) for overlapping
     CHUNK_TOKENS-token windows every CHUNK_STRIDE tokens."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     t = (
         _spread(spark, docs, "doc_id", "text")
@@ -1157,7 +1142,6 @@ def write_partitioned_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trip manifest of a lang-partitioned parquet write."""
     from parallel_mapreduce_spark.sources.tables import sink_dir
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     out = sink_dir("part_sink") + "/docs"
     (
@@ -1216,7 +1200,6 @@ def write_partitioned_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pack_fill_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "source", F.size(tokens("text")).cast("long").alias("n_tokens")
@@ -1283,7 +1266,6 @@ EPOCH_TAG = "epoch0"
     """,
 )
 def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
@@ -1339,7 +1321,6 @@ MIN_LEN_BUCKET = 16
     """,
 )
 def length_bucket_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n = F.size(tokens("text")).cast("long")
     t = docs.select(n.alias("n_tokens"))
@@ -1415,7 +1396,6 @@ STRIP_TOP_K_DF = 5
     """,
 )
 def strip_boilerplate_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.posexplode(tokens("text")).alias("pos", "word")
@@ -1508,7 +1488,6 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_dup_members,
     )
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     # Round-14 NEGATIVE result (OPTIMIZATION_r14.md §8, with a
@@ -1601,7 +1580,6 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def detokenize_ids_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     vocab = vocab_min_count(spark, sf_dir).select("token", "token_id")
     enc = tokens_to_ids(spark, sf_dir)
     ids = enc.select(
@@ -1717,7 +1695,6 @@ _TWO60 = float(2**60)
     """,
 )
 def weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "source", F.size(tokens("text")).cast("long").alias("n_tokens")
@@ -1787,7 +1764,6 @@ SPLIT_TAG = "split:"
 def stratified_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_mapreduce_spark.operators.rank import global_row_number
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
@@ -1846,7 +1822,6 @@ def stratified_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def temperature_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     c = (
         docs.select("source", F.size(tokens("text")).cast("long").alias("nt"))
@@ -1931,7 +1906,6 @@ DSIR_TARGET_SOURCE = "src0"
     """,
 )
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     feats = (
@@ -2151,7 +2125,6 @@ def _lrq_step(feat: DataFrame, wrow: DataFrame) -> DataFrame:
     """,
 )
 def quality_classifier_lr2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     feat = _lrq_features(docs, n_parts)
@@ -2271,7 +2244,6 @@ def quality_classifier_lr2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_model_filtered_corpus(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     n_parts = partition_count(spark)
     feat = _lrq_features(docs, n_parts)
@@ -2382,7 +2354,6 @@ def cap_per_source(
     """,
 )
 def source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import apply_runtime_conf, scoped_conf
+from parallel_mapreduce_spark.session import scoped_conf
 from parallel_mapreduce_spark.sources.tables import load_table, sink_dir
 
 SEGMENT = "BUILDING"
@@ -95,7 +95,6 @@ def _join_strategy(orders: DataFrame, dim: DataFrame) -> str:
     """,
 )
 def cbo_stats_broadcast_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_conf(spark)
     base = sink_dir("cbo")
     raw_name = f"pmr_cbo_raw_{os.getpid()}"
     stats_name = f"pmr_cbo_stats_{os.getpid()}"

@@ -9,7 +9,8 @@ batch path is the oracle-checked one, per SURVEY.md §7 step 6.
 
 Timestamps cross the oracle comparison as epoch seconds (BIGINT) — never raw
 timestamp objects — so engine formatting/timezone differences can't bite; the
-session timezone is pinned to UTC in sources.register_views.
+session timezone is pinned to UTC by session.apply_runtime_conf, which the
+registry's entry applies before every query.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.sources import load_table
 
 SESSION_GAP_S = 1800
 # Gap/ordering comparisons in the sessionize/funnel family run at the
@@ -73,7 +74,6 @@ def sessionized(ev: DataFrame) -> DataFrame:
     headline=True,
 )
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -103,7 +103,6 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
@@ -145,7 +144,6 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     return sessionized(ev).groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
@@ -169,7 +167,6 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("double")
     return ev.groupBy("event_type").agg(
@@ -199,7 +196,6 @@ def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     k = F.try_variant_get(F.try_parse_json("props"), "$.k", "bigint")
     return ev.groupBy("event_type").agg(
@@ -222,7 +218,6 @@ def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy("event_type").agg(F.count("*").alias("cnt"))
     w = W.partitionBy()
@@ -252,7 +247,6 @@ def events_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_props_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     props = F.from_json("props", "map<string,string>")
     return (
@@ -306,7 +300,6 @@ def events_props_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -342,7 +335,6 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_user_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "value")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_mktsegment").alias("segment")
@@ -400,7 +392,6 @@ def events_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, session_id, n_clicks, n_purchases, converted): converted=1
     when the session's first click precedes (or ties) its last purchase —
     NULL-safe on both sides, so click-free or purchase-free sessions are 0."""
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     usec = _event_us()
     click_sec = F.when(F.col("event_type") == "click", usec)
@@ -437,7 +428,6 @@ def events_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
@@ -474,7 +464,6 @@ INCR_CUTOFF = "2024-01-20 00:00:00"  # "already aggregated" vs "new batch"
     """,
 )
 def events_hourly_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     cutoff = F.lit(INCR_CUTOFF).cast("timestamp")
     hour = F.unix_timestamp(F.date_trunc("hour", F.col("ts"))).alias("hour_epoch")
@@ -523,7 +512,6 @@ def events_hourly_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def events_type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     s = ev.select(
@@ -564,7 +552,6 @@ def events_type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     week = (F.unix_timestamp("ts") / 604800).cast("long")
     first_seen = ev.groupBy("user_id").agg(
@@ -608,7 +595,6 @@ ANOMALY_Z = 2.0  # |z| threshold on hourly counts
     """,
 )
 def events_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     h = ev.groupBy(
         "event_type",
@@ -645,7 +631,6 @@ def events_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_dow_hod_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     # Spark dayofweek is 1..7 with Sunday=1; DuckDB is 0..6 with Sunday=0.
     return (
@@ -712,7 +697,6 @@ def events_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row funnel: sessions reaching view, view->click (ordered),
     view->click->purchase (ordered). NULL comparisons drop sessions
     missing a step, so each stage is a subset of the previous."""
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     usec = _event_us()
     step = lambda t: F.min(F.when(F.col("event_type") == t, usec))  # noqa: E731
@@ -766,7 +750,6 @@ DEBOUNCE_GAP_US = DEBOUNCE_GAP_S * 1_000_000
     """,
 )
 def events_debounce_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     usec = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -812,7 +795,6 @@ TOPK_TYPES_PER_HOUR = 2
     """,
 )
 def events_topk_types_per_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     h = (
         ev.select(
@@ -895,7 +877,6 @@ ECDF_PROBES = (10, 50, 100, 200)
     """,
 )
 def events_value_ecdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
@@ -988,7 +969,6 @@ PR_ITERS = 3
     """,
 )
 def pagerank_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -1057,7 +1037,6 @@ TRAILING_WINDOW_H = 24
     """,
 )
 def active_users_trailing_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
         F.floor(F.unix_timestamp("ts") / 3600).cast("long").alias("hr"),
@@ -1139,7 +1118,6 @@ SELECT node, CAST(MIN(hops) AS BIGINT) AS min_hops FROM reach GROUP BY node
 def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_mapreduce_spark.sources.tables import sink_dir
 
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     edges = (
@@ -1215,7 +1193,6 @@ CEP_PATTERN = r"(^| )click( (view|click|signup))* purchase( |$)"
     """,
 )
 def events_cep_pattern_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     usec = _event_us()
     s = sessionized(ev).select(
@@ -1279,7 +1256,6 @@ def events_cep_pattern_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def event_type_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     ut = ev.select("user_id", "event_type").distinct()
     c = ut.groupBy("event_type").agg(F.count("*").cast("long").alias("n"))
@@ -1344,7 +1320,6 @@ def _tz_branch_sql(tz: str) -> str:
     """,
 )
 def events_local_date_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     branches = F.array(
         *[
@@ -1395,7 +1370,6 @@ def events_local_date_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_value_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     ord_key = F.concat(
@@ -1473,7 +1447,6 @@ GROUP BY user_id
 
 @query("clamped_balance_recursive", oracle=_BALANCE_SQL)
 def clamped_balance_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql(_BALANCE_SQL)
 
 

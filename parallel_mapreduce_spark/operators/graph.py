@@ -47,7 +47,7 @@ from pyspark.sql.window import Window as W
 
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import reliable_checkpoint
-from parallel_mapreduce_spark.sources.tables import cut, load_table, register_views
+from parallel_mapreduce_spark.sources.tables import cut, load_table
 
 PR_ITERS = 3
 PR_UNIT = 1_000_000  # one rank point, in micro-units
@@ -101,7 +101,6 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer power-iteration rounds (damping 0.85, uniform dangling-mass
     redistribution). Returns (nation, pr_micro) — the stationary-ish
     importance of each nation as a trade DESTINATION, in micro-units."""
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.sources.tables import load_table, register_views
+from parallel_mapreduce_spark.sources.tables import load_table
 
 try:  # Spark 4.1+ surface; import-gated like every optional engine API
     from pyspark.pipelines.api import materialized_view, table
@@ -176,7 +176,6 @@ def declarative_pipeline_medallion(
         raise AssertionError(
             "pyspark.pipelines is absent — this Spark build predates 4.1"
         )
-    register_views(spark, sf_dir)
     reg = build_medallion_graph(spark, sf_dir)
     results = run_graph(spark, reg)
     gold = results["sdp_gold_status_report"]

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.sources import load_table
 
 _SHIP_CUTOFF = "1998-09-02 00:00:00"
 
@@ -52,7 +52,6 @@ def _ts(lit: str):
     """,
 )
 def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.filter((F.col("o_orderstatus") == "O") & (F.col("o_totalprice") > 400000))
@@ -83,7 +82,6 @@ def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
@@ -121,7 +119,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_orderkey").alias("n_orders"),
@@ -157,7 +154,6 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
 )
 def q3_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < _ts("1998-01-01 00:00:00")
@@ -204,7 +200,6 @@ def q3_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
 )
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-01-01 00:00:00"))
@@ -244,7 +239,6 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def semi_join_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     big = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
     return cust.join(
@@ -261,7 +255,6 @@ def semi_join_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def anti_join_no_f_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     f_orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return cust.join(
@@ -285,7 +278,6 @@ def anti_join_no_f_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def left_join_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     open_orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
     return (
@@ -330,7 +322,6 @@ def left_join_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def full_outer_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
@@ -376,7 +367,6 @@ _BANDS = [("low", 0.0, 15.0), ("mid", 15.0, 35.0), ("high", 35.0, 51.0)]
     """,
 )
 def range_join_quantity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     bands = spark.createDataFrame(_BANDS, "band string, lo double, hi double")
     cond = (F.col("l_quantity") >= F.col("lo")) & (F.col("l_quantity") < F.col("hi"))
@@ -404,7 +394,6 @@ def range_join_quantity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
 )
 def window_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     order = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
     return (
@@ -430,7 +419,6 @@ def window_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def window_running_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     w = (
         W.partitionBy("o_custkey")
@@ -457,7 +445,6 @@ def window_running_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def window_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     prev = F.lag("o_orderdate").over(w)
@@ -491,21 +478,18 @@ def _setop_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
 
 @query("set_union", oracle=f"{_BUILDING} UNION {_BIG_ORDER}")
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     a, b = _setop_sides(spark, sf_dir)
     return a.union(b).distinct()
 
 
 @query("set_intersect", oracle=f"{_BUILDING} INTERSECT {_BIG_ORDER}")
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     a, b = _setop_sides(spark, sf_dir)
     return a.intersect(b)
 
 
 @query("set_except", oracle=f"{_BUILDING} EXCEPT {_BIG_ORDER}")
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     a, b = _setop_sides(spark, sf_dir)
     return a.exceptAll(b).distinct()
 
@@ -524,7 +508,6 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def rollup_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
@@ -549,7 +532,6 @@ def rollup_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
@@ -577,7 +559,6 @@ def cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def grouping_sets_segment_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT COALESCE(c_mktsegment, 'ALL') AS segment,
@@ -600,7 +581,6 @@ def grouping_sets_segment_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -624,7 +604,6 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     joined = cust.join(orders, cust.c_custkey == orders.o_custkey)
@@ -660,7 +639,6 @@ def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     return orders.filter(F.col("o_orderkey") < 200).select(
         "o_orderkey",
@@ -687,7 +665,6 @@ def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy(
         F.date_format("o_orderdate", "yyyy-MM").alias("month")
@@ -708,7 +685,6 @@ def monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def brand_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     return (
@@ -731,7 +707,6 @@ def brand_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def having_frequent_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_custkey")
@@ -762,7 +737,6 @@ def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 sigma; measured error is ~2.6% at every sf) — the oracle pins that
     boolean to TRUE. A degraded sketch now fails the hash instead of
     passing a rows-only count."""
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     exact = F.countDistinct("l_partkey")
     approx = F.approx_count_distinct("l_partkey")
@@ -788,7 +762,6 @@ def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_extendedprice", F.lit(0.5)), 4).alias("p50"),
@@ -805,7 +778,6 @@ def price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"{_BUILDING} UNION ALL {_BIG_ORDER}",
 )
 def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     a, b = _setop_sides(spark, sf_dir)
     return a.union(b)
 
@@ -827,7 +799,6 @@ def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cust_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     nation_avg = cust.groupBy("c_nationkey").agg(F.avg("c_acctbal").alias("nav"))
     return (
@@ -850,7 +821,6 @@ def cust_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def orders_status_priority_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.min("o_orderkey").alias("first_orderkey"),
@@ -873,7 +843,6 @@ def orders_status_priority_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ship_latency_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     return (
@@ -907,7 +876,6 @@ def ship_latency_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -946,7 +914,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q4_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-01-01 00:00:00"))
         & (F.col("o_orderdate") < _ts("1996-07-01 00:00:00"))
@@ -978,7 +945,6 @@ def q4_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1995-09-01 00:00:00"))
         & (F.col("l_shipdate") < _ts("1995-10-01 00:00:00"))
@@ -1022,7 +988,6 @@ Q18_MIN_QTY = 150
     headline=True,
 )
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
@@ -1067,7 +1032,6 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     cond = (
@@ -1116,7 +1080,6 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def window_trailing_7d_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     w = (
         W.partitionBy("o_custkey")
@@ -1137,14 +1100,12 @@ def window_trailing_7d_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query("set_intersect_all", oracle=f"{_BUILDING} INTERSECT ALL {_BIG_ORDER}")
 def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     a, b = _setop_sides(spark, sf_dir)
     return a.intersectAll(b)
 
 
 @query("set_except_all", oracle=f"{_BUILDING} EXCEPT ALL {_BIG_ORDER}")
 def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     a, b = _setop_sides(spark, sf_dir)
     return a.exceptAll(b)
 
@@ -1168,7 +1129,6 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def window_ntile_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -1212,7 +1172,6 @@ def q10_returned_items_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Submitted as SQL text (spark.sql) — IDENTICAL string to the oracle;
     Catalyst plans it like the DataFrame queries (broadcast nation, pushed
     date/returnflag filters, TakeOrdered top-k)."""
-    register_views(spark, sf_dir)
     return spark.sql(_Q10_SQL)
 
 
@@ -1240,7 +1199,6 @@ def price_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine asserts each sketch quantile lands within 2% of its exact
     twin (measured error ~0.1% at every sf with accuracy=10000); the
     oracle pins the booleans TRUE."""
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     acc = F.lit(10000)  # 1/accuracy relative error bound
 
@@ -1284,7 +1242,6 @@ def price_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount"
     )
@@ -1340,7 +1297,6 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01 00:00:00"))
         & (F.col("l_shipdate") < _ts("1996-04-01 00:00:00"))
@@ -1385,7 +1341,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def right_join_order_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     returned = (
         load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "R")
@@ -1439,7 +1394,6 @@ def right_join_order_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def unpivot_pricing_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     wide = (
         li.filter(F.col("l_shipdate") <= _ts(_SHIP_CUTOFF))
@@ -1477,7 +1431,6 @@ def unpivot_pricing_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def price_qty_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.corr("l_extendedprice", "l_quantity"), 4).alias("price_qty_corr"),
@@ -1519,7 +1472,6 @@ DECILES = [i / 10.0 for i in range(1, 10)]
     """,
 )
 def price_decile_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     thr = orders.agg(
         F.percentile("o_totalprice", F.array(*[F.lit(p) for p in DECILES])).alias(
@@ -1566,7 +1518,6 @@ def price_decile_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def monthly_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     m = orders.groupBy(
         F.date_format("o_orderdate", "yyyy-MM").alias("month")
@@ -1612,7 +1563,6 @@ ERASE_MOD = 113  # user_id/custkey % 113 == 0 -> erasure request set
     """,
 )
 def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_custkey") % ERASE_MOD == 0
     )
@@ -1666,7 +1616,6 @@ WINSOR_LO, WINSOR_HI = 0.01, 0.99
     """,
 )
 def winsorize_order_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     t = orders.agg(
         F.percentile("o_totalprice", F.lit(WINSOR_LO)).alias("lo"),
@@ -1719,7 +1668,6 @@ MERGE_INSERT_OFFSET = 10_000_000  # synthetic new-row keys
     """,
 )
 def orders_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -1769,7 +1717,6 @@ def orders_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def nation_extreme_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey"), F.col("n_name")
@@ -1812,7 +1759,6 @@ def nation_extreme_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def orders_percent_rank_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     o = load_table(spark, sf_dir, "orders")
     month = F.date_trunc("month", F.col("o_orderdate"))
     w = W.partitionBy("o_orderpriority", month).orderBy(
@@ -1856,7 +1802,6 @@ PARETO_QUANTILE = 0.8  # "top 20% of customers" threshold
     """,
 )
 def revenue_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     o = load_table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("spend"))
     thr = spend.agg(
@@ -1913,7 +1858,6 @@ def revenue_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey"
@@ -1985,7 +1929,6 @@ PRICE_HIST_BINS = 20
     """,
 )
 def orders_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     # GREATEST(width, eps): a degenerate corpus where every price is equal
     # would give width=0 -> (x-lo)/0, and Spark (floor(NaN)->null) and
@@ -2062,7 +2005,6 @@ RFM_QUARTILES = [0.25, 0.5, 0.75]
     """,
 )
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     rfm = orders.groupBy("o_custkey").agg(
         F.floor(F.unix_timestamp(F.max("o_orderdate"))).alias("rec"),
@@ -2136,7 +2078,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -2225,7 +2166,6 @@ CDC_MOD = 97
     """,
 )
 def cdc_apply_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -2284,7 +2224,6 @@ def cdc_apply_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def rollup_labeled_subtotals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
@@ -2343,7 +2282,6 @@ def rollup_labeled_subtotals(spark: SparkSession, sf_dir: str) -> DataFrame:
 def price_weighted_median_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_mapreduce_spark.operators.rank import global_prefix_sum
 
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     b = li.select(
         F.col("l_returnflag").alias("flag"),
@@ -2419,7 +2357,6 @@ SCRIPT_BASE_THRESHOLD = 4096
     """,
 )
 def sql_scripting_threshold_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     # The loop is bounded to the oracle's 24-point geometric grid (i = 0..23,
     # i.e. at most 23 doublings past the base), and the final SELECT emits a
     # row only when the search actually converged — on pathological data
@@ -2481,7 +2418,6 @@ TRY_BIG = 9223372036854775807 - 100  # BIGINT max minus a small headroom
     """,
 )
 def ansi_try_arithmetic_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     rate = F.try_divide(F.col("l_extendedprice"), F.col("l_quantity") - 30)
     overflow = F.try_add(F.col("l_orderkey"), F.lit(TRY_BIG))
@@ -2519,7 +2455,6 @@ def ansi_try_arithmetic_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") >= 1
     )
@@ -2565,7 +2500,6 @@ def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def hll_sketch_mergeable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").alias("day"), "user_id"
     )
@@ -2629,7 +2563,6 @@ def hll_sketch_mergeable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lateral_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql("""
     SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
     FROM customer c JOIN LATERAL (
@@ -2667,7 +2600,6 @@ OBS_MIN_CHARS = 200  # quality-gate threshold the observed pipeline applies
 def observed_metrics_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Observation
 
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     pre = Observation("pre_gate")
     post = Observation("post_gate")
@@ -2727,7 +2659,6 @@ def observed_metrics_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def pipe_syntax_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         FROM orders
@@ -2762,7 +2693,6 @@ def pipe_syntax_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sql_udf_net_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION pmr_net_price(
@@ -2819,7 +2749,6 @@ def sql_udf_net_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def collated_group_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     sup = load_table(spark, sf_dir, "supplier")
     doubled = sup.select("s_name").unionAll(
         sup.filter(F.col("s_suppkey") % 2 == 0).select(
@@ -2862,7 +2791,6 @@ def collated_group_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def parameterized_sql_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_orderpriority,
@@ -2915,7 +2843,6 @@ FROM counts
 
 @query("not_in_null_semantics_report", oracle=_NOT_IN_SQL)
 def not_in_null_semantics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql(_NOT_IN_SQL)
 
 
@@ -3095,7 +3022,6 @@ LIMIT 5 OFFSET 3
 
 @query("group_by_all_pagination", oracle=_GROUP_BY_ALL_SQL)
 def group_by_all_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql(_GROUP_BY_ALL_SQL)
 
 
@@ -3135,7 +3061,6 @@ _EXEC_IMM_SEQ = itertools.count(1)
     """,
 )
 def execute_immediate_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     var = f"exec_imm_target_segment_{next(_EXEC_IMM_SEQ)}"
     spark.sql(f"DECLARE OR REPLACE VARIABLE {var} STRING")
     try:
@@ -3191,7 +3116,6 @@ def execute_immediate_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def listagg_nation_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         WITH ranked AS (
@@ -3250,7 +3174,6 @@ FROM p
 
 @query("percentile_disc_vs_cont", oracle=_PCT_DISC_SQL)
 def percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql(_PCT_DISC_SQL)
 
 
@@ -3393,7 +3316,6 @@ def hinted_join_branch(spark: SparkSession, strategy: str) -> DataFrame:
     """,
 )
 def join_strategy_hint_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     out = hinted_join_branch(spark, "broadcast")
     for strategy in ("merge", "shuffle_hash"):
         out = out.unionByName(hinted_join_branch(spark, strategy))
@@ -3435,7 +3357,6 @@ def histogram_numeric_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One aggregation pass computes the {HIST_NB}-bin histogram sketch
     AND the exact count/min/max it is audited against; the flags are
     JVM-side higher-order functions over the bin array."""
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     prof = li.agg(
         F.expr(f"histogram_numeric(l_extendedprice, {HIST_NB})").alias("h"),
@@ -3499,7 +3420,6 @@ FI_SUPPORT_TENTHS = 3  # support = 0.3
     """,
 )
 def freq_items_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     support = FI_SUPPORT_TENTHS / 10.0
     # freqItems runs its one-pass streaming job EAGERLY and hands back the
@@ -3584,7 +3504,6 @@ def cached_table_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two independent aggregates (per-status rollup; global distinct
     customers + mean) over ONE cached filtered projection — both consumers
     must plan InMemoryTableScan, proving the scan+filter is paid once."""
-    register_views(spark, sf_dir)
     hot_src = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 1000)
@@ -3601,8 +3520,9 @@ def cached_table_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(f"CACHE TABLE {CACHED_HOT_VIEW}")  # eager columnar build
     # The cache must survive this function's return (the driver executes
     # the returned plan afterwards), so cleanup is DEFERRED: the next
-    # query's register_views() uncaches it via PENDING_UNCACHE, bounding
-    # residency to one registry slot rather than the whole run.
+    # registered query uncaches it via PENDING_UNCACHE (the registry's
+    # entry drains it before every query), bounding residency to one
+    # registry slot rather than the whole run.
     from parallel_mapreduce_spark.sources.tables import PENDING_UNCACHE
 
     PENDING_UNCACHE.add(CACHED_HOT_VIEW)
@@ -3659,7 +3579,6 @@ def cached_table_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def transpose_pricing_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-returnflag pricing metrics transposed to metrics-as-rows:
     (key, A, N, R). The transposed frame is 3x3 — group-count bounded."""
-    register_views(spark, sf_dir)
     wide = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -3711,7 +3630,6 @@ def bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per returnflag: the (flag, status)-grain distinct-part counts summed
     (fine grain), the flag-grain distinct from OR-merged bitmaps, and two
     booleans pinning both bitmap paths equal to the exact distinct."""
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_partkey"
     )
@@ -3798,7 +3716,6 @@ def bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mask_customer_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per market segment: customer count, distinct raw vs masked names
     (mask collapses every name to one shape), and that shape itself."""
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment", "c_name", F.expr("mask(c_name)").alias("masked")
     )
@@ -3850,7 +3767,6 @@ def theta_customer_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct customers with F-status orders, O-status orders, and their
     union/intersection/difference — exact counts value-checked, with the
     five Theta-sketch estimates pinned inside 5% of the exact union."""
-    register_views(spark, sf_dir)
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isin("F", "O")
     )
@@ -3929,7 +3845,6 @@ def kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per probe quantile: the exact value (value-checked) and whether the
     value read from the MERGED per-returnflag KLL sketches has true rank
     within 2% of the probe — the KLL guarantee, checked exactly."""
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice"
     )
@@ -4016,7 +3931,6 @@ def hll_precision_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lg_k, exact_parts, rsd_x10000, within_4sigma) per precision: the
     sketch-state-size vs accuracy curve, every row's estimate asserted
     within 4 sigma of its precision's theoretical rsd."""
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     row = li.agg(
         F.countDistinct("l_partkey").cast("long").alias("exact_parts"),
@@ -4106,7 +4020,6 @@ def k_anonymity_generalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(gen_level, quasi_ids, n_groups, min_group_size, rows_below_k,
     pct_below_k, k_anonymous) — one row per generalization-lattice level,
     K_ANON = 5."""
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_regionkey"

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
 from parallel_mapreduce_spark.session import partition_count
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.sources import load_table
 
 DEFAULT_SALT = 8
 
@@ -70,7 +70,6 @@ def salted_join(
     """,
 )
 def salted_join_user_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "value")
     tiers = (
         ev.select("user_id")
@@ -119,7 +118,6 @@ def salted_join_user_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_key_skew_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     c = ev.groupBy("user_id").agg(F.count("*").alias("cnt"))
     pct = lambda p: F.percentile(F.col("cnt"), F.lit(p))  # noqa: E731
@@ -215,7 +213,6 @@ def aqe_skew_join_user_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from parallel_mapreduce_spark.session import scoped_conf
 
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value"
     )

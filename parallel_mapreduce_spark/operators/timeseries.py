@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.sources import load_table
 
 
 def asof_join(
@@ -108,7 +108,6 @@ def asof_join(
     headline=True,
 )
 def asof_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     left = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"), "user_id", "ts"
@@ -154,7 +153,6 @@ def asof_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_rollup_day_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         F.unix_timestamp(F.date_trunc("day", F.col("ts"))).alias("d"),
         F.unix_timestamp(F.date_trunc("hour", F.col("ts"))).alias("h"),
@@ -208,7 +206,6 @@ def events_rollup_day_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_hourly_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
     bounds = ev.agg(
         F.date_trunc("hour", F.min("ts")).alias("h0"),
@@ -295,7 +292,6 @@ def events_hourly_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_hourly_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
     bounds = ev.agg(
         F.date_trunc("hour", F.min("ts")).alias("h0"),
@@ -388,7 +384,6 @@ def events_hourly_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def asof_next_click_after_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     left = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"), "user_id", "ts"
@@ -460,7 +455,6 @@ def asof_next_click_after_purchase(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def user_state_daily_seconds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     tsc = F.col("ts").cast("timestamp")
@@ -537,7 +531,6 @@ def user_state_daily_seconds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def calendar_arithmetic_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     d = F.to_date("o_orderdate")
     clamped = F.dayofmonth(F.add_months(d, 1)) != F.dayofmonth(d)
     on_last = d == F.last_day(d)

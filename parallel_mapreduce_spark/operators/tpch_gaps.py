@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.sources import load_table, register_views
+from parallel_mapreduce_spark.sources import load_table
 
 
 def _ts(lit: str):
@@ -71,7 +71,6 @@ def _rev():
     """,
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
@@ -139,7 +138,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q9_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
@@ -184,7 +182,6 @@ def q9_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q12_ship_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1997-01-01 00:00:00"))
         & (F.col("l_shipdate") < _ts("1998-01-01 00:00:00"))
@@ -223,7 +220,6 @@ def q12_ship_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
@@ -257,7 +253,6 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     part = (
         load_table(spark, sf_dir, "part")
@@ -291,7 +286,6 @@ def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
@@ -338,7 +332,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q20_volume_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1997-01-01 00:00:00"))
         & (F.col("l_shipdate") < _ts("1998-01-01 00:00:00"))
@@ -388,7 +381,6 @@ def q20_volume_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal", "c_nationkey"
     )
@@ -459,7 +451,6 @@ Q21_LATE_DAYS = 60
     """,
 )
 def q21_waiting_suppliers_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
@@ -531,7 +522,6 @@ Q11_SHARE_FRACTION = 0.0002  # groups holding > 0.02% of the global value
     """,
 )
 def q11_important_parts_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(F.sum(_rev()).alias("value"))
     total = per_part.agg(F.sum("value").alias("total"))
@@ -570,7 +560,6 @@ def q11_important_parts_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q2_min_cost_supplier_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     ps = li.groupBy("l_partkey", "l_suppkey").agg(
         (

@@ -5,6 +5,14 @@ a callable ``(spark, sf_dir) -> DataFrame`` — optionally paired with the
 ANSI-SQL oracle string DuckDB runs on the same Parquet tables. The driver's
 correctness gate (``__spark_entry__.py``) is generated from this registry.
 
+Entry contract: the registry sets up the session, as the reference's
+``MR_Run`` does before any Mapper or Reducer runs. The callable that
+``@query`` registers (and leaves as the module attribute) first calls
+``sources.register_views(spark, sf_dir)`` — runtime conf, the table temp
+views, the deferred uncache of the previous query's cache — and then the
+query body. A query body never calls ``register_views`` or
+``apply_runtime_conf`` itself; it may read the temp views by name.
+
 Rules enforced by convention (and by tests/test_oracle_parity.py):
 - every computed column is aliased identically in the Spark plan and the SQL;
 - float aggregates are rounded (ROUND(x, 4)) on BOTH sides so engine-order
@@ -16,10 +24,13 @@ Rules enforced by convention (and by tests/test_oracle_parity.py):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from parallel_mapreduce_spark.sources.tables import register_views
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -36,13 +47,21 @@ QUERIES: dict[str, QuerySpec] = {}
 
 
 def query(name: str, oracle: str | None = None, headline: bool = False):
-    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` as a named query."""
+    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` as a named
+    query. Returns the registered entry: ``register_views`` once, then
+    ``fn`` (the original stays reachable as ``__wrapped__``)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = QuerySpec(name=name, fn=fn, oracle=oracle, headline=headline)
-        return fn
+
+        @functools.wraps(fn)
+        def entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+            register_views(spark, sf_dir)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = QuerySpec(name=name, fn=entry, oracle=oracle, headline=headline)
+        return entry
 
     return deco
 

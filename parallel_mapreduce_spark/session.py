@@ -53,12 +53,24 @@ def parallelism(spark: SparkSession, nbytes: int | None) -> int:
     return max(1, min(cap, -(-nbytes // PART_BYTES)))
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory`` for :func:`get_spark`: the deployment's
+    ``SPARK_DRIVER_MEMORY`` when set, else half of physical memory capped
+    at 16g (a flat 16g heap outgrows a small machine)."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    return f"{min(half >> 20, 16 << 10)}m"
+
+
 def get_spark(
     app_name: str = "parallel-mapreduce-spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's tuning applied."""
+    """Build (or reuse) a SparkSession with the engine's tuning applied:
+    the launch-time confs here, the runtime ones by apply_runtime_conf."""
     cpus = cpus or default_parallelism()
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = (
@@ -66,23 +78,15 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Runtime bloom-filter semi-join pruning: a selective filtered dim
-        # builds a bloom filter that prunes the fact side's shuffle input.
-        # Its size thresholds (10MB creation side / 10GB scan side) only
-        # trigger at real scale — inert on test data, active at 100 TB;
-        # engagement is demonstrated under lowered thresholds in
-        # tests/test_plans.py.
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    apply_runtime_conf(spark)
     return spark
 
 
@@ -99,10 +103,12 @@ def session_key(spark: SparkSession) -> tuple[int, str]:
 def apply_runtime_conf(spark: SparkSession) -> None:
     """Set the runtime-mutable confs this engine's queries rely on.
 
-    Called by the view-registration path so correctness holds even when the
-    caller (e.g. the verification driver) built its own SparkSession without
+    Called by :func:`get_spark` on the session it builds, and by
+    ``sources.register_views`` — which the registry runs before every
+    query — so correctness holds even when the caller (e.g. the
+    verification driver) built its own SparkSession without
     :func:`get_spark`. Only runtime-settable keys belong here. Applied once
-    per session — every load_table call routes through here, and the py4j
+    per session — every registered query routes through here, and the py4j
     conf roundtrips add up in driver-side plan-build time.
     """
     key = session_key(spark)
@@ -111,6 +117,12 @@ def apply_runtime_conf(spark: SparkSession) -> None:
     _CONFED.add(key)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    # Runtime bloom-filter semi-join pruning: a selective filtered dim
+    # builds a bloom filter that prunes the fact side's shuffle input.
+    # Its size thresholds (10MB creation side / 10GB scan side) only
+    # trigger at real scale — inert on test data, active at 100 TB;
+    # engagement is demonstrated under lowered thresholds in
+    # tests/test_plans.py.
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     # events.parquet stores TIMESTAMP(NANOS), illegal for Spark 4's reader;
     # read as int64 nanos and convert in sources.load_table.

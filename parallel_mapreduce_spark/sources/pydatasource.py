@@ -26,11 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.sources.tables import (
-    load_table,
-    read_json,
-    register_views,
-)
+from parallel_mapreduce_spark.sources.tables import load_table, read_json
 
 SYNTH_ROWS = 100_000
 SYNTH_PARTS = 8
@@ -188,9 +184,6 @@ def register_synth_source(spark: SparkSession) -> None:
 def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate over the custom Python source: proves the partition-planned
     scan end to end (sf_dir unused — the source is synthetic by design)."""
-    from parallel_mapreduce_spark.session import apply_runtime_conf
-
-    apply_runtime_conf(spark)
     register_synth_source(spark)
     df = (
         spark.read.format("pmr_synth")
@@ -237,9 +230,6 @@ def python_datasource_pushdown_scan(spark: SparkSession, sf_dir: str) -> DataFra
     closed form, so over- OR under-pushing either filter class fails the
     value check. Reader-level semantics (residual set, narrowed partition
     ranges, bucket skip) are unit-pinned in tests/test_sources.py."""
-    from parallel_mapreduce_spark.session import apply_runtime_conf
-
-    apply_runtime_conf(spark)
     register_synth_source(spark)
     df = (
         spark.read.format("pmr_synth_pd")
@@ -398,11 +388,8 @@ def python_datasource_write_roundtrip(
     import json as _json
     import os as _os
 
-    from parallel_mapreduce_spark.session import apply_runtime_conf
     from parallel_mapreduce_spark.sources.tables import sink_dir
 
-    apply_runtime_conf(spark)
-    register_views(spark, sf_dir)
     register_synth_source(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
@@ -530,13 +517,9 @@ def stream_python_source_totals(
     ONE micro-batch (measured: 1 batch instead of 7, and different
     per-bucket totals), so both Python-source drains keep the
     processAllAvailable() loop."""
-    from parallel_mapreduce_spark.session import (
-        apply_runtime_conf,
-        state_sized_shuffle,
-    )
+    from parallel_mapreduce_spark.session import state_sized_shuffle
     from parallel_mapreduce_spark.streaming.drain import unique_name
 
-    apply_runtime_conf(spark)
     register_synth_source(spark)
     name = unique_name("stream_python_source_totals")
     agg = (
@@ -687,14 +670,10 @@ def stream_python_sink_roundtrip(
     import os as _os
     import shutil as _shutil
 
-    from parallel_mapreduce_spark.session import (
-        apply_runtime_conf,
-        state_sized_shuffle,
-    )
+    from parallel_mapreduce_spark.session import state_sized_shuffle
     from parallel_mapreduce_spark.sources.tables import sink_dir
     from parallel_mapreduce_spark.streaming.drain import unique_name
 
-    apply_runtime_conf(spark)
     register_synth_source(spark)
     out = sink_dir("pyds_jsonl_stream_sink") + "/rows"
     # Streaming sinks append across restarts by design; this query's

@@ -25,7 +25,6 @@ from parallel_mapreduce_spark.sources.tables import (
     load_table,
     read_csv,
     read_json,
-    register_views,
     sink_dir,
 )
 
@@ -43,7 +42,6 @@ from parallel_mapreduce_spark.sources.tables import (
 )
 def csv_roundtrip_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders (filtered) -> CSV sink -> explicit-schema CSV scan -> agg."""
-    register_views(spark, sf_dir)
     sub = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 100000)
@@ -73,7 +71,6 @@ def csv_roundtrip_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def json_roundtrip_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> JSON-lines sink -> explicit-schema JSON scan -> agg."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
@@ -110,7 +107,6 @@ def json_ingest_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     one bad line kills hours of work. The oracle pins the exact good/corrupt
     split, proving corrupt lines neither crash the scan nor leak into the
     typed rows."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
@@ -165,7 +161,6 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from parallel_mapreduce_spark.sources.tables import write_bucketed
 
-    register_views(spark, sf_dir)
     base = sink_dir("bucketed")
     li_name = f"pmr_li_b_{os.getpid()}"
     o_name = f"pmr_o_b_{os.getpid()}"
@@ -207,7 +202,6 @@ def orc_roundtrip_lineitem_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     other built-in columnar format (predicate pushdown + column pruning
     like parquet, zlib by default); the round trip proves the writer and
     the vectorized ORC reader agree with the parquet truth."""
-    register_views(spark, sf_dir)
     sub = (
         load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") > 30)
@@ -239,7 +233,6 @@ def partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning time (PartitionFilters in the scan node, pinned by
     tests/test_plans.py) — the read never opens the non-matching
     partitions' files, which is the 100 TB point of partitioned layouts."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
@@ -273,7 +266,6 @@ def range_clustered_write_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     is value-checked (plus row/min/max conservation through the round
     trip). At 100 TB this layout is the poor-man's z-order for one key:
     range exchange + local sort, no global single-task sort anywhere."""
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -339,7 +331,6 @@ SCHEMA_EVOLVE_CUTOFF = "1998-01-01"
     """,
 )
 def schema_evolution_merged_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit(SCHEMA_EVOLVE_CUTOFF).cast("timestamp")
     root = sink_dir("schema_evolve")
@@ -418,7 +409,6 @@ def _zorder_bits_sql(bx: str, by: str) -> str:
     """,
 )
 def zorder_clustered_write_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -508,7 +498,6 @@ def zorder_clustered_write_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def nested_types_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     k = F.coalesce(
@@ -608,7 +597,6 @@ COMPACT_SMALL_FILES = 16  # forced writer fan-out for the "before" layout
     """,
 )
 def small_files_compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -677,7 +665,6 @@ def small_files_compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def variant_shred_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value", "props"
     )
@@ -797,7 +784,6 @@ def dv_alive_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def merge_on_read_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     alive = dv_alive_rows(spark, sf_dir)
     return alive.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
@@ -831,7 +817,6 @@ def merge_on_read_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def xml_roundtrip_supplier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     sup = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
@@ -888,7 +873,6 @@ SNAPSHOT_SPLIT_MOD = 3  # batch 1 = keys % 3 != 0, batch 2 appends the rest
 def snapshot_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
 
-    register_views(spark, sf_dir)
     base = sink_dir("snapshots")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -949,7 +933,6 @@ def snapshot_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def file_metadata_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     out = sink_dir("file_metadata")
     load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -1006,7 +989,6 @@ def file_metadata_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def binaryfile_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    register_views(spark, sf_dir)
     out = sink_dir("binaryfile")
     os.makedirs(out, exist_ok=True)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
@@ -1066,7 +1048,6 @@ def binaryfile_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def codec_roundtrip_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    register_views(spark, sf_dir)
     base = sink_dir("codec")
     li = (
         load_table(spark, sf_dir, "lineitem")
@@ -1284,7 +1265,6 @@ def dpp_join_parts(
     """,
 )
 def dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     fact, dim = dpp_join_parts(spark, sf_dir)
     return (
         fact.join(F.broadcast(dim), "lang")
@@ -1338,7 +1318,6 @@ def rebalanced_write_frame(
     """,
 )
 def rebalance_hint_write_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     out = sink_dir("rebalance_sink") + "/docs_by_lang"
     rebalanced_write_frame(spark, sf_dir).write.mode("overwrite").partitionBy(
         "lang"
@@ -1424,7 +1403,6 @@ def avro_roundtrip_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scan-everything) counterpart of the ORC/parquet columnar trips —
     Avro is the standard wire format for ingest pipelines (Kafka,
     schema-registry) feeding a columnar lake."""
-    register_views(spark, sf_dir)
     sub = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 100000)
@@ -1477,7 +1455,6 @@ def timestamp_ntz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is NTZ-semantics, so the oracle is the direct hour histogram."""
     from parallel_mapreduce_spark.session import scoped_conf
 
-    register_views(spark, sf_dir)
     # events.ts loads as TIMESTAMP_NTZ already (parquet
     # isAdjustedToUTC=false — the reason the DuckDB oracles, whose naive
     # TIMESTAMP has the same semantics, agree on every event-time query).

@@ -52,11 +52,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one test table (schema comes from the Parquet footer).
 
     `events.ts` is Parquet TIMESTAMP(NANOS), which Spark 4 refuses outright;
-    we read nanos as int64 (legacy conf, set in apply_runtime_conf) and
+    we read nanos as int64 (legacy conf, set in apply_runtime_conf — by
+    get_spark, or by register_views before every registered query) and
     convert to TimestampType (microseconds) in the scan layer. Integer `div`
     keeps full precision — float division would lose it at ns-epoch scale.
     """
-    apply_runtime_conf(spark)
     key = (*session_key(spark), sf_dir.rstrip("/"), name)
     cached = _SCANS.get(key)
     if cached is not None:
@@ -71,11 +71,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # Deferred cache cleanup: a query whose contract requires a SQL cache to
 # outlive its own function call (cached_table_reuse — the driver executes
 # the returned plan later, and cache substitution happens at action-plan
-# time) registers its cached view name here; the NEXT query's
-# register_views() drops it. That bounds columnar-cache residency to one
-# registry slot instead of the remainder of a 300-query run, without
-# needing a cleanup hook in the external driver. Dropping early is safe:
-# an uncached plan falls back to the ordinary scan, it never breaks.
+# time) registers its cached view name here, and the NEXT registered
+# query drops it: the registry runs register_views() before every query.
+# That bounds columnar-cache residency to one registry slot instead of the
+# remainder of a 300-query run, without needing a cleanup hook in the
+# external driver. Dropping early is safe: an uncached plan falls back to
+# the ordinary scan, it never breaks.
 PENDING_UNCACHE: set[str] = set()
 
 
@@ -89,11 +90,14 @@ def _drain_pending_uncache(spark: SparkSession) -> None:
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view named by its file stem.
+    """Set up ``spark`` for one query on ``sf_dir``: pin the runtime conf
+    (UTC session timezone and the rest of ``apply_runtime_conf``) that the
+    oracle comparison depends on, drop ``PENDING_UNCACHE``, and register
+    every test table as a temp view named by its file stem.
 
-    Idempotent per (session, sf_dir); re-registering for a different sf_dir
-    repoints the views. Also pins the runtime conf (UTC session timezone)
-    that the oracle comparison depends on.
+    The registry's query wrapper calls this before every registered
+    query, so query bodies never do. Idempotent per (session, sf_dir);
+    re-registering for a different sf_dir repoints the views.
     """
     apply_runtime_conf(spark)
     _drain_pending_uncache(spark)
@@ -113,7 +117,6 @@ def read_csv(
 ) -> DataFrame:
     """CSV scan. An explicit schema string skips the inference pass (which
     reads the data twice) — at 100 TB always pass one."""
-    apply_runtime_conf(spark)
     reader = spark.read.option("header", "true")
     reader = reader.schema(schema) if schema else reader.option("inferSchema", "true")
     return reader.csv(paths)
@@ -123,7 +126,6 @@ def read_json(
     spark: SparkSession, paths: list[str] | str, schema: str | None = None
 ) -> DataFrame:
     """JSON-lines scan; same explicit-schema rule as read_csv."""
-    apply_runtime_conf(spark)
     reader = spark.read
     reader = reader.schema(schema) if schema else reader
     return reader.json(paths)

@@ -18,7 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from parallel_mapreduce_spark.session import apply_runtime_conf, state_sized_shuffle
+from parallel_mapreduce_spark.session import state_sized_shuffle
 
 # Atomic under the GIL (next() is one bytecode); a bare global += can race
 # under threaded callers and hand two invocations the same name.
@@ -43,7 +43,6 @@ def table_stream(
     parent directory with a ``pathGlobFilter`` on the file name — that
     filter matches files only, so on a directory-shaped table it would
     select nothing and yield an empty stream with no error."""
-    apply_runtime_conf(spark)
     base = sf_dir.rstrip("/")
     path = os.path.join(base, f"{table}.parquet")
     reader = spark.readStream.schema(schema)

@@ -21,7 +21,6 @@ from pyspark.sql import types as T
 from parallel_mapreduce_spark.operators.events import SESSION_GAP_S
 from parallel_mapreduce_spark.operators.rank import top_k
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import apply_runtime_conf
 from parallel_mapreduce_spark.sources.tables import table_bytes
 from parallel_mapreduce_spark.streaming.drain import drain, table_stream, unique_name
 
@@ -380,7 +379,6 @@ def stream_resume_from_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
     from parallel_mapreduce_spark.sources import load_table
     from parallel_mapreduce_spark.sources.tables import sink_dir
 
-    apply_runtime_conf(spark)
     # Per-INVOCATION scratch (sink_dir is already per-process): a second
     # concurrent invocation in the same process (bench pass overlapping the
     # parity gate, threaded pytest) sharing one checkpointLocation/out dir
@@ -631,7 +629,6 @@ def stream_late_drop_accounting(
     from parallel_mapreduce_spark.session import scoped_conf
     from parallel_mapreduce_spark.sources.tables import load_table
 
-    apply_runtime_conf(spark)
     src_dir, n_b = _late_replay_src(spark, sf_dir)
     # The oracle pin (counter == A's distinct closed windows) requires
     # each replay file to scan as EXACTLY ONE split: the counter counts

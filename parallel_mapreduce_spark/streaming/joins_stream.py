@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_spark.registry import query
-from parallel_mapreduce_spark.session import apply_runtime_conf
 from parallel_mapreduce_spark.sources.tables import table_bytes
 from parallel_mapreduce_spark.streaming.drain import drain, table_stream
 from parallel_mapreduce_spark.streaming.events_stream import EVENTS_SCHEMA, decode_ts
@@ -201,7 +200,6 @@ def _bucketed_stream_src(spark: SparkSession, sf_dir: str) -> str:
 def stream_click_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_mapreduce_spark.sources.tables import load_table
 
-    apply_runtime_conf(spark)
     src_dir = _bucketed_stream_src(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     schema = ev.select("event_id", "ts", "user_id", "event_type").schema
@@ -291,7 +289,6 @@ def stream_click_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 def chained_join_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The chained-stateful streaming frame (join -> window agg), shared
     with tests/test_streaming.py's state-operator pin."""
-    apply_runtime_conf(spark)
     src_dir = _bucketed_stream_src(spark, sf_dir)
     from parallel_mapreduce_spark.sources.tables import load_table
 

@@ -737,6 +737,15 @@ def test_snapshot_digests_cover_reachable_helpers():
         "parallel_mapreduce_spark.functions.similarity.cosine6",
     ):
         assert name in truth, name
+    # Session set-up belongs to the registry's entry, not to the index:
+    # an edit to how the conf is applied or the package is shipped cannot
+    # change index content, so it must not rotate either key.
+    for closure in (build, truth):
+        for name in (
+            "parallel_mapreduce_spark.session.apply_runtime_conf",
+            "parallel_mapreduce_spark.session.ensure_package_on_workers",
+        ):
+            assert name not in closure, name
 
 
 def test_snapshot_root_is_user_scoped(monkeypatch):
@@ -886,7 +895,6 @@ def _gate_search(spark, sf_dir, shape, n_queries=None):
 
     kw = {}
     if shape == "filtered":
-        S.register_views(spark, sf_dir)
         allowed = (
             S.load_table(spark, sf_dir, "documents")
             .where(F.col("source").isin(*S.FLT_SOURCES))

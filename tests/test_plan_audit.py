@@ -445,6 +445,15 @@ STREAM_RUN = {
     },
     ("sources/roundtrip.py", "binaryfile_ingest_roundtrip"): {"pathGlobFilter"},
 }
+# One query entry: the registry's wrapper sets up the session before every
+# query (register_views: runtime conf, temp views, deferred uncache), and
+# get_spark applies the runtime conf to the session it builds. Nothing else
+# calls either, so a query body or helper holds no session set-up.
+SESSION_SETUP = {
+    ("registry.py", "query"): {"register_views"},
+    ("sources/tables.py", "register_views"): {"apply_runtime_conf"},
+    ("session.py", "get_spark"): {"apply_runtime_conf"},
+}
 
 
 def _shuffle_counts(node) -> list:
@@ -517,6 +526,11 @@ def _idiom_violations(rel: str, src: str) -> list[str]:
                     bad.append(f"{where} inline vector fold: use sqdist / dot")
                 if callee in GS_GATED and (rel, func) not in GS_SERVING:
                     bad.append(f"{where} {callee}(): serve through _gs_search")
+                if callee in (
+                    "register_views",
+                    "apply_runtime_conf",
+                ) and callee not in SESSION_SETUP.get((rel, func), ()):
+                    bad.append(f"{where} {callee}(): the registry sets up the session")
                 if (
                     callee == "reliable_checkpoint"
                     and (rel, func) != CUT
@@ -605,3 +619,43 @@ def test_guard_fails_on_inline_vector_fold():
         "def f(v):\n    return F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x)",
     ):
         assert not _idiom_violations("functions/similarity.py", ok), ok
+
+
+def test_guard_fails_on_session_setup_outside_the_entry():
+    """The idiom guard's session rule: register_views or apply_runtime_conf
+    called from a query body or helper fails; the registry's entry
+    wrapper, register_views itself and get_spark pass."""
+    body = (
+        "def q(spark, sf_dir):\n"
+        "    {call}\n"
+        "    return load_table(spark, sf_dir, 'orders')"
+    )
+    for call in (
+        "register_views(spark, sf_dir)",
+        "sources.register_views(spark, sf_dir)",
+        "apply_runtime_conf(spark)",
+    ):
+        assert _idiom_violations("operators/relational.py", body.format(call=call))
+    allowed = (
+        (
+            "registry.py",
+            "def query(name):\n"
+            "    def deco(fn):\n"
+            "        def entry(spark, sf_dir):\n"
+            "            register_views(spark, sf_dir)\n"
+            "            return fn(spark, sf_dir)\n"
+            "        return entry\n"
+            "    return deco",
+        ),
+        (
+            "sources/tables.py",
+            "def register_views(spark, sf_dir):\n    apply_runtime_conf(spark)",
+        ),
+        ("session.py", "def get_spark():\n    apply_runtime_conf(spark)"),
+    )
+    for rel, src in allowed:
+        assert not _idiom_violations(rel, src), rel
+    # Allowed only where listed: the loader in tables.py is not the entry.
+    assert _idiom_violations(
+        "sources/tables.py", "def load_table(spark):\n    apply_runtime_conf(spark)"
+    )

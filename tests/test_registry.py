@@ -269,3 +269,22 @@ def test_oracle_window_orderings_truncate_event_time():
             if bad.search(line):
                 offenders.append((name, line.strip()))
     assert not offenders, offenders
+
+
+def test_next_query_drops_the_deferred_cache(spark, sf_dir):
+    """The registered entry is the one callable every caller reaches (the
+    registry, the module attribute, the driver's map), and it sets up the
+    session before the body: cached_table_reuse's CACHE TABLE outlives its
+    call, and the next query, even one that reads no temp view, drops it
+    through PENDING_UNCACHE."""
+    from parallel_mapreduce_spark import mr
+    from parallel_mapreduce_spark.operators.relational import CACHED_HOT_VIEW
+
+    _load_all()
+    assert query_map()["mr_wordcount"] is QUERIES["mr_wordcount"].fn is mr.mr_wordcount
+    assert mr.mr_wordcount.__wrapped__.__name__ == "mr_wordcount"
+    for nxt in ("mr_wordcount", "stream_events_hourly"):
+        QUERIES["cached_table_reuse"].fn(spark, sf_dir)
+        assert spark.catalog.isCached(CACHED_HOT_VIEW)
+        QUERIES[nxt].fn(spark, sf_dir)
+        assert not spark.catalog.isCached(CACHED_HOT_VIEW), nxt

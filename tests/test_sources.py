@@ -578,3 +578,21 @@ def test_engine_temp_paths_removed_at_exit(tmp_path):
     assert os.path.basename(pkg).startswith("pmr_spark_pkg_"), out
     assert os.path.dirname(ckpt) == os.path.dirname(pkg) == str(tmp_path)
     assert not os.path.exists(ckpt) and not os.path.exists(pkg)
+
+
+def test_driver_memory_env_wins_and_default_fits_the_machine(monkeypatch):
+    """get_spark's driver heap: SPARK_DRIVER_MEMORY when set (perfbench
+    pins 1g), else half of physical memory, never more than 16g."""
+    import os
+
+    import parallel_mapreduce_spark.session as S
+
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "1g")
+    assert S.driver_memory() == "1g"
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY")
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2 / 2**20
+    got = S.driver_memory()
+    assert got.endswith("m") and 0 < int(got[:-1]) <= min(half_mb, 16 << 10)
+    big = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": 256 << 20}  # 1 TiB
+    monkeypatch.setattr(S.os, "sysconf", big.__getitem__)
+    assert S.driver_memory() == "16384m"
